@@ -1,48 +1,45 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** One timed pass: seconds for every row that ran, the error class of
+    * every row that threw. */
+  final case class Pass(times: Map[String, Double], failed: Map[String, String])
+
+  /** Times each row's `count()`, clearing what it persisted after it. A
+    * row that throws is recorded as failed with its error class and gets
+    * no time: a crash must never read as a fast row. */
+  def pass(spark: SparkSession, sfDir: String,
+           rows: Iterable[(String, (SparkSession, String) => DataFrame)]): Pass = {
+    val out = rows.toSeq.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val r =
+        try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable => Left(e.getClass.getName) }
+      GraftSession.clearAll(spark)
+      name -> r
+    }
+    Pass(out.collect { case (n, Right(t)) => n -> t }.toMap,
+      out.collect { case (n, Left(e)) => n -> e }.toMap)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // dev aid: SPARK_GRAFT_BENCH_ONLY=q1,q2 times just those queries
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    def selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
-      case None => SparkEntry.queries
-    }
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // session-build extensions hook: graft_* SQL functions (the
-      // tmp_extensions_sql driver row proves the injection end-to-end)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Kryo for the one RDD path (connected components): Tuple2[Long,
-      // Long] shuffle rounds are ~2x cheaper than Java serialization;
-      // DataFrame shuffles (Tungsten UnsafeRow) are unaffected
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      // 163 queries x many codegen'd stages blow through the default
-      // 100-entry generated-class cache, so later queries (and every
-      // pass-2 rerun) pay full JIT again — the main source of the
-      // in-bench-vs-standalone gap on the heavy rows
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.queries.filter { case (k, _) => only.forall(_(k)) }
+    val rowClass = SparkEntry.inventory.map { case (n, q) => n -> q.benchClass }.toMap
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession.build(cpus)
     // loadavg BEFORE the warm-up pass: loadavg_before is sampled after
     // warm-up, when the bench's own 32 threads have already driven the
     // 1-min average to 5+ — only this pre-warmup sample can prove the
     // host was externally quiet (the r8 verdict's clean-host ask)
-    def loadavg0(): String =
+    def loadavg(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split(" ").take(3).mkString(",")
       catch { case _: Throwable => "" }
-    val loadStart = loadavg0()
+    val loadStart = loadavg()
     // JIT/codegen warm-up: run every query once against the smallest
     // fixture so the timed pass below measures the engine, not
     // first-touch class loading and codegen compilation (cold-vs-warm
@@ -52,50 +49,12 @@ object Bench {
         Some(new java.io.File(p, "sf0.001").getPath)
       case _ => None
     }
-    warmDir.foreach { wd =>
-      selected.foreach { case (_, fn) =>
-        try { fn(spark, wd).count() } catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
-    }
-    // best-of-2 timed passes: single-JVM local mode shows large
-    // run-to-run variance (page cache, JIT recompilation, shuffle-file
-    // GC); the min is the reproducible engine cost. Caches left behind
-    // by materialize()/persisted indexes are dropped after every query —
-    // accumulated storage otherwise squeezes execution memory and
-    // inflates the heavy shuffle queries (measured 2× on minhash by the
-    // end of a 142-query pass).
-    // clearCache() only drops DataFrame/catalog caches — RDD-level
-    // persists (the CC loop's localCheckpoint blocks) are invisible to
-    // it and were reclaimed only by ContextCleaner GC, which a 128 GiB
-    // single-JVM heap almost never triggers. Over 191 queries × (warmup
-    // + 2 passes) the leaked blocks squeezed unified execution memory
-    // and blew up pass 2 on exactly the heaviest rows (r5 verdict:
-    // llm_pipeline_v2 4.8→19.2 s). Explicitly unpersist every RDD too.
-    def clearAll(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      // drains the library's persist-tracking queue (blocks are already
-      // freed above; this frees the retained plan references)
-      graft.ext.LlmOps.releaseCaches()
-    }
-    def loadavg(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-        .split(" ").take(3).mkString(",")
-      catch { case _: Throwable => "" }
+    warmDir.foreach(pass(spark, _, selected))
     // bytes of block-manager storage currently in use — visible leak
     // detector: should be ~0 at every pass boundary after clearAll()
     def storageUsed(): Long =
       spark.sparkContext.getExecutorMemoryStatus.values
         .map { case (max, free) => max - free }.sum
-    def pass(): Map[String, Double] = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
-      clearAll()
-      name -> dt
-    }
     // Per-query perf budgets (r6 verdict task 4): bench_budget.json pins
     // each query's clean-host best-of-2; any row whose best exceeds
     // multiplier× its budget lands in budget_violations. Turns "diff
@@ -111,52 +70,34 @@ object Bench {
           .findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
         (kv - "multiplier", kv.getOrElse("multiplier", 2.0))
       } else (Map.empty, 2.0)
-    // r9: split harness cost from engine cost. The 2×-of-baseline gate
-    // should trend against the PLAN-class subtotal — streaming-harness
-    // rows pay MemoryStream micro-batch/state-store commit overhead and
-    // index-build rows pay at-rest write+audit cost that a deployed
-    // query never re-pays per read; both are coverage contracts, not
-    // query plans. Classes are in-code name rules so the artifact and
-    // the classification can never drift apart.
-    def benchClass(name: String): String =
-      if (Set("llm_ann_binary_indexed", "llm_ann_ivf_indexed",
-        "llm_ann_pq_indexed", "llm_bm25_indexed", "llm_dedup_incremental",
-        "llm_line_dedup_incr", "llm_dedup_cosine_incr", "q183_matview_fn",
-        "tmp_bucketed_join", "tmp_hilbert_scan", "tmp_zorder_scan",
-        "tmp_bucket_pruned_scan",
-        // r11 additions: the streaming harness's one-time seed-index
-        // build (an at-rest artifact, checked BEFORE the tmp_stream_
-        // prefix rule), and the LM-index row that was always
-        // build-train-probe like llm_ann_pq_indexed but was never
-        // carried in this set
-        "tmp_stream_cosine_index", "llm_backoff_indexed",
-        // r12 additions: the at-rest exact-audit artifact builders and
-        // the planted-image corpus write (r11 verdict task 2 — each
-        // rebuilds its warehouse tables from parquet on every pass;
-        // construction of at-rest artifacts, not query-plan work)
-        "llm_audit_cos_all", "llm_audit_cos_blocked",
-        "llm_audit_jaccard_blocks", "llm_audit_jaccard_incr",
-        "llm_image_plant")(name)) "index-build"
-      else if (name.startsWith("tmp_stream_") || name == "tmp_rocksdb_session" ||
-          name == "tmp_merge_apply") "streaming-harness"
-      else "plan"
     val loadBefore = loadavg()
-    val p1 = pass()
+    // best-of-2 timed passes: single-JVM local mode shows large
+    // run-to-run variance (page cache, JIT recompilation, shuffle-file
+    // GC); the min is the reproducible engine cost.
+    val p1 = pass(spark, sfDir, selected)
     val (loadMid, storageMid) = (loadavg(), storageUsed())
-    val p2 = pass()
+    val p2 = pass(spark, sfDir, selected)
     val (loadAfter, storageAfter) = (loadavg(), storageUsed())
-    val results = p1.map { case (k, v) => k -> math.min(v, p2(k)) }
+    // a row that threw in either pass is failed and left out of the
+    // totals, the class subtotals and the gate
+    val failed = (p2.failed ++ p1.failed).toSeq.sortBy(_._1)
+    failed.foreach { case (k, e) =>
+      System.err.println(s"[bench] $k failed: $e")
+    }
+    val results = p1.times.collect {
+      case (k, v) if p2.times.contains(k) => k -> math.min(v, p2.times(k))
+    }
     val qs = results.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // detailed line FIRST (it is huge and the driver tails stdout — r1's
     // single combined line got truncated and parsed as null), then a
     // compact machine-readable total as the LAST line
-    val classTotals = results.toSeq.groupBy { case (k, _) => benchClass(k) }
+    val classTotals = results.toSeq.groupBy { case (k, _) => rowClass(k) }
       .map { case (c, m) => c -> m.map(_._2).sum }
-    val classJson = Seq("plan", "index-build", "streaming-harness")
+    val classJson = SparkEntry.benchClasses
       .map(c => s""""$c":{"sec":${classTotals.getOrElse(c, 0.0)},""" +
-        s""""n":${results.keys.count(benchClass(_) == c)}}""")
+        s""""n":${results.keys.count(rowClass(_) == c)}}""")
       .mkString("{", ",", "}")
     println(s"""{"metric":"detail","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
     // machine-readable 2×-of-baseline gate (r9 verdict task 7): per-query
@@ -168,8 +109,8 @@ object Bench {
     // there (the per-query seconds stay; ADVICE r10)
     val baselinePerQ: Option[Double] =
       if (new java.io.File(sfDir).getName == "sf0.1") Some(0.344) else None
-    val planSec = classTotals.getOrElse("plan", 0.0)
-    val planN = results.keys.count(benchClass(_) == "plan")
+    val planSec = classTotals.getOrElse(SparkEntry.Plan, 0.0)
+    val planN = results.keys.count(rowClass(_) == SparkEntry.Plan)
     val allInPerQ = if (results.nonEmpty) total / results.size else 0.0
     val planPerQ = if (planN > 0) planSec / planN else 0.0
     def j(o: Option[Double]): String = o.map(_.toString).getOrElse("null")
@@ -186,7 +127,7 @@ object Bench {
     // both raw passes so environment noise (min≠either pass trend) is
     // visible after the fact.
     val detail = results.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"""  "$k": {"best":$v,"pass1":${p1(k)},"pass2":${p2(k)}}"""
+      s"""  "$k": {"best":$v,"pass1":${p1.times(k)},"pass2":${p2.times(k)}}"""
     }.mkString("{\n", ",\n", "\n}")
     // loadavg before/mid/after + storage-bytes at pass boundaries: makes
     // external-host-load contamination and cache leaks machine-detectable
@@ -219,6 +160,8 @@ object Bench {
       s""""budget_violations_suspect_load":${suspectViolations.mkString("[", ",", "]")},""" +
       s""""host_loaded":$hostLoaded,""" +
       s""""unbudgeted":${unbudgeted.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+      s""""failed":${failed.map { case (k, e) =>
+        s"""{"q":"$k","error":"$e"}""" }.mkString("[", ",", "]")},""" +
       s""""queries":$detail}"""
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_detail.json"), payload)
@@ -238,5 +181,6 @@ object Bench {
         java.nio.file.Paths.get(f"bench_detail_r$roundNum%02d.json"), payload)
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

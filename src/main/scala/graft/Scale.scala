@@ -45,25 +45,9 @@ object Scale {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val base = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale")
     val scales = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 8, 32)
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // session-build extensions hook: graft_* SQL functions (the
-      // tmp_extensions_sql driver row proves the injection end-to-end)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     // SPARK_GRAFT_SCALE_ONLY=op1,op2 measures a subset (builder
     // iteration on newly added ops without re-timing the whole set)
@@ -133,11 +117,6 @@ object Scale {
       }
     }
 
-    def clearAll(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      LlmOps.releaseCaches()
-    }
     def loadavg(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split(" ").take(3).mkString(",")
@@ -149,7 +128,7 @@ object Scale {
     // warm-up at the smallest scale (JIT + codegen), untimed
     selected(s"$base/x${scales.min}", scales.min).foreach { case (_, fn) =>
       try fn() catch { case _: Throwable => () }
-      clearAll()
+      GraftSession.clearAll(spark)
     }
     val sb = new StringBuilder
     for (k <- scales) {
@@ -160,7 +139,7 @@ object Scale {
         val t0 = System.nanoTime()
         val out = try fn() catch { case _: Throwable => -1L }
         val dt = (System.nanoTime() - t0) / 1e9
-        clearAll()
+        GraftSession.clearAll(spark)
         val rowsIn = if (name.startsWith("ann_") || name.contains("kmeans") ||
           name.contains("cosine") || name.contains("semdedup")) nVecs else nDocs
         val line = s"""{"metric":"scale","op":"$name","scale":$k,""" +
@@ -195,6 +174,7 @@ object Scale {
   /** ×K self-union with the per-copy transforms documented above. */
   def buildScaled(spark: SparkSession, sfDir: String, outDir: String,
                   k: Int): Unit = {
+    // exempt from the no-memoization rule: fixture construction, not a timed row
     if (new java.io.File(s"$outDir/documents.parquet/_SUCCESS").exists() &&
         new java.io.File(s"$outDir/embeddings.parquet/_SUCCESS").exists()) return
     val copies = explode(sequence(lit(0), lit(k - 1))).as("__c")

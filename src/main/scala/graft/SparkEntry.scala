@@ -633,6 +633,11 @@ object SparkEntry {
       ms.addData(rows.filter(_._1 > 1400): _*)
       q.processAllAvailable()
     } finally q.stop()
+    // the stream rewrote meta and store from its own session: a second
+    // run in this session would otherwise read the files it replaced
+    s.catalog.listTables().collect()
+      .filter(_.name.startsWith("graft_mv_stream_"))
+      .foreach(t => s.catalog.refreshTable(t.name))
     // cursor must sit at the stream's high-water mark: the read below
     // is then served from the store alone (delta scan empty)
     val cur = s.table("graft_mv_stream_meta").head().getLong(4)
@@ -1210,9 +1215,23 @@ object SparkEntry {
       | sort by l_returnflag asc, l_linestatus asc"""
 
   // =============================================================== queries
-  final case class Q(fn: (SparkSession, String) => DataFrame, oracle: Option[String])
+  /** One inventory row: the query, the DuckDB SQL that must return the
+    * same rows over the same parquet tables, and the row's bench class. */
+  final case class Q(fn: (SparkSession, String) => DataFrame, oracle: String,
+                     benchClass: String = Plan)
 
-  private lazy val inventory: List[(String, Q)] = List(
+  // Bench classes split harness cost from engine cost: the 2×-of-baseline
+  // gate trends against the plan-class subtotal. Index-build rows pay the
+  // at-rest write (and audit) cost that a deployed query never re-pays
+  // per read; streaming-harness rows pay MemoryStream micro-batch and
+  // state-store commit overhead. Both are coverage contracts, not query
+  // plans.
+  val Plan = "plan"
+  val IndexBuild = "index-build"
+  val StreamingHarness = "streaming-harness"
+  val benchClasses: Seq[String] = Seq(Plan, IndexBuild, StreamingHarness)
+
+  lazy val inventory: List[(String, Q)] = List(
 
     // ---------------------------------------------------- core relational
     "q01_where_project" -> Q(kqlQ(
@@ -1222,22 +1241,22 @@ object SparkEntry {
                   revenue = l_extendedprice * (1 - l_discount)
         | sort by l_orderkey asc, l_linenumber asc, revenue asc, l_quantity asc
         | take 100"""),
-      Some("""SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice * (1 - l_discount) AS revenue FROM lineitem WHERE l_quantity > 30 AND l_returnflag = 'A' ORDER BY l_orderkey, l_linenumber, revenue, l_quantity LIMIT 100""")),
+      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice * (1 - l_discount) AS revenue FROM lineitem WHERE l_quantity > 30 AND l_returnflag = 'A' ORDER BY l_orderkey, l_linenumber, revenue, l_quantity LIMIT 100"""),
 
     "q02_tpch_q1" -> Q(kqlQ(TPCH_Q1),
-      Some("""SELECT l_returnflag, l_linestatus, CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty, CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_base_price, CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0 AS sum_disc_price, ROUND(AVG(l_quantity), 4) AS avg_qty, ROUND(AVG(l_extendedprice), 4) AS avg_price, CAST(COUNT(*) AS BIGINT) AS count_order FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02' GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""")),
+      """SELECT l_returnflag, l_linestatus, CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty, CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_base_price, CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0 AS sum_disc_price, ROUND(AVG(l_quantity), 4) AS avg_qty, ROUND(AVG(l_extendedprice), 4) AS avg_price, CAST(COUNT(*) AS BIGINT) AS count_order FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02' GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus"""),
 
     "q03_count" -> Q(kqlQ("""lineitem | count"""),
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS Count FROM lineitem""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS Count FROM lineitem"""),
 
     "q04_distinct" -> Q(kqlQ(
       """lineitem | distinct l_returnflag, l_linestatus
         | sort by l_returnflag asc, l_linestatus asc"""),
-      Some("""SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem ORDER BY 1, 2""")),
+      """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem ORDER BY 1, 2"""),
 
     "q05_top" -> Q(kqlQ(
       """lineitem | top 50 by l_extendedprice desc, l_orderkey asc, l_linenumber asc, l_partkey asc, l_suppkey asc, l_quantity asc"""),
-      Some("""SELECT * FROM lineitem ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity LIMIT 50""")),
+      """SELECT * FROM lineitem ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity LIMIT 50"""),
 
     "q06_extend_takebin" -> Q(kqlQ(
       """events
@@ -1245,13 +1264,13 @@ object SparkEntry {
         | extend total = todouble(total_c) / 100.0
         | project-away total_c
         | sort by ts asc"""),
-      Some("""SELECT date_trunc('day', ts) AS ts, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS total FROM events GROUP BY 1 ORDER BY 1""")),
+      """SELECT date_trunc('day', ts) AS ts, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS total FROM events GROUP BY 1 ORDER BY 1"""),
 
     "q07_bin_numeric" -> Q(kqlQ(
       """lineitem
         | summarize n=count(), avg_price=round(avg(l_extendedprice), 4) by bin(l_quantity, 5)
         | sort by l_quantity asc"""),
-      Some("""SELECT FLOOR(l_quantity / 5) * 5 AS l_quantity, CAST(COUNT(*) AS BIGINT) AS n, ROUND(AVG(l_extendedprice), 4) AS avg_price FROM lineitem GROUP BY 1 ORDER BY 1""")),
+      """SELECT FLOOR(l_quantity / 5) * 5 AS l_quantity, CAST(COUNT(*) AS BIGINT) AS n, ROUND(AVG(l_extendedprice), 4) AS avg_price FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
     "q08_agg_family" -> Q(kqlQ(
       """lineitem
@@ -1264,7 +1283,7 @@ object SparkEntry {
                     sd=round(stdev(l_quantity), 4), vr=round(variance(l_quantity), 4)
         by l_linestatus
         | sort by l_linestatus asc"""),
-      Some("""SELECT l_linestatus, CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS s, CAST(COUNT(*) AS BIGINT) AS c, CAST(COUNT(CASE WHEN l_discount > 0.05 THEN 1 END) AS BIGINT) AS ci, CAST(SUM(CASE WHEN l_returnflag = 'A' THEN CAST(ROUND(l_quantity) AS BIGINT) END) AS BIGINT) AS si, ROUND(AVG(CASE WHEN l_returnflag = 'A' THEN l_quantity END), 4) AS ai, MIN(l_quantity) AS mn, MAX(l_quantity) AS mx, MIN(l_shipdate) AS mnd, MAX(l_shipdate) AS mxd, ROUND(STDDEV_SAMP(l_quantity), 4) AS sd, ROUND(VAR_SAMP(l_quantity), 4) AS vr FROM lineitem GROUP BY 1 ORDER BY 1""")),
+      """SELECT l_linestatus, CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS s, CAST(COUNT(*) AS BIGINT) AS c, CAST(COUNT(CASE WHEN l_discount > 0.05 THEN 1 END) AS BIGINT) AS ci, CAST(SUM(CASE WHEN l_returnflag = 'A' THEN CAST(ROUND(l_quantity) AS BIGINT) END) AS BIGINT) AS si, ROUND(AVG(CASE WHEN l_returnflag = 'A' THEN l_quantity END), 4) AS ai, MIN(l_quantity) AS mn, MAX(l_quantity) AS mx, MIN(l_shipdate) AS mnd, MAX(l_shipdate) AS mxd, ROUND(STDDEV_SAMP(l_quantity), 4) AS sd, ROUND(VAR_SAMP(l_quantity), 4) AS vr FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
     "q09_tpch_q3" -> Q(kqlQ(
       """customer
@@ -1277,7 +1296,7 @@ object SparkEntry {
         | project-away rc
         | sort by revenue desc, o_orderkey asc
         | take 20"""),
-      Some("""SELECT o_orderkey, o_orderdate, CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue FROM customer JOIN orders ON c_custkey = o_custkey JOIN lineitem ON o_orderkey = l_orderkey WHERE c_mktsegment = 'BUILDING' GROUP BY 1, 2 ORDER BY revenue DESC, o_orderkey LIMIT 20""")),
+      """SELECT o_orderkey, o_orderdate, CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue FROM customer JOIN orders ON c_custkey = o_custkey JOIN lineitem ON o_orderkey = l_orderkey WHERE c_mktsegment = 'BUILDING' GROUP BY 1, 2 ORDER BY revenue DESC, o_orderkey LIMIT 20"""),
 
     "q10_tpch_q5" -> Q(kqlQ(
       """region
@@ -1293,7 +1312,7 @@ object SparkEntry {
         | extend revenue = todouble(rc) / 10000.0
         | project-away rc
         | sort by revenue desc, n_name asc"""),
-      Some("""SELECT n_name, CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue FROM region JOIN nation ON r_regionkey = n_regionkey JOIN customer ON n_nationkey = c_nationkey JOIN orders ON c_custkey = o_custkey JOIN lineitem ON o_orderkey = l_orderkey JOIN supplier ON l_suppkey = s_suppkey WHERE r_name = 'ASIA' AND s_nationkey = n_nationkey AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01' GROUP BY n_name ORDER BY revenue DESC, n_name""")),
+      """SELECT n_name, CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue FROM region JOIN nation ON r_regionkey = n_regionkey JOIN customer ON n_nationkey = c_nationkey JOIN orders ON c_custkey = o_custkey JOIN lineitem ON o_orderkey = l_orderkey JOIN supplier ON l_suppkey = s_suppkey WHERE r_name = 'ASIA' AND s_nationkey = n_nationkey AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01' GROUP BY n_name ORDER BY revenue DESC, n_name"""),
 
     "q11_join_leftouter" -> Q(kqlQ(
       """customer
@@ -1301,7 +1320,7 @@ object SparkEntry {
             on $left.c_custkey == $right.o_custkey
         | project c_custkey, c_name, n_orders = coalesce(n_orders, 0)
         | sort by c_custkey asc"""),
-      Some("""SELECT c_custkey, c_name, COALESCE(n_orders, 0) AS n_orders FROM customer LEFT JOIN (SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_orders FROM orders GROUP BY 1) o ON c_custkey = o_custkey ORDER BY c_custkey""")),
+      """SELECT c_custkey, c_name, COALESCE(n_orders, 0) AS n_orders FROM customer LEFT JOIN (SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_orders FROM orders GROUP BY 1) o ON c_custkey = o_custkey ORDER BY c_custkey"""),
 
     "q12_join_semi_anti" -> Q(kqlQ(
       """customer
@@ -1309,7 +1328,7 @@ object SparkEntry {
         | join kind=leftanti (orders | where o_orderstatus == 'F') on $left.c_custkey == $right.o_custkey
         | project c_custkey, c_name
         | sort by c_custkey asc"""),
-      Some("""SELECT c_custkey, c_name FROM customer WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 300000) AND c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F') ORDER BY c_custkey""")),
+      """SELECT c_custkey, c_name FROM customer WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 300000) AND c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F') ORDER BY c_custkey"""),
 
     "q13_lookup" -> Q(kqlQ(
       """lineitem
@@ -1318,14 +1337,14 @@ object SparkEntry {
         | extend total = todouble(tc) / 100.0
         | project-away tc
         | sort by s_name asc"""),
-      Some("""SELECT s_name, CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS total FROM lineitem LEFT JOIN supplier ON l_suppkey = s_suppkey GROUP BY 1 ORDER BY 1""")),
+      """SELECT s_name, CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS total FROM lineitem LEFT JOIN supplier ON l_suppkey = s_suppkey GROUP BY 1 ORDER BY 1"""),
 
     "q14_union" -> Q(kqlQ(
       """union (lineitem | where l_returnflag == 'A' | extend src='flagA'),
               (lineitem | where l_returnflag == 'R' | extend src='flagR')
         | summarize n=count() by src, l_linestatus
         | sort by src asc, l_linestatus asc"""),
-      Some("""SELECT src, l_linestatus, CAST(COUNT(*) AS BIGINT) AS n FROM (SELECT 'flagA' AS src, l_linestatus FROM lineitem WHERE l_returnflag = 'A' UNION ALL SELECT 'flagR', l_linestatus FROM lineitem WHERE l_returnflag = 'R') GROUP BY 1, 2 ORDER BY 1, 2""")),
+      """SELECT src, l_linestatus, CAST(COUNT(*) AS BIGINT) AS n FROM (SELECT 'flagA' AS src, l_linestatus FROM lineitem WHERE l_returnflag = 'A' UNION ALL SELECT 'flagR', l_linestatus FROM lineitem WHERE l_returnflag = 'R') GROUP BY 1, 2 ORDER BY 1, 2"""),
 
     "q15_string_fns" -> Q(kqlQ(
       """part
@@ -1334,7 +1353,7 @@ object SparkEntry {
                   brand_num=toint(extract('([0-9]+)$', 1, p_brand)),
                   has_gear=iff(p_name contains 'GEAR', 1, 0)
         | sort by p_partkey asc"""),
-      Some("""SELECT p_partkey, UPPER(p_name) AS up, CAST(LENGTH(p_name) AS BIGINT) AS ln, SUBSTRING(p_type, 1, 5) AS sub, CAST(regexp_extract(p_brand, '([0-9]+)$', 1) AS INT) AS brand_num, CAST(CASE WHEN lower(p_name) LIKE '%gear%' THEN 1 ELSE 0 END AS BIGINT) AS has_gear FROM part ORDER BY p_partkey""")),
+      """SELECT p_partkey, UPPER(p_name) AS up, CAST(LENGTH(p_name) AS BIGINT) AS ln, SUBSTRING(p_type, 1, 5) AS sub, CAST(regexp_extract(p_brand, '([0-9]+)$', 1) AS INT) AS brand_num, CAST(CASE WHEN lower(p_name) LIKE '%gear%' THEN 1 ELSE 0 END AS BIGINT) AS has_gear FROM part ORDER BY p_partkey"""),
 
     "q16_string_fns2" -> Q(kqlQ(
       """documents
@@ -1342,7 +1361,7 @@ object SparkEntry {
                   first_tok=split(text, ' ', 0), rev=reverse(lang),
                   cat=strcat(lang, ':', source)
         | sort by doc_id asc"""),
-      Some("""SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens, string_split(text, ' ')[1] AS first_tok, reverse(lang) AS rev, lang || ':' || source AS cat FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens, string_split(text, ' ')[1] AS first_tok, reverse(lang) AS rev, lang || ':' || source AS cat FROM documents ORDER BY doc_id"""),
 
     "q17_datetime_fns" -> Q(kqlQ(
       """orders
@@ -1353,7 +1372,7 @@ object SparkEntry {
                   nextweek=datetime_add('week', 1, o_orderdate),
                   dd=datetime_diff('day', datetime(1998-01-01), o_orderdate)
         | sort by o_orderkey asc"""),
-      Some("""SELECT o_orderkey, CAST(year(o_orderdate) AS INT) AS y, CAST(month(o_orderdate) AS INT) AS mo, CAST(dayofmonth(o_orderdate) AS INT) AS d, CAST(dayofweek(o_orderdate) AS INT) AS dow, date_trunc('day', o_orderdate) AS sod, date_trunc('month', o_orderdate) AS som, CAST(weekofyear(o_orderdate) AS INT) AS wk, o_orderdate + INTERVAL 7 DAY AS nextweek, CAST(datediff('day', date_trunc('day', o_orderdate), TIMESTAMP '1998-01-01') AS BIGINT) AS dd FROM orders ORDER BY o_orderkey""")),
+      """SELECT o_orderkey, CAST(year(o_orderdate) AS INT) AS y, CAST(month(o_orderdate) AS INT) AS mo, CAST(dayofmonth(o_orderdate) AS INT) AS d, CAST(dayofweek(o_orderdate) AS INT) AS dow, date_trunc('day', o_orderdate) AS sod, date_trunc('month', o_orderdate) AS som, CAST(weekofyear(o_orderdate) AS INT) AS wk, o_orderdate + INTERVAL 7 DAY AS nextweek, CAST(datediff('day', date_trunc('day', o_orderdate), TIMESTAMP '1998-01-01') AS BIGINT) AS dd FROM orders ORDER BY o_orderkey"""),
 
     // Window functions inside `project` items (not just `extend`):
     // desugars through the same two-phase GlobalWindow — plan-asserted
@@ -1364,7 +1383,7 @@ object SparkEntry {
         | sort by o_orderkey asc
         | project o_orderkey, r = row_number(), p = prev(o_orderkey),
                   c = row_cumsum(o_custkey)"""),
-      Some("""SELECT o_orderkey, CAST(ROW_NUMBER() OVER w AS BIGINT) AS r, LAG(o_orderkey) OVER w AS p, CAST(SUM(o_custkey) OVER (ORDER BY o_orderkey ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c FROM orders WINDOW w AS (ORDER BY o_orderkey)""")),
+      """SELECT o_orderkey, CAST(ROW_NUMBER() OVER w AS BIGINT) AS r, LAG(o_orderkey) OVER w AS p, CAST(SUM(o_custkey) OVER (ORDER BY o_orderkey ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c FROM orders WINDOW w AS (ORDER BY o_orderkey)"""),
 
     "q18_window_fns" -> Q(kqlQ(
       """events
@@ -1373,7 +1392,7 @@ object SparkEntry {
                  cum=row_cumsum(value)
         | project event_id, rn, prev_val, next_val, cum_r=round(cum, 4)
         | sort by event_id asc"""),
-      Some("""SELECT event_id, rn, prev_val, next_val, cum_r FROM (SELECT event_id, CAST(ROW_NUMBER() OVER w AS BIGINT) AS rn, LAG(value) OVER w AS prev_val, LEAD(value) OVER w AS next_val, ROUND(SUM(value) OVER (ORDER BY user_id, ts, event_id ROWS UNBOUNDED PRECEDING), 4) AS cum_r FROM events WINDOW w AS (ORDER BY user_id, ts, event_id)) ORDER BY event_id""")),
+      """SELECT event_id, rn, prev_val, next_val, cum_r FROM (SELECT event_id, CAST(ROW_NUMBER() OVER w AS BIGINT) AS rn, LAG(value) OVER w AS prev_val, LEAD(value) OVER w AS next_val, ROUND(SUM(value) OVER (ORDER BY user_id, ts, event_id ROWS UNBOUNDED PRECEDING), 4) AS cum_r FROM events WINDOW w AS (ORDER BY user_id, ts, event_id)) ORDER BY event_id"""),
 
     "q19_sessionize" -> Q(kqlQ(
       """events
@@ -1384,25 +1403,25 @@ object SparkEntry {
         | summarize n=count() by user_id, sess
         | summarize sessions=count(), avg_len=round(avg(n), 4) by user_id
         | sort by user_id asc"""),
-      Some("""WITH s AS (SELECT user_id, ts, event_id, LAG(ts) OVER w AS prev_ts, LAG(user_id) OVER w AS prev_uid FROM events WINDOW w AS (ORDER BY user_id, ts, event_id)), f AS (SELECT user_id, ts, event_id, CASE WHEN prev_ts IS NULL OR prev_uid != user_id OR ts - prev_ts > INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_sess FROM s), c AS (SELECT user_id, CAST(SUM(new_sess) OVER (ORDER BY user_id, ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess FROM f), g AS (SELECT user_id, sess, COUNT(*) AS n FROM c GROUP BY 1, 2) SELECT user_id, CAST(COUNT(*) AS BIGINT) AS sessions, ROUND(AVG(n), 4) AS avg_len FROM g GROUP BY 1 ORDER BY user_id""")),
+      """WITH s AS (SELECT user_id, ts, event_id, LAG(ts) OVER w AS prev_ts, LAG(user_id) OVER w AS prev_uid FROM events WINDOW w AS (ORDER BY user_id, ts, event_id)), f AS (SELECT user_id, ts, event_id, CASE WHEN prev_ts IS NULL OR prev_uid != user_id OR ts - prev_ts > INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_sess FROM s), c AS (SELECT user_id, CAST(SUM(new_sess) OVER (ORDER BY user_id, ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess FROM f), g AS (SELECT user_id, sess, COUNT(*) AS n FROM c GROUP BY 1, 2) SELECT user_id, CAST(COUNT(*) AS BIGINT) AS sessions, ROUND(AVG(n), 4) AS avg_len FROM g GROUP BY 1 ORDER BY user_id"""),
 
     "q20_argmax" -> Q(kqlQ(
       """orders
         | summarize arg_max(o_orderkey, o_totalprice, o_orderdate) by o_orderstatus
         | sort by o_orderstatus asc"""),
-      Some("""SELECT o_orderstatus, MAX(o_orderkey) AS o_orderkey, arg_max(o_totalprice, o_orderkey) AS o_totalprice, arg_max(o_orderdate, o_orderkey) AS o_orderdate FROM orders GROUP BY 1 ORDER BY 1""")),
+      """SELECT o_orderstatus, MAX(o_orderkey) AS o_orderkey, arg_max(o_totalprice, o_orderkey) AS o_totalprice, arg_max(o_orderdate, o_orderkey) AS o_orderdate FROM orders GROUP BY 1 ORDER BY 1"""),
 
     "q21_percentile" -> Q(kqlQ(
       """lineitem
         | summarize p50=round(percentile(l_extendedprice, 50), 4),
                     p95=round(percentile(l_extendedprice, 95), 4) by l_returnflag
         | sort by l_returnflag asc"""),
-      Some("""SELECT l_returnflag, ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS p50, ROUND(quantile_cont(l_extendedprice, 0.95), 4) AS p95 FROM lineitem GROUP BY 1 ORDER BY 1""")),
+      """SELECT l_returnflag, ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS p50, ROUND(quantile_cont(l_extendedprice, 0.95), 4) AS p95 FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
     "q22_count_distinct" -> Q(kqlQ(
       """orders | summarize u=count_distinct(o_custkey) by o_orderstatus
         | sort by o_orderstatus asc"""),
-      Some("""SELECT o_orderstatus, CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS u FROM orders GROUP BY 1 ORDER BY 1""")),
+      """SELECT o_orderstatus, CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS u FROM orders GROUP BY 1 ORDER BY 1"""),
 
     // NOTE on the dynamic_to_json reshapes below: the driver's oracle
     // compare sorts the frame in pandas, and multi-column frames with an
@@ -1413,13 +1432,13 @@ object SparkEntry {
       """nation | summarize names=array_sort_asc(make_list(n_name)) by n_regionkey
         | project n_regionkey, names = dynamic_to_json(names)
         | sort by n_regionkey asc"""),
-      Some("""SELECT n_regionkey, CAST(to_json(list_sort(list(n_name))) AS VARCHAR) AS names FROM nation GROUP BY 1 ORDER BY 1""")),
+      """SELECT n_regionkey, CAST(to_json(list_sort(list(n_name))) AS VARCHAR) AS names FROM nation GROUP BY 1 ORDER BY 1"""),
 
     "q24_make_set" -> Q(kqlQ(
       """lineitem | summarize flags=make_set(l_returnflag) by l_linestatus
         | project l_linestatus, flags = dynamic_to_json(flags)
         | sort by l_linestatus asc"""),
-      Some("""SELECT l_linestatus, CAST(to_json(list_sort(list(DISTINCT l_returnflag))) AS VARCHAR) AS flags FROM lineitem GROUP BY 1 ORDER BY 1""")),
+      """SELECT l_linestatus, CAST(to_json(list_sort(list(DISTINCT l_returnflag))) AS VARCHAR) AS flags FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
     "q25_mvexpand" -> Q(kqlQ(
       """documents
@@ -1428,52 +1447,52 @@ object SparkEntry {
         | summarize c=count() by tok=tostring(toks)
         | sort by c desc, tok asc
         | take 50"""),
-      Some("""SELECT tok, CAST(COUNT(*) AS BIGINT) AS c FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents) GROUP BY 1 ORDER BY c DESC, tok LIMIT 50""")),
+      """SELECT tok, CAST(COUNT(*) AS BIGINT) AS c FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents) GROUP BY 1 ORDER BY c DESC, tok LIMIT 50"""),
 
     "q26_parse" -> Q(kqlQ(
       """events
         | parse props with '{"k": ' kval:long '}'
         | summarize total=sum(kval), n=count() by event_type
         | sort by event_type asc"""),
-      Some("""SELECT event_type, CAST(SUM(CAST(regexp_extract(props, '\{"k": (-?\d+)\}', 1) AS BIGINT)) AS BIGINT) AS total, CAST(COUNT(*) AS BIGINT) AS n FROM events GROUP BY 1 ORDER BY 1""")),
+      """SELECT event_type, CAST(SUM(CAST(regexp_extract(props, '\{"k": (-?\d+)\}', 1) AS BIGINT)) AS BIGINT) AS total, CAST(COUNT(*) AS BIGINT) AS n FROM events GROUP BY 1 ORDER BY 1"""),
 
     "q27_dynamic_json" -> Q(kqlQ(
       """events
         | extend k = tolong(props.k)
         | summarize avg_k=round(avg(k), 4), mx=max(k) by event_type
         | sort by event_type asc"""),
-      Some("""SELECT event_type, ROUND(AVG(k), 4) AS avg_k, MAX(k) AS mx FROM (SELECT event_type, CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS BIGINT) AS k FROM events) GROUP BY 1 ORDER BY 1""")),
+      """SELECT event_type, ROUND(AVG(k), 4) AS avg_k, MAX(k) AS mx FROM (SELECT event_type, CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS BIGINT) AS k FROM events) GROUP BY 1 ORDER BY 1"""),
 
     "q28_getschema" -> Q(kqlQ("""lineitem | getschema"""),
-      Some("""SELECT 'l_orderkey' AS ColumnName, CAST(0 AS BIGINT) AS ColumnOrdinal, 'long' AS ColumnType UNION ALL SELECT 'l_partkey', 1, 'long' UNION ALL SELECT 'l_suppkey', 2, 'long' UNION ALL SELECT 'l_linenumber', 3, 'int' UNION ALL SELECT 'l_quantity', 4, 'real' UNION ALL SELECT 'l_extendedprice', 5, 'real' UNION ALL SELECT 'l_discount', 6, 'real' UNION ALL SELECT 'l_tax', 7, 'real' UNION ALL SELECT 'l_returnflag', 8, 'string' UNION ALL SELECT 'l_linestatus', 9, 'string' UNION ALL SELECT 'l_shipdate', 10, 'datetime' ORDER BY ColumnOrdinal""")),
+      """SELECT 'l_orderkey' AS ColumnName, CAST(0 AS BIGINT) AS ColumnOrdinal, 'long' AS ColumnType UNION ALL SELECT 'l_partkey', 1, 'long' UNION ALL SELECT 'l_suppkey', 2, 'long' UNION ALL SELECT 'l_linenumber', 3, 'int' UNION ALL SELECT 'l_quantity', 4, 'real' UNION ALL SELECT 'l_extendedprice', 5, 'real' UNION ALL SELECT 'l_discount', 6, 'real' UNION ALL SELECT 'l_tax', 7, 'real' UNION ALL SELECT 'l_returnflag', 8, 'string' UNION ALL SELECT 'l_linestatus', 9, 'string' UNION ALL SELECT 'l_shipdate', 10, 'datetime' ORDER BY ColumnOrdinal"""),
 
     "q29_datatable" -> Q(kqlQ(
       """datatable(name:string, v:long) ['a', 1, 'b', 2, 'c', 3]
         | extend v2 = v * 10
         | sort by name asc"""),
-      Some("""SELECT * FROM (VALUES ('a', CAST(1 AS BIGINT), CAST(10 AS BIGINT)), ('b', 2, 20), ('c', 3, 30)) t(name, v, v2) ORDER BY name""")),
+      """SELECT * FROM (VALUES ('a', CAST(1 AS BIGINT), CAST(10 AS BIGINT)), ('b', 2, 20), ('c', 3, 30)) t(name, v, v2) ORDER BY name"""),
 
     "q30_print_range" -> Q(kqlQ(
       """range x from 1 to 1000 step 3
         | summarize n=count(), s=sum(x), mx=max(x)"""),
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(x) AS BIGINT) AS s, CAST(MAX(x) AS BIGINT) AS mx FROM generate_series(1, 1000, 3) t(x)""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(x) AS BIGINT) AS s, CAST(MAX(x) AS BIGINT) AS mx FROM generate_series(1, 1000, 3) t(x)"""),
 
     "q31_case" -> Q(kqlQ(
       """lineitem
         | extend qcat = case(l_quantity < 10, 'low', l_quantity < 30, 'mid', 'high')
         | summarize n=count() by qcat, l_returnflag
         | sort by qcat asc, l_returnflag asc"""),
-      Some("""SELECT CASE WHEN l_quantity < 10 THEN 'low' WHEN l_quantity < 30 THEN 'mid' ELSE 'high' END AS qcat, l_returnflag, CAST(COUNT(*) AS BIGINT) AS n FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""")),
+      """SELECT CASE WHEN l_quantity < 10 THEN 'low' WHEN l_quantity < 30 THEN 'mid' ELSE 'high' END AS qcat, l_returnflag, CAST(COUNT(*) AS BIGINT) AS n FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2"""),
 
     "q32_search" -> Q(kqlQ(
       """events | search 'error' | summarize n=count() by event_type
         | sort by event_type asc"""),
-      Some("""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n FROM events WHERE lower(event_type) LIKE '%error%' OR lower(props) LIKE '%error%' GROUP BY 1 ORDER BY 1""")),
+      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n FROM events WHERE lower(event_type) LIKE '%error%' OR lower(props) LIKE '%error%' GROUP BY 1 ORDER BY 1"""),
 
     "q33_top_hitters" -> Q(kqlQ(
       """documents | top-hitters 10 of source
         | sort by aggregated_source desc, source asc"""),
-      Some("""SELECT source, CAST(COUNT(*) AS BIGINT) AS aggregated_source FROM documents GROUP BY 1 ORDER BY 2 DESC, 1 LIMIT 10""")),
+      """SELECT source, CAST(COUNT(*) AS BIGINT) AS aggregated_source FROM documents GROUP BY 1 ORDER BY 2 DESC, 1 LIMIT 10"""),
 
     "q34_innerunique" -> Q(kqlQ(
       """lineitem
@@ -1481,7 +1500,7 @@ object SparkEntry {
         | join kind=innerunique (part) on $left.l_partkey == $right.p_partkey
         | summarize n=count() by p_brand
         | sort by p_brand asc"""),
-      Some("""SELECT p_brand, CAST(COUNT(*) AS BIGINT) AS n FROM (SELECT DISTINCT l_partkey FROM lineitem) l JOIN part ON l_partkey = p_partkey GROUP BY 1 ORDER BY 1""")),
+      """SELECT p_brand, CAST(COUNT(*) AS BIGINT) AS n FROM (SELECT DISTINCT l_partkey FROM lineitem) l JOIN part ON l_partkey = p_partkey GROUP BY 1 ORDER BY 1"""),
 
     "q35_between_in" -> Q(kqlQ(
       """lineitem
@@ -1489,7 +1508,7 @@ object SparkEntry {
               and l_shipdate between (datetime(1996-01-01) .. datetime(1996-12-31))
         | summarize n=count() by l_returnflag
         | sort by l_returnflag asc"""),
-      Some("""SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n FROM lineitem WHERE l_quantity BETWEEN 10 AND 20 AND l_returnflag IN ('A', 'N') AND l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1996-12-31' GROUP BY 1 ORDER BY 1""")),
+      """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n FROM lineitem WHERE l_quantity BETWEEN 10 AND 20 AND l_returnflag IN ('A', 'N') AND l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1996-12-31' GROUP BY 1 ORDER BY 1"""),
 
     "q36_project_ops" -> Q(kqlQ(
       """lineitem
@@ -1497,7 +1516,7 @@ object SparkEntry {
         | project-keep l_orderkey, l_linenumber, qty
         | where qty > 45
         | sort by l_orderkey asc, l_linenumber asc, qty asc"""),
-      Some("""SELECT l_orderkey, l_linenumber, l_quantity AS qty FROM lineitem WHERE l_quantity > 45 ORDER BY 1, 2, 3""")),
+      """SELECT l_orderkey, l_linenumber, l_quantity AS qty FROM lineitem WHERE l_quantity > 45 ORDER BY 1, 2, 3"""),
 
     "q37_string_predicates" -> Q(kqlQ(
       """part
@@ -1505,7 +1524,7 @@ object SparkEntry {
               and p_brand endswith '3' and p_name !contains 'bolt'
         | project p_partkey, p_name, p_brand, p_type
         | sort by p_partkey asc"""),
-      Some("""SELECT p_partkey, p_name, p_brand, p_type FROM part WHERE lower(p_type) LIKE 'econ%' AND regexp_matches(p_name, '(?i)\bred\b') AND lower(p_brand) LIKE '%3' AND NOT (lower(p_name) LIKE '%bolt%') ORDER BY p_partkey""")),
+      """SELECT p_partkey, p_name, p_brand, p_type FROM part WHERE lower(p_type) LIKE 'econ%' AND regexp_matches(p_name, '(?i)\bred\b') AND lower(p_brand) LIKE '%3' AND NOT (lower(p_name) LIKE '%bolt%') ORDER BY p_partkey"""),
 
     "q38_make_series" -> Q(kqlQ(
       """events
@@ -1516,14 +1535,14 @@ object SparkEntry {
       // the ts axis column is dropped in the final projection (timestamp
       // JSON rendering differs across engines); the 30-element count
       // vector per type still pins grid position + fill behavior
-      Some("""WITH grid AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 DAY)) AS t), types AS (SELECT DISTINCT event_type FROM events), binned AS (SELECT event_type, date_trunc('day', ts) AS d, CAST(COUNT(*) AS BIGINT) AS cnt FROM events WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-01-31' GROUP BY 1, 2), filled AS (SELECT ty.event_type, g.t, COALESCE(b.cnt, 0) AS cnt FROM types ty CROSS JOIN grid g LEFT JOIN binned b ON b.event_type = ty.event_type AND b.d = g.t) SELECT event_type, CAST(to_json(list(cnt ORDER BY t)) AS VARCHAR) AS n FROM filled GROUP BY event_type ORDER BY event_type""")),
+      """WITH grid AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 DAY)) AS t), types AS (SELECT DISTINCT event_type FROM events), binned AS (SELECT event_type, date_trunc('day', ts) AS d, CAST(COUNT(*) AS BIGINT) AS cnt FROM events WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-01-31' GROUP BY 1, 2), filled AS (SELECT ty.event_type, g.t, COALESCE(b.cnt, 0) AS cnt FROM types ty CROSS JOIN grid g LEFT JOIN binned b ON b.event_type = ty.event_type AND b.d = g.t) SELECT event_type, CAST(to_json(list(cnt ORDER BY t)) AS VARCHAR) AS n FROM filled GROUP BY event_type ORDER BY event_type"""),
 
     "q39_top_nested" -> Q(kqlQ(
       """lineitem
         | top-nested 3 of l_returnflag by sum(tolong(round(l_quantity))),
           top-nested 2 of l_linestatus by count()
         | sort by l_returnflag asc, l_linestatus asc"""),
-      Some("""WITH l1 AS (SELECT l_returnflag, CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS agg1 FROM lineitem GROUP BY 1), r1 AS (SELECT * FROM l1 QUALIFY ROW_NUMBER() OVER (ORDER BY agg1 DESC, l_returnflag) <= 3), l2 AS (SELECT l_returnflag, l_linestatus, CAST(COUNT(*) AS BIGINT) AS agg2 FROM lineitem WHERE l_returnflag IN (SELECT l_returnflag FROM r1) GROUP BY 1, 2), r2 AS (SELECT * FROM l2 QUALIFY ROW_NUMBER() OVER (PARTITION BY l_returnflag ORDER BY agg2 DESC, l_linestatus) <= 2) SELECT r1.l_returnflag, r1.agg1 AS aggregated_l_returnflag, r2.l_linestatus, r2.agg2 AS aggregated_l_linestatus FROM r1 JOIN r2 USING (l_returnflag) ORDER BY 1, 3""")),
+      """WITH l1 AS (SELECT l_returnflag, CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS agg1 FROM lineitem GROUP BY 1), r1 AS (SELECT * FROM l1 QUALIFY ROW_NUMBER() OVER (ORDER BY agg1 DESC, l_returnflag) <= 3), l2 AS (SELECT l_returnflag, l_linestatus, CAST(COUNT(*) AS BIGINT) AS agg2 FROM lineitem WHERE l_returnflag IN (SELECT l_returnflag FROM r1) GROUP BY 1, 2), r2 AS (SELECT * FROM l2 QUALIFY ROW_NUMBER() OVER (PARTITION BY l_returnflag ORDER BY agg2 DESC, l_linestatus) <= 2) SELECT r1.l_returnflag, r1.agg1 AS aggregated_l_returnflag, r2.l_linestatus, r2.agg2 AS aggregated_l_linestatus FROM r1 JOIN r2 USING (l_returnflag) ORDER BY 1, 3"""),
 
     "q40_rank" -> Q(kqlQ(
       """lineitem
@@ -1533,7 +1552,7 @@ object SparkEntry {
         | where rk <= 100
         | project l_orderkey, l_linenumber, l_extendedprice, rk, drk, pr
         | sort by rk asc, l_orderkey asc, l_linenumber asc"""),
-      Some("""SELECT l_orderkey, l_linenumber, l_extendedprice, rk, drk, pr FROM (SELECT l_orderkey, l_linenumber, l_extendedprice, CAST(RANK() OVER (ORDER BY l_extendedprice DESC) AS BIGINT) AS rk, CAST(DENSE_RANK() OVER (ORDER BY l_extendedprice DESC) AS BIGINT) AS drk, ROUND(PERCENT_RANK() OVER (ORDER BY l_extendedprice DESC), 8) AS pr FROM lineitem) WHERE rk <= 100 ORDER BY rk, l_orderkey, l_linenumber""")),
+      """SELECT l_orderkey, l_linenumber, l_extendedprice, rk, drk, pr FROM (SELECT l_orderkey, l_linenumber, l_extendedprice, CAST(RANK() OVER (ORDER BY l_extendedprice DESC) AS BIGINT) AS rk, CAST(DENSE_RANK() OVER (ORDER BY l_extendedprice DESC) AS BIGINT) AS drk, ROUND(PERCENT_RANK() OVER (ORDER BY l_extendedprice DESC), 8) AS pr FROM lineitem) WHERE rk <= 100 ORDER BY rk, l_orderkey, l_linenumber"""),
 
     "q41_let_bindings" -> Q(kqlQ(
       """let cutoff = 45;
@@ -1543,24 +1562,24 @@ object SparkEntry {
         | extend s = todouble(sc) / 100.0
         | project-away sc
         | sort by l_returnflag asc"""),
-      Some("""SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS s FROM lineitem WHERE l_quantity > 45 GROUP BY 1 ORDER BY 1""")),
+      """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS s FROM lineitem WHERE l_quantity > 45 GROUP BY 1 ORDER BY 1"""),
 
     "q42_multimodal_join" -> Q(kqlQ(
       """documents
         | join kind=inner (embeddings) on $left.doc_id == $right.vec_id
         | summarize n=count(), avg_chars=round(avg(n_chars), 4) by label, lang
         | sort by label asc, lang asc"""),
-      Some("""SELECT label, lang, CAST(COUNT(*) AS BIGINT) AS n, ROUND(AVG(n_chars), 4) AS avg_chars FROM documents JOIN embeddings ON doc_id = vec_id GROUP BY 1, 2 ORDER BY 1, 2""")),
+      """SELECT label, lang, CAST(COUNT(*) AS BIGINT) AS n, ROUND(AVG(n_chars), 4) AS avg_chars FROM documents JOIN embeddings ON doc_id = vec_id GROUP BY 1, 2 ORDER BY 1, 2"""),
 
     // ------------------------------------------------ LLM-pipeline ops
     "llm_dedup_exact" -> Q(
       (s, dir) => LlmOps.dedupExact(docs(s, dir))
         .select(col("keep_id"), col("n_copies")).orderBy("keep_id"),
-      Some("""SELECT CAST(MIN(doc_id) AS BIGINT) AS keep_id, CAST(COUNT(*) AS BIGINT) AS n_copies FROM documents GROUP BY lower(trim(text)) ORDER BY keep_id""")),
+      """SELECT CAST(MIN(doc_id) AS BIGINT) AS keep_id, CAST(COUNT(*) AS BIGINT) AS n_copies FROM documents GROUP BY lower(trim(text)) ORDER BY keep_id"""),
 
     "llm_jaccard_pairs" -> Q(
       (s, dir) => LlmOps.jaccardPairs(docs(s, dir), 0.8, blockCol = Some("source")).orderBy("i", "j"),
-      Some("""WITH toks AS (SELECT DISTINCT source, doc_id AS id, unnest(string_split(lower(text), ' ')) AS tok FROM documents), sizes AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY 1), inter AS (SELECT a.id AS i, b.id AS j, CAST(COUNT(*) AS BIGINT) AS c FROM toks a JOIN toks b ON a.source = b.source AND a.tok = b.tok AND a.id < b.id GROUP BY 1, 2) SELECT i, j, ROUND(CAST(c AS DOUBLE) / (sa.n + sb.n - c), 4) AS jac FROM inter JOIN sizes sa ON i = sa.id JOIN sizes sb ON j = sb.id WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8 ORDER BY i, j""")),
+      """WITH toks AS (SELECT DISTINCT source, doc_id AS id, unnest(string_split(lower(text), ' ')) AS tok FROM documents), sizes AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY 1), inter AS (SELECT a.id AS i, b.id AS j, CAST(COUNT(*) AS BIGINT) AS c FROM toks a JOIN toks b ON a.source = b.source AND a.tok = b.tok AND a.id < b.id GROUP BY 1, 2) SELECT i, j, ROUND(CAST(c AS DOUBLE) / (sa.n + sb.n - c), 4) AS jac FROM inter JOIN sizes sa ON i = sa.id JOIN sizes sb ON j = sb.id WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8 ORDER BY i, j"""),
 
     // MinHash+LSH with a CONTRACT oracle (r3 verdict task 4): the raw
     // pair set is hash-seeded (not SQL-replicable), so the query emits
@@ -1602,7 +1621,7 @@ object SparkEntry {
           .select(col("n_exact"), col("n_false_pos"),
             (col("hit") >= ceil(col("n_exact") * 0.85)).as("recall_ok"))
       },
-      Some("""WITH toks AS (SELECT DISTINCT source, doc_id AS id, unnest(string_split(lower(text), ' ')) AS tok FROM documents WHERE source IN ('src0', 'src1', 'src2', 'src3')), sizes AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY 1), inter AS (SELECT a.id AS i, b.id AS j, CAST(COUNT(*) AS BIGINT) AS c FROM toks a JOIN toks b ON a.source = b.source AND a.tok = b.tok AND a.id < b.id GROUP BY 1, 2), ex AS (SELECT i, j FROM inter JOIN sizes sa ON i = sa.id JOIN sizes sb ON j = sb.id WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8) SELECT CAST(COUNT(*) AS BIGINT) AS n_exact, CAST(0 AS BIGINT) AS n_false_pos, true AS recall_ok FROM ex""")),
+      """WITH toks AS (SELECT DISTINCT source, doc_id AS id, unnest(string_split(lower(text), ' ')) AS tok FROM documents WHERE source IN ('src0', 'src1', 'src2', 'src3')), sizes AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY 1), inter AS (SELECT a.id AS i, b.id AS j, CAST(COUNT(*) AS BIGINT) AS c FROM toks a JOIN toks b ON a.source = b.source AND a.tok = b.tok AND a.id < b.id GROUP BY 1, 2), ex AS (SELECT i, j FROM inter JOIN sizes sa ON i = sa.id JOIN sizes sb ON j = sb.id WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8) SELECT CAST(COUNT(*) AS BIGINT) AS n_exact, CAST(0 AS BIGINT) AS n_false_pos, true AS recall_ok FROM ex"""),
 
     // Transitive near-dup GROUPS: exact-Jaccard pairs → connected
     // components → (doc, group, size, keep). Deterministic end-to-end
@@ -1611,7 +1630,7 @@ object SparkEntry {
     "llm_neardup_groups" -> Q(
       (s, dir) => LlmOps.nearDupGroups(docs(s, dir), 0.8,
         blockCol = Some("source")).orderBy("doc_id"),
-      Some("""WITH RECURSIVE toks AS (SELECT DISTINCT source, doc_id AS id, unnest(string_split(lower(text), ' ')) AS tok FROM documents), sizes AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY 1), inter AS (SELECT a.id AS i, b.id AS j, CAST(COUNT(*) AS BIGINT) AS c FROM toks a JOIN toks b ON a.source = b.source AND a.tok = b.tok AND a.id < b.id GROUP BY 1, 2), prs AS (SELECT i, j FROM inter JOIN sizes sa ON i = sa.id JOIN sizes sb ON j = sb.id WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8), edges AS (SELECT i AS a, j AS b FROM prs UNION SELECT j, i FROM prs), reach(a, b) AS (SELECT a, b FROM edges UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a), grp AS (SELECT a AS node, LEAST(a, MIN(b)) AS group_id FROM reach GROUP BY a), allg AS (SELECT d.doc_id, COALESCE(g.group_id, d.doc_id) AS group_id FROM documents d LEFT JOIN grp g ON d.doc_id = g.node), sz AS (SELECT group_id, CAST(COUNT(*) AS BIGINT) AS group_size FROM allg GROUP BY 1) SELECT a.doc_id, a.group_id, s.group_size, a.doc_id = a.group_id AS keep FROM allg a JOIN sz s USING (group_id) ORDER BY a.doc_id""")),
+      """WITH RECURSIVE toks AS (SELECT DISTINCT source, doc_id AS id, unnest(string_split(lower(text), ' ')) AS tok FROM documents), sizes AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY 1), inter AS (SELECT a.id AS i, b.id AS j, CAST(COUNT(*) AS BIGINT) AS c FROM toks a JOIN toks b ON a.source = b.source AND a.tok = b.tok AND a.id < b.id GROUP BY 1, 2), prs AS (SELECT i, j FROM inter JOIN sizes sa ON i = sa.id JOIN sizes sb ON j = sb.id WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8), edges AS (SELECT i AS a, j AS b FROM prs UNION SELECT j, i FROM prs), reach(a, b) AS (SELECT a, b FROM edges UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a), grp AS (SELECT a AS node, LEAST(a, MIN(b)) AS group_id FROM reach GROUP BY a), allg AS (SELECT d.doc_id, COALESCE(g.group_id, d.doc_id) AS group_id FROM documents d LEFT JOIN grp g ON d.doc_id = g.node), sz AS (SELECT group_id, CAST(COUNT(*) AS BIGINT) AS group_size FROM allg GROUP BY 1) SELECT a.doc_id, a.group_id, s.group_size, a.doc_id = a.group_id AS keep FROM allg a JOIN sz s USING (group_id) ORDER BY a.doc_id"""),
 
     // SimHash contract oracle: fingerprints are xxhash64-based (not
     // SQL-replicable), but determinism is — identical lowercased texts
@@ -1629,7 +1648,7 @@ object SparkEntry {
             count(lit(1)).as("n_text_groups"),
             sum(when(col("k") > 1, 1L).otherwise(0L)).as("n_inconsistent"))
       },
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(COUNT(DISTINCT lower(text)) AS BIGINT) AS n_text_groups, CAST(0 AS BIGINT) AS n_inconsistent FROM documents""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(COUNT(DISTINCT lower(text)) AS BIGINT) AS n_text_groups, CAST(0 AS BIGINT) AS n_inconsistent FROM documents"""),
 
     // Deterministic per-stratum sampling + hash split: both use the
     // engine-portable Knuth multiplicative hash, so DuckDB reproduces
@@ -1637,14 +1656,14 @@ object SparkEntry {
     "llm_stratified_sample" -> Q(
       (s, dir) => LlmOps.stratifiedSample(docs(s, dir), 5, "source")
         .select(col("doc_id"), col("source")).orderBy("doc_id"),
-      Some("""SELECT doc_id, source FROM (SELECT doc_id, source, ROW_NUMBER() OVER (PARTITION BY source ORDER BY (doc_id * 2654435761) % 4294967296, doc_id) AS rn FROM documents) WHERE rn <= 5 ORDER BY doc_id""")),
+      """SELECT doc_id, source FROM (SELECT doc_id, source, ROW_NUMBER() OVER (PARTITION BY source ORDER BY (doc_id * 2654435761) % 4294967296, doc_id) AS rn FROM documents) WHERE rn <= 5 ORDER BY doc_id"""),
 
     "llm_hash_split" -> Q(
       (s, dir) => LlmOps.hashSplit(docs(s, dir), 0.8, 0.1)
         .groupBy(col("split")).agg(count(lit(1)).as("n"),
           min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
         .orderBy("split"),
-      Some("""SELECT split, CAST(COUNT(*) AS BIGINT) AS n, MIN(doc_id) AS mn, MAX(doc_id) AS mx FROM (SELECT doc_id, CASE WHEN h < CAST(FLOOR(0.8 * 4294967296) AS BIGINT) THEN 'train' WHEN h < CAST(FLOOR(0.9 * 4294967296) AS BIGINT) THEN 'val' ELSE 'test' END AS split FROM (SELECT doc_id, (doc_id * 2654435761) % 4294967296 AS h FROM documents)) GROUP BY 1 ORDER BY 1""")),
+      """SELECT split, CAST(COUNT(*) AS BIGINT) AS n, MIN(doc_id) AS mn, MAX(doc_id) AS mx FROM (SELECT doc_id, CASE WHEN h < CAST(FLOOR(0.8 * 4294967296) AS BIGINT) THEN 'train' WHEN h < CAST(FLOOR(0.9 * 4294967296) AS BIGINT) THEN 'val' ELSE 'test' END AS split FROM (SELECT doc_id, (doc_id * 2654435761) % 4294967296 AS h FROM documents)) GROUP BY 1 ORDER BY 1"""),
 
     // End-to-end curation pipeline (r5): the operators a training-data
     // run actually chains — quality filter (stop-word ratio + length
@@ -1668,7 +1687,7 @@ object SparkEntry {
           .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
           .orderBy("source", "split")
       },
-      Some("""WITH q AS (SELECT doc_id, source, n_chars, ROUND(CAST(len(list_filter(string_split(lower(text), ' '), t -> t IN ('the','and','of','to','a','in','is','it','that','for'))) AS DOUBLE) / len(string_split(lower(text), ' ')), 4) AS stop_ratio, len(string_split(lower(text), ' ')) AS n_tokens, lower(trim(text)) AS norm_text FROM documents), good AS (SELECT * FROM q WHERE stop_ratio >= 0.05 AND n_tokens >= 20), keep AS (SELECT MIN(doc_id) AS doc_id FROM good GROUP BY norm_text), capped AS (SELECT g.source, g.doc_id, g.n_chars FROM good g JOIN keep k ON g.doc_id = k.doc_id QUALIFY ROW_NUMBER() OVER (PARTITION BY g.source ORDER BY g.n_chars DESC, g.doc_id) <= 20), split AS (SELECT source, n_chars, CASE WHEN h < CAST(FLOOR(0.8 * 4294967296) AS BIGINT) THEN 'train' WHEN h < CAST(FLOOR(0.9 * 4294967296) AS BIGINT) THEN 'val' ELSE 'test' END AS split FROM (SELECT source, n_chars, (doc_id * 2654435761) % 4294967296 AS h FROM capped)) SELECT source, split, CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars FROM split GROUP BY 1, 2 ORDER BY 1, 2""")),
+      """WITH q AS (SELECT doc_id, source, n_chars, ROUND(CAST(len(list_filter(string_split(lower(text), ' '), t -> t IN ('the','and','of','to','a','in','is','it','that','for'))) AS DOUBLE) / len(string_split(lower(text), ' ')), 4) AS stop_ratio, len(string_split(lower(text), ' ')) AS n_tokens, lower(trim(text)) AS norm_text FROM documents), good AS (SELECT * FROM q WHERE stop_ratio >= 0.05 AND n_tokens >= 20), keep AS (SELECT MIN(doc_id) AS doc_id FROM good GROUP BY norm_text), capped AS (SELECT g.source, g.doc_id, g.n_chars FROM good g JOIN keep k ON g.doc_id = k.doc_id QUALIFY ROW_NUMBER() OVER (PARTITION BY g.source ORDER BY g.n_chars DESC, g.doc_id) <= 20), split AS (SELECT source, n_chars, CASE WHEN h < CAST(FLOOR(0.8 * 4294967296) AS BIGINT) THEN 'train' WHEN h < CAST(FLOOR(0.9 * 4294967296) AS BIGINT) THEN 'val' ELSE 'test' END AS split FROM (SELECT source, n_chars, (doc_id * 2654435761) % 4294967296 AS h FROM capped)) SELECT source, split, CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars FROM split GROUP BY 1, 2 ORDER BY 1, 2"""),
 
     // Per-source/domain cap (r5): keep the top-5 docs per source by
     // (n_chars DESC, doc_id) — the C4/RefinedWeb "limit pages per
@@ -1680,7 +1699,7 @@ object SparkEntry {
       (s, dir) => LlmOps.sourceCap(docs(s, dir), 5)
         .select(col("source"), col("rank_in_src"), col("doc_id"), col("n_chars"))
         .orderBy("source", "rank_in_src"),
-      Some("""SELECT source, rank_in_src, doc_id, n_chars FROM (SELECT source, doc_id, n_chars, ROW_NUMBER() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rank_in_src FROM documents) t WHERE rank_in_src <= 5 ORDER BY source, rank_in_src""")),
+      """SELECT source, rank_in_src, doc_id, n_chars FROM (SELECT source, doc_id, n_chars, ROW_NUMBER() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rank_in_src FROM documents) t WHERE rank_in_src <= 5 ORDER BY source, rank_in_src"""),
 
     // Source-mixing sample (r5): Pile/DoReMi-style per-domain rates via
     // the growth-stable Knuth id hash — a pure per-row projection (no
@@ -1692,7 +1711,7 @@ object SparkEntry {
         .groupBy("source")
         .agg(count(lit(1)).as("n_kept"), sum(col("doc_id")).as("id_sum"))
         .orderBy("source"),
-      Some("""SELECT source, CAST(COUNT(*) AS BIGINT) AS n_kept, CAST(SUM(doc_id) AS BIGINT) AS id_sum FROM (SELECT source, doc_id, (doc_id * 2654435761) % 4294967296 AS h FROM documents) WHERE h < CAST(FLOOR(CASE source WHEN 'src0' THEN 0.5 WHEN 'src1' THEN 0.25 ELSE 0.1 END * 4294967296) AS BIGINT) GROUP BY source ORDER BY source""")),
+      """SELECT source, CAST(COUNT(*) AS BIGINT) AS n_kept, CAST(SUM(doc_id) AS BIGINT) AS id_sum FROM (SELECT source, doc_id, (doc_id * 2654435761) % 4294967296 AS h FROM documents) WHERE h < CAST(FLOOR(CASE source WHEN 'src0' THEN 0.5 WHEN 'src1' THEN 0.25 ELSE 0.1 END * 4294967296) AS BIGINT) GROUP BY source ORDER BY source"""),
 
     // Token-budget sample (r5): fill a per-source character budget from
     // the deterministic hash order — the "cut an n-token mix per
@@ -1702,7 +1721,7 @@ object SparkEntry {
       (s, dir) => LlmOps.tokenBudgetSample(docs(s, dir), 2000)
         .select(col("source"), col("doc_id"), col("n_chars"), col("cum_w"))
         .orderBy("source", "cum_w"),
-      Some("""SELECT source, doc_id, n_chars, cum_w FROM (SELECT source, doc_id, n_chars, CAST(SUM(n_chars) OVER (PARTITION BY source ORDER BY (doc_id * 2654435761) % 4294967296, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_w FROM documents) WHERE cum_w <= 2000 ORDER BY source, cum_w""")),
+      """SELECT source, doc_id, n_chars, cum_w FROM (SELECT source, doc_id, n_chars, CAST(SUM(n_chars) OVER (PARTITION BY source ORDER BY (doc_id * 2654435761) % 4294967296, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_w FROM documents) WHERE cum_w <= 2000 ORDER BY source, cum_w"""),
 
     // Benchmark decontamination: train = full documents table, eval =
     // its src0 block; docs sharing any 8-word n-gram with the eval set
@@ -1716,7 +1735,7 @@ object SparkEntry {
         LlmOps.contamination(d, d.filter(col("source") === "src0"), n = 8)
           .orderBy("doc_id")
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents), pos AS (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 7)) AS i FROM toks), dg AS (SELECT DISTINCT doc_id, array_to_string(tk[i : i + 7], ' ') AS gram FROM pos), eg AS (SELECT DISTINCT gram FROM dg JOIN documents USING (doc_id) WHERE source = 'src0') SELECT dg.doc_id, CAST(COUNT(*) AS BIGINT) AS n_contaminated_grams FROM dg JOIN eg USING (gram) GROUP BY 1 ORDER BY 1""")),
+      """WITH toks AS (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents), pos AS (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 7)) AS i FROM toks), dg AS (SELECT DISTINCT doc_id, array_to_string(tk[i : i + 7], ' ') AS gram FROM pos), eg AS (SELECT DISTINCT gram FROM dg JOIN documents USING (doc_id) WHERE source = 'src0') SELECT dg.doc_id, CAST(COUNT(*) AS BIGINT) AS n_contaminated_grams FROM dg JOIN eg USING (gram) GROUP BY 1 ORDER BY 1"""),
 
     // SimHash hamming pairs, contract oracle: fingerprints are
     // xxhash64-based (not SQL-replicable) but two facts are not — (1)
@@ -1740,7 +1759,7 @@ object SparkEntry {
             sum(when(col("ti") === col("tj"), 1L).otherwise(0L)).as("n_identical_found"),
             (max(col("hamming")) <= 3).as("hamming_bounded"))
       },
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n_identical_found, true AS hamming_bounded FROM documents""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n_identical_found, true AS hamming_bounded FROM documents"""),
 
     // Sentence segmentation over a planted terminator layout: the doc
     // rebuilt as 6-token sentences joined by ". " with a final "." —
@@ -1759,7 +1778,7 @@ object SparkEntry {
         LlmOps.sentenceSplit(docs(s, dir).withColumn("t2", t2), "t2")
           .orderBy("doc_id", "sent_idx")
       },
-      Some("""WITH t AS (SELECT doc_id, list_filter(string_split(COALESCE(text, ''), ' '), z -> len(z) >= 1) AS tk FROM documents), b AS (SELECT doc_id, tk, CAST(ceil(len(tk) / 6.0) AS BIGINT) AS nb FROM t WHERE len(tk) > 0) SELECT doc_id, CAST(k AS BIGINT) AS sent_idx, array_to_string(tk[k*6+1 : k*6+6], ' ') || '.' AS sentence, nb AS n_sents FROM (SELECT doc_id, tk, nb, unnest(generate_series(0, CAST(nb - 1 AS INT))) AS k FROM b) ORDER BY doc_id, sent_idx""")),
+      """WITH t AS (SELECT doc_id, list_filter(string_split(COALESCE(text, ''), ' '), z -> len(z) >= 1) AS tk FROM documents), b AS (SELECT doc_id, tk, CAST(ceil(len(tk) / 6.0) AS BIGINT) AS nb FROM t WHERE len(tk) > 0) SELECT doc_id, CAST(k AS BIGINT) AS sent_idx, array_to_string(tk[k*6+1 : k*6+6], ' ') || '.' AS sentence, nb AS n_sents FROM (SELECT doc_id, tk, nb, unnest(generate_series(0, CAST(nb - 1 AS INT))) AS k FROM b) ORDER BY doc_id, sent_idx"""),
 
     // Soft dedup: duplicate groups keep unit TOTAL influence (weight
     // 1/n micros per copy) instead of dropping copies — integer-exact
@@ -1767,7 +1786,7 @@ object SparkEntry {
       (s, dir) => LlmOps.dedupSoft(docs(s, dir))
         .select(col("doc_id"), col("dup_count"), col("weight_u"))
         .orderBy("doc_id"),
-      Some("""WITH k AS (SELECT doc_id, lower(trim(COALESCE(text, ''))) AS nk FROM documents), c AS (SELECT nk, CAST(COUNT(*) AS BIGINT) AS dup_count FROM k GROUP BY 1) SELECT doc_id, dup_count, CAST(1000000 // dup_count AS BIGINT) AS weight_u FROM k JOIN c USING (nk) ORDER BY doc_id""")),
+      """WITH k AS (SELECT doc_id, lower(trim(COALESCE(text, ''))) AS nk FROM documents), c AS (SELECT nk, CAST(COUNT(*) AS BIGINT) AS dup_count FROM k GROUP BY 1) SELECT doc_id, dup_count, CAST(1000000 // dup_count AS BIGINT) AS weight_u FROM k JOIN c USING (nk) ORDER BY doc_id"""),
 
     // k-anonymity release gate: per (source, lang) combo counts + the
     // ≥ k flag and the corpus rollup — all integers, trivial exact
@@ -1781,7 +1800,7 @@ object SparkEntry {
             col("n_risky_rows").as("n"), (col("min_group") >= 5).as("k_anonymous"))
         combos.unionByName(roll).orderBy("source", "lang")
       },
-      Some("""WITH c AS (SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n, COUNT(*) >= 5 AS k_anonymous FROM documents GROUP BY 1, 2) SELECT * FROM (SELECT source, lang, n, k_anonymous FROM c UNION ALL SELECT '__total', '', CAST(COALESCE(SUM(CASE WHEN n < 5 THEN n END), 0) AS BIGINT), MIN(n) >= 5 FROM c) ORDER BY source, lang""")),
+      """WITH c AS (SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n, COUNT(*) >= 5 AS k_anonymous FROM documents GROUP BY 1, 2) SELECT * FROM (SELECT source, lang, n, k_anonymous FROM c UNION ALL SELECT '__total', '', CAST(COALESCE(SUM(CASE WHEN n < 5 THEN n END), 0) AS BIGINT), MIN(n) >= 5 FROM c) ORDER BY source, lang"""),
 
     // Token WER over the same two analytic plants as llm_rouge_l: for
     // BOTH, edit distance = max(|r|,|h|) − LCS is tight (ed ≥ that
@@ -1807,7 +1826,7 @@ object SparkEntry {
             col("edit_dist"), col("wer_u"))
           .orderBy("doc_id")
       },
-      Some("""WITH t AS (SELECT doc_id, len(list_filter(string_split(COALESCE(text, ''), ' '), z -> len(z) >= 1)[1:40]) AS n FROM documents), b AS (SELECT doc_id, n, CASE WHEN doc_id % 2 = 0 THEN n - n // 7 ELSE n END AS hl, CASE WHEN doc_id % 2 = 0 THEN n // 7 ELSE (n + 4) // 5 END AS ed FROM t) SELECT doc_id, CAST(n AS BIGINT) AS r_len, CAST(hl AS BIGINT) AS h_len, CAST(ed AS BIGINT) AS edit_dist, CAST(CASE WHEN n > 0 THEN ed * 1000000 // n ELSE 0 END AS BIGINT) AS wer_u FROM b ORDER BY doc_id""")),
+      """WITH t AS (SELECT doc_id, len(list_filter(string_split(COALESCE(text, ''), ' '), z -> len(z) >= 1)[1:40]) AS n FROM documents), b AS (SELECT doc_id, n, CASE WHEN doc_id % 2 = 0 THEN n - n // 7 ELSE n END AS hl, CASE WHEN doc_id % 2 = 0 THEN n // 7 ELSE (n + 4) // 5 END AS ed FROM t) SELECT doc_id, CAST(n AS BIGINT) AS r_len, CAST(hl AS BIGINT) AS h_len, CAST(ed AS BIGINT) AS edit_dist, CAST(CASE WHEN n > 0 THEN ed * 1000000 // n ELSE 0 END AS BIGINT) AS wer_u FROM b ORDER BY doc_id"""),
 
     // ROUGE-L over two ANALYTIC candidate plants (first 40 tokens):
     // even docs drop every 7th token (a subsequence ⇒ LCS = |cand|
@@ -1833,7 +1852,7 @@ object SparkEntry {
             col("rouge_p_u"), col("rouge_r_u"), col("rouge_f_u"))
           .orderBy("doc_id")
       },
-      Some("""WITH t AS (SELECT doc_id, len(list_filter(string_split(COALESCE(text, ''), ' '), z -> len(z) >= 1)[1:40]) AS n FROM documents), b AS (SELECT doc_id, n, CASE WHEN doc_id % 2 = 0 THEN n - n // 7 ELSE n END AS cl, CASE WHEN doc_id % 2 = 0 THEN n - n // 7 ELSE n - (n + 4) // 5 END AS lcs FROM t) SELECT doc_id, CAST(n AS BIGINT) AS r_len, CAST(cl AS BIGINT) AS c_len, CAST(lcs AS BIGINT) AS lcs, CAST(CASE WHEN cl > 0 THEN lcs * 1000000 // cl ELSE 0 END AS BIGINT) AS rouge_p_u, CAST(CASE WHEN n > 0 THEN lcs * 1000000 // n ELSE 0 END AS BIGINT) AS rouge_r_u, CAST(CASE WHEN n + cl > 0 THEN 2 * lcs * 1000000 // (n + cl) ELSE 0 END AS BIGINT) AS rouge_f_u FROM b ORDER BY doc_id""")),
+      """WITH t AS (SELECT doc_id, len(list_filter(string_split(COALESCE(text, ''), ' '), z -> len(z) >= 1)[1:40]) AS n FROM documents), b AS (SELECT doc_id, n, CASE WHEN doc_id % 2 = 0 THEN n - n // 7 ELSE n END AS cl, CASE WHEN doc_id % 2 = 0 THEN n - n // 7 ELSE n - (n + 4) // 5 END AS lcs FROM t) SELECT doc_id, CAST(n AS BIGINT) AS r_len, CAST(cl AS BIGINT) AS c_len, CAST(lcs AS BIGINT) AS lcs, CAST(CASE WHEN cl > 0 THEN lcs * 1000000 // cl ELSE 0 END AS BIGINT) AS rouge_p_u, CAST(CASE WHEN n > 0 THEN lcs * 1000000 // n ELSE 0 END AS BIGINT) AS rouge_r_u, CAST(CASE WHEN n + cl > 0 THEN 2 * lcs * 1000000 // (n + cl) ELSE 0 END AS BIGINT) AS rouge_f_u FROM b ORDER BY doc_id"""),
 
     // Contrastive hard-negative mining: per anchor (every 50th id),
     // top-5 different-label candidates by cosine, near-dups (> 0.9)
@@ -1842,7 +1861,7 @@ object SparkEntry {
     "llm_hard_negatives" -> Q(
       (s, dir) => LlmOps.hardNegatives(embs(s, dir), 50, 5)
         .orderBy("anchor_id", "rank"),
-      Some("""WITH a AS (SELECT vec_id AS anchor_id, label AS al, embedding AS av FROM embeddings WHERE vec_id % 50 = 0), d AS (SELECT a.anchor_id, e.vec_id, SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(a.av[g.i] AS DOUBLE)) AS dp, SQRT(SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(e.embedding[g.i] AS DOUBLE))) AS ne, SQRT(SUM(CAST(a.av[g.i] AS DOUBLE) * CAST(a.av[g.i] AS DOUBLE))) AS na FROM embeddings e JOIN a ON e.label != a.al, generate_series(1, 64) g(i) GROUP BY 1, 2), q AS (SELECT anchor_id, vec_id, CAST(ROUND(dp / (ne * na) * 10000) AS BIGINT) AS cos_u FROM d), r AS (SELECT anchor_id, vec_id, cos_u, ROW_NUMBER() OVER (PARTITION BY anchor_id ORDER BY cos_u DESC, vec_id) AS "rank" FROM q WHERE cos_u <= 9000) SELECT anchor_id, CAST("rank" AS BIGINT) AS "rank", vec_id AS neg_id, cos_u FROM r WHERE "rank" <= 5 ORDER BY anchor_id, "rank" """)),
+      """WITH a AS (SELECT vec_id AS anchor_id, label AS al, embedding AS av FROM embeddings WHERE vec_id % 50 = 0), d AS (SELECT a.anchor_id, e.vec_id, SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(a.av[g.i] AS DOUBLE)) AS dp, SQRT(SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(e.embedding[g.i] AS DOUBLE))) AS ne, SQRT(SUM(CAST(a.av[g.i] AS DOUBLE) * CAST(a.av[g.i] AS DOUBLE))) AS na FROM embeddings e JOIN a ON e.label != a.al, generate_series(1, 64) g(i) GROUP BY 1, 2), q AS (SELECT anchor_id, vec_id, CAST(ROUND(dp / (ne * na) * 10000) AS BIGINT) AS cos_u FROM d), r AS (SELECT anchor_id, vec_id, cos_u, ROW_NUMBER() OVER (PARTITION BY anchor_id ORDER BY cos_u DESC, vec_id) AS "rank" FROM q WHERE cos_u <= 9000) SELECT anchor_id, CAST("rank" AS BIGINT) AS "rank", vec_id AS neg_id, cos_u FROM r WHERE "rank" <= 5 ORDER BY anchor_id, "rank" """),
 
     // IVF-probed hard negatives (r14, the growing-anchor scale path):
     // three contract facts, all deterministic for a given corpus
@@ -1887,7 +1906,7 @@ object SparkEntry {
             (col("pn") > 0 && col("mism") === 0).as("scores_exact"),
             (col("hit") * 2 >= col("bf_n")).as("recall_ge_half"))
       },
-      Some("""SELECT true AS full_probe_parity, true AS scores_exact, true AS recall_ge_half""")),
+      """SELECT true AS full_probe_parity, true AS scores_exact, true AS recall_ge_half"""),
 
     // The binary index AT REST: 8-byte-per-vector words scan + bounded
     // candidate collect + bucket-pruned vec fetch — value-identical to
@@ -1902,7 +1921,7 @@ object SparkEntry {
         LlmOps.annCosineBinaryIndexed(s, "graft_bin_idx", qv, k = 10)
           .orderBy(col("cos_u").desc, col("vec_id"))
       },
-      Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0), h AS (SELECT e.vec_id, SUM(CASE WHEN (CAST(e.embedding[g.i] AS DOUBLE) > CAST(0 AS DOUBLE)) != (CAST(q.qv[g.i] AS DOUBLE) > CAST(0 AS DOUBLE)) THEN 1 ELSE 0 END) AS hamming, SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(q.qv[g.i] AS DOUBLE)) AS dp, SQRT(SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(e.embedding[g.i] AS DOUBLE))) AS ne, SQRT(SUM(CAST(q.qv[g.i] AS DOUBLE) * CAST(q.qv[g.i] AS DOUBLE))) AS nq FROM embeddings e, q, generate_series(1, 64) g(i) GROUP BY 1), c AS (SELECT vec_id, CAST(hamming AS BIGINT) AS hamming, CAST(ROUND(dp / (ne * nq) * 10000) AS BIGINT) AS cos_u, ROW_NUMBER() OVER (ORDER BY hamming, vec_id) AS hr FROM h) SELECT vec_id, hamming, cos_u FROM c WHERE hr <= 40 ORDER BY cos_u DESC, vec_id LIMIT 10""")),
+      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0), h AS (SELECT e.vec_id, SUM(CASE WHEN (CAST(e.embedding[g.i] AS DOUBLE) > CAST(0 AS DOUBLE)) != (CAST(q.qv[g.i] AS DOUBLE) > CAST(0 AS DOUBLE)) THEN 1 ELSE 0 END) AS hamming, SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(q.qv[g.i] AS DOUBLE)) AS dp, SQRT(SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(e.embedding[g.i] AS DOUBLE))) AS ne, SQRT(SUM(CAST(q.qv[g.i] AS DOUBLE) * CAST(q.qv[g.i] AS DOUBLE))) AS nq FROM embeddings e, q, generate_series(1, 64) g(i) GROUP BY 1), c AS (SELECT vec_id, CAST(hamming AS BIGINT) AS hamming, CAST(ROUND(dp / (ne * nq) * 10000) AS BIGINT) AS cos_u, ROW_NUMBER() OVER (ORDER BY hamming, vec_id) AS hr FROM h) SELECT vec_id, hamming, cos_u FROM c WHERE hr <= 40 ORDER BY cos_u DESC, vec_id LIMIT 10""", IndexBuild),
 
     // Sign-bit hamming ANN (the 1-bit quantization end): candidates by
     // popcount of xor'd sign words, exact-cosine re-rank; the oracle
@@ -1912,11 +1931,11 @@ object SparkEntry {
     "llm_ann_binary" -> Q(
       (s, dir) => LlmOps.annCosineBinary(embs(s, dir), queryId = 0, k = 10)
         .orderBy(col("cos_u").desc, col("vec_id")),
-      Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0), h AS (SELECT e.vec_id, SUM(CASE WHEN (CAST(e.embedding[g.i] AS DOUBLE) > CAST(0 AS DOUBLE)) != (CAST(q.qv[g.i] AS DOUBLE) > CAST(0 AS DOUBLE)) THEN 1 ELSE 0 END) AS hamming, SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(q.qv[g.i] AS DOUBLE)) AS dp, SQRT(SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(e.embedding[g.i] AS DOUBLE))) AS ne, SQRT(SUM(CAST(q.qv[g.i] AS DOUBLE) * CAST(q.qv[g.i] AS DOUBLE))) AS nq FROM embeddings e, q, generate_series(1, 64) g(i) GROUP BY 1), c AS (SELECT vec_id, CAST(hamming AS BIGINT) AS hamming, CAST(ROUND(dp / (ne * nq) * 10000) AS BIGINT) AS cos_u, ROW_NUMBER() OVER (ORDER BY hamming, vec_id) AS hr FROM h) SELECT vec_id, hamming, cos_u FROM c WHERE hr <= 40 ORDER BY cos_u DESC, vec_id LIMIT 10""")),
+      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0), h AS (SELECT e.vec_id, SUM(CASE WHEN (CAST(e.embedding[g.i] AS DOUBLE) > CAST(0 AS DOUBLE)) != (CAST(q.qv[g.i] AS DOUBLE) > CAST(0 AS DOUBLE)) THEN 1 ELSE 0 END) AS hamming, SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(q.qv[g.i] AS DOUBLE)) AS dp, SQRT(SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(e.embedding[g.i] AS DOUBLE))) AS ne, SQRT(SUM(CAST(q.qv[g.i] AS DOUBLE) * CAST(q.qv[g.i] AS DOUBLE))) AS nq FROM embeddings e, q, generate_series(1, 64) g(i) GROUP BY 1), c AS (SELECT vec_id, CAST(hamming AS BIGINT) AS hamming, CAST(ROUND(dp / (ne * nq) * 10000) AS BIGINT) AS cos_u, ROW_NUMBER() OVER (ORDER BY hamming, vec_id) AS hr FROM h) SELECT vec_id, hamming, cos_u FROM c WHERE hr <= 40 ORDER BY cos_u DESC, vec_id LIMIT 10"""),
 
     "llm_knn_cosine" -> Q(
       (s, dir) => LlmOps.knnCosine(embs(s, dir), queryId = 0, k = 20),
-      Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0), dots AS (SELECT e.vec_id, SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(q.qv[g.i] AS DOUBLE)) AS dp, SQRT(SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(e.embedding[g.i] AS DOUBLE))) AS na, SQRT(SUM(CAST(q.qv[g.i] AS DOUBLE) * CAST(q.qv[g.i] AS DOUBLE))) AS nb FROM embeddings e, q, generate_series(1, 64) g(i) GROUP BY e.vec_id) SELECT vec_id, ROUND(dp / (na * nb), 4) AS cos FROM dots ORDER BY cos DESC, vec_id LIMIT 20""")),
+      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0), dots AS (SELECT e.vec_id, SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(q.qv[g.i] AS DOUBLE)) AS dp, SQRT(SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(e.embedding[g.i] AS DOUBLE))) AS na, SQRT(SUM(CAST(q.qv[g.i] AS DOUBLE) * CAST(q.qv[g.i] AS DOUBLE))) AS nb FROM embeddings e, q, generate_series(1, 64) g(i) GROUP BY e.vec_id) SELECT vec_id, ROUND(dp / (na * nb), 4) AS cos FROM dots ORDER BY cos DESC, vec_id LIMIT 20"""),
 
     // hyperplane-LSH contract oracle: membership is seed-dependent, but
     // two facts are not — the query vector is its own top hit (cos 1.0),
@@ -1935,18 +1954,18 @@ object SparkEntry {
               .as("n_score_mismatch"))
           .select((col("self_cos") === 1.0).as("self_top"), col("n_score_mismatch"))
       },
-      Some("""SELECT true AS self_top, CAST(0 AS BIGINT) AS n_score_mismatch""")),
+      """SELECT true AS self_top, CAST(0 AS BIGINT) AS n_score_mismatch"""),
 
     // Embedding-space transitive groups (r4): exact cosine pairs →
     // connected components; deterministic, so the oracle reclusters with
     // a recursive CTE over the same pair SQL as llm_similarity_pairs.
     "llm_cosine_groups" -> Q(
       (s, dir) => LlmOps.cosineGroups(embs(s, dir), 0.3).orderBy("vec_id"),
-      Some("""WITH RECURSIVE ps AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM ps, generate_series(1, 64) g(x) GROUP BY 1, 2), prs AS (SELECT i, j FROM dots WHERE dp / (na * nb) >= 0.3), edges AS (SELECT i AS a, j AS b FROM prs UNION SELECT j, i FROM prs), reach(a, b) AS (SELECT a, b FROM edges UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a), grp AS (SELECT a AS node, LEAST(a, MIN(b)) AS group_id FROM reach GROUP BY a), allg AS (SELECT e.vec_id, COALESCE(g.group_id, e.vec_id) AS group_id FROM embeddings e LEFT JOIN grp g ON e.vec_id = g.node), sz AS (SELECT group_id, CAST(COUNT(*) AS BIGINT) AS group_size FROM allg GROUP BY 1) SELECT a.vec_id, a.group_id, s.group_size, a.vec_id = a.group_id AS keep FROM allg a JOIN sz s USING (group_id) ORDER BY a.vec_id""")),
+      """WITH RECURSIVE ps AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM ps, generate_series(1, 64) g(x) GROUP BY 1, 2), prs AS (SELECT i, j FROM dots WHERE dp / (na * nb) >= 0.3), edges AS (SELECT i AS a, j AS b FROM prs UNION SELECT j, i FROM prs), reach(a, b) AS (SELECT a, b FROM edges UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a), grp AS (SELECT a AS node, LEAST(a, MIN(b)) AS group_id FROM reach GROUP BY a), allg AS (SELECT e.vec_id, COALESCE(g.group_id, e.vec_id) AS group_id FROM embeddings e LEFT JOIN grp g ON e.vec_id = g.node), sz AS (SELECT group_id, CAST(COUNT(*) AS BIGINT) AS group_size FROM allg GROUP BY 1) SELECT a.vec_id, a.group_id, s.group_size, a.vec_id = a.group_id AS keep FROM allg a JOIN sz s USING (group_id) ORDER BY a.vec_id"""),
 
     "llm_similarity_pairs" -> Q(
       (s, dir) => LlmOps.similarityPairs(embs(s, dir), 0.3).orderBy("i", "j"),
-      Some("""WITH pairs AS (SELECT a.label AS blk, a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id), dots AS (SELECT blk, i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM pairs, generate_series(1, 64) g(x) GROUP BY 1, 2, 3) SELECT blk, i, j, ROUND(dp / (na * nb), 4) AS cos FROM dots WHERE dp / (na * nb) >= 0.3 ORDER BY i, j""")),
+      """WITH pairs AS (SELECT a.label AS blk, a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id), dots AS (SELECT blk, i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM pairs, generate_series(1, 64) g(x) GROUP BY 1, 2, 3) SELECT blk, i, j, ROUND(dp / (na * nb), 4) AS cos FROM dots WHERE dp / (na * nb) >= 0.3 ORDER BY i, j"""),
 
     // Incremental EMBEDDING dedup vs a persisted cosine index (r6): the
     // continuous-ingestion analog of llm_dedup_incremental in vector
@@ -1982,37 +2001,37 @@ object SparkEntry {
           .select(col("n_should"), col("n_false_drops"),
             (col("dropped_valid") >= ceil(col("n_should") * 0.9)).as("recall_ok"))
       },
-      Some("""WITH base AS (SELECT vec_id, embedding FROM embeddings WHERE label <= 3), ps AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM base a JOIN base b ON a.vec_id < b.vec_id), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM ps, generate_series(1, 64) g(x) GROUP BY 1, 2), pr AS (SELECT i, j FROM dots WHERE dp / (na * nb) >= 0.3), sd AS (SELECT DISTINCT x FROM (SELECT j AS x FROM pr WHERE j % 2 = 1 UNION ALL SELECT i AS x FROM pr WHERE i % 2 = 1 AND j % 2 = 0)) SELECT CAST((SELECT COUNT(*) FROM sd) AS BIGINT) AS n_should, CAST(0 AS BIGINT) AS n_false_drops, true AS recall_ok""")),
+      """WITH base AS (SELECT vec_id, embedding FROM embeddings WHERE label <= 3), ps AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM base a JOIN base b ON a.vec_id < b.vec_id), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM ps, generate_series(1, 64) g(x) GROUP BY 1, 2), pr AS (SELECT i, j FROM dots WHERE dp / (na * nb) >= 0.3), sd AS (SELECT DISTINCT x FROM (SELECT j AS x FROM pr WHERE j % 2 = 1 UNION ALL SELECT i AS x FROM pr WHERE i % 2 = 1 AND j % 2 = 0)) SELECT CAST((SELECT COUNT(*) FROM sd) AS BIGINT) AS n_should, CAST(0 AS BIGINT) AS n_false_drops, true AS recall_ok""", IndexBuild),
 
     "llm_quality" -> Q(
       (s, dir) => LlmOps.qualityScore(docs(s, dir)).orderBy("doc_id"),
-      Some("""SELECT doc_id, CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens, CAST(length(text) AS BIGINT) AS n_chars_m, ROUND(CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE) / length(text), 4) AS punct_ratio, CAST(len(list_filter(string_split(lower(text), ' '), t -> t IN ('the','and','of','to','a','in','is','it','that','for'))) AS BIGINT) AS n_stopwords, ROUND(CAST(len(list_filter(string_split(lower(text), ' '), t -> t IN ('the','and','of','to','a','in','is','it','that','for'))) AS DOUBLE) / len(string_split(lower(text), ' ')), 4) AS stop_ratio FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens, CAST(length(text) AS BIGINT) AS n_chars_m, ROUND(CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE) / length(text), 4) AS punct_ratio, CAST(len(list_filter(string_split(lower(text), ' '), t -> t IN ('the','and','of','to','a','in','is','it','that','for'))) AS BIGINT) AS n_stopwords, ROUND(CAST(len(list_filter(string_split(lower(text), ' '), t -> t IN ('the','and','of','to','a','in','is','it','that','for'))) AS DOUBLE) / len(string_split(lower(text), ' ')), 4) AS stop_ratio FROM documents ORDER BY doc_id"""),
 
     // Gopher-style repetition metrics (r5): top-2-gram coverage,
     // repeated-3-gram fraction, distinct-token ratio — the published
     // quality-filter family; value-exact DuckDB recompute
     "llm_repetition" -> Q(
       (s, dir) => LlmOps.repetitionScore(docs(s, dir)).orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents), u AS (SELECT doc_id, ROUND(CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks), 4) AS unique_tok_ratio FROM t), g2 AS (SELECT doc_id, array_to_string(toks[i : i + 1], ' ') AS g FROM t, unnest(generate_series(1, len(toks) - 1)) s(i) WHERE len(toks) >= 2), c2 AS (SELECT doc_id, g, COUNT(*) AS c FROM g2 GROUP BY 1, 2), f2 AS (SELECT doc_id, ROUND(CAST(MAX(c) AS DOUBLE) / SUM(c), 4) AS top2gram_frac FROM c2 GROUP BY 1), g3 AS (SELECT doc_id, array_to_string(toks[i : i + 2], ' ') AS g FROM t, unnest(generate_series(1, len(toks) - 2)) s(i) WHERE len(toks) >= 3), c3 AS (SELECT doc_id, g, COUNT(*) AS c FROM g3 GROUP BY 1, 2), f3 AS (SELECT doc_id, ROUND(CAST(SUM(CASE WHEN c > 1 THEN c ELSE 0 END) AS DOUBLE) / SUM(c), 4) AS dup3gram_frac FROM c3 GROUP BY 1) SELECT u.doc_id, unique_tok_ratio, COALESCE(top2gram_frac, 0.0) AS top2gram_frac, COALESCE(dup3gram_frac, 0.0) AS dup3gram_frac FROM u LEFT JOIN f2 USING (doc_id) LEFT JOIN f3 USING (doc_id) ORDER BY u.doc_id""")),
+      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents), u AS (SELECT doc_id, ROUND(CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks), 4) AS unique_tok_ratio FROM t), g2 AS (SELECT doc_id, array_to_string(toks[i : i + 1], ' ') AS g FROM t, unnest(generate_series(1, len(toks) - 1)) s(i) WHERE len(toks) >= 2), c2 AS (SELECT doc_id, g, COUNT(*) AS c FROM g2 GROUP BY 1, 2), f2 AS (SELECT doc_id, ROUND(CAST(MAX(c) AS DOUBLE) / SUM(c), 4) AS top2gram_frac FROM c2 GROUP BY 1), g3 AS (SELECT doc_id, array_to_string(toks[i : i + 2], ' ') AS g FROM t, unnest(generate_series(1, len(toks) - 2)) s(i) WHERE len(toks) >= 3), c3 AS (SELECT doc_id, g, COUNT(*) AS c FROM g3 GROUP BY 1, 2), f3 AS (SELECT doc_id, ROUND(CAST(SUM(CASE WHEN c > 1 THEN c ELSE 0 END) AS DOUBLE) / SUM(c), 4) AS dup3gram_frac FROM c3 GROUP BY 1) SELECT u.doc_id, unique_tok_ratio, COALESCE(top2gram_frac, 0.0) AS top2gram_frac, COALESCE(dup3gram_frac, 0.0) AS dup3gram_frac FROM u LEFT JOIN f2 USING (doc_id) LEFT JOIN f3 USING (doc_id) ORDER BY u.doc_id"""),
 
     // CCNet-style unigram log-likelihood quality score (r5): mean
     // -ln p(token) under the corpus unigram distribution; per-token
     // integer-micro rounding keeps the aggregate engine-exact
     "llm_unigram_logprob" -> Q(
       (s, dir) => LlmOps.unigramLogProb(docs(s, dir)).orderBy("doc_id"),
-      Some("""WITH terms AS (SELECT doc_id AS id, unnest(string_split(lower(text), ' ')) AS term FROM documents), tfx AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS tf FROM terms GROUP BY 1), nx AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM terms) SELECT id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens, ROUND(CAST(SUM(CAST(ROUND(-LN(tf / n) * 1000000) AS BIGINT)) AS DOUBLE) / COUNT(*) / 1000000.0, 4) AS mean_neg_logp FROM terms JOIN tfx USING (term), nx GROUP BY 1 ORDER BY 1""")),
+      """WITH terms AS (SELECT doc_id AS id, unnest(string_split(lower(text), ' ')) AS term FROM documents), tfx AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS tf FROM terms GROUP BY 1), nx AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM terms) SELECT id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens, ROUND(CAST(SUM(CAST(ROUND(-LN(tf / n) * 1000000) AS BIGINT)) AS DOUBLE) / COUNT(*) / 1000000.0, 4) AS mean_neg_logp FROM terms JOIN tfx USING (term), nx GROUP BY 1 ORDER BY 1"""),
 
     "llm_fingerprint" -> Q(
       (s, dir) => LlmOps.fingerprint(docs(s, dir)).orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents) SELECT t.doc_id AS doc_id, md5(lower(d.text)) AS fp, list_aggregate(list_transform(generate_series(1, greatest(len(toks) - 2, 1)), i -> md5(concat_ws(' ', toks[i], toks[i+1], toks[i+2]))), 'min') AS min_shingle_fp FROM t JOIN documents d ON t.doc_id = d.doc_id ORDER BY doc_id""")),
+      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents) SELECT t.doc_id AS doc_id, md5(lower(d.text)) AS fp, list_aggregate(list_transform(generate_series(1, greatest(len(toks) - 2, 1)), i -> md5(concat_ws(' ', toks[i], toks[i+1], toks[i+2]))), 'min') AS min_shingle_fp FROM t JOIN documents d ON t.doc_id = d.doc_id ORDER BY doc_id"""),
 
     "llm_tfidf" -> Q(
       (s, dir) => LlmOps.tfIdf(docs(s, dir)).orderBy("id", "term"),
-      Some("""WITH terms AS (SELECT doc_id AS id, unnest(string_split(lower(text), ' ')) AS term FROM documents), tf AS (SELECT id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM terms GROUP BY 1, 2), dfx AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM (SELECT DISTINCT id, term FROM terms) GROUP BY 1) SELECT id, term, tf, df, ROUND(tf * ln(CAST((SELECT COUNT(DISTINCT doc_id) FROM documents) AS DOUBLE) / df), 4) AS tfidf FROM tf JOIN dfx USING (term) ORDER BY id, term""")),
+      """WITH terms AS (SELECT doc_id AS id, unnest(string_split(lower(text), ' ')) AS term FROM documents), tf AS (SELECT id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM terms GROUP BY 1, 2), dfx AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM (SELECT DISTINCT id, term FROM terms) GROUP BY 1) SELECT id, term, tf, df, ROUND(tf * ln(CAST((SELECT COUNT(DISTINCT doc_id) FROM documents) AS DOUBLE) / df), 4) AS tfidf FROM tf JOIN dfx USING (term) ORDER BY id, term"""),
 
     "llm_langid" -> Q(
       (s, dir) => LlmOps.langId(docs(s, dir)).orderBy("doc_id"),
-      Some("""WITH s AS (SELECT doc_id, CAST(len(regexp_extract_all(lower(text), '\bthe\b')) + len(regexp_extract_all(lower(text), '\band\b')) + len(regexp_extract_all(lower(text), '\bof\b')) + len(regexp_extract_all(lower(text), '\bwith\b')) + len(regexp_extract_all(lower(text), '\bthat\b')) AS BIGINT) AS s_en, CAST(len(regexp_extract_all(lower(text), '\bel\b')) + len(regexp_extract_all(lower(text), '\bla\b')) + len(regexp_extract_all(lower(text), '\blos\b')) + len(regexp_extract_all(lower(text), '\bque\b')) + len(regexp_extract_all(lower(text), '\bcon\b')) AS BIGINT) AS s_es, CAST(len(regexp_extract_all(lower(text), '\ble\b')) + len(regexp_extract_all(lower(text), '\bla\b')) + len(regexp_extract_all(lower(text), '\bles\b')) + len(regexp_extract_all(lower(text), '\bque\b')) + len(regexp_extract_all(lower(text), '\bavec\b')) AS BIGINT) AS s_fr, CAST(len(regexp_extract_all(lower(text), '\bder\b')) + len(regexp_extract_all(lower(text), '\bdie\b')) + len(regexp_extract_all(lower(text), '\bdas\b')) + len(regexp_extract_all(lower(text), '\bund\b')) + len(regexp_extract_all(lower(text), '\bmit\b')) AS BIGINT) AS s_de, CAST(len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) AS BIGINT) AS s_zh FROM documents) SELECT doc_id, s_en, s_es, s_fr, s_de, s_zh, CASE WHEN s_zh > s_en AND s_zh > s_es AND s_zh > s_fr AND s_zh > s_de THEN 'zh' WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_de THEN 'en' WHEN s_es >= s_fr AND s_es >= s_de THEN 'es' WHEN s_fr >= s_de THEN 'fr' ELSE 'de' END AS pred_lang FROM s ORDER BY doc_id""")),
+      """WITH s AS (SELECT doc_id, CAST(len(regexp_extract_all(lower(text), '\bthe\b')) + len(regexp_extract_all(lower(text), '\band\b')) + len(regexp_extract_all(lower(text), '\bof\b')) + len(regexp_extract_all(lower(text), '\bwith\b')) + len(regexp_extract_all(lower(text), '\bthat\b')) AS BIGINT) AS s_en, CAST(len(regexp_extract_all(lower(text), '\bel\b')) + len(regexp_extract_all(lower(text), '\bla\b')) + len(regexp_extract_all(lower(text), '\blos\b')) + len(regexp_extract_all(lower(text), '\bque\b')) + len(regexp_extract_all(lower(text), '\bcon\b')) AS BIGINT) AS s_es, CAST(len(regexp_extract_all(lower(text), '\ble\b')) + len(regexp_extract_all(lower(text), '\bla\b')) + len(regexp_extract_all(lower(text), '\bles\b')) + len(regexp_extract_all(lower(text), '\bque\b')) + len(regexp_extract_all(lower(text), '\bavec\b')) AS BIGINT) AS s_fr, CAST(len(regexp_extract_all(lower(text), '\bder\b')) + len(regexp_extract_all(lower(text), '\bdie\b')) + len(regexp_extract_all(lower(text), '\bdas\b')) + len(regexp_extract_all(lower(text), '\bund\b')) + len(regexp_extract_all(lower(text), '\bmit\b')) AS BIGINT) AS s_de, CAST(len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) AS BIGINT) AS s_zh FROM documents) SELECT doc_id, s_en, s_es, s_fr, s_de, s_zh, CASE WHEN s_zh > s_en AND s_zh > s_es AND s_zh > s_fr AND s_zh > s_de THEN 'zh' WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_de THEN 'en' WHEN s_es >= s_fr AND s_es >= s_de THEN 'es' WHEN s_fr >= s_de THEN 'fr' ELSE 'de' END AS pred_lang FROM s ORDER BY doc_id"""),
 
     "llm_multimodal_stub" -> Q(
       (s, dir) => {
@@ -2021,7 +2040,7 @@ object SparkEntry {
           .select(col("doc_id"), col("media_size"), size(col("media_features")).cast("int").as("n_features"))
           .orderBy("doc_id")
       },
-      Some("""SELECT doc_id, CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS media_size, CAST(8 AS INT) AS n_features FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS media_size, CAST(8 AS INT) AS n_features FROM documents ORDER BY doc_id"""),
 
     // IVF with nProbe = nLists probes every cell, so the result is the
     // brute-force top-k by construction REGARDLESS of the k-means seed —
@@ -2031,7 +2050,7 @@ object SparkEntry {
     "llm_ann_ivf" -> Q(
       (s, dir) => LlmOps.annCosineIvf(embs(s, dir), queryId = 0, k = 10,
         nLists = 16, nProbe = 16),
-      Some("""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0), dots AS (SELECT e.vec_id, SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(q.qv[g.i] AS DOUBLE)) AS dp, SQRT(SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(e.embedding[g.i] AS DOUBLE))) AS na, SQRT(SUM(CAST(q.qv[g.i] AS DOUBLE) * CAST(q.qv[g.i] AS DOUBLE))) AS nb FROM embeddings e, q, generate_series(1, 64) g(i) GROUP BY e.vec_id) SELECT vec_id, ROUND(dp / (na * nb), 4) AS cos FROM dots ORDER BY cos DESC, vec_id LIMIT 10""")),
+      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0), dots AS (SELECT e.vec_id, SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(q.qv[g.i] AS DOUBLE)) AS dp, SQRT(SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(e.embedding[g.i] AS DOUBLE))) AS na, SQRT(SUM(CAST(q.qv[g.i] AS DOUBLE) * CAST(q.qv[g.i] AS DOUBLE))) AS nb FROM embeddings e, q, generate_series(1, 64) g(i) GROUP BY e.vec_id) SELECT vec_id, ROUND(dp / (na * nb), 4) AS cos FROM dots ORDER BY cos DESC, vec_id LIMIT 10"""),
 
     // The persisted-index ANN probe (r6, verdict task 3): buildIvfIndex
     // writes the corpus partitionBy(cell); the search reads ONLY the
@@ -2066,7 +2085,7 @@ object SparkEntry {
           .select((col("self_cos") === 1.0).as("self_top"), col("n_score_mismatch"),
             (col("n_scanned") > 0L && col("n_scanned") < col("n_total")).as("pruned"))
       },
-      Some("""SELECT true AS self_top, CAST(0 AS BIGINT) AS n_score_mismatch, true AS pruned""")),
+      """SELECT true AS self_top, CAST(0 AS BIGINT) AS n_score_mismatch, true AS pruned""", IndexBuild),
 
     // Product-quantization ANN (r6): Jégou-style PQ codes + ADC scoring
     // + exact re-rank of the top k·refine. Codebooks are deterministic
@@ -2098,7 +2117,7 @@ object SparkEntry {
             (col("maxcos") === 1.0).as("self_top"),
             (col("n_hits") >= 7L).as("recall_ok"))
       },
-      Some("""SELECT CAST(10 AS BIGINT) AS n_results, CAST(0 AS BIGINT) AS n_score_mismatch, true AS self_top, true AS recall_ok""")),
+      """SELECT CAST(10 AS BIGINT) AS n_results, CAST(0 AS BIGINT) AS n_score_mismatch, true AS self_top, true AS recall_ok"""),
 
     // SQ8 scalar-quantization ANN (r6): per-dim affine int8 codes
     // (dim bytes/vector — the high-recall end of the FAISS compression
@@ -2121,7 +2140,7 @@ object SparkEntry {
         LlmOps.dbscanCosine(e, eps = 0.3, minPts = 4, blockCol = "__all")
           .orderBy("vec_id")
       },
-      Some("""WITH RECURSIVE base AS (SELECT vec_id, embedding FROM embeddings WHERE label <= 3), ps AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM base a JOIN base b ON a.vec_id < b.vec_id), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM ps, generate_series(1, 64) g(x) GROUP BY 1, 2), pr AS (SELECT i, j FROM dots WHERE dp / (na * nb) >= 0.3), sym AS (SELECT i, j FROM pr UNION ALL SELECT j AS i, i AS j FROM pr), deg AS (SELECT i, CAST(COUNT(*) AS BIGINT) AS n FROM sym GROUP BY 1), core AS (SELECT i AS id FROM deg WHERE n + 1 >= 4), ce AS (SELECT p.i, p.j FROM pr p JOIN core a ON p.i = a.id JOIN core b ON p.j = b.id), edges AS (SELECT i AS a, j AS b FROM ce UNION SELECT j, i FROM ce), reach(a, b) AS (SELECT a, b FROM edges UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a), grp AS (SELECT a AS node, LEAST(a, MIN(b)) AS g FROM reach GROUP BY a), cc AS (SELECT id, COALESCE(grp.g, id) AS cluster_id FROM core LEFT JOIN grp ON id = node), ba AS (SELECT s.i, MIN(c.cluster_id) AS bcl FROM sym s JOIN cc c ON s.j = c.id GROUP BY 1) SELECT b.vec_id, CASE WHEN cc.id IS NOT NULL THEN 'core' WHEN ba.i IS NOT NULL THEN 'border' ELSE 'noise' END AS role, CASE WHEN cc.id IS NOT NULL THEN cc.cluster_id ELSE ba.bcl END AS cluster_id FROM base b LEFT JOIN cc ON b.vec_id = cc.id LEFT JOIN ba ON b.vec_id = ba.i ORDER BY b.vec_id""")),
+      """WITH RECURSIVE base AS (SELECT vec_id, embedding FROM embeddings WHERE label <= 3), ps AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM base a JOIN base b ON a.vec_id < b.vec_id), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM ps, generate_series(1, 64) g(x) GROUP BY 1, 2), pr AS (SELECT i, j FROM dots WHERE dp / (na * nb) >= 0.3), sym AS (SELECT i, j FROM pr UNION ALL SELECT j AS i, i AS j FROM pr), deg AS (SELECT i, CAST(COUNT(*) AS BIGINT) AS n FROM sym GROUP BY 1), core AS (SELECT i AS id FROM deg WHERE n + 1 >= 4), ce AS (SELECT p.i, p.j FROM pr p JOIN core a ON p.i = a.id JOIN core b ON p.j = b.id), edges AS (SELECT i AS a, j AS b FROM ce UNION SELECT j, i FROM ce), reach(a, b) AS (SELECT a, b FROM edges UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a), grp AS (SELECT a AS node, LEAST(a, MIN(b)) AS g FROM reach GROUP BY a), cc AS (SELECT id, COALESCE(grp.g, id) AS cluster_id FROM core LEFT JOIN grp ON id = node), ba AS (SELECT s.i, MIN(c.cluster_id) AS bcl FROM sym s JOIN cc c ON s.j = c.id GROUP BY 1) SELECT b.vec_id, CASE WHEN cc.id IS NOT NULL THEN 'core' WHEN ba.i IS NOT NULL THEN 'border' ELSE 'noise' END AS role, CASE WHEN cc.id IS NOT NULL THEN cc.cluster_id ELSE ba.bcl END AS cluster_id FROM base b LEFT JOIN cc ON b.vec_id = cc.id LEFT JOIN ba ON b.vec_id = ba.i ORDER BY b.vec_id"""),
 
     // Winnowing fingerprints (r7): MOSS local fingerprinting — every
     // w-window of k-token shingles selects its min-hash shingle
@@ -2130,7 +2149,7 @@ object SparkEntry {
     "llm_winnow" -> Q(
       (s, dir) => LlmOps.winnowFingerprints(docs(s, dir), k = 4, w = 5)
         .orderBy("doc_id", "pos"),
-      Some("""WITH t AS (SELECT doc_id, list_filter(string_split(lower(COALESCE(text, '')), ' '), x -> length(x) > 0) AS tk FROM documents), sh AS (SELECT doc_id, i AS pos, md5(array_to_string(tk[i : i + 3], ' ')) AS m FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 3)) AS i FROM t WHERE len(tk) >= 4)), keyed AS (SELECT doc_id, pos, (CAST(ascii(substr(m, 1, 1)) AS BIGINT) + CAST(ascii(substr(m, 2, 1)) AS BIGINT) * 100 + CAST(ascii(substr(m, 3, 1)) AS BIGINT) * 10000 + CAST(ascii(substr(m, 4, 1)) AS BIGINT) * 1000000 + CAST(ascii(substr(m, 5, 1)) AS BIGINT) * 100000000 + CAST(ascii(substr(m, 6, 1)) AS BIGINT) * 10000000000) * 1000000 + pos AS key FROM sh), sel AS (SELECT DISTINCT doc_id, sel_key FROM (SELECT doc_id, MIN(key) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS sel_key, COUNT(*) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS n FROM keyed) WHERE n = 5) SELECT doc_id, CAST(sel_key % 1000000 AS INT) AS pos, CAST(sel_key // 1000000 AS BIGINT) AS fp FROM sel ORDER BY doc_id, pos""")),
+      """WITH t AS (SELECT doc_id, list_filter(string_split(lower(COALESCE(text, '')), ' '), x -> length(x) > 0) AS tk FROM documents), sh AS (SELECT doc_id, i AS pos, md5(array_to_string(tk[i : i + 3], ' ')) AS m FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 3)) AS i FROM t WHERE len(tk) >= 4)), keyed AS (SELECT doc_id, pos, (CAST(ascii(substr(m, 1, 1)) AS BIGINT) + CAST(ascii(substr(m, 2, 1)) AS BIGINT) * 100 + CAST(ascii(substr(m, 3, 1)) AS BIGINT) * 10000 + CAST(ascii(substr(m, 4, 1)) AS BIGINT) * 1000000 + CAST(ascii(substr(m, 5, 1)) AS BIGINT) * 100000000 + CAST(ascii(substr(m, 6, 1)) AS BIGINT) * 10000000000) * 1000000 + pos AS key FROM sh), sel AS (SELECT DISTINCT doc_id, sel_key FROM (SELECT doc_id, MIN(key) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS sel_key, COUNT(*) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS n FROM keyed) WHERE n = 5) SELECT doc_id, CAST(sel_key % 1000000 AS INT) AS pos, CAST(sel_key // 1000000 AS BIGINT) AS fp FROM sel ORDER BY doc_id, pos"""),
 
     // Winnow-based cross-corpus contamination (r8): the training
     // corpus' winnow fingerprints joined against an eval slice's —
@@ -2146,7 +2165,7 @@ object SparkEntry {
          documents
          | evaluate winnow_contamination(EvalDocs, 4, 5, 2, text, doc_id)
          | sort by train_id asc, eval_id asc"""),
-      Some("""WITH t AS (SELECT doc_id, list_filter(string_split(lower(COALESCE(text, '')), ' '), x -> length(x) > 0) AS tk FROM documents), sh AS (SELECT doc_id, i AS pos, md5(array_to_string(tk[i : i + 3], ' ')) AS m FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 3)) AS i FROM t WHERE len(tk) >= 4)), keyed AS (SELECT doc_id, pos, (CAST(ascii(substr(m, 1, 1)) AS BIGINT) + CAST(ascii(substr(m, 2, 1)) AS BIGINT) * 100 + CAST(ascii(substr(m, 3, 1)) AS BIGINT) * 10000 + CAST(ascii(substr(m, 4, 1)) AS BIGINT) * 1000000 + CAST(ascii(substr(m, 5, 1)) AS BIGINT) * 100000000 + CAST(ascii(substr(m, 6, 1)) AS BIGINT) * 10000000000) * 1000000 + pos AS key FROM sh), sel AS (SELECT DISTINCT doc_id, sel_key FROM (SELECT doc_id, MIN(key) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS sel_key, COUNT(*) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS n FROM keyed) WHERE n = 5), fps AS (SELECT DISTINCT doc_id, sel_key // 1000000 AS fp FROM sel), ev AS (SELECT doc_id AS eval_id, fp FROM fps WHERE doc_id % 7 = 0), esz AS (SELECT eval_id, CAST(COUNT(*) AS BIGINT) AS n_eval_fp FROM ev GROUP BY 1), j AS (SELECT f.doc_id AS train_id, e.eval_id, CAST(COUNT(*) AS BIGINT) AS n_shared FROM fps f JOIN ev e USING (fp) GROUP BY 1, 2 HAVING COUNT(*) >= 2) SELECT train_id, eval_id, n_shared, n_eval_fp, CAST((n_shared * 1000000) // n_eval_fp AS BIGINT) AS frac_micros FROM j JOIN esz USING (eval_id) ORDER BY train_id, eval_id""")),
+      """WITH t AS (SELECT doc_id, list_filter(string_split(lower(COALESCE(text, '')), ' '), x -> length(x) > 0) AS tk FROM documents), sh AS (SELECT doc_id, i AS pos, md5(array_to_string(tk[i : i + 3], ' ')) AS m FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 3)) AS i FROM t WHERE len(tk) >= 4)), keyed AS (SELECT doc_id, pos, (CAST(ascii(substr(m, 1, 1)) AS BIGINT) + CAST(ascii(substr(m, 2, 1)) AS BIGINT) * 100 + CAST(ascii(substr(m, 3, 1)) AS BIGINT) * 10000 + CAST(ascii(substr(m, 4, 1)) AS BIGINT) * 1000000 + CAST(ascii(substr(m, 5, 1)) AS BIGINT) * 100000000 + CAST(ascii(substr(m, 6, 1)) AS BIGINT) * 10000000000) * 1000000 + pos AS key FROM sh), sel AS (SELECT DISTINCT doc_id, sel_key FROM (SELECT doc_id, MIN(key) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS sel_key, COUNT(*) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS n FROM keyed) WHERE n = 5), fps AS (SELECT DISTINCT doc_id, sel_key // 1000000 AS fp FROM sel), ev AS (SELECT doc_id AS eval_id, fp FROM fps WHERE doc_id % 7 = 0), esz AS (SELECT eval_id, CAST(COUNT(*) AS BIGINT) AS n_eval_fp FROM ev GROUP BY 1), j AS (SELECT f.doc_id AS train_id, e.eval_id, CAST(COUNT(*) AS BIGINT) AS n_shared FROM fps f JOIN ev e USING (fp) GROUP BY 1, 2 HAVING COUNT(*) >= 2) SELECT train_id, eval_id, n_shared, n_eval_fp, CAST((n_shared * 1000000) // n_eval_fp AS BIGINT) AS frac_micros FROM j JOIN esz USING (eval_id) ORDER BY train_id, eval_id"""),
 
     // Distributed PCA (r8): one-pass covariance (posexplode + dim-row
     // aggregate) + driver Jacobi eigensolve (bounded 64x64 model
@@ -2185,7 +2204,7 @@ object SparkEntry {
           .toDF("n_proj_rows", "k_components", "orthonormal",
             "evals_descending", "evals_bounded", "proj_var_matches")
       },
-      Some("""SELECT CAST((SELECT COUNT(*) FROM embeddings) * 4 AS BIGINT) AS n_proj_rows, CAST(4 AS BIGINT) AS k_components, TRUE AS orthonormal, TRUE AS evals_descending, TRUE AS evals_bounded, TRUE AS proj_var_matches""")),
+      """SELECT CAST((SELECT COUNT(*) FROM embeddings) * 4 AS BIGINT) AS n_proj_rows, CAST(4 AS BIGINT) AS k_components, TRUE AS orthonormal, TRUE AS evals_descending, TRUE AS evals_bounded, TRUE AS proj_var_matches"""),
 
     // Feature-hashing vectorizer (r7): signed hashing trick, sparse
     // (doc, dim, value) integer output — value-exact via the DSIR
@@ -2193,7 +2212,7 @@ object SparkEntry {
     "llm_feature_hash" -> Q(
       (s, dir) => LlmOps.featureHash(docs(s, dir), dim = 64)
         .orderBy("doc_id", "dim"),
-      Some("""WITH w AS (SELECT doc_id, unnest(string_split(lower(COALESCE(text, '')), ' ')) AS w FROM documents), f AS (SELECT doc_id, w FROM w WHERE length(w) >= 1), h AS (SELECT doc_id, (ascii(substr(md5(w), 1, 1)) * 10000 + ascii(substr(md5(w), 2, 1)) * 100 + ascii(substr(md5(w), 3, 1))) % 64 AS dim, CASE WHEN ascii(substr(md5(w), 4, 1)) % 2 = 0 THEN 1 ELSE -1 END AS s FROM f) SELECT doc_id, CAST(dim AS INT) AS dim, CAST(SUM(s) AS BIGINT) AS value FROM h GROUP BY 1, 2 HAVING SUM(s) <> 0 ORDER BY doc_id, dim""")),
+      """WITH w AS (SELECT doc_id, unnest(string_split(lower(COALESCE(text, '')), ' ')) AS w FROM documents), f AS (SELECT doc_id, w FROM w WHERE length(w) >= 1), h AS (SELECT doc_id, (ascii(substr(md5(w), 1, 1)) * 10000 + ascii(substr(md5(w), 2, 1)) * 100 + ascii(substr(md5(w), 3, 1))) % 64 AS dim, CASE WHEN ascii(substr(md5(w), 4, 1)) % 2 = 0 THEN 1 ELSE -1 END AS s FROM f) SELECT doc_id, CAST(dim AS INT) AS dim, CAST(SUM(s) AS BIGINT) AS value FROM h GROUP BY 1, 2 HAVING SUM(s) <> 0 ORDER BY doc_id, dim"""),
 
     // Text clustering end-to-end (r7): the featureHash bridge feeds the
     // k-means engine directly from the TEXT table — no model embedding
@@ -2215,7 +2234,7 @@ object SparkEntry {
           .select(col("n_docs"), (col("kc") <= 4).as("k_ok"),
             (col("w3") <= col("w1") + 1e-6).as("improved"))
       },
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, true AS k_ok, true AS improved FROM documents""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, true AS k_ok, true AS improved FROM documents"""),
 
     // JL sign random projection (r7): 64-d -> 16-d in integer micros.
     // The md5-parity sign rule is replayed verbatim by DuckDB and the
@@ -2224,7 +2243,7 @@ object SparkEntry {
     "llm_random_projection" -> Q(
       (s, dir) => LlmOps.randomProjection(embs(s, dir), k = 16, dim = 64)
         .orderBy("vec_id", "dim"),
-      Some("""WITH sg AS (SELECT d, j, CASE WHEN (position(substring(md5('rp_' || d || '_' || j), 1, 1) IN '0123456789abcdef')) % 2 = 1 THEN 1 ELSE -1 END AS sg FROM generate_series(1, 16) t(d), generate_series(1, 64) u(j)), e AS (SELECT vec_id, j, CAST(ROUND(CAST(embedding[j] AS DOUBLE) * 1000000) AS BIGINT) AS vm FROM embeddings, generate_series(1, 64) g(j)), p AS (SELECT vec_id, d, CAST(SUM(sg * vm) AS BIGINT) AS proj_micro FROM e JOIN sg USING (j) GROUP BY 1, 2) SELECT vec_id, CAST(d AS INT) AS dim, proj_micro FROM p ORDER BY vec_id, dim""")),
+      """WITH sg AS (SELECT d, j, CASE WHEN (position(substring(md5('rp_' || d || '_' || j), 1, 1) IN '0123456789abcdef')) % 2 = 1 THEN 1 ELSE -1 END AS sg FROM generate_series(1, 16) t(d), generate_series(1, 64) u(j)), e AS (SELECT vec_id, j, CAST(ROUND(CAST(embedding[j] AS DOUBLE) * 1000000) AS BIGINT) AS vm FROM embeddings, generate_series(1, 64) g(j)), p AS (SELECT vec_id, d, CAST(SUM(sg * vm) AS BIGINT) AS proj_micro FROM e JOIN sg USING (j) GROUP BY 1, 2) SELECT vec_id, CAST(d AS INT) AS dim, proj_micro FROM p ORDER BY vec_id, dim"""),
 
     "llm_ann_sq8" -> Q(
       (s, dir) => {
@@ -2245,7 +2264,7 @@ object SparkEntry {
             (col("maxcos") === 1.0).as("self_top"),
             (col("n_hits") >= 8L).as("recall_ok"))
       },
-      Some("""SELECT CAST(10 AS BIGINT) AS n_results, CAST(0 AS BIGINT) AS n_score_mismatch, true AS self_top, true AS recall_ok""")),
+      """SELECT CAST(10 AS BIGINT) AS n_results, CAST(0 AS BIGINT) AS n_score_mismatch, true AS self_top, true AS recall_ok"""),
 
     // The persisted IVF-PQ index (r6): buildPqIndex writes PQ codes
     // partitioned by coarse cell (m bytes/row — the FAISS on-disk
@@ -2282,7 +2301,7 @@ object SparkEntry {
           .select((col("maxcos") === 1.0).as("self_top"), col("n_score_mismatch"),
             (col("n_scanned") > 0L && col("n_scanned") < col("n_total")).as("pruned"))
       },
-      Some("""SELECT true AS self_top, CAST(0 AS BIGINT) AS n_score_mismatch, true AS pruned""")),
+      """SELECT true AS self_top, CAST(0 AS BIGINT) AS n_score_mismatch, true AS pruned""", IndexBuild),
 
     // Vocabulary spelling-variant pairs (r6): tokens within Levenshtein
     // distance 2, SymSpell deletion-neighborhood blocked (lossless), so
@@ -2291,7 +2310,7 @@ object SparkEntry {
     "llm_fuzzy_pairs" -> Q(
       (s, dir) => LlmOps.fuzzyTokenPairs(docs(s, dir), minLen = 4,
         maxVocab = 1000, maxDist = 2).orderBy("tok_a", "tok_b"),
-      Some("""WITH toks AS (SELECT unnest(string_split(lower(COALESCE(text, '')), ' ')) AS w FROM documents), c AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt FROM toks WHERE length(w) BETWEEN 4 AND 32 GROUP BY 1), v AS (SELECT w, cnt FROM c ORDER BY cnt DESC, w LIMIT 1000) SELECT a.w AS tok_a, b.w AS tok_b, a.cnt AS cnt_a, b.cnt AS cnt_b, CAST(levenshtein(a.w, b.w) AS INT) AS dist FROM v a JOIN v b ON a.w < b.w AND abs(length(a.w) - length(b.w)) <= 2 AND levenshtein(a.w, b.w) <= 2 ORDER BY tok_a, tok_b""")),
+      """WITH toks AS (SELECT unnest(string_split(lower(COALESCE(text, '')), ' ')) AS w FROM documents), c AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt FROM toks WHERE length(w) BETWEEN 4 AND 32 GROUP BY 1), v AS (SELECT w, cnt FROM c ORDER BY cnt DESC, w LIMIT 1000) SELECT a.w AS tok_a, b.w AS tok_b, a.cnt AS cnt_a, b.cnt AS cnt_b, CAST(levenshtein(a.w, b.w) AS INT) AS dist FROM v a JOIN v b ON a.w < b.w AND abs(length(a.w) - length(b.w)) <= 2 AND levenshtein(a.w, b.w) <= 2 ORDER BY tok_a, tok_b"""),
 
     // Asymmetric shingle-containment pairs (r6): Broder's c(A→B) =
     // |S(A)∩S(B)|/|S(A)| — doc-in-doc detection where Jaccard stays
@@ -2301,7 +2320,7 @@ object SparkEntry {
     "llm_containment" -> Q(
       (s, dir) => LlmOps.containmentPairs(docs(s, dir), threshold = 0.4,
         w = 5).orderBy("i", "j"),
-      Some("""WITH t AS (SELECT doc_id, string_split(lower(COALESCE(text, '')), ' ') AS toks FROM documents), ix AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 4)) AS i FROM t WHERE len(toks) >= 5), sh AS (SELECT DISTINCT doc_id, array_to_string(toks[i : i + 4], ' ') AS s FROM ix), sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY 1), pr AS (SELECT a.doc_id AS i, b.doc_id AS j, CAST(COUNT(*) AS BIGINT) AS inter FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2) SELECT i, j, inter, sa.n AS n_i, sb.n AS n_j, ROUND(CAST(inter AS DOUBLE) / sa.n, 4) AS cont_ij, ROUND(CAST(inter AS DOUBLE) / sb.n, 4) AS cont_ji FROM pr JOIN sz sa ON pr.i = sa.doc_id JOIN sz sb ON pr.j = sb.doc_id WHERE ROUND(CAST(inter AS DOUBLE) / sa.n, 4) >= 0.4 OR ROUND(CAST(inter AS DOUBLE) / sb.n, 4) >= 0.4 ORDER BY i, j""")),
+      """WITH t AS (SELECT doc_id, string_split(lower(COALESCE(text, '')), ' ') AS toks FROM documents), ix AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 4)) AS i FROM t WHERE len(toks) >= 5), sh AS (SELECT DISTINCT doc_id, array_to_string(toks[i : i + 4], ' ') AS s FROM ix), sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY 1), pr AS (SELECT a.doc_id AS i, b.doc_id AS j, CAST(COUNT(*) AS BIGINT) AS inter FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2) SELECT i, j, inter, sa.n AS n_i, sb.n AS n_j, ROUND(CAST(inter AS DOUBLE) / sa.n, 4) AS cont_ij, ROUND(CAST(inter AS DOUBLE) / sb.n, 4) AS cont_ji FROM pr JOIN sz sa ON pr.i = sa.doc_id JOIN sz sb ON pr.j = sb.doc_id WHERE ROUND(CAST(inter AS DOUBLE) / sa.n, 4) >= 0.4 OR ROUND(CAST(inter AS DOUBLE) / sb.n, 4) >= 0.4 ORDER BY i, j"""),
 
     // Containment dedup (r6): the subset-document curation rule — docs
     // ≥ 40% shingle-contained in another doc drop, supersets survive,
@@ -2310,7 +2329,7 @@ object SparkEntry {
     "llm_dedup_contained" -> Q(
       (s, dir) => LlmOps.dedupContained(docs(s, dir), threshold = 0.4,
         w = 5).orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, string_split(lower(COALESCE(text, '')), ' ') AS toks FROM documents), ix AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 4)) AS i FROM t WHERE len(toks) >= 5), sh AS (SELECT DISTINCT doc_id, array_to_string(toks[i : i + 4], ' ') AS s FROM ix), sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY 1), pr0 AS (SELECT a.doc_id AS i, b.doc_id AS j, CAST(COUNT(*) AS BIGINT) AS inter FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2), pr AS (SELECT i, j, ROUND(CAST(inter AS DOUBLE) / sa.n, 4) AS cij, ROUND(CAST(inter AS DOUBLE) / sb.n, 4) AS cji FROM pr0 JOIN sz sa ON pr0.i = sa.doc_id JOIN sz sb ON pr0.j = sb.doc_id WHERE ROUND(CAST(inter AS DOUBLE) / sa.n, 4) >= 0.4 OR ROUND(CAST(inter AS DOUBLE) / sb.n, 4) >= 0.4), d AS (SELECT i AS victim, j AS keeper FROM pr WHERE cij >= 0.4 AND cji < 0.4 UNION ALL SELECT j, i FROM pr WHERE cji >= 0.4 AND cij < 0.4 UNION ALL SELECT greatest(i, j), least(i, j) FROM pr WHERE cij >= 0.4 AND cji >= 0.4), dm AS (SELECT victim, MIN(keeper) AS contained_in FROM d GROUP BY 1) SELECT doc_id, contained_in IS NULL AS kept, contained_in FROM documents LEFT JOIN dm ON doc_id = victim ORDER BY doc_id""")),
+      """WITH t AS (SELECT doc_id, string_split(lower(COALESCE(text, '')), ' ') AS toks FROM documents), ix AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 4)) AS i FROM t WHERE len(toks) >= 5), sh AS (SELECT DISTINCT doc_id, array_to_string(toks[i : i + 4], ' ') AS s FROM ix), sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY 1), pr0 AS (SELECT a.doc_id AS i, b.doc_id AS j, CAST(COUNT(*) AS BIGINT) AS inter FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2), pr AS (SELECT i, j, ROUND(CAST(inter AS DOUBLE) / sa.n, 4) AS cij, ROUND(CAST(inter AS DOUBLE) / sb.n, 4) AS cji FROM pr0 JOIN sz sa ON pr0.i = sa.doc_id JOIN sz sb ON pr0.j = sb.doc_id WHERE ROUND(CAST(inter AS DOUBLE) / sa.n, 4) >= 0.4 OR ROUND(CAST(inter AS DOUBLE) / sb.n, 4) >= 0.4), d AS (SELECT i AS victim, j AS keeper FROM pr WHERE cij >= 0.4 AND cji < 0.4 UNION ALL SELECT j, i FROM pr WHERE cji >= 0.4 AND cij < 0.4 UNION ALL SELECT greatest(i, j), least(i, j) FROM pr WHERE cij >= 0.4 AND cji >= 0.4), dm AS (SELECT victim, MIN(keeper) AS contained_in FROM d GROUP BY 1) SELECT doc_id, contained_in IS NULL AS kept, contained_in FROM documents LEFT JOIN dm ON doc_id = victim ORDER BY doc_id"""),
 
     // Magic-bytes media-type sniffing (r6): synthetic payloads get one
     // of 7 published container signatures (or none) by doc_id; the
@@ -2333,7 +2352,7 @@ object SparkEntry {
           .groupBy("media_type").agg(count(lit(1)).as("n"))
           .orderBy("media_type")
       },
-      Some("""WITH p AS (SELECT doc_id, (CASE doc_id % 8 WHEN 0 THEN unhex('89504E470D0A1A0A') WHEN 1 THEN unhex('FFD8FFE000104A46') WHEN 2 THEN unhex('474946383961') WHEN 3 THEN unhex('000000186674797069736F6D') WHEN 4 THEN unhex('524946462400000057415645') WHEN 5 THEN unhex('255044462D312E34') WHEN 6 THEN unhex('1F8B0800') ELSE unhex('') END) || CAST(text AS BLOB) AS payload FROM documents), s AS (SELECT doc_id, upper(hex(payload)) AS h FROM p), t AS (SELECT CASE WHEN substring(h, 1, 8) = '89504E47' THEN 'image/png' WHEN substring(h, 1, 6) = 'FFD8FF' THEN 'image/jpeg' WHEN substring(h, 1, 12) IN ('474946383761', '474946383961') THEN 'image/gif' WHEN substring(h, 1, 4) = '424D' THEN 'image/bmp' WHEN substring(h, 1, 8) = '25504446' THEN 'application/pdf' WHEN substring(h, 1, 8) = '52494646' AND substring(h, 17, 8) = '57415645' THEN 'audio/wav' WHEN substring(h, 1, 8) = '52494646' AND substring(h, 17, 8) = '57454250' THEN 'image/webp' WHEN substring(h, 1, 8) = '52494646' AND substring(h, 17, 8) = '41564920' THEN 'video/avi' WHEN substring(h, 9, 8) = '66747970' THEN 'video/mp4' WHEN substring(h, 1, 8) = '504B0304' THEN 'application/zip' WHEN substring(h, 1, 4) = '1F8B' THEN 'application/gzip' ELSE 'application/octet-stream' END AS media_type FROM s) SELECT media_type, CAST(COUNT(*) AS BIGINT) AS n FROM t GROUP BY 1 ORDER BY 1""")),
+      """WITH p AS (SELECT doc_id, (CASE doc_id % 8 WHEN 0 THEN unhex('89504E470D0A1A0A') WHEN 1 THEN unhex('FFD8FFE000104A46') WHEN 2 THEN unhex('474946383961') WHEN 3 THEN unhex('000000186674797069736F6D') WHEN 4 THEN unhex('524946462400000057415645') WHEN 5 THEN unhex('255044462D312E34') WHEN 6 THEN unhex('1F8B0800') ELSE unhex('') END) || CAST(text AS BLOB) AS payload FROM documents), s AS (SELECT doc_id, upper(hex(payload)) AS h FROM p), t AS (SELECT CASE WHEN substring(h, 1, 8) = '89504E47' THEN 'image/png' WHEN substring(h, 1, 6) = 'FFD8FF' THEN 'image/jpeg' WHEN substring(h, 1, 12) IN ('474946383761', '474946383961') THEN 'image/gif' WHEN substring(h, 1, 4) = '424D' THEN 'image/bmp' WHEN substring(h, 1, 8) = '25504446' THEN 'application/pdf' WHEN substring(h, 1, 8) = '52494646' AND substring(h, 17, 8) = '57415645' THEN 'audio/wav' WHEN substring(h, 1, 8) = '52494646' AND substring(h, 17, 8) = '57454250' THEN 'image/webp' WHEN substring(h, 1, 8) = '52494646' AND substring(h, 17, 8) = '41564920' THEN 'video/avi' WHEN substring(h, 9, 8) = '66747970' THEN 'video/mp4' WHEN substring(h, 1, 8) = '504B0304' THEN 'application/zip' WHEN substring(h, 1, 4) = '1F8B' THEN 'application/gzip' ELSE 'application/octet-stream' END AS media_type FROM s) SELECT media_type, CAST(COUNT(*) AS BIGINT) AS n FROM t GROUP BY 1 ORDER BY 1"""),
 
     // Header-parsed image dimensions (r7): the query PLANTS width/height
     // (arithmetic functions of doc_id) into honest PNG / GIF / JPEG
@@ -2407,7 +2426,7 @@ object SparkEntry {
           .select(col("doc_id"), col("media_type"), col("width"), col("height"))
           .orderBy("doc_id")
       },
-      Some("""SELECT doc_id, CASE WHEN doc_id % 8 = 0 THEN 'image/png' WHEN doc_id % 8 = 1 THEN 'image/gif' WHEN doc_id % 8 = 2 THEN 'image/jpeg' WHEN doc_id % 8 = 3 THEN 'image/bmp' WHEN doc_id % 8 <= 6 THEN 'image/webp' ELSE 'application/octet-stream' END AS media_type, CASE WHEN doc_id % 8 <= 6 THEN CAST(16 + doc_id % 1000 AS INT) END AS width, CASE WHEN doc_id % 8 <= 6 THEN CAST(9 + doc_id % 700 AS INT) END AS height FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CASE WHEN doc_id % 8 = 0 THEN 'image/png' WHEN doc_id % 8 = 1 THEN 'image/gif' WHEN doc_id % 8 = 2 THEN 'image/jpeg' WHEN doc_id % 8 = 3 THEN 'image/bmp' WHEN doc_id % 8 <= 6 THEN 'image/webp' ELSE 'application/octet-stream' END AS media_type, CASE WHEN doc_id % 8 <= 6 THEN CAST(16 + doc_id % 1000 AS INT) END AS width, CASE WHEN doc_id % 8 <= 6 THEN CAST(9 + doc_id % 700 AS INT) END AS height FROM documents ORDER BY doc_id"""),
 
     // WAV audio metadata (r7): the query PLANTS format/channels/rate/
     // bits/frame-count (arithmetic functions of doc_id) into honest
@@ -2455,7 +2474,7 @@ object SparkEntry {
             col("duration_ms"))
           .orderBy("doc_id")
       },
-      Some("""SELECT doc_id, CASE WHEN doc_id % 3 <= 1 THEN CAST(1 AS INT) END AS audio_format, CASE WHEN doc_id % 3 <= 1 THEN CAST(1 + doc_id % 2 AS INT) END AS n_channels, CASE WHEN doc_id % 3 <= 1 THEN CAST(8000 + (doc_id % 8) * 1000 AS INT) END AS sample_rate, CASE WHEN doc_id % 3 <= 1 THEN CAST(8 * (1 + doc_id % 2) AS INT) END AS bits_per_sample, CASE WHEN doc_id % 3 <= 1 THEN CAST(10 + doc_id % 50 AS BIGINT) END AS n_frames, CASE WHEN doc_id % 3 <= 1 THEN CAST((10 + doc_id % 50) * 1000 // (8000 + (doc_id % 8) * 1000) AS BIGINT) END AS duration_ms FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CASE WHEN doc_id % 3 <= 1 THEN CAST(1 AS INT) END AS audio_format, CASE WHEN doc_id % 3 <= 1 THEN CAST(1 + doc_id % 2 AS INT) END AS n_channels, CASE WHEN doc_id % 3 <= 1 THEN CAST(8000 + (doc_id % 8) * 1000 AS INT) END AS sample_rate, CASE WHEN doc_id % 3 <= 1 THEN CAST(8 * (1 + doc_id % 2) AS INT) END AS bits_per_sample, CASE WHEN doc_id % 3 <= 1 THEN CAST(10 + doc_id % 50 AS BIGINT) END AS n_frames, CASE WHEN doc_id % 3 <= 1 THEN CAST((10 + doc_id % 50) * 1000 // (8000 + (doc_id % 8) * 1000) AS BIGINT) END AS duration_ms FROM documents ORDER BY doc_id"""),
 
     // FLAC audio metadata (r8): plants rate/channels/bits/total-samples
     // (arithmetic functions of doc_id) into the spec-mandated
@@ -2485,7 +2504,7 @@ object SparkEntry {
             col("bits_per_sample"), col("total_samples"), col("duration_ms"))
           .orderBy("doc_id")
       },
-      Some("""SELECT doc_id, CASE WHEN doc_id % 2 = 0 THEN CAST(8000 + (doc_id % 8) * 1000 AS INT) END AS sample_rate, CASE WHEN doc_id % 2 = 0 THEN CAST(1 + doc_id % 5 AS INT) END AS n_channels, CASE WHEN doc_id % 2 = 0 THEN CAST(8 + (doc_id % 3) * 4 AS INT) END AS bits_per_sample, CASE WHEN doc_id % 2 = 0 THEN CAST(1000 + doc_id % 997 AS BIGINT) END AS total_samples, CASE WHEN doc_id % 2 = 0 THEN CAST((1000 + doc_id % 997) * 1000 // (8000 + (doc_id % 8) * 1000) AS BIGINT) END AS duration_ms FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CASE WHEN doc_id % 2 = 0 THEN CAST(8000 + (doc_id % 8) * 1000 AS INT) END AS sample_rate, CASE WHEN doc_id % 2 = 0 THEN CAST(1 + doc_id % 5 AS INT) END AS n_channels, CASE WHEN doc_id % 2 = 0 THEN CAST(8 + (doc_id % 3) * 4 AS INT) END AS bits_per_sample, CASE WHEN doc_id % 2 = 0 THEN CAST(1000 + doc_id % 997 AS BIGINT) END AS total_samples, CASE WHEN doc_id % 2 = 0 THEN CAST((1000 + doc_id % 997) * 1000 // (8000 + (doc_id % 8) * 1000) AS BIGINT) END AS duration_ms FROM documents ORDER BY doc_id"""),
 
     // MP3 audio metadata (r8): plants bitrate/rate-index/padding/mode
     // (arithmetic functions of doc_id) into MPEG-1 Layer III frame
@@ -2519,7 +2538,7 @@ object SparkEntry {
             col("n_channels"), col("frame_bytes"))
           .orderBy("doc_id")
       },
-      Some("""SELECT doc_id, CASE WHEN doc_id % 3 <= 1 THEN CAST(list_extract([0,32,40,48,56,64,80,96,112,128,160,192,224,256,320,0], CAST(1 + doc_id % 14 AS INT) + 1) AS INT) END AS bitrate_kbps, CASE WHEN doc_id % 3 <= 1 THEN CAST(list_extract([44100,48000,32000,0], CAST((doc_id // 3) % 2 AS INT) + 1) AS INT) END AS sample_rate, CASE WHEN doc_id % 3 <= 1 THEN CAST(CASE WHEN doc_id % 4 = 3 THEN 1 ELSE 2 END AS INT) END AS n_channels, CASE WHEN doc_id % 3 <= 1 THEN CAST(CAST(list_extract([0,32,40,48,56,64,80,96,112,128,160,192,224,256,320,0], CAST(1 + doc_id % 14 AS INT) + 1) AS BIGINT) * 144000 // list_extract([44100,48000,32000,0], CAST((doc_id // 3) % 2 AS INT) + 1) + doc_id % 2 AS BIGINT) END AS frame_bytes FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CASE WHEN doc_id % 3 <= 1 THEN CAST(list_extract([0,32,40,48,56,64,80,96,112,128,160,192,224,256,320,0], CAST(1 + doc_id % 14 AS INT) + 1) AS INT) END AS bitrate_kbps, CASE WHEN doc_id % 3 <= 1 THEN CAST(list_extract([44100,48000,32000,0], CAST((doc_id // 3) % 2 AS INT) + 1) AS INT) END AS sample_rate, CASE WHEN doc_id % 3 <= 1 THEN CAST(CASE WHEN doc_id % 4 = 3 THEN 1 ELSE 2 END AS INT) END AS n_channels, CASE WHEN doc_id % 3 <= 1 THEN CAST(CAST(list_extract([0,32,40,48,56,64,80,96,112,128,160,192,224,256,320,0], CAST(1 + doc_id % 14 AS INT) + 1) AS BIGINT) * 144000 // list_extract([44100,48000,32000,0], CAST((doc_id // 3) % 2 AS INT) + 1) + doc_id % 2 AS BIGINT) END AS frame_bytes FROM documents ORDER BY doc_id"""),
 
     // MP4 video metadata (r7): the query PLANTS timescale/duration/
     // track dims (arithmetic functions of doc_id) into honest ISO-BMFF
@@ -2557,7 +2576,7 @@ object SparkEntry {
             col("width"), col("height"))
           .orderBy("doc_id")
       },
-      Some("""SELECT doc_id, CASE WHEN doc_id % 2 = 0 THEN CAST(1000 + (doc_id % 10) * 100 AS INT) END AS timescale, CASE WHEN doc_id % 2 = 0 THEN CAST((500 + doc_id % 5000) * 1000 // (1000 + (doc_id % 10) * 100) AS BIGINT) END AS duration_ms, CASE WHEN doc_id % 2 = 0 THEN CAST(160 + doc_id % 800 AS INT) END AS width, CASE WHEN doc_id % 2 = 0 THEN CAST(90 + doc_id % 600 AS INT) END AS height FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CASE WHEN doc_id % 2 = 0 THEN CAST(1000 + (doc_id % 10) * 100 AS INT) END AS timescale, CASE WHEN doc_id % 2 = 0 THEN CAST((500 + doc_id % 5000) * 1000 // (1000 + (doc_id % 10) * 100) AS BIGINT) END AS duration_ms, CASE WHEN doc_id % 2 = 0 THEN CAST(160 + doc_id % 800 AS INT) END AS width, CASE WHEN doc_id % 2 = 0 THEN CAST(90 + doc_id % 600 AS INT) END AS height FROM documents ORDER BY doc_id"""),
 
     "llm_frame_sample" -> Q(
       (s, dir) => {
@@ -2569,7 +2588,7 @@ object SparkEntry {
             hex(col("frame")).as("frame_hex"))
           .orderBy("doc_id", "frame_idx")
       },
-      Some("""WITH f AS (SELECT doc_id, hex(CAST(text AS BLOB)) AS h, octet_length(CAST(text AS BLOB)) AS total FROM documents), g AS (SELECT doc_id, i AS frame_idx, substring(h, CAST(i * greatest(total - 16, 1) // 3 AS INT) * 2 + 1, 32) AS frame_hex FROM f, generate_series(0, 3) s(i)) SELECT doc_id, frame_idx, CAST(length(frame_hex) // 2 AS BIGINT) AS frame_size, frame_hex FROM g ORDER BY doc_id, frame_idx""")),
+      """WITH f AS (SELECT doc_id, hex(CAST(text AS BLOB)) AS h, octet_length(CAST(text AS BLOB)) AS total FROM documents), g AS (SELECT doc_id, i AS frame_idx, substring(h, CAST(i * greatest(total - 16, 1) // 3 AS INT) * 2 + 1, 32) AS frame_hex FROM f, generate_series(0, 3) s(i)) SELECT doc_id, frame_idx, CAST(length(frame_hex) // 2 AS BIGINT) AS frame_size, frame_hex FROM g ORDER BY doc_id, frame_idx"""),
 
     // BPE pair statistics (r6): frequency-weighted adjacent char-pair
     // counts over the distinct-word vocabulary — the tokenizer-training
@@ -2586,7 +2605,7 @@ object SparkEntry {
     // Value-exact: integer counts, string symbols, no FP anywhere.
     "llm_bpe_train" -> Q(
       (s, dir) => LlmOps.bpeTrain(docs(s, dir), rounds = 3),
-      Some("""WITH wf AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS f FROM (SELECT unnest(string_split(lower(COALESCE(text, '')), ' ')) AS w FROM documents) WHERE length(w) >= 2 GROUP BY 1), v0 AS (SELECT w, f, array_to_string(list_transform(generate_series(1, CAST(length(w) AS INT)), i -> substr(w, i, 1)), ' ') AS s FROM wf), sp1 AS (SELECT w, f, string_split(s, ' ') AS sl FROM v0), e1 AS (SELECT w, f, sl, unnest(generate_series(1, len(sl))) AS j FROM sp1), b1 AS (SELECT sl[j] AS x, sl[j+1] AS y, CAST(SUM(f) AS BIGINT) AS cnt FROM e1 WHERE j < len(sl) GROUP BY 1, 2 ORDER BY cnt DESC, x, y LIMIT 1), m1 AS (SELECT e.w, e.j FROM e1 e, b1 b WHERE e.j < len(e.sl) AND e.sl[e.j] = b.x AND e.sl[e.j+1] = b.y), k1 AS (SELECT w, j FROM (SELECT w, j, MIN(j) OVER (PARTITION BY w, g) AS p FROM (SELECT w, j, j - ROW_NUMBER() OVER (PARTITION BY w ORDER BY j) AS g FROM m1)) WHERE (j - p) % 2 = 0), v1 AS (SELECT e.w, MIN(e.f) AS f, string_agg(CASE WHEN ka.j IS NOT NULL THEN b.x || b.y ELSE e.sl[e.j] END, ' ' ORDER BY e.j) AS s FROM e1 e CROSS JOIN b1 b LEFT JOIN k1 ka ON e.w = ka.w AND e.j = ka.j LEFT JOIN k1 kb ON e.w = kb.w AND e.j = kb.j + 1 WHERE kb.j IS NULL GROUP BY e.w), sp2 AS (SELECT w, f, string_split(s, ' ') AS sl FROM v1), e2 AS (SELECT w, f, sl, unnest(generate_series(1, len(sl))) AS j FROM sp2), b2 AS (SELECT sl[j] AS x, sl[j+1] AS y, CAST(SUM(f) AS BIGINT) AS cnt FROM e2 WHERE j < len(sl) GROUP BY 1, 2 ORDER BY cnt DESC, x, y LIMIT 1), m2 AS (SELECT e.w, e.j FROM e2 e, b2 b WHERE e.j < len(e.sl) AND e.sl[e.j] = b.x AND e.sl[e.j+1] = b.y), k2 AS (SELECT w, j FROM (SELECT w, j, MIN(j) OVER (PARTITION BY w, g) AS p FROM (SELECT w, j, j - ROW_NUMBER() OVER (PARTITION BY w ORDER BY j) AS g FROM m2)) WHERE (j - p) % 2 = 0), v2 AS (SELECT e.w, MIN(e.f) AS f, string_agg(CASE WHEN ka.j IS NOT NULL THEN b.x || b.y ELSE e.sl[e.j] END, ' ' ORDER BY e.j) AS s FROM e2 e CROSS JOIN b2 b LEFT JOIN k2 ka ON e.w = ka.w AND e.j = ka.j LEFT JOIN k2 kb ON e.w = kb.w AND e.j = kb.j + 1 WHERE kb.j IS NULL GROUP BY e.w), sp3 AS (SELECT w, f, string_split(s, ' ') AS sl FROM v2), e3 AS (SELECT w, f, sl, unnest(generate_series(1, len(sl))) AS j FROM sp3), b3 AS (SELECT sl[j] AS x, sl[j+1] AS y, CAST(SUM(f) AS BIGINT) AS cnt FROM e3 WHERE j < len(sl) GROUP BY 1, 2 ORDER BY cnt DESC, x, y LIMIT 1) SELECT * FROM (SELECT CAST(1 AS INT) AS round, x AS sym_a, y AS sym_b, cnt FROM b1 UNION ALL SELECT CAST(2 AS INT), x, y, cnt FROM b2 UNION ALL SELECT CAST(3 AS INT), x, y, cnt FROM b3) ORDER BY round""")),
+      """WITH wf AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS f FROM (SELECT unnest(string_split(lower(COALESCE(text, '')), ' ')) AS w FROM documents) WHERE length(w) >= 2 GROUP BY 1), v0 AS (SELECT w, f, array_to_string(list_transform(generate_series(1, CAST(length(w) AS INT)), i -> substr(w, i, 1)), ' ') AS s FROM wf), sp1 AS (SELECT w, f, string_split(s, ' ') AS sl FROM v0), e1 AS (SELECT w, f, sl, unnest(generate_series(1, len(sl))) AS j FROM sp1), b1 AS (SELECT sl[j] AS x, sl[j+1] AS y, CAST(SUM(f) AS BIGINT) AS cnt FROM e1 WHERE j < len(sl) GROUP BY 1, 2 ORDER BY cnt DESC, x, y LIMIT 1), m1 AS (SELECT e.w, e.j FROM e1 e, b1 b WHERE e.j < len(e.sl) AND e.sl[e.j] = b.x AND e.sl[e.j+1] = b.y), k1 AS (SELECT w, j FROM (SELECT w, j, MIN(j) OVER (PARTITION BY w, g) AS p FROM (SELECT w, j, j - ROW_NUMBER() OVER (PARTITION BY w ORDER BY j) AS g FROM m1)) WHERE (j - p) % 2 = 0), v1 AS (SELECT e.w, MIN(e.f) AS f, string_agg(CASE WHEN ka.j IS NOT NULL THEN b.x || b.y ELSE e.sl[e.j] END, ' ' ORDER BY e.j) AS s FROM e1 e CROSS JOIN b1 b LEFT JOIN k1 ka ON e.w = ka.w AND e.j = ka.j LEFT JOIN k1 kb ON e.w = kb.w AND e.j = kb.j + 1 WHERE kb.j IS NULL GROUP BY e.w), sp2 AS (SELECT w, f, string_split(s, ' ') AS sl FROM v1), e2 AS (SELECT w, f, sl, unnest(generate_series(1, len(sl))) AS j FROM sp2), b2 AS (SELECT sl[j] AS x, sl[j+1] AS y, CAST(SUM(f) AS BIGINT) AS cnt FROM e2 WHERE j < len(sl) GROUP BY 1, 2 ORDER BY cnt DESC, x, y LIMIT 1), m2 AS (SELECT e.w, e.j FROM e2 e, b2 b WHERE e.j < len(e.sl) AND e.sl[e.j] = b.x AND e.sl[e.j+1] = b.y), k2 AS (SELECT w, j FROM (SELECT w, j, MIN(j) OVER (PARTITION BY w, g) AS p FROM (SELECT w, j, j - ROW_NUMBER() OVER (PARTITION BY w ORDER BY j) AS g FROM m2)) WHERE (j - p) % 2 = 0), v2 AS (SELECT e.w, MIN(e.f) AS f, string_agg(CASE WHEN ka.j IS NOT NULL THEN b.x || b.y ELSE e.sl[e.j] END, ' ' ORDER BY e.j) AS s FROM e2 e CROSS JOIN b2 b LEFT JOIN k2 ka ON e.w = ka.w AND e.j = ka.j LEFT JOIN k2 kb ON e.w = kb.w AND e.j = kb.j + 1 WHERE kb.j IS NULL GROUP BY e.w), sp3 AS (SELECT w, f, string_split(s, ' ') AS sl FROM v2), e3 AS (SELECT w, f, sl, unnest(generate_series(1, len(sl))) AS j FROM sp3), b3 AS (SELECT sl[j] AS x, sl[j+1] AS y, CAST(SUM(f) AS BIGINT) AS cnt FROM e3 WHERE j < len(sl) GROUP BY 1, 2 ORDER BY cnt DESC, x, y LIMIT 1) SELECT * FROM (SELECT CAST(1 AS INT) AS round, x AS sym_a, y AS sym_b, cnt FROM b1 UNION ALL SELECT CAST(2 AS INT), x, y, cnt FROM b2 UNION ALL SELECT CAST(3 AS INT), x, y, cnt FROM b3) ORDER BY round"""),
 
     // BPE tokenizer APPLICATION (r7): the corpus token-budget question
     // — per-doc whitespace-word count and post-merge BPE token count
@@ -2597,21 +2616,21 @@ object SparkEntry {
     // Value-exact: integer counts end to end.
     "llm_bpe_tokenize" -> Q(
       (s, dir) => LlmOps.bpeTokenize(docs(s, dir), rounds = 3).orderBy("doc_id"),
-      Some("""WITH wf AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS f FROM (SELECT unnest(string_split(lower(COALESCE(text, '')), ' ')) AS w FROM documents) WHERE length(w) >= 2 GROUP BY 1), v0 AS (SELECT w, f, array_to_string(list_transform(generate_series(1, CAST(length(w) AS INT)), i -> substr(w, i, 1)), ' ') AS s FROM wf), sp1 AS (SELECT w, f, string_split(s, ' ') AS sl FROM v0), e1 AS (SELECT w, f, sl, unnest(generate_series(1, len(sl))) AS j FROM sp1), b1 AS (SELECT sl[j] AS x, sl[j+1] AS y, CAST(SUM(f) AS BIGINT) AS cnt FROM e1 WHERE j < len(sl) GROUP BY 1, 2 ORDER BY cnt DESC, x, y LIMIT 1), m1 AS (SELECT e.w, e.j FROM e1 e, b1 b WHERE e.j < len(e.sl) AND e.sl[e.j] = b.x AND e.sl[e.j+1] = b.y), k1 AS (SELECT w, j FROM (SELECT w, j, MIN(j) OVER (PARTITION BY w, g) AS p FROM (SELECT w, j, j - ROW_NUMBER() OVER (PARTITION BY w ORDER BY j) AS g FROM m1)) WHERE (j - p) % 2 = 0), v1 AS (SELECT e.w, MIN(e.f) AS f, string_agg(CASE WHEN ka.j IS NOT NULL THEN b.x || b.y ELSE e.sl[e.j] END, ' ' ORDER BY e.j) AS s FROM e1 e CROSS JOIN b1 b LEFT JOIN k1 ka ON e.w = ka.w AND e.j = ka.j LEFT JOIN k1 kb ON e.w = kb.w AND e.j = kb.j + 1 WHERE kb.j IS NULL GROUP BY e.w), sp2 AS (SELECT w, f, string_split(s, ' ') AS sl FROM v1), e2 AS (SELECT w, f, sl, unnest(generate_series(1, len(sl))) AS j FROM sp2), b2 AS (SELECT sl[j] AS x, sl[j+1] AS y, CAST(SUM(f) AS BIGINT) AS cnt FROM e2 WHERE j < len(sl) GROUP BY 1, 2 ORDER BY cnt DESC, x, y LIMIT 1), m2 AS (SELECT e.w, e.j FROM e2 e, b2 b WHERE e.j < len(e.sl) AND e.sl[e.j] = b.x AND e.sl[e.j+1] = b.y), k2 AS (SELECT w, j FROM (SELECT w, j, MIN(j) OVER (PARTITION BY w, g) AS p FROM (SELECT w, j, j - ROW_NUMBER() OVER (PARTITION BY w ORDER BY j) AS g FROM m2)) WHERE (j - p) % 2 = 0), v2 AS (SELECT e.w, MIN(e.f) AS f, string_agg(CASE WHEN ka.j IS NOT NULL THEN b.x || b.y ELSE e.sl[e.j] END, ' ' ORDER BY e.j) AS s FROM e2 e CROSS JOIN b2 b LEFT JOIN k2 ka ON e.w = ka.w AND e.j = ka.j LEFT JOIN k2 kb ON e.w = kb.w AND e.j = kb.j + 1 WHERE kb.j IS NULL GROUP BY e.w), sp3 AS (SELECT w, f, string_split(s, ' ') AS sl FROM v2), e3 AS (SELECT w, f, sl, unnest(generate_series(1, len(sl))) AS j FROM sp3), b3 AS (SELECT sl[j] AS x, sl[j+1] AS y, CAST(SUM(f) AS BIGINT) AS cnt FROM e3 WHERE j < len(sl) GROUP BY 1, 2 ORDER BY cnt DESC, x, y LIMIT 1), m3 AS (SELECT e.w, e.j FROM e3 e, b3 b WHERE e.j < len(e.sl) AND e.sl[e.j] = b.x AND e.sl[e.j+1] = b.y), k3 AS (SELECT w, j FROM (SELECT w, j, MIN(j) OVER (PARTITION BY w, g) AS p FROM (SELECT w, j, j - ROW_NUMBER() OVER (PARTITION BY w ORDER BY j) AS g FROM m3)) WHERE (j - p) % 2 = 0), v3 AS (SELECT e.w, MIN(e.f) AS f, string_agg(CASE WHEN ka.j IS NOT NULL THEN b.x || b.y ELSE e.sl[e.j] END, ' ' ORDER BY e.j) AS s FROM e3 e CROSS JOIN b3 b LEFT JOIN k3 ka ON e.w = ka.w AND e.j = ka.j LEFT JOIN k3 kb ON e.w = kb.w AND e.j = kb.j + 1 WHERE kb.j IS NULL GROUP BY e.w), sz AS (SELECT w, CAST(len(string_split(s, ' ')) AS BIGINT) AS n_syms FROM v3), dw AS (SELECT doc_id, w FROM (SELECT doc_id, unnest(string_split(lower(COALESCE(text, '')), ' ')) AS w FROM documents) WHERE length(w) >= 1), jj AS (SELECT doc_id, COALESCE(n_syms, 1) AS n FROM dw LEFT JOIN sz USING (w)), ag AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words, CAST(SUM(n) AS BIGINT) AS n_bpe_tokens FROM jj GROUP BY 1) SELECT d.doc_id, COALESCE(n_words, CAST(0 AS BIGINT)) AS n_words, COALESCE(n_bpe_tokens, CAST(0 AS BIGINT)) AS n_bpe_tokens FROM documents d LEFT JOIN ag USING (doc_id) ORDER BY doc_id""")),
+      """WITH wf AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS f FROM (SELECT unnest(string_split(lower(COALESCE(text, '')), ' ')) AS w FROM documents) WHERE length(w) >= 2 GROUP BY 1), v0 AS (SELECT w, f, array_to_string(list_transform(generate_series(1, CAST(length(w) AS INT)), i -> substr(w, i, 1)), ' ') AS s FROM wf), sp1 AS (SELECT w, f, string_split(s, ' ') AS sl FROM v0), e1 AS (SELECT w, f, sl, unnest(generate_series(1, len(sl))) AS j FROM sp1), b1 AS (SELECT sl[j] AS x, sl[j+1] AS y, CAST(SUM(f) AS BIGINT) AS cnt FROM e1 WHERE j < len(sl) GROUP BY 1, 2 ORDER BY cnt DESC, x, y LIMIT 1), m1 AS (SELECT e.w, e.j FROM e1 e, b1 b WHERE e.j < len(e.sl) AND e.sl[e.j] = b.x AND e.sl[e.j+1] = b.y), k1 AS (SELECT w, j FROM (SELECT w, j, MIN(j) OVER (PARTITION BY w, g) AS p FROM (SELECT w, j, j - ROW_NUMBER() OVER (PARTITION BY w ORDER BY j) AS g FROM m1)) WHERE (j - p) % 2 = 0), v1 AS (SELECT e.w, MIN(e.f) AS f, string_agg(CASE WHEN ka.j IS NOT NULL THEN b.x || b.y ELSE e.sl[e.j] END, ' ' ORDER BY e.j) AS s FROM e1 e CROSS JOIN b1 b LEFT JOIN k1 ka ON e.w = ka.w AND e.j = ka.j LEFT JOIN k1 kb ON e.w = kb.w AND e.j = kb.j + 1 WHERE kb.j IS NULL GROUP BY e.w), sp2 AS (SELECT w, f, string_split(s, ' ') AS sl FROM v1), e2 AS (SELECT w, f, sl, unnest(generate_series(1, len(sl))) AS j FROM sp2), b2 AS (SELECT sl[j] AS x, sl[j+1] AS y, CAST(SUM(f) AS BIGINT) AS cnt FROM e2 WHERE j < len(sl) GROUP BY 1, 2 ORDER BY cnt DESC, x, y LIMIT 1), m2 AS (SELECT e.w, e.j FROM e2 e, b2 b WHERE e.j < len(e.sl) AND e.sl[e.j] = b.x AND e.sl[e.j+1] = b.y), k2 AS (SELECT w, j FROM (SELECT w, j, MIN(j) OVER (PARTITION BY w, g) AS p FROM (SELECT w, j, j - ROW_NUMBER() OVER (PARTITION BY w ORDER BY j) AS g FROM m2)) WHERE (j - p) % 2 = 0), v2 AS (SELECT e.w, MIN(e.f) AS f, string_agg(CASE WHEN ka.j IS NOT NULL THEN b.x || b.y ELSE e.sl[e.j] END, ' ' ORDER BY e.j) AS s FROM e2 e CROSS JOIN b2 b LEFT JOIN k2 ka ON e.w = ka.w AND e.j = ka.j LEFT JOIN k2 kb ON e.w = kb.w AND e.j = kb.j + 1 WHERE kb.j IS NULL GROUP BY e.w), sp3 AS (SELECT w, f, string_split(s, ' ') AS sl FROM v2), e3 AS (SELECT w, f, sl, unnest(generate_series(1, len(sl))) AS j FROM sp3), b3 AS (SELECT sl[j] AS x, sl[j+1] AS y, CAST(SUM(f) AS BIGINT) AS cnt FROM e3 WHERE j < len(sl) GROUP BY 1, 2 ORDER BY cnt DESC, x, y LIMIT 1), m3 AS (SELECT e.w, e.j FROM e3 e, b3 b WHERE e.j < len(e.sl) AND e.sl[e.j] = b.x AND e.sl[e.j+1] = b.y), k3 AS (SELECT w, j FROM (SELECT w, j, MIN(j) OVER (PARTITION BY w, g) AS p FROM (SELECT w, j, j - ROW_NUMBER() OVER (PARTITION BY w ORDER BY j) AS g FROM m3)) WHERE (j - p) % 2 = 0), v3 AS (SELECT e.w, MIN(e.f) AS f, string_agg(CASE WHEN ka.j IS NOT NULL THEN b.x || b.y ELSE e.sl[e.j] END, ' ' ORDER BY e.j) AS s FROM e3 e CROSS JOIN b3 b LEFT JOIN k3 ka ON e.w = ka.w AND e.j = ka.j LEFT JOIN k3 kb ON e.w = kb.w AND e.j = kb.j + 1 WHERE kb.j IS NULL GROUP BY e.w), sz AS (SELECT w, CAST(len(string_split(s, ' ')) AS BIGINT) AS n_syms FROM v3), dw AS (SELECT doc_id, w FROM (SELECT doc_id, unnest(string_split(lower(COALESCE(text, '')), ' ')) AS w FROM documents) WHERE length(w) >= 1), jj AS (SELECT doc_id, COALESCE(n_syms, 1) AS n FROM dw LEFT JOIN sz USING (w)), ag AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words, CAST(SUM(n) AS BIGINT) AS n_bpe_tokens FROM jj GROUP BY 1) SELECT d.doc_id, COALESCE(n_words, CAST(0 AS BIGINT)) AS n_words, COALESCE(n_bpe_tokens, CAST(0 AS BIGINT)) AS n_bpe_tokens FROM documents d LEFT JOIN ag USING (doc_id) ORDER BY doc_id"""),
 
     "llm_bpe_pairs" -> Q(
       (s, dir) => LlmOps.bpePairCounts(docs(s, dir), k = 20),
-      Some("""WITH w AS (SELECT unnest(string_split(lower(COALESCE(text, '')), ' ')) AS w FROM documents), f AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS f FROM w WHERE length(w) >= 2 GROUP BY 1), px AS (SELECT substr(w, i, 2) AS pair, f FROM (SELECT w, f, unnest(generate_series(1, length(w) - 1)) AS i FROM f)) SELECT pair, CAST(SUM(f) AS BIGINT) AS cnt FROM px GROUP BY 1 ORDER BY cnt DESC, pair LIMIT 20""")),
+      """WITH w AS (SELECT unnest(string_split(lower(COALESCE(text, '')), ' ')) AS w FROM documents), f AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS f FROM w WHERE length(w) >= 2 GROUP BY 1), px AS (SELECT substr(w, i, 2) AS pair, f FROM (SELECT w, f, unnest(generate_series(1, length(w) - 1)) AS i FROM f)) SELECT pair, CAST(SUM(f) AS BIGINT) AS cnt FROM px GROUP BY 1 ORDER BY cnt DESC, pair LIMIT 20"""),
 
     // corpus top-k n-grams (r6): phrase/vocabulary statistics — one
     // explode + one hash aggregate, deterministic tiebreak
     "llm_ngram_counts" -> Q(
       (s, dir) => LlmOps.ngramCounts(docs(s, dir), n = 3, k = 25),
-      Some("""WITH t AS (SELECT string_split(lower(COALESCE(text, '')), ' ') AS tk FROM documents), g AS (SELECT array_to_string(tk[i : i + 2], ' ') AS gram FROM (SELECT tk, unnest(generate_series(1, len(tk) - 2)) AS i FROM t WHERE len(tk) >= 3)) SELECT gram, CAST(COUNT(*) AS BIGINT) AS cnt FROM g GROUP BY 1 ORDER BY cnt DESC, gram LIMIT 25""")),
+      """WITH t AS (SELECT string_split(lower(COALESCE(text, '')), ' ') AS tk FROM documents), g AS (SELECT array_to_string(tk[i : i + 2], ' ') AS gram FROM (SELECT tk, unnest(generate_series(1, len(tk) - 2)) AS i FROM t WHERE len(tk) >= 3)) SELECT gram, CAST(COUNT(*) AS BIGINT) AS cnt FROM g GROUP BY 1 ORDER BY cnt DESC, gram LIMIT 25"""),
 
     "llm_token_count" -> Q(
       (s, dir) => LlmOps.tokenCount(docs(s, dir)).orderBy("doc_id"),
-      Some("""SELECT doc_id, CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_ws_tokens, CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+')) AS BIGINT) AS n_bpe_tokens, ROUND(CAST(length(text) AS DOUBLE) / greatest(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+')), 1), 4) AS chars_per_token FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_ws_tokens, CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+')) AS BIGINT) AS n_bpe_tokens, ROUND(CAST(length(text) AS DOUBLE) / greatest(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+')), 1), 4) AS chars_per_token FROM documents ORDER BY doc_id"""),
 
     // PII scrub: RE2-compatible patterns on both engines; the fixture
     // text is synthetic (counts mostly 0) — the oracle still
@@ -2619,7 +2638,7 @@ object SparkEntry {
     // behavior on real PII is pinned in LlmOpsSpec with injected rows
     "llm_pii_scrub" -> Q(
       (s, dir) => LlmOps.piiScrub(docs(s, dir)).orderBy("doc_id"),
-      Some("""SELECT doc_id, CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_email, CAST(len(regexp_extract_all(text, '\+[0-9][0-9()\- ]{7,}[0-9]')) AS BIGINT) AS n_phone, CAST(len(regexp_extract_all(text, '\b([0-9]{1,3}\.){3}[0-9]{1,3}\b')) AS BIGINT) AS n_ip, regexp_replace(regexp_replace(regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'), '\+[0-9][0-9()\- ]{7,}[0-9]', '<PHONE>', 'g'), '\b([0-9]{1,3}\.){3}[0-9]{1,3}\b', '<IP>', 'g') AS clean_text FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_email, CAST(len(regexp_extract_all(text, '\+[0-9][0-9()\- ]{7,}[0-9]')) AS BIGINT) AS n_phone, CAST(len(regexp_extract_all(text, '\b([0-9]{1,3}\.){3}[0-9]{1,3}\b')) AS BIGINT) AS n_ip, regexp_replace(regexp_replace(regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'), '\+[0-9][0-9()\- ]{7,}[0-9]', '<PHONE>', 'g'), '\b([0-9]{1,3}\.){3}[0-9]{1,3}\b', '<IP>', 'g') AS clean_text FROM documents ORDER BY doc_id"""),
 
     // cross-document repeated 8-token spans: per-doc fraction of
     // distinct shingles shared with at least one other document (Spark
@@ -2627,14 +2646,14 @@ object SparkEntry {
     // collisions; the oracle keeps the strings)
     "llm_substring_dup" -> Q(
       (s, dir) => LlmOps.substringDup(docs(s, dir), w = 8).orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents), ix AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 7)) AS i FROM t WHERE len(toks) >= 8), sh AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+7], ' ') AS s FROM ix), df AS (SELECT s, COUNT(*) AS df FROM sh GROUP BY 1) SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles, CAST(SUM(CASE WHEN df > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_shingles, ROUND(CAST(SUM(CASE WHEN df > 1 THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 4) AS dup_ratio FROM sh JOIN df USING (s) GROUP BY 1 ORDER BY 1""")),
+      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents), ix AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 7)) AS i FROM t WHERE len(toks) >= 8), sh AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+7], ' ') AS s FROM ix), df AS (SELECT s, COUNT(*) AS df FROM sh GROUP BY 1) SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles, CAST(SUM(CASE WHEN df > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_shingles, ROUND(CAST(SUM(CASE WHEN df > 1 THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 4) AS dup_ratio FROM sh JOIN df USING (s) GROUP BY 1 ORDER BY 1"""),
 
     // Bigram conditional LM score (r5): mean -ln p(tok|prev) under the
     // corpus MLE bigram model — value-exact via per-pair integer micros
     // (the unigram_logprob convention); docs with < 2 tokens drop out
     "llm_bigram_logprob" -> Q(
       (s, dir) => LlmOps.bigramLogProb(docs(s, dir)).orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id AS id, string_split(lower(text), ' ') AS toks FROM documents WHERE len(string_split(lower(text), ' ')) >= 2), g AS (SELECT id, toks[i-1] AS prev, toks[i] AS cur FROM (SELECT id, toks, unnest(generate_series(2, len(toks))) AS i FROM t)), c2 AS (SELECT prev, cur, CAST(COUNT(*) AS BIGINT) AS c2 FROM g GROUP BY 1, 2), c1 AS (SELECT prev, CAST(COUNT(*) AS BIGINT) AS c1 FROM g GROUP BY 1) SELECT id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams, ROUND(CAST(SUM(CAST(ROUND(-LN(CAST(c2 AS DOUBLE) / c1) * 1000000) AS BIGINT)) AS DOUBLE) / COUNT(*) / 1000000.0, 4) AS mean_neg_logp2 FROM g JOIN c2 USING (prev, cur) JOIN c1 USING (prev) GROUP BY 1 ORDER BY 1""")),
+      """WITH t AS (SELECT doc_id AS id, string_split(lower(text), ' ') AS toks FROM documents WHERE len(string_split(lower(text), ' ')) >= 2), g AS (SELECT id, toks[i-1] AS prev, toks[i] AS cur FROM (SELECT id, toks, unnest(generate_series(2, len(toks))) AS i FROM t)), c2 AS (SELECT prev, cur, CAST(COUNT(*) AS BIGINT) AS c2 FROM g GROUP BY 1, 2), c1 AS (SELECT prev, CAST(COUNT(*) AS BIGINT) AS c1 FROM g GROUP BY 1) SELECT id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams, ROUND(CAST(SUM(CAST(ROUND(-LN(CAST(c2 AS DOUBLE) / c1) * 1000000) AS BIGINT)) AS DOUBLE) / COUNT(*) / 1000000.0, 4) AS mean_neg_logp2 FROM g JOIN c2 USING (prev, cur) JOIN c1 USING (prev) GROUP BY 1 ORDER BY 1"""),
 
     // URL canonicalization (r8): crawl-dedup front door — known-answer
     // oracle over the documented rules (lowercase scheme+authority,
@@ -2647,7 +2666,7 @@ object SparkEntry {
               c = url_normalize('https://site.com/x?utm_campaign=z&fbclid=abc'),
               d = url_normalize('not a url#frag'),
               e = url_normalize('https://h.io/p?z=1&y=2&z=0')"""),
-      Some("""SELECT 'http://example.com/Path/Page?a=1&b=2' AS a, 'https://site.com/' AS b, 'https://site.com/x' AS c, 'not a url' AS d, 'https://h.io/p?y=2&z=0&z=1' AS e""")),
+      """SELECT 'http://example.com/Path/Page?a=1&b=2' AS a, 'https://site.com/' AS b, 'https://site.com/x' AS c, 'not a url' AS d, 'https://h.io/p?y=2&z=0&z=1' AS e"""),
 
     // CUSUM change detection (r8): Page's positive-drift statistic over
     // literal series — integer-valued steps make every fold state
@@ -2662,7 +2681,7 @@ object SparkEntry {
         | project stat_a = todouble(a.max_stat), idx_a = tolong(a.idx),
                   stat_b = todouble(b.max_stat), idx_b = tolong(b.idx),
                   stat_c = todouble(c.max_stat), idx_c = tolong(c.idx)"""),
-      Some("""SELECT CAST(9.0 AS DOUBLE) AS stat_a, CAST(6 AS BIGINT) AS idx_a, CAST(0.0 AS DOUBLE) AS stat_b, CAST(0 AS BIGINT) AS idx_b, CAST(4.0 AS DOUBLE) AS stat_c, CAST(5 AS BIGINT) AS idx_c""")),
+      """SELECT CAST(9.0 AS DOUBLE) AS stat_a, CAST(6 AS BIGINT) AS idx_a, CAST(0.0 AS DOUBLE) AS stat_b, CAST(0 AS BIGINT) AS idx_b, CAST(4.0 AS DOUBLE) AS stat_c, CAST(5 AS BIGINT) AS idx_c"""),
 
     // Per-source KL divergence (r8): the domain-drift statistic — each
     // (source, token) term p·ln(p/q) rounds to integer micros before
@@ -2671,7 +2690,7 @@ object SparkEntry {
     // terms round half-away identically).
     "llm_source_kl" -> Q(
       (s, dir) => LlmOps.sourceKl(docs(s, dir)),
-      Some("""WITH tk AS (SELECT source, t FROM (SELECT source, unnest(string_split(lower(COALESCE(text, '')), ' ')) AS t FROM documents) WHERE len(t) >= 1), st AS (SELECT source, t, CAST(COUNT(*) AS BIGINT) AS cst FROM tk GROUP BY 1, 2), s AS (SELECT source, CAST(SUM(cst) AS BIGINT) AS cs FROM st GROUP BY 1), tt AS (SELECT t, CAST(SUM(cst) AS BIGINT) AS ct FROM st GROUP BY 1), c AS (SELECT CAST(SUM(cst) AS BIGINT) AS ctot FROM st), terms AS (SELECT source, CAST(ROUND((CAST(cst AS DOUBLE) / cs) * LN((CAST(cst AS DOUBLE) / cs) / (CAST(ct AS DOUBLE) / ctot)) * 1000000.0) AS BIGINT) AS u FROM st JOIN s USING (source) JOIN tt USING (t) CROSS JOIN c) SELECT source, CAST(COUNT(*) AS BIGINT) AS n_terms, CAST(SUM(u) AS BIGINT) AS kl_u FROM terms GROUP BY 1 ORDER BY 1""")),
+      """WITH tk AS (SELECT source, t FROM (SELECT source, unnest(string_split(lower(COALESCE(text, '')), ' ')) AS t FROM documents) WHERE len(t) >= 1), st AS (SELECT source, t, CAST(COUNT(*) AS BIGINT) AS cst FROM tk GROUP BY 1, 2), s AS (SELECT source, CAST(SUM(cst) AS BIGINT) AS cs FROM st GROUP BY 1), tt AS (SELECT t, CAST(SUM(cst) AS BIGINT) AS ct FROM st GROUP BY 1), c AS (SELECT CAST(SUM(cst) AS BIGINT) AS ctot FROM st), terms AS (SELECT source, CAST(ROUND((CAST(cst AS DOUBLE) / cs) * LN((CAST(cst AS DOUBLE) / cs) / (CAST(ct AS DOUBLE) / ctot)) * 1000000.0) AS BIGINT) AS u FROM st JOIN s USING (source) JOIN tt USING (t) CROSS JOIN c) SELECT source, CAST(COUNT(*) AS BIGINT) AS n_terms, CAST(SUM(u) AS BIGINT) AS kl_u FROM terms GROUP BY 1 ORDER BY 1"""),
 
     // Reciprocal-rank fusion (r8): fuses the BM25 lexical top-50 with a
     // deterministic length-prior top-50 (stand-in for the second
@@ -2695,7 +2714,7 @@ object SparkEntry {
           .withColumn("system", lit("length"))
         LlmOps.rrfFuse(bm.unionByName(ln), k0 = 60, topK = 10)
       },
-      Some("""WITH t AS (SELECT doc_id, string_split(lower(COALESCE(text, '')), ' ') AS toks FROM documents), d AS (SELECT doc_id, CAST(len(toks) AS INT) AS dl, toks FROM t), s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) AS sumdl FROM d), h AS (SELECT doc_id, dl, tok, CAST(COUNT(*) AS BIGINT) AS tf FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM d) WHERE tok IN ('fast', 'window', 'merge', 'sort', 'stream') GROUP BY 1, 2, 3), dfq AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM h GROUP BY 1), c AS (SELECT doc_id, CAST(ROUND(LN(1.0 + (CAST(n - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) * (tf * (CAST(1.2 AS DOUBLE) + 1.0) / (tf + CAST(1.2 AS DOUBLE) * (1.0 - CAST(0.75 AS DOUBLE) + CAST(0.75 AS DOUBLE) * dl / (CAST(sumdl AS DOUBLE) / n)))) * 1000000.0) AS BIGINT) AS cu FROM h JOIN dfq USING (tok) CROSS JOIN s), bm AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY SUM(cu) DESC, doc_id) AS rank FROM c GROUP BY doc_id ORDER BY SUM(cu) DESC, doc_id LIMIT 50), ln AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id) AS rank FROM documents QUALIFY rank <= 50), u AS (SELECT doc_id, rank FROM bm UNION ALL SELECT doc_id, rank FROM ln), f AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_systems, CAST(SUM(CAST(ROUND(CAST(1000000 AS DOUBLE) / (60 + rank)) AS BIGINT)) AS BIGINT) AS rrf_u FROM u GROUP BY 1) SELECT doc_id, n_systems, rrf_u FROM f ORDER BY rrf_u DESC, doc_id LIMIT 10""")),
+      """WITH t AS (SELECT doc_id, string_split(lower(COALESCE(text, '')), ' ') AS toks FROM documents), d AS (SELECT doc_id, CAST(len(toks) AS INT) AS dl, toks FROM t), s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) AS sumdl FROM d), h AS (SELECT doc_id, dl, tok, CAST(COUNT(*) AS BIGINT) AS tf FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM d) WHERE tok IN ('fast', 'window', 'merge', 'sort', 'stream') GROUP BY 1, 2, 3), dfq AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM h GROUP BY 1), c AS (SELECT doc_id, CAST(ROUND(LN(1.0 + (CAST(n - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) * (tf * (CAST(1.2 AS DOUBLE) + 1.0) / (tf + CAST(1.2 AS DOUBLE) * (1.0 - CAST(0.75 AS DOUBLE) + CAST(0.75 AS DOUBLE) * dl / (CAST(sumdl AS DOUBLE) / n)))) * 1000000.0) AS BIGINT) AS cu FROM h JOIN dfq USING (tok) CROSS JOIN s), bm AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY SUM(cu) DESC, doc_id) AS rank FROM c GROUP BY doc_id ORDER BY SUM(cu) DESC, doc_id LIMIT 50), ln AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id) AS rank FROM documents QUALIFY rank <= 50), u AS (SELECT doc_id, rank FROM bm UNION ALL SELECT doc_id, rank FROM ln), f AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_systems, CAST(SUM(CAST(ROUND(CAST(1000000 AS DOUBLE) / (60 + rank)) AS BIGINT)) AS BIGINT) AS rrf_u FROM u GROUP BY 1) SELECT doc_id, n_systems, rrf_u FROM f ORDER BY rrf_u DESC, doc_id LIMIT 10"""),
 
     // Hashed-BoW logistic-regression classifier (r8): contract row (the
     // llm_kmeans convention — per-round double sums are merge-order
@@ -2724,7 +2743,7 @@ object SparkEntry {
             (col("n_correct") >= col("n_docs") * 0.95).as("acc_ok"),
             (col("p1") > col("p0")).as("separated"))
       },
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, true AS acc_ok, true AS separated FROM documents""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, true AS acc_ok, true AS separated FROM documents"""),
 
     // Count-min sketch (r8): depth-4 × width-512 sketch over the corpus
     // token stream, probed for five present tokens + one absent — the
@@ -2735,7 +2754,7 @@ object SparkEntry {
     "llm_cms_count" -> Q(
       (s, dir) => LlmOps.cmsCount(docs(s, dir),
         "scan join window stream fast zebra", width = 512, depth = 4),
-      Some("""WITH tk AS (SELECT tok FROM (SELECT unnest(string_split(lower(COALESCE(text, '')), ' ')) AS tok FROM documents) WHERE len(tok) >= 1), rs AS (SELECT unnest(generate_series(0, 3)) AS r), h AS (SELECT r, (ascii(substring(md5('cms' || CAST(r AS VARCHAR) || '_' || tok), 1, 1)) * 10000 + ascii(substring(md5('cms' || CAST(r AS VARCHAR) || '_' || tok), 2, 1)) * 100 + ascii(substring(md5('cms' || CAST(r AS VARCHAR) || '_' || tok), 3, 1))) % 512 AS bucket FROM tk CROSS JOIN rs), counters AS (SELECT r, bucket, CAST(COUNT(*) AS BIGINT) AS c FROM h GROUP BY 1, 2), probes AS (SELECT unnest(['fast', 'join', 'scan', 'stream', 'window', 'zebra']) AS token), ph AS (SELECT token, r, (ascii(substring(md5('cms' || CAST(r AS VARCHAR) || '_' || token), 1, 1)) * 10000 + ascii(substring(md5('cms' || CAST(r AS VARCHAR) || '_' || token), 2, 1)) * 100 + ascii(substring(md5('cms' || CAST(r AS VARCHAR) || '_' || token), 3, 1))) % 512 AS bucket FROM probes CROSS JOIN rs) SELECT token, CAST(MIN(COALESCE(c, 0)) AS BIGINT) AS est FROM ph LEFT JOIN counters USING (r, bucket) GROUP BY 1 ORDER BY 1""")),
+      """WITH tk AS (SELECT tok FROM (SELECT unnest(string_split(lower(COALESCE(text, '')), ' ')) AS tok FROM documents) WHERE len(tok) >= 1), rs AS (SELECT unnest(generate_series(0, 3)) AS r), h AS (SELECT r, (ascii(substring(md5('cms' || CAST(r AS VARCHAR) || '_' || tok), 1, 1)) * 10000 + ascii(substring(md5('cms' || CAST(r AS VARCHAR) || '_' || tok), 2, 1)) * 100 + ascii(substring(md5('cms' || CAST(r AS VARCHAR) || '_' || tok), 3, 1))) % 512 AS bucket FROM tk CROSS JOIN rs), counters AS (SELECT r, bucket, CAST(COUNT(*) AS BIGINT) AS c FROM h GROUP BY 1, 2), probes AS (SELECT unnest(['fast', 'join', 'scan', 'stream', 'window', 'zebra']) AS token), ph AS (SELECT token, r, (ascii(substring(md5('cms' || CAST(r AS VARCHAR) || '_' || token), 1, 1)) * 10000 + ascii(substring(md5('cms' || CAST(r AS VARCHAR) || '_' || token), 2, 1)) * 100 + ascii(substring(md5('cms' || CAST(r AS VARCHAR) || '_' || token), 3, 1))) % 512 AS bucket FROM probes CROSS JOIN rs) SELECT token, CAST(MIN(COALESCE(c, 0)) AS BIGINT) AS est FROM ph LEFT JOIN counters USING (r, bucket) GROUP BY 1 ORDER BY 1"""),
 
     // OLS linear regression (r8): planted-recovery oracle — the target
     // is the exact integer relation y = 3·n_chars − 2·(doc_id mod 7) +
@@ -2753,7 +2772,7 @@ object SparkEntry {
           .select(col("feature"), round(col("coef"), 6).as("coef"))
           .orderBy("feature")
       },
-      Some("""SELECT feature, coef FROM (SELECT '_intercept' AS feature, 7.0 AS coef UNION ALL SELECT '_n', CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) UNION ALL SELECT '_r2', 1.0 UNION ALL SELECT 'dmod', -2.0 UNION ALL SELECT 'n_chars', 3.0) ORDER BY feature""")),
+      """SELECT feature, coef FROM (SELECT '_intercept' AS feature, 7.0 AS coef UNION ALL SELECT '_n', CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) UNION ALL SELECT '_r2', 1.0 UNION ALL SELECT 'dmod', -2.0 UNION ALL SELECT 'n_chars', 3.0) ORDER BY feature"""),
 
     // BM25 against the AT-REST inverted index (r12): bucket-pruned
     // postings for the query terms only — scores bit-identical to the
@@ -2764,7 +2783,7 @@ object SparkEntry {
         LlmOps.bm25Indexed(s, "graft_bm25_idx",
           "fast window merge sort stream", k = 10)
       },
-      Some("""WITH t AS (SELECT doc_id, string_split(lower(COALESCE(text, '')), ' ') AS toks FROM documents), d AS (SELECT doc_id, CAST(len(toks) AS INT) AS dl, toks FROM t), s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) AS sumdl FROM d), h AS (SELECT doc_id, dl, tok, CAST(COUNT(*) AS BIGINT) AS tf FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM d) WHERE tok IN ('fast', 'window', 'merge', 'sort', 'stream') GROUP BY 1, 2, 3), dfq AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM h GROUP BY 1), c AS (SELECT doc_id, CAST(ROUND(LN(1.0 + (CAST(n - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) * (tf * (CAST(1.2 AS DOUBLE) + 1.0) / (tf + CAST(1.2 AS DOUBLE) * (1.0 - CAST(0.75 AS DOUBLE) + CAST(0.75 AS DOUBLE) * dl / (CAST(sumdl AS DOUBLE) / n)))) * 1000000.0) AS BIGINT) AS cu FROM h JOIN dfq USING (tok) CROSS JOIN s) SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_terms, CAST(SUM(cu) AS BIGINT) AS score_u FROM c GROUP BY 1 ORDER BY score_u DESC, doc_id LIMIT 10""")),
+      """WITH t AS (SELECT doc_id, string_split(lower(COALESCE(text, '')), ' ') AS toks FROM documents), d AS (SELECT doc_id, CAST(len(toks) AS INT) AS dl, toks FROM t), s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) AS sumdl FROM d), h AS (SELECT doc_id, dl, tok, CAST(COUNT(*) AS BIGINT) AS tf FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM d) WHERE tok IN ('fast', 'window', 'merge', 'sort', 'stream') GROUP BY 1, 2, 3), dfq AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM h GROUP BY 1), c AS (SELECT doc_id, CAST(ROUND(LN(1.0 + (CAST(n - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) * (tf * (CAST(1.2 AS DOUBLE) + 1.0) / (tf + CAST(1.2 AS DOUBLE) * (1.0 - CAST(0.75 AS DOUBLE) + CAST(0.75 AS DOUBLE) * dl / (CAST(sumdl AS DOUBLE) / n)))) * 1000000.0) AS BIGINT) AS cu FROM h JOIN dfq USING (tok) CROSS JOIN s) SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_terms, CAST(SUM(cu) AS BIGINT) AS score_u FROM c GROUP BY 1 ORDER BY score_u DESC, doc_id LIMIT 10""", IndexBuild),
 
     // Okapi BM25 top-10 retrieval (r8): lexical ranking next to the ANN
     // family — per-(doc, term) contributions in integer micros make the
@@ -2776,7 +2795,7 @@ object SparkEntry {
     "llm_bm25" -> Q(
       (s, dir) => LlmOps.bm25(docs(s, dir),
         "fast window merge sort stream", k = 10),
-      Some("""WITH t AS (SELECT doc_id, string_split(lower(COALESCE(text, '')), ' ') AS toks FROM documents), d AS (SELECT doc_id, CAST(len(toks) AS INT) AS dl, toks FROM t), s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) AS sumdl FROM d), h AS (SELECT doc_id, dl, tok, CAST(COUNT(*) AS BIGINT) AS tf FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM d) WHERE tok IN ('fast', 'window', 'merge', 'sort', 'stream') GROUP BY 1, 2, 3), dfq AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM h GROUP BY 1), c AS (SELECT doc_id, CAST(ROUND(LN(1.0 + (CAST(n - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) * (tf * (CAST(1.2 AS DOUBLE) + 1.0) / (tf + CAST(1.2 AS DOUBLE) * (1.0 - CAST(0.75 AS DOUBLE) + CAST(0.75 AS DOUBLE) * dl / (CAST(sumdl AS DOUBLE) / n)))) * 1000000.0) AS BIGINT) AS cu FROM h JOIN dfq USING (tok) CROSS JOIN s) SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_terms, CAST(SUM(cu) AS BIGINT) AS score_u FROM c GROUP BY 1 ORDER BY score_u DESC, doc_id LIMIT 10""")),
+      """WITH t AS (SELECT doc_id, string_split(lower(COALESCE(text, '')), ' ') AS toks FROM documents), d AS (SELECT doc_id, CAST(len(toks) AS INT) AS dl, toks FROM t), s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) AS sumdl FROM d), h AS (SELECT doc_id, dl, tok, CAST(COUNT(*) AS BIGINT) AS tf FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM d) WHERE tok IN ('fast', 'window', 'merge', 'sort', 'stream') GROUP BY 1, 2, 3), dfq AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM h GROUP BY 1), c AS (SELECT doc_id, CAST(ROUND(LN(1.0 + (CAST(n - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) * (tf * (CAST(1.2 AS DOUBLE) + 1.0) / (tf + CAST(1.2 AS DOUBLE) * (1.0 - CAST(0.75 AS DOUBLE) + CAST(0.75 AS DOUBLE) * dl / (CAST(sumdl AS DOUBLE) / n)))) * 1000000.0) AS BIGINT) AS cu FROM h JOIN dfq USING (tok) CROSS JOIN s) SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_terms, CAST(SUM(cu) AS BIGINT) AS score_u FROM c GROUP BY 1 ORDER BY score_u DESC, doc_id LIMIT 10"""),
 
     // C4-style line-level dedup (r5): the fixture text is single-line,
     // so both engines first reformat it into 10-token lines — the op
@@ -2784,21 +2803,21 @@ object SparkEntry {
     // its first (doc_id, pos); docs reassemble in original line order.
     "llm_line_dedup" -> Q(
       (s, dir) => LlmOps.lineDedup(relined10(docs(s, dir))).orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS tk FROM documents), lx AS (SELECT doc_id, k AS pos, array_to_string(tk[k*10+1 : k*10+10], ' ') AS line FROM (SELECT doc_id, tk, unnest(generate_series(0, CAST(floor((len(tk)-1)/10.0) AS INT))) AS k FROM t)), own AS (SELECT line, MIN(doc_id * 1000000 + pos) AS o FROM lx GROUP BY 1), kept AS (SELECT doc_id, pos, line FROM lx JOIN own USING (line) WHERE doc_id * 1000000 + pos = o), nl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_lines FROM lx GROUP BY 1), ka AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept, string_agg(line, chr(10) ORDER BY pos) AS clean_text FROM kept GROUP BY 1) SELECT nl.doc_id, n_lines, COALESCE(n_kept, 0) AS n_kept, COALESCE(clean_text, '') AS clean_text FROM nl LEFT JOIN ka USING (doc_id) ORDER BY doc_id""")),
+      """WITH t AS (SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS tk FROM documents), lx AS (SELECT doc_id, k AS pos, array_to_string(tk[k*10+1 : k*10+10], ' ') AS line FROM (SELECT doc_id, tk, unnest(generate_series(0, CAST(floor((len(tk)-1)/10.0) AS INT))) AS k FROM t)), own AS (SELECT line, MIN(doc_id * 1000000 + pos) AS o FROM lx GROUP BY 1), kept AS (SELECT doc_id, pos, line FROM lx JOIN own USING (line) WHERE doc_id * 1000000 + pos = o), nl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_lines FROM lx GROUP BY 1), ka AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept, string_agg(line, chr(10) ORDER BY pos) AS clean_text FROM kept GROUP BY 1) SELECT nl.doc_id, n_lines, COALESCE(n_kept, 0) AS n_kept, COALESCE(clean_text, '') AS clean_text FROM nl LEFT JOIN ka USING (doc_id) ORDER BY doc_id"""),
 
     // RefinedWeb frequent-line boilerplate removal (r5): lines in >= 3
     // distinct docs vanish everywhere; rare lines keep all occurrences
     "llm_boilerplate" -> Q(
       (s, dir) => LlmOps.boilerplateRemove(relined10(docs(s, dir)), minDf = 3)
         .orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS tk FROM documents), lx AS (SELECT doc_id, k AS pos, array_to_string(tk[k*10+1 : k*10+10], ' ') AS line FROM (SELECT doc_id, tk, unnest(generate_series(0, CAST(floor((len(tk)-1)/10.0) AS INT))) AS k FROM t)), dfq AS (SELECT line, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df FROM lx GROUP BY 1), kept AS (SELECT doc_id, pos, line FROM lx JOIN dfq USING (line) WHERE df < 3), nl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_lines FROM lx GROUP BY 1), ka AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept, string_agg(line, chr(10) ORDER BY pos) AS clean_text FROM kept GROUP BY 1) SELECT nl.doc_id, n_lines, COALESCE(n_kept, 0) AS n_kept, COALESCE(clean_text, '') AS clean_text FROM nl LEFT JOIN ka USING (doc_id) ORDER BY doc_id""")),
+      """WITH t AS (SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS tk FROM documents), lx AS (SELECT doc_id, k AS pos, array_to_string(tk[k*10+1 : k*10+10], ' ') AS line FROM (SELECT doc_id, tk, unnest(generate_series(0, CAST(floor((len(tk)-1)/10.0) AS INT))) AS k FROM t)), dfq AS (SELECT line, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df FROM lx GROUP BY 1), kept AS (SELECT doc_id, pos, line FROM lx JOIN dfq USING (line) WHERE df < 3), nl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_lines FROM lx GROUP BY 1), ka AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept, string_agg(line, chr(10) ORDER BY pos) AS clean_text FROM kept GROUP BY 1) SELECT nl.doc_id, n_lines, COALESCE(n_kept, 0) AS n_kept, COALESCE(clean_text, '') AS clean_text FROM nl LEFT JOIN ka USING (doc_id) ORDER BY doc_id"""),
 
     // Overlapping token-window chunking (r5): 16-token chunks, 4-token
     // overlap (stride 12) — value-exact per-chunk text recompute
     "llm_chunk" -> Q(
       (s, dir) => LlmOps.chunkDocs(docs(s, dir), chunkTokens = 16,
         overlapTokens = 4).orderBy("doc_id", "chunk_idx"),
-      Some("""WITH t AS (SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS tk FROM documents) SELECT doc_id, CAST(k AS INT) AS chunk_idx, CAST(least(16, len(tk) - k*12) AS BIGINT) AS n_toks, array_to_string(tk[k*12+1 : k*12+16], ' ') AS chunk_text FROM (SELECT doc_id, tk, unnest(generate_series(0, CAST(floor((len(tk)-1)/12.0) AS INT))) AS k FROM t) ORDER BY doc_id, chunk_idx""")),
+      """WITH t AS (SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS tk FROM documents) SELECT doc_id, CAST(k AS INT) AS chunk_idx, CAST(least(16, len(tk) - k*12) AS BIGINT) AS n_toks, array_to_string(tk[k*12+1 : k*12+16], ' ') AS chunk_text FROM (SELECT doc_id, tk, unnest(generate_series(0, CAST(floor((len(tk)-1)/12.0) AS INT))) AS k FROM t) ORDER BY doc_id, chunk_idx"""),
 
     // Sequence packing (r5): concat-then-cut assignment in Knuth-hash
     // order, 500-char sequences per source — integer-exact quotient /
@@ -2806,7 +2825,7 @@ object SparkEntry {
     "llm_pack" -> Q(
       (s, dir) => LlmOps.packSequences(docs(s, dir), 500)
         .orderBy("source", "seq_id", "offset_in_seq", "doc_id"),
-      Some("""WITH c AS (SELECT source, doc_id, n_chars, CAST(SUM(n_chars) OVER (PARTITION BY source ORDER BY (doc_id * 2654435761) % 4294967296, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_chars AS BIGINT) AS so FROM documents) SELECT source, CAST(so // 500 AS BIGINT) AS seq_id, doc_id, CAST(n_chars AS BIGINT) AS w, CAST(so % 500 AS BIGINT) AS offset_in_seq FROM c ORDER BY source, seq_id, offset_in_seq, doc_id""")),
+      """WITH c AS (SELECT source, doc_id, n_chars, CAST(SUM(n_chars) OVER (PARTITION BY source ORDER BY (doc_id * 2654435761) % 4294967296, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_chars AS BIGINT) AS so FROM documents) SELECT source, CAST(so // 500 AS BIGINT) AS seq_id, doc_id, CAST(n_chars AS BIGINT) AS w, CAST(so % 500 AS BIGINT) AS offset_in_seq FROM c ORDER BY source, seq_id, offset_in_seq, doc_id"""),
 
     // Distributed Lloyd k-means (r5): contract row — Lloyd's descent
     // property (5-round WCSS <= 1-round WCSS), full assignment, cell
@@ -2825,7 +2844,7 @@ object SparkEntry {
           .select(col("n_points"), (col("kc") <= 8).as("k_ok"),
             (col("w5") <= col("w1") + 1e-6).as("improved"))
       },
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n_points, true AS k_ok, true AS improved FROM embeddings""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n_points, true AS k_ok, true AS improved FROM embeddings"""),
 
     // Incremental LINE dedup (r5): even-id corpus builds the persisted
     // line index, odd-id batch dedups against it + in-batch
@@ -2840,7 +2859,7 @@ object SparkEntry {
           r.filter(pmod(col("doc_id"), lit(2)) === 1), "graft_line_index")
           .orderBy("doc_id")
       },
-      Some("""WITH t AS (SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS tk FROM documents), lx AS (SELECT doc_id, k AS pos, array_to_string(tk[k*10+1 : k*10+10], ' ') AS line FROM (SELECT doc_id, tk, unnest(generate_series(0, CAST(floor((len(tk)-1)/10.0) AS INT))) AS k FROM t)), corp AS (SELECT DISTINCT line FROM lx WHERE doc_id % 2 = 0), bl AS (SELECT doc_id, pos, line FROM lx WHERE doc_id % 2 = 1), fresh AS (SELECT * FROM bl WHERE line NOT IN (SELECT line FROM corp)), own AS (SELECT line, MIN(doc_id * 1000000 + pos) AS o FROM fresh GROUP BY 1), kept AS (SELECT doc_id, pos, line FROM fresh JOIN own USING (line) WHERE doc_id * 1000000 + pos = o), nl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_lines FROM bl GROUP BY 1), ka AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept, string_agg(line, chr(10) ORDER BY pos) AS clean_text FROM kept GROUP BY 1) SELECT nl.doc_id, n_lines, COALESCE(n_kept, 0) AS n_kept, COALESCE(clean_text, '') AS clean_text FROM nl LEFT JOIN ka USING (doc_id) ORDER BY doc_id""")),
+      """WITH t AS (SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS tk FROM documents), lx AS (SELECT doc_id, k AS pos, array_to_string(tk[k*10+1 : k*10+10], ' ') AS line FROM (SELECT doc_id, tk, unnest(generate_series(0, CAST(floor((len(tk)-1)/10.0) AS INT))) AS k FROM t)), corp AS (SELECT DISTINCT line FROM lx WHERE doc_id % 2 = 0), bl AS (SELECT doc_id, pos, line FROM lx WHERE doc_id % 2 = 1), fresh AS (SELECT * FROM bl WHERE line NOT IN (SELECT line FROM corp)), own AS (SELECT line, MIN(doc_id * 1000000 + pos) AS o FROM fresh GROUP BY 1), kept AS (SELECT doc_id, pos, line FROM fresh JOIN own USING (line) WHERE doc_id * 1000000 + pos = o), nl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_lines FROM bl GROUP BY 1), ka AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept, string_agg(line, chr(10) ORDER BY pos) AS clean_text FROM kept GROUP BY 1) SELECT nl.doc_id, n_lines, COALESCE(n_kept, 0) AS n_kept, COALESCE(clean_text, '') AS clean_text FROM nl LEFT JOIN ka USING (doc_id) ORDER BY doc_id""", IndexBuild),
 
     // Curation pipeline v2 (r5): the NEW line-level stages composed end
     // to end — boilerplate removal → corpus line dedup → normalize →
@@ -2865,7 +2884,7 @@ object SparkEntry {
           .agg(count(lit(1)).as("n_docs"), sum(col("w")).as("sum_chars"))
           .orderBy("source", "seq_id")
       },
-      Some("""WITH t AS (SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS tk FROM documents), lx AS (SELECT doc_id, k AS pos, array_to_string(tk[k*10+1 : k*10+10], ' ') AS line FROM (SELECT doc_id, tk, unnest(generate_series(0, CAST(floor((len(tk)-1)/10.0) AS INT))) AS k FROM t)), dfq AS (SELECT line, COUNT(DISTINCT doc_id) AS df FROM lx GROUP BY 1), k1 AS (SELECT doc_id, pos, line FROM lx JOIN dfq USING (line) WHERE df < 3), own AS (SELECT line, MIN(doc_id * 1000000 + pos) AS o FROM k1 GROUP BY 1), k2 AS (SELECT doc_id, pos, line FROM k1 JOIN own USING (line) WHERE doc_id * 1000000 + pos = o), agg AS (SELECT doc_id, string_agg(line, ' ' ORDER BY pos) AS txt FROM k2 GROUP BY 1), alldocs AS (SELECT d.doc_id, d.source, COALESCE(length(trim(regexp_replace(regexp_replace(nfc_normalize(a.txt), '[\x00-\x1F\x7F]', ' ', 'g'), '\s+', ' ', 'g'))), 0) AS w FROM documents d LEFT JOIN agg a USING (doc_id)), c AS (SELECT source, doc_id, w, CAST(SUM(w) OVER (PARTITION BY source ORDER BY (doc_id * 2654435761) % 4294967296, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - w AS BIGINT) AS so FROM alldocs) SELECT source, CAST(so // 500 AS BIGINT) AS seq_id, CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(w) AS BIGINT) AS sum_chars FROM c GROUP BY 1, 2 ORDER BY 1, 2""")),
+      """WITH t AS (SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS tk FROM documents), lx AS (SELECT doc_id, k AS pos, array_to_string(tk[k*10+1 : k*10+10], ' ') AS line FROM (SELECT doc_id, tk, unnest(generate_series(0, CAST(floor((len(tk)-1)/10.0) AS INT))) AS k FROM t)), dfq AS (SELECT line, COUNT(DISTINCT doc_id) AS df FROM lx GROUP BY 1), k1 AS (SELECT doc_id, pos, line FROM lx JOIN dfq USING (line) WHERE df < 3), own AS (SELECT line, MIN(doc_id * 1000000 + pos) AS o FROM k1 GROUP BY 1), k2 AS (SELECT doc_id, pos, line FROM k1 JOIN own USING (line) WHERE doc_id * 1000000 + pos = o), agg AS (SELECT doc_id, string_agg(line, ' ' ORDER BY pos) AS txt FROM k2 GROUP BY 1), alldocs AS (SELECT d.doc_id, d.source, COALESCE(length(trim(regexp_replace(regexp_replace(nfc_normalize(a.txt), '[\x00-\x1F\x7F]', ' ', 'g'), '\s+', ' ', 'g'))), 0) AS w FROM documents d LEFT JOIN agg a USING (doc_id)), c AS (SELECT source, doc_id, w, CAST(SUM(w) OVER (PARTITION BY source ORDER BY (doc_id * 2654435761) % 4294967296, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - w AS BIGINT) AS so FROM alldocs) SELECT source, CAST(so // 500 AS BIGINT) AS seq_id, CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(w) AS BIGINT) AS sum_chars FROM c GROUP BY 1, 2 ORDER BY 1, 2"""),
 
     // DSIR importance weights (r5): log p_target/p_raw over hashed
     // bigram feature buckets, target = the corpus's en slice. The
@@ -2876,7 +2895,7 @@ object SparkEntry {
         val d = docs(s, dir)
         LlmOps.dsirWeights(d, d.filter(col("lang") === "en")).orderBy("doc_id")
       },
-      Some("""WITH t AS (SELECT doc_id AS id, lang, string_split(lower(text), ' ') AS toks FROM documents WHERE len(string_split(lower(text), ' ')) >= 2), gall AS (SELECT id, lang, concat_ws(' ', toks[i], toks[i+1]) AS gr FROM (SELECT id, lang, toks, unnest(generate_series(1, len(toks)-1)) AS i FROM t)), g AS (SELECT id, lang, (ascii(substr(md5(gr),1,1))*10000 + ascii(substr(md5(gr),2,1))*100 + ascii(substr(md5(gr),3,1))) % 256 AS b FROM gall), tg AS (SELECT b FROM g WHERE lang = 'en'), cr AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS cr FROM g GROUP BY 1), ctx AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS ct FROM tg GROUP BY 1), nr AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nr FROM g), nt AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nt FROM tg), lam AS (SELECT b, CAST(ROUND((LN((COALESCE(ct, 0)+1)/(nt+256)) - LN((cr+1)/(nr+256)))*1000000) AS BIGINT) AS lam_u FROM cr LEFT JOIN ctx USING (b), nr, nt) SELECT id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams, CAST(SUM(lam_u) AS BIGINT) AS log_w_u FROM g JOIN lam USING (b) GROUP BY 1 ORDER BY 1""")),
+      """WITH t AS (SELECT doc_id AS id, lang, string_split(lower(text), ' ') AS toks FROM documents WHERE len(string_split(lower(text), ' ')) >= 2), gall AS (SELECT id, lang, concat_ws(' ', toks[i], toks[i+1]) AS gr FROM (SELECT id, lang, toks, unnest(generate_series(1, len(toks)-1)) AS i FROM t)), g AS (SELECT id, lang, (ascii(substr(md5(gr),1,1))*10000 + ascii(substr(md5(gr),2,1))*100 + ascii(substr(md5(gr),3,1))) % 256 AS b FROM gall), tg AS (SELECT b FROM g WHERE lang = 'en'), cr AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS cr FROM g GROUP BY 1), ctx AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS ct FROM tg GROUP BY 1), nr AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nr FROM g), nt AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nt FROM tg), lam AS (SELECT b, CAST(ROUND((LN((COALESCE(ct, 0)+1)/(nt+256)) - LN((cr+1)/(nr+256)))*1000000) AS BIGINT) AS lam_u FROM cr LEFT JOIN ctx USING (b), nr, nt) SELECT id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams, CAST(SUM(lam_u) AS BIGINT) AS log_w_u FROM g JOIN lam USING (b) GROUP BY 1 ORDER BY 1"""),
 
     // DSIR Gumbel top-k resampling (r6): the paper's sampling step —
     // deterministic hash-seeded Gumbel noise on the integer-micro log
@@ -2888,13 +2907,13 @@ object SparkEntry {
         LlmOps.dsirResample(d, d.filter(col("lang") === "en"), k = 200)
           .orderBy("doc_id")
       },
-      Some("""WITH t AS (SELECT doc_id AS id, lang, string_split(lower(text), ' ') AS toks FROM documents WHERE len(string_split(lower(text), ' ')) >= 2), gall AS (SELECT id, lang, concat_ws(' ', toks[i], toks[i+1]) AS gr FROM (SELECT id, lang, toks, unnest(generate_series(1, len(toks)-1)) AS i FROM t)), g AS (SELECT id, lang, (ascii(substr(md5(gr),1,1))*10000 + ascii(substr(md5(gr),2,1))*100 + ascii(substr(md5(gr),3,1))) % 256 AS b FROM gall), tg AS (SELECT b FROM g WHERE lang = 'en'), cr AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS cr FROM g GROUP BY 1), ctx AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS ct FROM tg GROUP BY 1), nr AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nr FROM g), nt AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nt FROM tg), lam AS (SELECT b, CAST(ROUND((LN((COALESCE(ct, 0)+1)/(nt+256)) - LN((cr+1)/(nr+256)))*1000000) AS BIGINT) AS lam_u FROM cr LEFT JOIN ctx USING (b), nr, nt), w AS (SELECT id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams, CAST(SUM(lam_u) AS BIGINT) AS log_w_u FROM g JOIN lam USING (b) GROUP BY 1), sel AS (SELECT doc_id, n_grams, log_w_u, log_w_u + CAST(ROUND(-LN(-LN((((doc_id * 2654435761) % 4294967296) + 0.5) / 4294967296)) * 1000000) AS BIGINT) AS key_u FROM w ORDER BY key_u DESC, doc_id LIMIT 200) SELECT doc_id, n_grams, log_w_u, key_u FROM sel ORDER BY doc_id""")),
+      """WITH t AS (SELECT doc_id AS id, lang, string_split(lower(text), ' ') AS toks FROM documents WHERE len(string_split(lower(text), ' ')) >= 2), gall AS (SELECT id, lang, concat_ws(' ', toks[i], toks[i+1]) AS gr FROM (SELECT id, lang, toks, unnest(generate_series(1, len(toks)-1)) AS i FROM t)), g AS (SELECT id, lang, (ascii(substr(md5(gr),1,1))*10000 + ascii(substr(md5(gr),2,1))*100 + ascii(substr(md5(gr),3,1))) % 256 AS b FROM gall), tg AS (SELECT b FROM g WHERE lang = 'en'), cr AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS cr FROM g GROUP BY 1), ctx AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS ct FROM tg GROUP BY 1), nr AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nr FROM g), nt AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nt FROM tg), lam AS (SELECT b, CAST(ROUND((LN((COALESCE(ct, 0)+1)/(nt+256)) - LN((cr+1)/(nr+256)))*1000000) AS BIGINT) AS lam_u FROM cr LEFT JOIN ctx USING (b), nr, nt), w AS (SELECT id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams, CAST(SUM(lam_u) AS BIGINT) AS log_w_u FROM g JOIN lam USING (b) GROUP BY 1), sel AS (SELECT doc_id, n_grams, log_w_u, log_w_u + CAST(ROUND(-LN(-LN((((doc_id * 2654435761) % 4294967296) + 0.5) / 4294967296)) * 1000000) AS BIGINT) AS key_u FROM w ORDER BY key_u DESC, doc_id LIMIT 200) SELECT doc_id, n_grams, log_w_u, key_u FROM sel ORDER BY doc_id"""),
 
     // Canonical text normalization (r5): NFC + control-char strip +
     // whitespace collapse + trim — value-exact vs DuckDB nfc_normalize
     "llm_text_normalize" -> Q(
       (s, dir) => LlmOps.textNormalize(docs(s, dir)).orderBy("doc_id"),
-      Some("""SELECT doc_id, trim(regexp_replace(regexp_replace(nfc_normalize(COALESCE(text, '')), '[\x00-\x1F\x7F]', ' ', 'g'), '\s+', ' ', 'g')) AS norm_text, CAST(length(trim(regexp_replace(regexp_replace(nfc_normalize(COALESCE(text, '')), '[\x00-\x1F\x7F]', ' ', 'g'), '\s+', ' ', 'g'))) AS BIGINT) AS n_chars_norm FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, trim(regexp_replace(regexp_replace(nfc_normalize(COALESCE(text, '')), '[\x00-\x1F\x7F]', ' ', 'g'), '\s+', ' ', 'g')) AS norm_text, CAST(length(trim(regexp_replace(regexp_replace(nfc_normalize(COALESCE(text, '')), '[\x00-\x1F\x7F]', ' ', 'g'), '\s+', ' ', 'g'))) AS BIGINT) AS n_chars_norm FROM documents ORDER BY doc_id"""),
 
     // Bloom-filter membership dedup (r5): odd-id batch vs even-id
     // corpus. Contract: no false keeps (bloom FNs are structurally
@@ -2922,14 +2941,14 @@ object SparkEntry {
             (col("n_exact_kept") - col("nb") <=
               ceil(col("n_exact_kept") * 0.05)).as("overdrop_ok"))
       },
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_kept, CAST(0 AS BIGINT) AS n_false_keep, true AS overdrop_ok FROM documents b WHERE b.doc_id % 2 = 1 AND lower(trim(b.text)) NOT IN (SELECT lower(trim(text)) FROM documents WHERE doc_id % 2 = 0)""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_kept, CAST(0 AS BIGINT) AS n_false_keep, true AS overdrop_ok FROM documents b WHERE b.doc_id % 2 = 1 AND lower(trim(b.text)) NOT IN (SELECT lower(trim(text)) FROM documents WHERE doc_id % 2 = 0)"""),
 
     // exact all-pairs variant as the oracle cross-check; the scale
     // default (banded LSH candidates + exact verify) is the rows-only
     // llm_dedup_cosine_lsh below, recall-pinned in LlmOpsSpec
     "llm_dedup_cosine" -> Q(
       (s, dir) => LlmOps.dedupNearCosine(embs(s, dir), 0.3, method = "exact").orderBy("vec_id"),
-      Some("""WITH pairs AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM pairs, generate_series(1, 64) g(x) GROUP BY 1, 2), drops AS (SELECT DISTINCT j FROM dots WHERE dp / (na * nb) >= 0.3) SELECT vec_id, label FROM embeddings WHERE vec_id NOT IN (SELECT j FROM drops) ORDER BY vec_id""")),
+      """WITH pairs AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM pairs, generate_series(1, 64) g(x) GROUP BY 1, 2), drops AS (SELECT DISTINCT j FROM dots WHERE dp / (na * nb) >= 0.3) SELECT vec_id, label FROM embeddings WHERE vec_id NOT IN (SELECT j FROM drops) ORDER BY vec_id"""),
 
     // cosine-LSH dedup contract oracle: missed LSH pairs can only ADD
     // survivors, never remove them, so every exact survivor must be in
@@ -2961,7 +2980,7 @@ object SparkEntry {
           .select(col("n_exact"), col("n_exact_missing"),
             (col("nl") <= ceil(col("n_exact") / 0.95)).as("extra_ok"))
       },
-      Some("""WITH pairs AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM pairs, generate_series(1, 64) g(x) GROUP BY 1, 2), drops AS (SELECT DISTINCT j FROM dots WHERE dp / (na * nb) >= 0.3) SELECT CAST(COUNT(*) AS BIGINT) AS n_exact, CAST(0 AS BIGINT) AS n_exact_missing, true AS extra_ok FROM embeddings WHERE vec_id NOT IN (SELECT j FROM drops)""")),
+      """WITH pairs AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM pairs, generate_series(1, 64) g(x) GROUP BY 1, 2), drops AS (SELECT DISTINCT j FROM dots WHERE dp / (na * nb) >= 0.3) SELECT CAST(COUNT(*) AS BIGINT) AS n_exact, CAST(0 AS BIGINT) AS n_exact_missing, true AS extra_ok FROM embeddings WHERE vec_id NOT IN (SELECT j FROM drops)"""),
 
     // Banded-LSH pair generation as its own bench row (r4 verdict task 3
     // — the 100 TB path for llm_similarity_pairs, bench-visible instead
@@ -2993,7 +3012,7 @@ object SparkEntry {
           .select(col("n_exact"), col("n_false_pos"),
             (col("hit") >= ceil(col("n_exact") * 0.9)).as("recall_ok"))
       },
-      Some("""WITH pairs AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM pairs, generate_series(1, 64) g(x) GROUP BY 1, 2) SELECT CAST(COUNT(*) AS BIGINT) AS n_exact, CAST(0 AS BIGINT) AS n_false_pos, true AS recall_ok FROM dots WHERE dp / (na * nb) >= 0.3""")),
+      """WITH pairs AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM pairs, generate_series(1, 64) g(x) GROUP BY 1, 2) SELECT CAST(COUNT(*) AS BIGINT) AS n_exact, CAST(0 AS BIGINT) AS n_false_pos, true AS recall_ok FROM dots WHERE dp / (na * nb) >= 0.3"""),
 
     // LSH-grouping contract oracle (r4 verdict task 3): cosineGroups'
     // scale path (`method = "lsh"`) as a bench row. LSH pairs are exact-
@@ -3044,7 +3063,7 @@ object SparkEntry {
             (col("n_lsh_keep") <= ceil(col("n_exact_keep") / 0.95)).as("extra_ok"),
             col("n_refine_violations"))
       },
-      Some("""WITH RECURSIVE ps AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id WHERE a.label <= 3), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM ps, generate_series(1, 64) g(x) GROUP BY 1, 2), prs AS (SELECT i, j FROM dots WHERE dp / (na * nb) >= 0.3), edges AS (SELECT i AS a, j AS b FROM prs UNION SELECT j, i FROM prs), reach(a, b) AS (SELECT a, b FROM edges UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a), grp AS (SELECT a AS node, LEAST(a, MIN(b)) AS group_id FROM reach GROUP BY a), allg AS (SELECT e.vec_id, COALESCE(g.group_id, e.vec_id) AS group_id FROM embeddings e LEFT JOIN grp g ON e.vec_id = g.node WHERE e.label <= 3) SELECT CAST(SUM(CASE WHEN vec_id = group_id THEN 1 ELSE 0 END) AS BIGINT) AS n_exact_keep, CAST(0 AS BIGINT) AS n_keep_missing, true AS extra_ok, CAST(0 AS BIGINT) AS n_refine_violations FROM allg""")),
+      """WITH RECURSIVE ps AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id WHERE a.label <= 3), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM ps, generate_series(1, 64) g(x) GROUP BY 1, 2), prs AS (SELECT i, j FROM dots WHERE dp / (na * nb) >= 0.3), edges AS (SELECT i AS a, j AS b FROM prs UNION SELECT j, i FROM prs), reach(a, b) AS (SELECT a, b FROM edges UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a), grp AS (SELECT a AS node, LEAST(a, MIN(b)) AS group_id FROM reach GROUP BY a), allg AS (SELECT e.vec_id, COALESCE(g.group_id, e.vec_id) AS group_id FROM embeddings e LEFT JOIN grp g ON e.vec_id = g.node WHERE e.label <= 3) SELECT CAST(SUM(CASE WHEN vec_id = group_id THEN 1 ELSE 0 END) AS BIGINT) AS n_exact_keep, CAST(0 AS BIGINT) AS n_keep_missing, true AS extra_ok, CAST(0 AS BIGINT) AS n_refine_violations FROM allg"""),
 
     // SemDeDup-style semantic dedup (r5): k-means-cell the embedding
     // space, dedup only WITHIN cells (LlmOps.semDedup — the published
@@ -3093,7 +3112,7 @@ object SparkEntry {
               (col("n_total") - col("n_sem")) >=
                 ceil((col("n_total") - col("n_exact")) * 0.4)).as("drop_ok"))
       },
-      Some("""WITH pairs AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM pairs, generate_series(1, 64) g(x) GROUP BY 1, 2), drops AS (SELECT DISTINCT j FROM dots WHERE dp / (na * nb) >= 0.3) SELECT CAST(COUNT(*) AS BIGINT) AS n_exact, CAST(0 AS BIGINT) AS n_exact_missing, true AS drop_ok FROM embeddings WHERE vec_id NOT IN (SELECT j FROM drops)""")),
+      """WITH pairs AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM pairs, generate_series(1, 64) g(x) GROUP BY 1, 2), drops AS (SELECT DISTINCT j FROM dots WHERE dp / (na * nb) >= 0.3) SELECT CAST(COUNT(*) AS BIGINT) AS n_exact, CAST(0 AS BIGINT) AS n_exact_missing, true AS drop_ok FROM embeddings WHERE vec_id NOT IN (SELECT j FROM drops)"""),
 
     // Incremental near-dup dedup (r5): the daily-increment shape of a
     // 100 TB pipeline — corpus minhash signatures persisted ONCE as a
@@ -3135,7 +3154,7 @@ object SparkEntry {
           .select(col("n_new"), col("n_exact_kept"), col("n_kept_missing"),
             (col("nk") <= ceil(col("n_exact_kept") / 0.85)).as("extra_ok"))
       },
-      Some("""WITH d4 AS (SELECT doc_id, text FROM documents WHERE source IN ('src0', 'src1')), cutv AS (SELECT MIN(doc_id) + (MAX(doc_id) - MIN(doc_id)) // 2 AS cut FROM d4), toks AS (SELECT DISTINCT doc_id AS id, unnest(string_split(lower(text), ' ')) AS tok FROM d4), sizes AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY 1), inter AS (SELECT a.id AS i, b.id AS j, CAST(COUNT(*) AS BIGINT) AS c FROM toks a JOIN toks b ON a.tok = b.tok AND a.id < b.id GROUP BY 1, 2), prs AS (SELECT i, j FROM inter JOIN sizes sa ON i = sa.id JOIN sizes sb ON j = sb.id WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8), batch AS (SELECT doc_id FROM d4, cutv WHERE doc_id >= cut), dropped AS (SELECT DISTINCT j AS doc_id FROM prs, cutv WHERE j >= cut) SELECT CAST((SELECT COUNT(*) FROM batch) AS BIGINT) AS n_new, CAST((SELECT COUNT(*) FROM batch WHERE doc_id NOT IN (SELECT doc_id FROM dropped)) AS BIGINT) AS n_exact_kept, CAST(0 AS BIGINT) AS n_kept_missing, true AS extra_ok""")),
+      """WITH d4 AS (SELECT doc_id, text FROM documents WHERE source IN ('src0', 'src1')), cutv AS (SELECT MIN(doc_id) + (MAX(doc_id) - MIN(doc_id)) // 2 AS cut FROM d4), toks AS (SELECT DISTINCT doc_id AS id, unnest(string_split(lower(text), ' ')) AS tok FROM d4), sizes AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY 1), inter AS (SELECT a.id AS i, b.id AS j, CAST(COUNT(*) AS BIGINT) AS c FROM toks a JOIN toks b ON a.tok = b.tok AND a.id < b.id GROUP BY 1, 2), prs AS (SELECT i, j FROM inter JOIN sizes sa ON i = sa.id JOIN sizes sb ON j = sb.id WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8), batch AS (SELECT doc_id FROM d4, cutv WHERE doc_id >= cut), dropped AS (SELECT DISTINCT j AS doc_id FROM prs, cutv WHERE j >= cut) SELECT CAST((SELECT COUNT(*) FROM batch) AS BIGINT) AS n_new, CAST((SELECT COUNT(*) FROM batch WHERE doc_id NOT IN (SELECT doc_id FROM dropped)) AS BIGINT) AS n_exact_kept, CAST(0 AS BIGINT) AS n_kept_missing, true AS extra_ok""", IndexBuild),
 
     // ===== fixture-audit artifact builders (r11 verdict task 2) =====
     // The exact-reference sides of the scale-path contract rows are
@@ -3155,7 +3174,7 @@ object SparkEntry {
           s.table("graft_audit_cos_incr_should").count()))
           .toDF("n_drops_all", "n_cls", "n_should")
       },
-      Some("""WITH ps AS (SELECT a.vec_id AS i, b.vec_id AS j, a.label AS la, b.label AS lb, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id), dots AS (SELECT i, j, la, lb, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM ps, generate_series(1, 64) g(x) GROUP BY 1, 2, 3, 4), pr AS (SELECT i, j, la, lb FROM dots WHERE dp / (na * nb) >= 0.3), pr3 AS (SELECT i, j FROM pr WHERE la <= 3 AND lb <= 3), cls AS (SELECT DISTINCT x FROM (SELECT i AS x FROM pr3 WHERE i % 2 = 1 UNION ALL SELECT j AS x FROM pr3 WHERE j % 2 = 1)), sd AS (SELECT DISTINCT x FROM (SELECT j AS x FROM pr3 WHERE j % 2 = 1 UNION ALL SELECT i AS x FROM pr3 WHERE i % 2 = 1 AND j % 2 = 0)) SELECT CAST(COALESCE((SELECT COUNT(DISTINCT j) FROM pr), 0) AS BIGINT) AS n_drops_all, CAST(COALESCE((SELECT COUNT(*) FROM cls), 0) AS BIGINT) AS n_cls, CAST(COALESCE((SELECT COUNT(*) FROM sd), 0) AS BIGINT) AS n_should""")),
+      """WITH ps AS (SELECT a.vec_id AS i, b.vec_id AS j, a.label AS la, b.label AS lb, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id), dots AS (SELECT i, j, la, lb, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM ps, generate_series(1, 64) g(x) GROUP BY 1, 2, 3, 4), pr AS (SELECT i, j, la, lb FROM dots WHERE dp / (na * nb) >= 0.3), pr3 AS (SELECT i, j FROM pr WHERE la <= 3 AND lb <= 3), cls AS (SELECT DISTINCT x FROM (SELECT i AS x FROM pr3 WHERE i % 2 = 1 UNION ALL SELECT j AS x FROM pr3 WHERE j % 2 = 1)), sd AS (SELECT DISTINCT x FROM (SELECT j AS x FROM pr3 WHERE j % 2 = 1 UNION ALL SELECT i AS x FROM pr3 WHERE i % 2 = 1 AND j % 2 = 0)) SELECT CAST(COALESCE((SELECT COUNT(DISTINCT j) FROM pr), 0) AS BIGINT) AS n_drops_all, CAST(COALESCE((SELECT COUNT(*) FROM cls), 0) AS BIGINT) AS n_cls, CAST(COALESCE((SELECT COUNT(*) FROM sd), 0) AS BIGINT) AS n_should""", IndexBuild),
 
     "llm_audit_cos_blocked" -> Q(
       (s, dir) => {
@@ -3166,7 +3185,7 @@ object SparkEntry {
           s.table("graft_audit_cos_groups").filter(col("keep")).count()))
           .toDF("n_pairs", "n_drops", "n_keep")
       },
-      Some("""WITH RECURSIVE ps AS (SELECT a.label AS blk, a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id), dots AS (SELECT blk, i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM ps, generate_series(1, 64) g(x) GROUP BY 1, 2, 3), prs AS (SELECT blk, i, j FROM dots WHERE dp / (na * nb) >= 0.3), p3 AS (SELECT i, j FROM prs WHERE blk <= 3), edges AS (SELECT i AS a, j AS b FROM p3 UNION SELECT j, i FROM p3), reach(a, b) AS (SELECT a, b FROM edges UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a), grp AS (SELECT a AS node, LEAST(a, MIN(b)) AS group_id FROM reach GROUP BY a), allg AS (SELECT e.vec_id, COALESCE(g.group_id, e.vec_id) AS group_id FROM embeddings e LEFT JOIN grp g ON e.vec_id = g.node WHERE e.label <= 3) SELECT CAST(COALESCE((SELECT COUNT(*) FROM prs), 0) AS BIGINT) AS n_pairs, CAST(COALESCE((SELECT COUNT(DISTINCT j) FROM prs), 0) AS BIGINT) AS n_drops, CAST(COALESCE((SELECT SUM(CASE WHEN vec_id = group_id THEN 1 ELSE 0 END) FROM allg), 0) AS BIGINT) AS n_keep""")),
+      """WITH RECURSIVE ps AS (SELECT a.label AS blk, a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id), dots AS (SELECT blk, i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM ps, generate_series(1, 64) g(x) GROUP BY 1, 2, 3), prs AS (SELECT blk, i, j FROM dots WHERE dp / (na * nb) >= 0.3), p3 AS (SELECT i, j FROM prs WHERE blk <= 3), edges AS (SELECT i AS a, j AS b FROM p3 UNION SELECT j, i FROM p3), reach(a, b) AS (SELECT a, b FROM edges UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a), grp AS (SELECT a AS node, LEAST(a, MIN(b)) AS group_id FROM reach GROUP BY a), allg AS (SELECT e.vec_id, COALESCE(g.group_id, e.vec_id) AS group_id FROM embeddings e LEFT JOIN grp g ON e.vec_id = g.node WHERE e.label <= 3) SELECT CAST(COALESCE((SELECT COUNT(*) FROM prs), 0) AS BIGINT) AS n_pairs, CAST(COALESCE((SELECT COUNT(DISTINCT j) FROM prs), 0) AS BIGINT) AS n_drops, CAST(COALESCE((SELECT SUM(CASE WHEN vec_id = group_id THEN 1 ELSE 0 END) FROM allg), 0) AS BIGINT) AS n_keep""", IndexBuild),
 
     "llm_audit_jaccard_blocks" -> Q(
       (s, dir) => {
@@ -3174,7 +3193,7 @@ object SparkEntry {
         buildJaccardBlocksAudit(s, dir)
         Seq(s.table("graft_audit_mh_pairs").count()).toDF("n_pairs")
       },
-      Some("""WITH toks AS (SELECT DISTINCT source, doc_id AS id, unnest(string_split(lower(text), ' ')) AS tok FROM documents WHERE source IN ('src0', 'src1', 'src2', 'src3')), sizes AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY 1), inter AS (SELECT a.id AS i, b.id AS j, CAST(COUNT(*) AS BIGINT) AS c FROM toks a JOIN toks b ON a.source = b.source AND a.tok = b.tok AND a.id < b.id GROUP BY 1, 2), ex AS (SELECT i, j FROM inter JOIN sizes sa ON i = sa.id JOIN sizes sb ON j = sb.id WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8) SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs FROM ex""")),
+      """WITH toks AS (SELECT DISTINCT source, doc_id AS id, unnest(string_split(lower(text), ' ')) AS tok FROM documents WHERE source IN ('src0', 'src1', 'src2', 'src3')), sizes AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY 1), inter AS (SELECT a.id AS i, b.id AS j, CAST(COUNT(*) AS BIGINT) AS c FROM toks a JOIN toks b ON a.source = b.source AND a.tok = b.tok AND a.id < b.id GROUP BY 1, 2), ex AS (SELECT i, j FROM inter JOIN sizes sa ON i = sa.id JOIN sizes sb ON j = sb.id WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8) SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs FROM ex""", IndexBuild),
 
     "llm_audit_jaccard_incr" -> Q(
       (s, dir) => {
@@ -3182,7 +3201,7 @@ object SparkEntry {
         buildJaccardIncrAudit(s, dir)
         Seq(s.table("graft_audit_mh_drops").count()).toDF("n_drops")
       },
-      Some("""WITH d4 AS (SELECT doc_id, text FROM documents WHERE source IN ('src0', 'src1')), cutv AS (SELECT MIN(doc_id) + (MAX(doc_id) - MIN(doc_id)) // 2 AS cut FROM d4), toks AS (SELECT DISTINCT doc_id AS id, unnest(string_split(lower(text), ' ')) AS tok FROM d4), sizes AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY 1), inter AS (SELECT a.id AS i, b.id AS j, CAST(COUNT(*) AS BIGINT) AS c FROM toks a JOIN toks b ON a.tok = b.tok AND a.id < b.id GROUP BY 1, 2), prs AS (SELECT i, j FROM inter JOIN sizes sa ON i = sa.id JOIN sizes sb ON j = sb.id WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8), dropped AS (SELECT DISTINCT j AS doc_id FROM prs, cutv WHERE j >= cut) SELECT CAST(COUNT(*) AS BIGINT) AS n_drops FROM dropped""")),
+      """WITH d4 AS (SELECT doc_id, text FROM documents WHERE source IN ('src0', 'src1')), cutv AS (SELECT MIN(doc_id) + (MAX(doc_id) - MIN(doc_id)) // 2 AS cut FROM d4), toks AS (SELECT DISTINCT doc_id AS id, unnest(string_split(lower(text), ' ')) AS tok FROM d4), sizes AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY 1), inter AS (SELECT a.id AS i, b.id AS j, CAST(COUNT(*) AS BIGINT) AS c FROM toks a JOIN toks b ON a.tok = b.tok AND a.id < b.id GROUP BY 1, 2), prs AS (SELECT i, j FROM inter JOIN sizes sa ON i = sa.id JOIN sizes sb ON j = sb.id WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8), dropped AS (SELECT DISTINCT j AS doc_id FROM prs, cutv WHERE j >= cut) SELECT CAST(COUNT(*) AS BIGINT) AS n_drops FROM dropped""", IndexBuild),
 
     // The planted image corpus write as its own index-build row: image
     // payloads are at-rest storage, and this row re-pays the plant
@@ -3195,7 +3214,7 @@ object SparkEntry {
         buildImagePlant(s, dir)
         Seq(s.table("graft_img_plant").count()).toDF("n_docs")
       },
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents""", IndexBuild),
 
     // Bucketed at-rest layout wired into a declared query (r4 verdict
     // task 5): both join sides written bucketed + sorted on the join key
@@ -3208,7 +3227,7 @@ object SparkEntry {
     // The oracle is layout-independent: same join over the raw parquet.
     "tmp_bucketed_join" -> Q(
       (s, dir) => bucketedJoinQuery(s, dir),
-      Some("""SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_orders, CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS rev FROM customer JOIN orders ON c_custkey = o_custkey GROUP BY 1 ORDER BY 1""")),
+      """SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_orders, CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS rev FROM customer JOIN orders ON c_custkey = o_custkey GROUP BY 1 ORDER BY 1""", IndexBuild),
 
     // Streaming surface oracled one notch beyond unit tests (r4 verdict
     // task 7): the SAME KQL text planned onto a MemoryStream (micro-
@@ -3220,7 +3239,7 @@ object SparkEntry {
     // keeps the aggregate bit-exact across engines.
     "tmp_stream_parity" -> Q(
       (s, dir) => streamParityQuery(s, dir),
-      Some("""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS s FROM events WHERE event_id <= 2000 GROUP BY 1 ORDER BY 1""")),
+      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS s FROM events WHERE event_id <= 2000 GROUP BY 1 ORDER BY 1""", StreamingHarness),
 
     // STATEFUL streaming parity (r6): two micro-batches through the
     // incremental line-dedup runner — batch 2 must drop lines batch 1
@@ -3230,7 +3249,7 @@ object SparkEntry {
     // from its kept lines, then replays increment 2 against it.
     "tmp_stream_line_dedup" -> Q(
       (s, dir) => streamLineDedupQuery(s, dir),
-      Some("""WITH t AS (SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS tk FROM documents WHERE doc_id < 40), lx AS (SELECT doc_id, k AS pos, array_to_string(tk[k*10+1 : k*10+10], ' ') AS line FROM (SELECT doc_id, tk, unnest(generate_series(0, CAST(floor((len(tk)-1)/10.0) AS INT))) AS k FROM t)), b1 AS (SELECT * FROM lx WHERE doc_id < 20), own1 AS (SELECT line, MIN(doc_id * 1000000 + pos) AS o FROM b1 GROUP BY 1), k1 AS (SELECT doc_id, pos, line FROM b1 JOIN own1 USING (line) WHERE doc_id * 1000000 + pos = o), idx1 AS (SELECT DISTINCT line FROM k1), b2 AS (SELECT * FROM lx WHERE doc_id >= 20), f2 AS (SELECT * FROM b2 WHERE line NOT IN (SELECT line FROM idx1)), own2 AS (SELECT line, MIN(doc_id * 1000000 + pos) AS o FROM f2 GROUP BY 1), k2 AS (SELECT doc_id, pos, line FROM f2 JOIN own2 USING (line) WHERE doc_id * 1000000 + pos = o), kept AS (SELECT * FROM k1 UNION ALL SELECT * FROM k2), nl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_lines FROM lx GROUP BY 1), ka AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept, string_agg(line, chr(10) ORDER BY pos) AS clean_text FROM kept GROUP BY 1) SELECT nl.doc_id, n_lines, COALESCE(n_kept, 0) AS n_kept, COALESCE(clean_text, '') AS clean_text, CAST(CASE WHEN nl.doc_id < 20 THEN 0 ELSE 1 END AS BIGINT) AS batch_id FROM nl LEFT JOIN ka USING (doc_id) ORDER BY doc_id""")),
+      """WITH t AS (SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS tk FROM documents WHERE doc_id < 40), lx AS (SELECT doc_id, k AS pos, array_to_string(tk[k*10+1 : k*10+10], ' ') AS line FROM (SELECT doc_id, tk, unnest(generate_series(0, CAST(floor((len(tk)-1)/10.0) AS INT))) AS k FROM t)), b1 AS (SELECT * FROM lx WHERE doc_id < 20), own1 AS (SELECT line, MIN(doc_id * 1000000 + pos) AS o FROM b1 GROUP BY 1), k1 AS (SELECT doc_id, pos, line FROM b1 JOIN own1 USING (line) WHERE doc_id * 1000000 + pos = o), idx1 AS (SELECT DISTINCT line FROM k1), b2 AS (SELECT * FROM lx WHERE doc_id >= 20), f2 AS (SELECT * FROM b2 WHERE line NOT IN (SELECT line FROM idx1)), own2 AS (SELECT line, MIN(doc_id * 1000000 + pos) AS o FROM f2 GROUP BY 1), k2 AS (SELECT doc_id, pos, line FROM f2 JOIN own2 USING (line) WHERE doc_id * 1000000 + pos = o), kept AS (SELECT * FROM k1 UNION ALL SELECT * FROM k2), nl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_lines FROM lx GROUP BY 1), ka AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept, string_agg(line, chr(10) ORDER BY pos) AS clean_text FROM kept GROUP BY 1) SELECT nl.doc_id, n_lines, COALESCE(n_kept, 0) AS n_kept, COALESCE(clean_text, '') AS clean_text, CAST(CASE WHEN nl.doc_id < 20 THEN 0 ELSE 1 END AS BIGINT) AS batch_id FROM nl LEFT JOIN ka USING (doc_id) ORDER BY doc_id""", StreamingHarness),
 
     // Materialized-view streaming parity (r7): continuous hourly
     // aggregation in UPDATE mode over two micro-batches; final view
@@ -3240,7 +3259,7 @@ object SparkEntry {
     // n_batches for every key; the fixture split yields 140 ones).
     "tmp_stream_matview" -> Q(
       (s, dir) => streamMatViewQuery(s, dir),
-      Some("""WITH e AS (SELECT epoch_us(ts) // 3600000000 AS bin_h, CAST(ROUND(value * 100) AS BIGINT) AS c, event_id FROM events WHERE event_id <= 2000) SELECT bin_h, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(c) AS BIGINT) AS s, CAST(COUNT(DISTINCT CASE WHEN event_id < 1000 THEN 0 ELSE 1 END) AS BIGINT) AS n_updates FROM e GROUP BY 1 ORDER BY 1""")),
+      """WITH e AS (SELECT epoch_us(ts) // 3600000000 AS bin_h, CAST(ROUND(value * 100) AS BIGINT) AS c, event_id FROM events WHERE event_id <= 2000) SELECT bin_h, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(c) AS BIGINT) AS s, CAST(COUNT(DISTINCT CASE WHEN event_id < 1000 THEN 0 ELSE 1 END) AS BIGINT) AS n_updates FROM e GROUP BY 1 ORDER BY 1""", StreamingHarness),
 
     // At-rest matview maintained BY a stream (r12): per batch, append
     // to the live source + fold the delta into the partial-state store
@@ -3249,7 +3268,7 @@ object SparkEntry {
     // streamMatViewRefreshQuery's scaladoc for what mismatches
     "tmp_stream_matview_refresh" -> Q(
       (s, dir) => streamMatViewRefreshQuery(s, dir),
-      Some("""WITH e AS (SELECT event_id, epoch_us(ts) // 3600000000 AS bin_h, CAST(ROUND(value * 100) AS BIGINT) AS c, event_type FROM events WHERE event_id <= 2000) SELECT bin_h, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(c) AS BIGINT) AS s, CAST(SUM(c) AS DOUBLE) / COUNT(*) AS avg_c, CAST(COUNT(DISTINCT event_type) AS BIGINT) AS d_types, ARG_MAX(event_type, event_id) AS latest_type FROM e GROUP BY 1 ORDER BY 1""")),
+      """WITH e AS (SELECT event_id, epoch_us(ts) // 3600000000 AS bin_h, CAST(ROUND(value * 100) AS BIGINT) AS c, event_type FROM events WHERE event_id <= 2000) SELECT bin_h, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(c) AS BIGINT) AS s, CAST(SUM(c) AS DOUBLE) / COUNT(*) AS avg_c, CAST(COUNT(DISTINCT event_type) AS BIGINT) AS d_types, ARG_MAX(event_type, event_id) AS latest_type FROM e GROUP BY 1 ORDER BY 1""", StreamingHarness),
 
     // Watermark/late-data parity (r7): the update-mode view with a
     // 3700 s watermark must DROP the batch-2 straggler that replays
@@ -3260,7 +3279,7 @@ object SparkEntry {
     // carries n_updates = 2.
     "tmp_stream_matview_late" -> Q(
       (s, dir) => streamMatViewLateQuery(s, dir),
-      Some("""WITH e AS (SELECT epoch_us(ts) // 3600000000 AS bin_h, CAST(ROUND(value * 100) AS BIGINT) AS c, CASE WHEN event_id <= 1000 THEN 0 ELSE 1 END AS b FROM events WHERE event_id <= 2000) SELECT bin_h, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(c) AS BIGINT) AS s, CAST(COUNT(DISTINCT b) AS BIGINT) AS n_updates FROM e GROUP BY 1 ORDER BY 1""")),
+      """WITH e AS (SELECT epoch_us(ts) // 3600000000 AS bin_h, CAST(ROUND(value * 100) AS BIGINT) AS c, CASE WHEN event_id <= 1000 THEN 0 ELSE 1 END AS b FROM events WHERE event_id <= 2000) SELECT bin_h, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(c) AS BIGINT) AS s, CAST(COUNT(DISTINCT b) AS BIGINT) AS n_updates FROM e GROUP BY 1 ORDER BY 1""", StreamingHarness),
 
     // STATEFUL streaming parity in EMBEDDING space (r6): two
     // micro-batches of odd-id vectors against an even-id seed cosine
@@ -3275,11 +3294,11 @@ object SparkEntry {
     // over the same anchors, so the plain all-pairs SQL replays it
     "tmp_stream_hard_negatives" -> Q(
       (s, dir) => streamHardNegativesQuery(s, dir),
-      Some("""WITH a AS (SELECT vec_id AS anchor_id, label AS al, embedding AS av FROM embeddings WHERE vec_id % 100 = 0), d AS (SELECT a.anchor_id, e.vec_id, SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(a.av[g.i] AS DOUBLE)) AS dp, SQRT(SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(e.embedding[g.i] AS DOUBLE))) AS ne, SQRT(SUM(CAST(a.av[g.i] AS DOUBLE) * CAST(a.av[g.i] AS DOUBLE))) AS na FROM embeddings e JOIN a ON e.label != a.al, generate_series(1, 64) g(i) GROUP BY 1, 2), q AS (SELECT anchor_id, vec_id, CAST(ROUND(dp / (ne * na) * 10000) AS BIGINT) AS cos_u FROM d), r AS (SELECT anchor_id, vec_id, cos_u, ROW_NUMBER() OVER (PARTITION BY anchor_id ORDER BY cos_u DESC, vec_id) AS "rank" FROM q WHERE cos_u <= 9000) SELECT anchor_id, CAST("rank" AS BIGINT) AS "rank", vec_id AS neg_id, cos_u FROM r WHERE "rank" <= 5 ORDER BY anchor_id, "rank" """)),
+      """WITH a AS (SELECT vec_id AS anchor_id, label AS al, embedding AS av FROM embeddings WHERE vec_id % 100 = 0), d AS (SELECT a.anchor_id, e.vec_id, SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(a.av[g.i] AS DOUBLE)) AS dp, SQRT(SUM(CAST(e.embedding[g.i] AS DOUBLE) * CAST(e.embedding[g.i] AS DOUBLE))) AS ne, SQRT(SUM(CAST(a.av[g.i] AS DOUBLE) * CAST(a.av[g.i] AS DOUBLE))) AS na FROM embeddings e JOIN a ON e.label != a.al, generate_series(1, 64) g(i) GROUP BY 1, 2), q AS (SELECT anchor_id, vec_id, CAST(ROUND(dp / (ne * na) * 10000) AS BIGINT) AS cos_u FROM d), r AS (SELECT anchor_id, vec_id, cos_u, ROW_NUMBER() OVER (PARTITION BY anchor_id ORDER BY cos_u DESC, vec_id) AS "rank" FROM q WHERE cos_u <= 9000) SELECT anchor_id, CAST("rank" AS BIGINT) AS "rank", vec_id AS neg_id, cos_u FROM r WHERE "rank" <= 5 ORDER BY anchor_id, "rank" """, StreamingHarness),
 
     "tmp_stream_cosine_dedup" -> Q(
       (s, dir) => streamCosineDedupQuery(s, dir),
-      Some("""WITH base AS (SELECT vec_id, embedding FROM embeddings WHERE label <= 3), ps AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM base a JOIN base b ON a.vec_id < b.vec_id), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM ps, generate_series(1, 64) g(x) GROUP BY 1, 2), pr AS (SELECT i, j FROM dots WHERE dp / (na * nb) >= 0.3), und AS (SELECT i AS x, j AS y FROM pr UNION ALL SELECT j AS x, i AS y FROM pr), sd AS (SELECT DISTINCT x FROM und WHERE x % 2 = 1 AND y % 2 = 0) SELECT CAST((SELECT COUNT(*) FROM sd) AS BIGINT) AS n_should_seed, CAST(0 AS BIGINT) AS n_false_drops, true AS recall_seed_ok, true AS cross_state_drop, CAST(2 AS BIGINT) AS n_batches""")),
+      """WITH base AS (SELECT vec_id, embedding FROM embeddings WHERE label <= 3), ps AS (SELECT a.vec_id AS i, b.vec_id AS j, a.embedding AS va, b.embedding AS vb FROM base a JOIN base b ON a.vec_id < b.vec_id), dots AS (SELECT i, j, SUM(CAST(va[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE)) AS dp, SQRT(SUM(CAST(va[g.x] AS DOUBLE) * CAST(va[g.x] AS DOUBLE))) AS na, SQRT(SUM(CAST(vb[g.x] AS DOUBLE) * CAST(vb[g.x] AS DOUBLE))) AS nb FROM ps, generate_series(1, 64) g(x) GROUP BY 1, 2), pr AS (SELECT i, j FROM dots WHERE dp / (na * nb) >= 0.3), und AS (SELECT i AS x, j AS y FROM pr UNION ALL SELECT j AS x, i AS y FROM pr), sd AS (SELECT DISTINCT x FROM und WHERE x % 2 = 1 AND y % 2 = 0) SELECT CAST((SELECT COUNT(*) FROM sd) AS BIGINT) AS n_should_seed, CAST(0 AS BIGINT) AS n_false_drops, true AS recall_seed_ok, true AS cross_state_drop, CAST(2 AS BIGINT) AS n_batches""", StreamingHarness),
 
     // STREAM-STREAM join parity (r8): two unbounded sides (clicks,
     // purchases) with 3700 s watermarks, purchases matched to
@@ -3293,7 +3312,7 @@ object SparkEntry {
     // boundary (spec-pinned).
     "tmp_stream_join" -> Q(
       (s, dir) => streamStreamJoinQuery(s, dir),
-      Some("""SELECT c.event_id AS click_id, p.event_id AS purchase_id, c.user_id, epoch_us(p.ts) - epoch_us(c.ts) AS dt_us FROM events c JOIN events p ON c.user_id = p.user_id AND c.event_type = 'click' AND p.event_type = 'purchase' AND c.event_id <= 2000 AND p.event_id <= 2000 AND epoch_us(p.ts) - epoch_us(c.ts) BETWEEN 0 AND 3600000000 ORDER BY click_id, purchase_id""")),
+      """SELECT c.event_id AS click_id, p.event_id AS purchase_id, c.user_id, epoch_us(p.ts) - epoch_us(c.ts) AS dt_us FROM events c JOIN events p ON c.user_id = p.user_id AND c.event_type = 'click' AND p.event_type = 'purchase' AND c.event_id <= 2000 AND p.event_id <= 2000 AND epoch_us(p.ts) - epoch_us(c.ts) BETWEEN 0 AND 3600000000 ORDER BY click_id, purchase_id""", StreamingHarness),
 
     // ------------------------------------------------- batch 2: joins etc.
     "q43_join_rightouter" -> Q(kqlQ(
@@ -3302,7 +3321,7 @@ object SparkEntry {
         | join kind=rightouter (customer) on $left.o_custkey == $right.c_custkey
         | summarize n_p_orders=countif(isnotnull(o_orderkey)) by c_nationkey
         | sort by c_nationkey asc"""),
-      Some("""SELECT c_nationkey, CAST(COUNT(CASE WHEN o_orderkey IS NOT NULL THEN 1 END) AS BIGINT) AS n_p_orders FROM (SELECT * FROM orders WHERE o_orderstatus = 'P') o RIGHT JOIN customer ON o_custkey = c_custkey GROUP BY 1 ORDER BY 1""")),
+      """SELECT c_nationkey, CAST(COUNT(CASE WHEN o_orderkey IS NOT NULL THEN 1 END) AS BIGINT) AS n_p_orders FROM (SELECT * FROM orders WHERE o_orderstatus = 'P') o RIGHT JOIN customer ON o_custkey = c_custkey GROUP BY 1 ORDER BY 1"""),
 
     "q44_join_fullouter" -> Q(kqlQ(
       """customer
@@ -3311,7 +3330,7 @@ object SparkEntry {
             on $left.c_custkey == $right.o_custkey
         | project k = coalesce(c_custkey, o_custkey), n = coalesce(n, 0)
         | sort by k asc"""),
-      Some("""SELECT COALESCE(c_custkey, o_custkey) AS k, COALESCE(n, 0) AS n FROM (SELECT * FROM customer WHERE c_custkey <= 100) c FULL JOIN (SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n FROM orders WHERE o_custkey >= 50 GROUP BY 1) o ON c_custkey = o_custkey ORDER BY k""")),
+      """SELECT COALESCE(c_custkey, o_custkey) AS k, COALESCE(n, 0) AS n FROM (SELECT * FROM customer WHERE c_custkey <= 100) c FULL JOIN (SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n FROM orders WHERE o_custkey >= 50 GROUP BY 1) o ON c_custkey = o_custkey ORDER BY k"""),
 
     "q45_join_rightsemi" -> Q(kqlQ(
       """orders
@@ -3319,14 +3338,14 @@ object SparkEntry {
         | join kind=rightsemi (customer) on $left.o_custkey == $right.c_custkey
         | summarize n=count() by c_mktsegment
         | sort by c_mktsegment asc"""),
-      Some("""SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n FROM customer WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 200000) GROUP BY 1 ORDER BY 1""")),
+      """SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n FROM customer WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 200000) GROUP BY 1 ORDER BY 1"""),
 
     "q46_join_cross" -> Q(kqlQ(
       """region
         | join kind=cross (datatable(x:long) [1, 2])
         | summarize n=count() by x
         | sort by x asc"""),
-      Some("""SELECT x, CAST(COUNT(*) AS BIGINT) AS n FROM region CROSS JOIN (VALUES (CAST(1 AS BIGINT)), (2)) t(x) GROUP BY 1 ORDER BY 1""")),
+      """SELECT x, CAST(COUNT(*) AS BIGINT) AS n FROM region CROSS JOIN (VALUES (CAST(1 AS BIGINT)), (2)) t(x) GROUP BY 1 ORDER BY 1"""),
 
     "q47_broadcast_hint" -> Q(kqlQ(
       """lineitem
@@ -3334,20 +3353,20 @@ object SparkEntry {
             on $left.l_partkey == $right.p_partkey
         | summarize n=count() by p_type
         | sort by p_type asc"""),
-      Some("""SELECT p_type, CAST(COUNT(*) AS BIGINT) AS n FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY 1 ORDER BY 1""")),
+      """SELECT p_type, CAST(COUNT(*) AS BIGINT) AS n FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY 1 ORDER BY 1"""),
 
     "q48_union_inner" -> Q(kqlQ(
       """union kind=inner (orders | project k=o_custkey, amt=o_totalprice),
               (customer | project k=c_custkey, amt=c_acctbal, extra=c_nationkey)
         | summarize n=count(), sc=sum(tolong(round(amt * 100)))"""),
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(amt * 100) AS BIGINT)) AS BIGINT) AS sc FROM (SELECT o_custkey AS k, o_totalprice AS amt FROM orders UNION ALL SELECT c_custkey, c_acctbal FROM customer)""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(amt * 100) AS BIGINT)) AS BIGINT) AS sc FROM (SELECT o_custkey AS k, o_totalprice AS amt FROM orders UNION ALL SELECT c_custkey, c_acctbal FROM customer)"""),
 
     "q49_parse_where" -> Q(kqlQ(
       """events
         | parse-where props with '{"k": 1' rest:string '}'
         | summarize n=count() by event_type
         | sort by event_type asc"""),
-      Some("""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n FROM events WHERE regexp_matches(props, '^\{"k": 1.*\}') GROUP BY 1 ORDER BY 1""")),
+      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n FROM events WHERE regexp_matches(props, '^\{"k": 1.*\}') GROUP BY 1 ORDER BY 1"""),
 
     "q50_scalar_string_misc" -> Q(kqlQ(
       """print s1 = trim(' ', '  hi  '), s2 = trim_start('0', '00042'),
@@ -3361,7 +3380,7 @@ object SparkEntry {
               s14 = strcat_array(pack_array('a', 'b', 'c'), '-'),
               s15 = array_index_of(pack_array('x', 'y'), 'y'),
               s16 = tostring(array_sum(pack_array(1, 2, 3)))"""),
-      Some("""SELECT 'hi' AS s1, '42' AS s2, 'a+b+c' AS s3, 'a#b#c' AS s4, CAST(2 AS BIGINT) AS s5, 'x|y|z' AS s6, 'ababab' AS s7, 'aGVsbG8=' AS s8, 'hello' AS s9, 'a+b%26c' AS s10, 'a b&c' AS s11, 'ff' AS s12, 'UST' AS s13, 'a-b-c' AS s14, CAST(1 AS BIGINT) AS s15, '6.0' AS s16""")),
+      """SELECT 'hi' AS s1, '42' AS s2, 'a+b+c' AS s3, 'a#b#c' AS s4, CAST(2 AS BIGINT) AS s5, 'x|y|z' AS s6, 'ababab' AS s7, 'aGVsbG8=' AS s8, 'hello' AS s9, 'a+b%26c' AS s10, 'a b&c' AS s11, 'ff' AS s12, 'UST' AS s13, 'a-b-c' AS s14, CAST(1 AS BIGINT) AS s15, '6.0' AS s16"""),
 
     "q51_scalar_math" -> Q(kqlQ(
       """print m1 = abs(-5), m2 = ceiling(3.2), m3 = bin(3.7, 1.0),
@@ -3373,7 +3392,7 @@ object SparkEntry {
               m14 = max_of(1, 7, 3), m15 = min_of(1, 7, 3),
               m16 = round(sin(0.5) + cos(0.5) + atan2(1.0, 1.0), 6),
               m17 = isnan(todouble('nan'))"""),
-      Some("""SELECT CAST(5 AS BIGINT) AS m1, CAST(4 AS BIGINT) AS m2, 3.0 AS m3, 2.718282 AS m4, 2.0 AS m5, 3.0 AS m6, 3.0 AS m7, 1024.0 AS m8, 4.0 AS m9, -1.0 AS m10, 3.1416 AS m11, 180.0 AS m12, 3.141593 AS m13, CAST(7 AS BIGINT) AS m14, CAST(1 AS BIGINT) AS m15, 2.142406 AS m16, isnan(CAST('nan' AS DOUBLE)) AS m17""")),
+      """SELECT CAST(5 AS BIGINT) AS m1, CAST(4 AS BIGINT) AS m2, 3.0 AS m3, 2.718282 AS m4, 2.0 AS m5, 3.0 AS m6, 3.0 AS m7, 1024.0 AS m8, 4.0 AS m9, -1.0 AS m10, 3.1416 AS m11, 180.0 AS m12, 3.141593 AS m13, CAST(7 AS BIGINT) AS m14, CAST(1 AS BIGINT) AS m15, 2.142406 AS m16, isnan(CAST('nan' AS DOUBLE)) AS m17"""),
 
     "q52_scalar_datetime2" -> Q(kqlQ(
       """print d1 = format_datetime(datetime(2024-03-05 04:05:06), 'yyyy-MM-dd HH:mm:ss'),
@@ -3388,15 +3407,15 @@ object SparkEntry {
               d10 = datetime_add('quarter', 1, datetime(2023-11-15)),
               d11 = datetime(2024-01-01) + 36h,
               d12 = totimespan('02:30:00') / 60000000"""),
-      Some("""SELECT '2024-03-05 04:05:06' AS d1, TIMESTAMP '2024-03-05 23:59:59.999999' AS d2, TIMESTAMP '2024-02-29 23:59:59.999999' AS d3, TIMESTAMP '2024-03-05 10:30:00' AS d4, CAST(3 AS BIGINT) AS d5, TIMESTAMP '2023-11-14 22:13:20' AS d6, CAST(61 AS INT) AS d7, CAST(1 AS INT) AS d8, TIMESTAMP '2024-03-04 12:00:00' AS d9, TIMESTAMP '2024-02-15 00:00:00' AS d10, TIMESTAMP '2024-01-02 12:00:00' AS d11, CAST(150 AS BIGINT) AS d12""")),
+      """SELECT '2024-03-05 04:05:06' AS d1, TIMESTAMP '2024-03-05 23:59:59.999999' AS d2, TIMESTAMP '2024-02-29 23:59:59.999999' AS d3, TIMESTAMP '2024-03-05 10:30:00' AS d4, CAST(3 AS BIGINT) AS d5, TIMESTAMP '2023-11-14 22:13:20' AS d6, CAST(61 AS INT) AS d7, CAST(1 AS INT) AS d8, TIMESTAMP '2024-03-04 12:00:00' AS d9, TIMESTAMP '2024-02-15 00:00:00' AS d10, TIMESTAMP '2024-01-02 12:00:00' AS d11, CAST(150 AS BIGINT) AS d12"""),
 
     "q53_sample" -> Q(kqlQ(
       """lineitem | sample 100 | summarize n=count()"""),
-      Some("""SELECT CAST(100 AS BIGINT) AS n""")),
+      """SELECT CAST(100 AS BIGINT) AS n"""),
 
     "q54_sample_distinct" -> Q(kqlQ(
       """lineitem | sample-distinct 2 of l_returnflag | count"""),
-      Some("""SELECT CAST(2 AS BIGINT) AS Count""")),
+      """SELECT CAST(2 AS BIGINT) AS Count"""),
 
     // dcount tolerance oracle: the HLL estimate itself has no
     // cross-engine value, but the exact distinct count does, and the
@@ -3407,35 +3426,35 @@ object SparkEntry {
         | summarize d = dcount(o_custkey), x = count_distinct(o_custkey) by o_orderstatus
         | project o_orderstatus, x, ok = todouble(abs(d - x)) / x <= 0.05
         | sort by o_orderstatus asc"""),
-      Some("""SELECT o_orderstatus, CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS x, true AS ok FROM orders GROUP BY 1 ORDER BY 1""")),
+      """SELECT o_orderstatus, CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS x, true AS ok FROM orders GROUP BY 1 ORDER BY 1"""),
 
     "q56_argmin" -> Q(kqlQ(
       """orders
         | summarize arg_min(o_orderkey, o_totalprice) by o_orderstatus
         | sort by o_orderstatus asc"""),
-      Some("""SELECT o_orderstatus, MIN(o_orderkey) AS o_orderkey, arg_min(o_totalprice, o_orderkey) AS o_totalprice FROM orders GROUP BY 1 ORDER BY 1""")),
+      """SELECT o_orderstatus, MIN(o_orderkey) AS o_orderkey, arg_min(o_totalprice, o_orderkey) AS o_totalprice FROM orders GROUP BY 1 ORDER BY 1"""),
 
     "q57_percentiles_multi" -> Q(kqlQ(
       """lineitem
         | summarize percentiles(l_quantity, 25, 50, 75) by l_returnflag
         | sort by l_returnflag asc"""),
-      Some("""SELECT l_returnflag, quantile_cont(l_quantity, 0.25) AS percentile_l_quantity_25, quantile_cont(l_quantity, 0.5) AS percentile_l_quantity_50, quantile_cont(l_quantity, 0.75) AS percentile_l_quantity_75 FROM lineitem GROUP BY 1 ORDER BY 1""")),
+      """SELECT l_returnflag, quantile_cont(l_quantity, 0.25) AS percentile_l_quantity_25, quantile_cont(l_quantity, 0.5) AS percentile_l_quantity_50, quantile_cont(l_quantity, 0.75) AS percentile_l_quantity_75 FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
     "q58_project_reorder" -> Q(kqlQ(
       """nation | project-reorder n_name, n_nationkey | take 5 | sort by n_nationkey asc"""),
-      Some("""SELECT n_name, n_nationkey, n_regionkey FROM nation ORDER BY n_nationkey LIMIT 5""")),
+      """SELECT n_name, n_nationkey, n_regionkey FROM nation ORDER BY n_nationkey LIMIT 5"""),
 
     "q62_toscalar" -> Q(kqlQ(
       """let avg_price = toscalar(lineitem | summarize round(avg(l_extendedprice), 4));
         lineitem | where l_extendedprice > avg_price | summarize n = count()"""),
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n FROM lineitem WHERE l_extendedprice > (SELECT ROUND(AVG(l_extendedprice), 4) FROM lineitem)""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n FROM lineitem WHERE l_extendedprice > (SELECT ROUND(AVG(l_extendedprice), 4) FROM lineitem)"""),
 
     "q63_parse_kv" -> Q(kqlQ(
       """datatable(s:string) ['a=1 b=hot c=9.5', 'a=7 b=cold c=0.5']
         | parse-kv s as (a:long, b:string, c:real) with (pair_delimiter=' ', kv_delimiter='=')
         | project a, b, c
         | sort by a asc"""),
-      Some("""SELECT * FROM (VALUES (CAST(1 AS BIGINT), 'hot', 9.5), (7, 'cold', 0.5)) t(a, b, c) ORDER BY a""")),
+      """SELECT * FROM (VALUES (CAST(1 AS BIGINT), 'hot', 9.5), (7, 'cold', 0.5)) t(a, b, c) ORDER BY a"""),
 
     "q64_mvexpand_index" -> Q(kqlQ(
       """datatable(s:string) ['x y z']
@@ -3443,14 +3462,14 @@ object SparkEntry {
         | mv-expand with_itemindex=ix t
         | project ix, t
         | sort by ix asc"""),
-      Some("""SELECT * FROM (VALUES (CAST(0 AS INT), 'x'), (1, 'y'), (2, 'z')) t(ix, t) ORDER BY ix""")),
+      """SELECT * FROM (VALUES (CAST(0 AS INT), 'x'), (1, 'y'), (2, 'z')) t(ix, t) ORDER BY ix"""),
 
     "q65_pack_json" -> Q(kqlQ(
       """nation
         | where n_nationkey < 3
         | project j = pack('k', n_nationkey, 'nm', n_name)
         | sort by j asc"""),
-      Some("""SELECT '{"k":' || n_nationkey || ',"nm":"' || n_name || '"}' AS j FROM nation WHERE n_nationkey < 3 ORDER BY 1""")),
+      """SELECT '{"k":' || n_nationkey || ',"nm":"' || n_name || '"}' AS j FROM nation WHERE n_nationkey < 3 ORDER BY 1"""),
 
     "q66_ip_geo_fns" -> Q(kqlQ(
       """print i1 = parse_ipv4('192.168.1.10'),
@@ -3462,7 +3481,7 @@ object SparkEntry {
               m2 = parse_ipv4_mask('10.5.7.9', 32),
               u = parse_url('https://host.example.com/a/b?q=1'),
               g = round(geo_distance_2points(-122.4194, 37.7749, -73.9857, 40.7484), 0)"""),
-      Some("""SELECT CAST(3232235786 AS BIGINT) AS i1, '192.168.1.10' AS i2, true AS i3, false AS i4, true AS i5, CAST(3232235776 AS BIGINT) AS m1, CAST(168101641 AS BIGINT) AS m2, '{"Scheme":"https","Host":"host.example.com","Path":"/a/b","Query":"q=1"}' AS u, 4129962.0 AS g""")),
+      """SELECT CAST(3232235786 AS BIGINT) AS i1, '192.168.1.10' AS i2, true AS i3, false AS i4, true AS i5, CAST(3232235776 AS BIGINT) AS m1, CAST(168101641 AS BIGINT) AS m2, '{"Scheme":"https","Host":"host.example.com","Path":"/a/b","Query":"q=1"}' AS u, 4129962.0 AS g"""),
 
     "q67_row_window_session" -> Q(kqlQ(
       """events
@@ -3474,14 +3493,14 @@ object SparkEntry {
       // mirrors the serialized-order semantics: the idle-gap flag runs over
       // the GLOBAL (user_id, ts, event_id) order, so sessions can span user
       // boundaries; sess_start = min(ts) over the whole session group
-      Some("""WITH s AS (SELECT user_id, ts, event_id, LAG(ts) OVER w AS prev_ts FROM events WINDOW w AS (ORDER BY user_id, ts, event_id)), f AS (SELECT user_id, ts, event_id, CASE WHEN prev_ts IS NULL OR ts - prev_ts > INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS flag FROM s), c AS (SELECT user_id, ts, SUM(flag) OVER (ORDER BY user_id, ts, event_id ROWS UNBOUNDED PRECEDING) AS grp FROM f), g AS (SELECT user_id, MIN(ts) OVER (PARTITION BY grp) AS sess_start FROM c), h AS (SELECT user_id, sess_start, COUNT(*) AS n FROM g GROUP BY 1, 2) SELECT user_id, CAST(COUNT(*) AS BIGINT) AS sessions, CAST(MAX(n) AS BIGINT) AS biggest FROM h GROUP BY 1 ORDER BY user_id""")),
+      """WITH s AS (SELECT user_id, ts, event_id, LAG(ts) OVER w AS prev_ts FROM events WINDOW w AS (ORDER BY user_id, ts, event_id)), f AS (SELECT user_id, ts, event_id, CASE WHEN prev_ts IS NULL OR ts - prev_ts > INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS flag FROM s), c AS (SELECT user_id, ts, SUM(flag) OVER (ORDER BY user_id, ts, event_id ROWS UNBOUNDED PRECEDING) AS grp FROM f), g AS (SELECT user_id, MIN(ts) OVER (PARTITION BY grp) AS sess_start FROM c), h AS (SELECT user_id, sess_start, COUNT(*) AS n FROM g GROUP BY 1, 2) SELECT user_id, CAST(COUNT(*) AS BIGINT) AS sessions, CAST(MAX(n) AS BIGINT) AS biggest FROM h GROUP BY 1 ORDER BY user_id"""),
 
     "q68_takeany_binary" -> Q(kqlQ(
       """nation
         | summarize nm = take_any(n_name), band = binary_all_and(n_nationkey),
                     bor = binary_all_or(n_nationkey) by n_nationkey
         | sort by n_nationkey asc"""),
-      Some("""SELECT n_nationkey, MIN(n_name) AS nm, CAST(BIT_AND(n_nationkey) AS INT) AS band, CAST(BIT_OR(n_nationkey) AS INT) AS bor FROM nation GROUP BY 1 ORDER BY 1""")),
+      """SELECT n_nationkey, MIN(n_name) AS nm, CAST(BIT_AND(n_nationkey) AS INT) AS band, CAST(BIT_OR(n_nationkey) AS INT) AS bor FROM nation GROUP BY 1 ORDER BY 1"""),
 
     "q69_mv_apply" -> Q(kqlQ(
       """documents
@@ -3489,7 +3508,7 @@ object SparkEntry {
         | mv-apply toks on (where strlen(toks) > 4 | summarize long_toks = count())
         | project doc_id, long_toks = coalesce(long_toks, 0)
         | sort by doc_id asc"""),
-      Some("""SELECT doc_id, CAST(len(list_filter(string_split(text, ' '), t -> length(t) > 4)) AS BIGINT) AS long_toks FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CAST(len(list_filter(string_split(text, ' '), t -> length(t) > 4)) AS BIGINT) AS long_toks FROM documents ORDER BY doc_id"""),
 
     "q70_let_lambda" -> Q(kqlQ(
       """let disc_price = (p:real, d:real) { p * (1 - d) };
@@ -3498,7 +3517,7 @@ object SparkEntry {
         | project l_orderkey, l_linenumber, dp = disc_price(l_extendedprice, l_discount)
         | sort by l_orderkey asc, l_linenumber asc, dp asc
         | take 50"""),
-      Some("""SELECT l_orderkey, l_linenumber, l_extendedprice * (1 - l_discount) AS dp FROM lineitem WHERE l_quantity > 40 ORDER BY 1, 2, 3 LIMIT 50""")),
+      """SELECT l_orderkey, l_linenumber, l_extendedprice * (1 - l_discount) AS dp FROM lineitem WHERE l_quantity > 40 ORDER BY 1, 2, 3 LIMIT 50"""),
 
     "q71_as_operator" -> Q(kqlQ(
       """nation
@@ -3506,13 +3525,13 @@ object SparkEntry {
         | as africa
         | union (africa)
         | summarize n = count()"""),
-      Some("""SELECT CAST(2 * COUNT(*) AS BIGINT) AS n FROM nation WHERE n_regionkey = 0""")),
+      """SELECT CAST(2 * COUNT(*) AS BIGINT) AS n FROM nation WHERE n_regionkey = 0"""),
 
     "q72_rollup" -> Q(kqlQ(
       """lineitem
         | summarize n=count(), qty=sum(tolong(round(l_quantity))) by rollup(l_returnflag, l_linestatus)
         | sort by l_returnflag asc, l_linestatus asc"""),
-      Some("""SELECT l_returnflag, l_linestatus, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS qty FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus) ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""")),
+      """SELECT l_returnflag, l_linestatus, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS qty FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus) ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST"""),
 
     "q73_scalar_datetime3" -> Q(kqlQ(
       """print eow = endofweek(datetime(2024-03-15)),
@@ -3525,7 +3544,7 @@ object SparkEntry {
               asc2 = isascii('héllo'),
               soq = startofquarter(datetime(2024-11-05)),
               eoq = endofquarter(datetime(2024-11-05))"""),
-      Some("""SELECT TIMESTAMP '2024-03-16 23:59:59.999999' AS eow, CAST(3 AS BIGINT) AS moy, CAST(1 AS BIGINT) AS qtr, CAST(123 AS BIGINT) AS msec, '1.01:01:01' AS ts, CAST(-1 AS BIGINT) AS cmp, true AS asc1, false AS asc2, TIMESTAMP '2024-10-01 00:00:00' AS soq, TIMESTAMP '2024-12-31 23:59:59.999999' AS eoq""")),
+      """SELECT TIMESTAMP '2024-03-16 23:59:59.999999' AS eow, CAST(3 AS BIGINT) AS moy, CAST(1 AS BIGINT) AS qtr, CAST(123 AS BIGINT) AS msec, '1.01:01:01' AS ts, CAST(-1 AS BIGINT) AS cmp, true AS asc1, false AS asc2, TIMESTAMP '2024-10-01 00:00:00' AS soq, TIMESTAMP '2024-12-31 23:59:59.999999' AS eoq"""),
 
     "q74_array_rotate_shift" -> Q(kqlQ(
       """print rl = dynamic_to_json(array_rotate_left(pack_array(1, 2, 3, 4, 5), 2)),
@@ -3533,25 +3552,25 @@ object SparkEntry {
               sl = dynamic_to_json(array_shift_left(pack_array(1, 2, 3, 4, 5), 2, -1)),
               sr = dynamic_to_json(array_shift_right(pack_array(1, 2, 3, 4, 5), 2, 0)),
               sn = dynamic_to_json(array_shift_left(pack_array(1, 2, 3), 1))"""),
-      Some("""SELECT '[3,4,5,1,2]' AS rl, '[5,1,2,3,4]' AS rr, '[3,4,5,-1,-1]' AS sl, '[0,0,1,2,3]' AS sr, '[2,3,null]' AS sn""")),
+      """SELECT '[3,4,5,1,2]' AS rl, '[5,1,2,3,4]' AS rr, '[3,4,5,-1,-1]' AS sl, '[0,0,1,2,3]' AS sr, '[2,3,null]' AS sn"""),
 
     "q75_has_any_all" -> Q(kqlQ(
       """documents
         | where text has_any ('quick', 'zephyr') and text has_all ('the')
         | summarize n = count()"""),
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents WHERE (regexp_matches(lower(text), '\bquick\b') OR regexp_matches(lower(text), '\bzephyr\b')) AND regexp_matches(lower(text), '\bthe\b')""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents WHERE (regexp_matches(lower(text), '\bquick\b') OR regexp_matches(lower(text), '\bzephyr\b')) AND regexp_matches(lower(text), '\bthe\b')"""),
 
     "q76_invoke" -> Q(kqlQ(
       """let bigqty = (T:(*), lo:long) { T | where l_quantity >= lo | summarize n = count() by l_returnflag | sort by l_returnflag asc };
         lineitem | invoke bigqty(45)"""),
-      Some("""SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n FROM lineitem WHERE l_quantity >= 45 GROUP BY 1 ORDER BY 1""")),
+      """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n FROM lineitem WHERE l_quantity >= 45 GROUP BY 1 ORDER BY 1"""),
 
     "q78_pivot" -> Q(kqlQ(
       """events
         | project user_id, event_type
         | evaluate pivot(event_type, count())
         | sort by user_id asc"""),
-      Some("""PIVOT (SELECT user_id, event_type FROM events) ON event_type USING count(*) GROUP BY user_id ORDER BY user_id""")),
+      """PIVOT (SELECT user_id, event_type FROM events) ON event_type USING count(*) GROUP BY user_id ORDER BY user_id"""),
 
     "q79_bag_unpack" -> Q(kqlQ(
       """events
@@ -3559,12 +3578,12 @@ object SparkEntry {
         | evaluate bag_unpack(props)
         | summarize s = sum(k) by user_id
         | sort by user_id asc"""),
-      Some("""SELECT user_id, CAST(SUM(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS s FROM events GROUP BY 1 ORDER BY 1""")),
+      """SELECT user_id, CAST(SUM(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS s FROM events GROUP BY 1 ORDER BY 1"""),
 
     "q80_render_materialize" -> Q(kqlQ(
       """let m = materialize(lineitem | summarize n = count() by l_returnflag);
         m | sort by l_returnflag asc | render barchart with (title = 'rows by flag')"""),
-      Some("""SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n FROM lineitem GROUP BY 1 ORDER BY 1""")),
+      """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
     "q81_scalar_misc" -> Q(kqlQ(
       """print v1 = tostring(parse_version('1.2.3')),
@@ -3576,7 +3595,7 @@ object SparkEntry {
               bh = bag_has_key('{"a":1,"b":2}', 'a'),
               br = bag_remove_keys('{"a":"1","b":"2","c":"3"}', pack_array('a', 'c')),
               bs = bag_set_key('{"a":"1","b":"2"}', 'b', 9)"""),
-      Some("""SELECT '1000000020000000300000000' AS v1, true AS vc, CAST(0.5 AS DOUBLE) AS j, '[1,20,3]' AS ai, '{"a":"1","b":"2","c":"4"}' AS bm, '[7,7,7]' AS rp, true AS bh, '{"b":"2"}' AS br, '{"a":"1","b":"9"}' AS bs""")),
+      """SELECT '1000000020000000300000000' AS v1, true AS vc, CAST(0.5 AS DOUBLE) AS j, '[1,20,3]' AS ai, '{"a":"1","b":"2","c":"4"}' AS bm, '[7,7,7]' AS rp, true AS bh, '{"b":"2"}' AS br, '{"a":"1","b":"9"}' AS bs"""),
 
     "q82_series_elementwise" -> Q(kqlQ(
       """print sa = dynamic_to_json(series_add(pack_array(1, 2), pack_array(3, 4))),
@@ -3585,15 +3604,15 @@ object SparkEntry {
               cs = series_cosine_similarity(pack_array(3, 4), pack_array(3, 4)),
               ff = dynamic_to_json(series_fill_forward(pack_array(1.0, null, 2.0, null))),
               fl = dynamic_to_json(series_fill_linear(pack_array(1.0, null, null, 4.0)))"""),
-      Some("""SELECT '[4,6]' AS sa, '[0.5,0.5]' AS sd, CAST(32.0 AS DOUBLE) AS dp,
+      """SELECT '[4,6]' AS sa, '[0.5,0.5]' AS sd, CAST(32.0 AS DOUBLE) AS dp,
                      CAST(1.0 AS DOUBLE) AS cs, '[1.0,1.0,2.0,2.0]' AS ff,
-                     '[1.0,2.0,3.0,4.0]' AS fl""")),
+                     '[1.0,2.0,3.0,4.0]' AS fl"""),
 
     "q77_series_outliers" -> Q(kqlQ(
       """print o = series_outliers(pack_array(1.0, 2.0, 3.0, 100.0))"""),
       // ::DOUBLE[] — a bare DuckDB list literal is DECIMAL and
       // hash-compares differently from Spark's array<double>
-      Some("""SELECT CAST([0.0, 0.0, 0.0, 47.0] AS DOUBLE[]) AS o""")),
+      """SELECT CAST([0.0, 0.0, 0.0, 47.0] AS DOUBLE[]) AS o"""),
 
     // ------------------------------------------------- time-series fns
     "q59_series_fns" -> Q(kqlQ(
@@ -3602,7 +3621,7 @@ object SparkEntry {
               st = series_stats_dynamic(pack_array(1.0, 2.0, 3.0))
         | project slope = round(f.slope, 6), icpt = round(f.interception, 6),
                   r2 = round(f.rsquare, 6), m = dynamic_to_json(m), st"""),
-      Some("""SELECT 2.0 AS slope, 1.0 AS icpt, 1.0 AS r2, '[1.0,1.5,2.5,3.5]' AS m, '{"min":1.0,"max":3.0,"avg":2.0,"stdev":1.0,"sum":6.0,"len":3}' AS st""")),
+      """SELECT 2.0 AS slope, 1.0 AS icpt, 1.0 AS r2, '[1.0,1.5,2.5,3.5]' AS m, '{"min":1.0,"max":3.0,"avg":2.0,"stdev":1.0,"sum":6.0,"len":3}' AS st"""),
 
     "q60_series_trend" -> Q(kqlQ(
       """events
@@ -3611,7 +3630,7 @@ object SparkEntry {
         | extend f = series_fit_line(n)
         | project event_type, slope = round(f.slope, 4)
         | sort by event_type asc"""),
-      Some("""WITH grid AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 DAY)) AS t), types AS (SELECT DISTINCT event_type FROM events), binned AS (SELECT event_type, date_trunc('day', ts) AS d, CAST(COUNT(*) AS BIGINT) AS cnt FROM events WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-01-31' GROUP BY 1, 2), filled AS (SELECT ty.event_type, g.t, COALESCE(b.cnt, 0) AS cnt FROM types ty CROSS JOIN grid g LEFT JOIN binned b ON b.event_type = ty.event_type AND b.d = g.t), idx AS (SELECT event_type, cnt, CAST(ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY t) - 1 AS DOUBLE) AS i FROM filled) SELECT event_type, ROUND(regr_slope(cnt, i), 4) AS slope FROM idx GROUP BY 1 ORDER BY 1""")),
+      """WITH grid AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 DAY)) AS t), types AS (SELECT DISTINCT event_type FROM events), binned AS (SELECT event_type, date_trunc('day', ts) AS d, CAST(COUNT(*) AS BIGINT) AS cnt FROM events WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-01-31' GROUP BY 1, 2), filled AS (SELECT ty.event_type, g.t, COALESCE(b.cnt, 0) AS cnt FROM types ty CROSS JOIN grid g LEFT JOIN binned b ON b.event_type = ty.event_type AND b.d = g.t), idx AS (SELECT event_type, cnt, CAST(ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY t) - 1 AS DOUBLE) AS i FROM filled) SELECT event_type, ROUND(regr_slope(cnt, i), 4) AS slope FROM idx GROUP BY 1 ORDER BY 1"""),
 
     // hll→merge→dcount_hll tolerance oracle, same pattern as q55: DuckDB
     // recomputes the exact distinct count; the merged-sketch estimate
@@ -3622,7 +3641,7 @@ object SparkEntry {
         | summarize h = hll(user_id) by event_type
         | summarize d = dcount_hll(hll_merge(h))
         | project x = exact, ok = todouble(abs(d - exact)) / exact <= 0.05"""),
-      Some("""SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS x, true AS ok FROM events""")),
+      """SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS x, true AS ok FROM events"""),
 
     // ----------------------------------------- temporal correlation ops
     "tmp_funnel" -> Q(
@@ -3640,7 +3659,7 @@ object SparkEntry {
             "purchase" -> (col("event_type") === "purchase")))
           .orderBy("user_id")
       },
-      Some("""WITH s1 AS (SELECT user_id, MIN(ts) AS t_signup FROM events WHERE event_type = 'signup' GROUP BY 1), s2 AS (SELECT e.user_id, MIN(e.ts) AS t_click FROM events e JOIN s1 USING (user_id) WHERE e.event_type = 'click' AND e.ts > s1.t_signup GROUP BY 1), s3 AS (SELECT e.user_id, MIN(e.ts) AS t_purchase FROM events e JOIN s2 USING (user_id) WHERE e.event_type = 'purchase' AND e.ts > s2.t_click GROUP BY 1) SELECT s1.user_id, epoch_us(t_signup) AS t_signup, epoch_us(t_click) AS t_click, epoch_us(t_purchase) AS t_purchase, CAST(1 + (t_click IS NOT NULL)::INT + (t_purchase IS NOT NULL)::INT AS BIGINT) AS steps_completed FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id) ORDER BY user_id""")),
+      """WITH s1 AS (SELECT user_id, MIN(ts) AS t_signup FROM events WHERE event_type = 'signup' GROUP BY 1), s2 AS (SELECT e.user_id, MIN(e.ts) AS t_click FROM events e JOIN s1 USING (user_id) WHERE e.event_type = 'click' AND e.ts > s1.t_signup GROUP BY 1), s3 AS (SELECT e.user_id, MIN(e.ts) AS t_purchase FROM events e JOIN s2 USING (user_id) WHERE e.event_type = 'purchase' AND e.ts > s2.t_click GROUP BY 1) SELECT s1.user_id, epoch_us(t_signup) AS t_signup, epoch_us(t_click) AS t_click, epoch_us(t_purchase) AS t_purchase, CAST(1 + (t_click IS NOT NULL)::INT + (t_purchase IS NOT NULL)::INT AS BIGINT) AS steps_completed FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id) ORDER BY user_id"""),
 
     "tmp_asof_join" -> Q(
       (s, dir) => {
@@ -3652,7 +3671,7 @@ object SparkEntry {
             round(col("last_click_val"), 4).as("last_click_val"))
           .orderBy("event_id")
       },
-      Some("""SELECT event_id, user_id, value, ROUND(last_click_val, 4) AS last_click_val FROM (SELECT event_id, user_id, value, event_type, LAST_VALUE(CASE WHEN event_type = 'click' THEN value END IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_click_val FROM events) WHERE event_type = 'purchase' ORDER BY event_id""")),
+      """SELECT event_id, user_id, value, ROUND(last_click_val, 4) AS last_click_val FROM (SELECT event_id, user_id, value, event_type, LAST_VALUE(CASE WHEN event_type = 'click' THEN value END IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_click_val FROM events) WHERE event_type = 'purchase' ORDER BY event_id"""),
 
     // As-of with tolerance: the latest prior click joins each purchase
     // ONLY if it is <= 30 min stale — matches beyond the tolerance null
@@ -3668,7 +3687,7 @@ object SparkEntry {
             round(col("last_click_val"), 4).as("last_click_val"))
           .orderBy("event_id")
       },
-      Some("""SELECT event_id, user_id, ROUND(CASE WHEN epoch_us(ts) - struct_extract(m, 'mts') <= 1800000000 THEN struct_extract(m, 'mv') END, 4) AS last_click_val FROM (SELECT event_id, user_id, ts, event_type, LAST_VALUE(CASE WHEN event_type = 'click' THEN struct_pack(mts := epoch_us(ts), mv := value) END IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS m FROM events) WHERE event_type = 'purchase' ORDER BY event_id""")),
+      """SELECT event_id, user_id, ROUND(CASE WHEN epoch_us(ts) - struct_extract(m, 'mts') <= 1800000000 THEN struct_extract(m, 'mv') END, 4) AS last_click_val FROM (SELECT event_id, user_id, ts, event_type, LAST_VALUE(CASE WHEN event_type = 'click' THEN struct_pack(mts := epoch_us(ts), mv := value) END IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS m FROM events) WHERE event_type = 'purchase' ORDER BY event_id"""),
 
     "tmp_range_join" -> Q(
       (s, dir) => {
@@ -3677,27 +3696,27 @@ object SparkEntry {
           .groupBy(col("k").as("user_id")).agg(count(lit(1)).as("n_pairs"))
           .orderBy("user_id")
       },
-      Some("""SELECT a.user_id, CAST(COUNT(*) AS BIGINT) AS n_pairs FROM events a JOIN events b ON a.user_id = b.user_id AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 2 MINUTE GROUP BY 1 ORDER BY 1""")),
+      """SELECT a.user_id, CAST(COUNT(*) AS BIGINT) AS n_pairs FROM events a JOIN events b ON a.user_id = b.user_id AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 2 MINUTE GROUP BY 1 ORDER BY 1"""),
 
     // --------------------------------------------- activity analytics
     "q83_activity_engagement" -> Q(kqlQ(
       """events
         | evaluate activity_engagement(user_id, ts, 1d, 7d)
         | sort by ts asc"""),
-      Some("""WITH pairs AS (SELECT DISTINCT epoch_us(ts) - epoch_us(ts) % 86400000000 AS d, user_id FROM events), i AS (SELECT d, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS dcount_activities_inner FROM pairs GROUP BY 1), o AS (SELECT p.d + s.g * 86400000000 AS d, CAST(COUNT(DISTINCT p.user_id) AS BIGINT) AS dcount_activities_outer FROM pairs p CROSS JOIN generate_series(0, 6) s(g) GROUP BY 1) SELECT make_timestamp(i.d) AS ts, dcount_activities_inner, dcount_activities_outer, ROUND(dcount_activities_inner / CAST(dcount_activities_outer AS DOUBLE), 4) AS activity_ratio FROM i JOIN o USING (d) ORDER BY ts""")),
+      """WITH pairs AS (SELECT DISTINCT epoch_us(ts) - epoch_us(ts) % 86400000000 AS d, user_id FROM events), i AS (SELECT d, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS dcount_activities_inner FROM pairs GROUP BY 1), o AS (SELECT p.d + s.g * 86400000000 AS d, CAST(COUNT(DISTINCT p.user_id) AS BIGINT) AS dcount_activities_outer FROM pairs p CROSS JOIN generate_series(0, 6) s(g) GROUP BY 1) SELECT make_timestamp(i.d) AS ts, dcount_activities_inner, dcount_activities_outer, ROUND(dcount_activities_inner / CAST(dcount_activities_outer AS DOUBLE), 4) AS activity_ratio FROM i JOIN o USING (d) ORDER BY ts"""),
 
     "q84_sliding_window_counts" -> Q(kqlQ(
       """events
         | evaluate sliding_window_counts(user_id, ts, 7d, 1d)
         | sort by ts asc"""),
-      Some("""WITH r AS (SELECT epoch_us(ts) - epoch_us(ts) % 86400000000 AS d, user_id FROM events) SELECT make_timestamp(r.d + s.g * 86400000000) AS ts, CAST(COUNT(*) AS BIGINT) AS count_, CAST(COUNT(DISTINCT r.user_id) AS BIGINT) AS dcount_ FROM r CROSS JOIN generate_series(0, 6) s(g) GROUP BY 1 ORDER BY ts""")),
+      """WITH r AS (SELECT epoch_us(ts) - epoch_us(ts) % 86400000000 AS d, user_id FROM events) SELECT make_timestamp(r.d + s.g * 86400000000) AS ts, CAST(COUNT(*) AS BIGINT) AS count_, CAST(COUNT(DISTINCT r.user_id) AS BIGINT) AS dcount_ FROM r CROSS JOIN generate_series(0, 6) s(g) GROUP BY 1 ORDER BY ts"""),
 
     "q85_reduce_by" -> Q(kqlQ(
       """documents
         | reduce by text
         | sort by Count desc, Pattern asc
         | take 20"""),
-      Some("""SELECT regexp_replace(text, '[0-9]+', '*', 'g') AS Pattern, CAST(COUNT(*) AS BIGINT) AS Count, MIN(text) AS Representative FROM documents GROUP BY 1 ORDER BY Count DESC, Pattern ASC LIMIT 20""")),
+      """SELECT regexp_replace(text, '[0-9]+', '*', 'g') AS Pattern, CAST(COUNT(*) AS BIGINT) AS Count, MIN(text) AS Representative FROM documents GROUP BY 1 ORDER BY Count DESC, Pattern ASC LIMIT 20"""),
 
     "q86_make_bag" -> Q(kqlQ(
       """events
@@ -3706,7 +3725,7 @@ object SparkEntry {
         | sort by user_id asc"""),
       // the fixture's props bags are single-key {"k": N}: first-wins over
       // the sorted fold ⇒ the k of the lexicographically smallest bag
-      Some("""SELECT user_id, '{"k":"' || CAST(MIN(props)->>'k' AS VARCHAR) || '"}' AS b FROM events WHERE event_type = 'purchase' GROUP BY 1 ORDER BY 1""")),
+      """SELECT user_id, '{"k":"' || CAST(MIN(props)->>'k' AS VARCHAR) || '"}' AS b FROM events WHERE event_type = 'purchase' GROUP BY 1 ORDER BY 1"""),
 
     "q87_scalar_text2" -> Q(kqlQ(
       """print bs = string_size('héllo'), ir = indexof_regex('abc123', '[0-9]+'),
@@ -3716,20 +3735,20 @@ object SparkEntry {
               ms = make_string(pack_array(72, 105)),
               nm = ipv4_netmask_suffix('192.168.0.0/24'),
               ic = ipv4_compare('10.0.0.1', '10.0.0.2', 24)"""),
-      Some("""SELECT CAST(6 AS BIGINT) AS bs, CAST(3 AS BIGINT) AS ir, true AS h, 'a\.b\*c' AS rq, '7.63 MB' AS fb, 'array' AS gt, CAST(14 AS BIGINT) AS bo, '[65,98]' AS cp, 'Hi' AS ms, CAST(24 AS BIGINT) AS nm, CAST(0 AS BIGINT) AS ic""")),
+      """SELECT CAST(6 AS BIGINT) AS bs, CAST(3 AS BIGINT) AS ir, true AS h, 'a\.b\*c' AS rq, '7.63 MB' AS fb, 'array' AS gt, CAST(14 AS BIGINT) AS bo, '[65,98]' AS cp, 'Hi' AS ms, CAST(24 AS BIGINT) AS nm, CAST(0 AS BIGINT) AS ic"""),
 
     "q88_find" -> Q(kqlQ(
       """find in (nation, region) where r_name == 'ASIA' or n_regionkey == 2
         | project source_, n_name, n_regionkey, r_name, r_regionkey
         | sort by source_ asc, n_name asc"""),
-      Some("""SELECT * FROM (SELECT 'nation' AS source_, n_name, n_regionkey, CAST(NULL AS VARCHAR) AS r_name, CAST(NULL AS BIGINT) AS r_regionkey FROM nation WHERE n_regionkey = 2 UNION ALL SELECT 'region', NULL, NULL, r_name, r_regionkey FROM region WHERE r_name = 'ASIA') ORDER BY source_ ASC, n_name ASC NULLS FIRST""")),
+      """SELECT * FROM (SELECT 'nation' AS source_, n_name, n_regionkey, CAST(NULL AS VARCHAR) AS r_name, CAST(NULL AS BIGINT) AS r_regionkey FROM nation WHERE n_regionkey = 2 UNION ALL SELECT 'region', NULL, NULL, r_name, r_regionkey FROM region WHERE r_name = 'ASIA') ORDER BY source_ ASC, n_name ASC NULLS FIRST"""),
 
     "q89_partition_topk" -> Q(kqlQ(
       """orders
         | partition by o_orderpriority (top 3 by o_totalprice desc, o_orderkey asc
                                         | project o_orderpriority, o_orderkey, o_totalprice)
         | sort by o_orderpriority asc, o_orderkey asc"""),
-      Some("""SELECT o_orderpriority, o_orderkey, o_totalprice FROM (SELECT o_orderpriority, o_orderkey, o_totalprice, ROW_NUMBER() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn FROM orders) WHERE rn <= 3 ORDER BY o_orderpriority ASC, o_orderkey ASC""")),
+      """SELECT o_orderpriority, o_orderkey, o_totalprice FROM (SELECT o_orderpriority, o_orderkey, o_totalprice, ROW_NUMBER() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn FROM orders) WHERE rn <= 3 ORDER BY o_orderpriority ASC, o_orderkey ASC"""),
 
     // LLM ops through the query LANGUAGE (E1) — same implementation the
     // Scala-API entries (llm_*) call; proves the full surface is
@@ -3739,7 +3758,7 @@ object SparkEntry {
         | evaluate dedup_exact(text, doc_id)
         | project keep_id, n_copies
         | sort by keep_id asc"""),
-      Some("""SELECT CAST(MIN(doc_id) AS BIGINT) AS keep_id, CAST(COUNT(*) AS BIGINT) AS n_copies FROM documents GROUP BY lower(trim(text)) ORDER BY keep_id""")),
+      """SELECT CAST(MIN(doc_id) AS BIGINT) AS keep_id, CAST(COUNT(*) AS BIGINT) AS n_copies FROM documents GROUP BY lower(trim(text)) ORDER BY keep_id"""),
 
     // ntile needs a UNIQUE total order for cross-engine determinism (tied
     // rows at tile borders are assigned arbitrarily) — o_orderkey is the
@@ -3751,7 +3770,7 @@ object SparkEntry {
         | summarize n = count(), mnp = min(pr), mxp = max(pr),
                     mnk = min(o_orderkey), mxk = max(o_orderkey) by nt
         | sort by nt asc"""),
-      Some("""WITH r AS (SELECT o_orderkey, CAST(NTILE(7) OVER w AS BIGINT) AS nt, ROUND(PERCENT_RANK() OVER w, 8) AS pr FROM orders WINDOW w AS (ORDER BY o_orderkey)) SELECT nt, CAST(COUNT(*) AS BIGINT) AS n, MIN(pr) AS mnp, MAX(pr) AS mxp, MIN(o_orderkey) AS mnk, MAX(o_orderkey) AS mxk FROM r GROUP BY 1 ORDER BY 1""")),
+      """WITH r AS (SELECT o_orderkey, CAST(NTILE(7) OVER w AS BIGINT) AS nt, ROUND(PERCENT_RANK() OVER w, 8) AS pr FROM orders WINDOW w AS (ORDER BY o_orderkey)) SELECT nt, CAST(COUNT(*) AS BIGINT) AS n, MIN(pr) AS mnp, MAX(pr) AS mxp, MIN(o_orderkey) AS mnk, MAX(o_orderkey) AS mxk FROM r GROUP BY 1 ORDER BY 1"""),
 
     // compression scalars are pinned by ROUNDTRIP (deflate bytes are not
     // cross-engine comparable); geohash against known literals
@@ -3764,7 +3783,7 @@ object SparkEntry {
               ctr = geo_geohash_to_central_point('9q8yy')
         | project gz, zl, bad, gh, gc,
                   lon = round(ctr.longitude, 4), lat = round(ctr.latitude, 4)"""),
-      Some("""SELECT 'the quick brown fox' AS gz, 'jumps over the lazy dog' AS zl, '' AS bad, '9q8yyk8yt' AS gh, 'gcpvj' AS gc, -122.4097 AS lon, 37.771 AS lat""")),
+      """SELECT 'the quick brown fox' AS gz, 'jumps over the lazy dog' AS zl, '' AS bad, '9q8yyk8yt' AS gh, 'gcpvj' AS gc, -122.4097 AS lon, 37.771 AS lat"""),
 
     // two-line segmented fit: slope-1 then slope-2 halves, exact split;
     // expectations computed independently (numpy lstsq) and pinned
@@ -3773,13 +3792,13 @@ object SparkEntry {
         | project rsq = round(f.rsquare, 6), split = f.split_idx,
                   ls = round(f.left_slope, 6), li = round(f.left_interception, 6),
                   rs = round(f.right_slope, 6), ri = round(f.right_interception, 6)"""),
-      Some("""SELECT 1.0 AS rsq, CAST(5 AS BIGINT) AS split, 1.0 AS ls, 1.0 AS li, 2.0 AS rs, 0.0 AS ri""")),
+      """SELECT 1.0 AS rsq, CAST(5 AS BIGINT) AS split, 1.0 AS ls, 1.0 AS li, 2.0 AS rs, 0.0 AS ri"""),
 
     "q102_session_count" -> Q(kqlQ(
       """events
         | evaluate session_count(user_id, ts, datetime(2024-01-01), datetime(2024-01-31), 1d, 2d)
         | sort by ts asc"""),
-      Some("""WITH grid AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-31', INTERVAL 1 DAY)) AS b) SELECT b AS ts, CAST(COUNT(DISTINCT e.user_id) AS BIGINT) AS count_session FROM grid LEFT JOIN events e ON e.ts > b - INTERVAL 2 DAY AND e.ts <= b GROUP BY 1 ORDER BY 1""")),
+      """WITH grid AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-31', INTERVAL 1 DAY)) AS b) SELECT b AS ts, CAST(COUNT(DISTINCT e.user_id) AS BIGINT) AS count_session FROM grid LEFT JOIN events e ON e.ts > b - INTERVAL 2 DAY AND e.ts <= b GROUP BY 1 ORDER BY 1"""),
 
     "q101_narrow" -> Q(kqlQ(
       """nation
@@ -3787,14 +3806,14 @@ object SparkEntry {
         | take 3
         | evaluate narrow()
         | sort by Row asc, Column asc"""),
-      Some("""WITH t3 AS (SELECT * FROM nation ORDER BY n_nationkey LIMIT 3), r AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY n_nationkey) - 1 AS BIGINT) AS rn, * FROM t3) SELECT rn AS "Row", 'n_nationkey' AS "Column", CAST(n_nationkey AS VARCHAR) AS "Value" FROM r UNION ALL SELECT rn, 'n_name', n_name FROM r UNION ALL SELECT rn, 'n_regionkey', CAST(n_regionkey AS VARCHAR) FROM r ORDER BY "Row", "Column"""")),
+      """WITH t3 AS (SELECT * FROM nation ORDER BY n_nationkey LIMIT 3), r AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY n_nationkey) - 1 AS BIGINT) AS rn, * FROM t3) SELECT rn AS "Row", 'n_nationkey' AS "Column", CAST(n_nationkey AS VARCHAR) AS "Value" FROM r UNION ALL SELECT rn, 'n_name', n_name FROM r UNION ALL SELECT rn, 'n_regionkey', CAST(n_regionkey AS VARCHAR) FROM r ORDER BY "Row", "Column""""),
 
     "q98_shuffle_hint" -> Q(kqlQ(
       """lineitem
         | join kind=inner hint.strategy=shuffle (orders) on $left.l_orderkey == $right.o_orderkey
         | summarize n = count(), s = sum(tolong(round(o_totalprice))) by l_returnflag
         | sort by l_returnflag asc"""),
-      Some("""SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(o_totalprice) AS BIGINT)) AS BIGINT) AS s FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY 1 ORDER BY 1""")),
+      """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(o_totalprice) AS BIGINT)) AS BIGINT) AS s FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY 1 ORDER BY 1"""),
 
     "q99_ipv6" -> Q(kqlQ(
       """print p1 = parse_ipv6('fe80::85d:e82c:9446:7994'),
@@ -3806,7 +3825,7 @@ object SparkEntry {
               m2 = ipv6_is_match('fe80::123:4567', 'fe81::/64'),
               m3 = ipv6_is_match('192.168.1.5', '192.168.1.0/24'),
               pm = parse_ipv6_mask('fe80::85d:e82c:9446:7994', 120)"""),
-      Some("""SELECT 'fe80:0000:0000:0000:085d:e82c:9446:7994' AS p1, '0000:0000:0000:0000:0000:0000:0000:0001' AS p2, '0000:0000:0000:0000:0000:ffff:c0a8:0105' AS p3, CAST(-1 AS BIGINT) AS c1, CAST(0 AS BIGINT) AS c2, true AS m1, false AS m2, true AS m3, 'fe80:0000:0000:0000:085d:e82c:9446:7900' AS pm""")),
+      """SELECT 'fe80:0000:0000:0000:085d:e82c:9446:7994' AS p1, '0000:0000:0000:0000:0000:0000:0000:0001' AS p2, '0000:0000:0000:0000:0000:ffff:c0a8:0105' AS p3, CAST(-1 AS BIGINT) AS c1, CAST(0 AS BIGINT) AS c2, true AS m1, false AS m2, true AS m3, 'fe80:0000:0000:0000:085d:e82c:9446:7900' AS pm"""),
 
     "q97_scalar_batch3" -> Q(kqlQ(
       """print nt = not(1 == 2), ct = round(cot(1.0), 6),
@@ -3818,7 +3837,7 @@ object SparkEntry {
               un = unixtime_nanoseconds_todatetime(1700000000123456789),
               gc = geo_point_in_circle(-122.41, 37.77, -122.40, 37.77, 2000.0),
               gc2 = geo_point_in_circle(-122.41, 37.77, -120.40, 37.77, 2000.0)"""),
-      Some("""SELECT true AS nt, 0.642093 AS ct, '[1,4,7]' AS rg, true AS hc, '192.168.1.0/24' AS fm, true AS ir, false AS ir2, TIMESTAMP '2023-11-14 22:13:20.123456' AS un, true AS gc, false AS gc2""")),
+      """SELECT true AS nt, 0.642093 AS ct, '[1,4,7]' AS rg, true AS hc, '192.168.1.0/24' AS fm, true AS ir, false AS ir2, TIMESTAMP '2023-11-14 22:13:20.123456' AS un, true AS gc, false AS gc2"""),
 
     // scan under partition by = the distributed path (hash on key +
     // sortWithinPartitions + per-key state machine); integer-cents
@@ -3829,7 +3848,7 @@ object SparkEntry {
             | scan declare (rs:long=0) with (step s: true => rs = rs + tolong(round(value * 100))))
         | summarize mx = max(rs), n = count() by user_id
         | sort by user_id asc"""),
-      Some("""WITH r AS (SELECT user_id, SUM(CAST(ROUND(value * 100) AS BIGINT)) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS rs FROM events) SELECT user_id, CAST(MAX(rs) AS BIGINT) AS mx, CAST(COUNT(*) AS BIGINT) AS n FROM r GROUP BY 1 ORDER BY 1""")),
+      """WITH r AS (SELECT user_id, SUM(CAST(ROUND(value * 100) AS BIGINT)) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS rs FROM events) SELECT user_id, CAST(MAX(rs) AS BIGINT) AS mx, CAST(COUNT(*) AS BIGINT) AS n FROM r GROUP BY 1 ORDER BY 1"""),
 
     // ACF local-maxima period detection: period-4 signal over 24 points →
     // ACF(4)=25/30, ACF(8)=20/30 (exact closed-form, pinned as literals);
@@ -3846,7 +3865,7 @@ object SparkEntry {
         | project periods = dynamic_to_json(r.periods), scores = dynamic_to_json(r.scores),
                   vperiods = dynamic_to_json(v.periods), vscores = dynamic_to_json(v.scores),
                   sq = dynamic_to_json(series_sqrt(pack_array(4.0, 9.0)))"""),
-      Some("""SELECT '[4.0,8.0]' AS periods, '[0.8333,0.6667]' AS scores, '[4.0,6.0]' AS vperiods, '[0.8333,-0.45]' AS vscores, '[2.0,3.0]' AS sq""")),
+      """SELECT '[4.0,8.0]' AS periods, '[0.8333,0.6667]' AS scores, '[4.0,6.0]' AS vperiods, '[0.8333,-0.45]' AS vscores, '[2.0,3.0]' AS sq"""),
 
     // externaldata over a local parquet URI (zero-egress env: file paths
     // are the reachable URI class; schema declared, not inferred)
@@ -3856,13 +3875,13 @@ object SparkEntry {
               ['$d/nation.parquet'] with (format='parquet')
             | summarize n = count(), mx = max(n_nationkey) by n_regionkey
             | sort by n_regionkey asc""", d),
-      Some("""SELECT n_regionkey, CAST(COUNT(*) AS BIGINT) AS n, MAX(n_nationkey) AS mx FROM nation GROUP BY 1 ORDER BY 1""")),
+      """SELECT n_regionkey, CAST(COUNT(*) AS BIGINT) AS n, MAX(n_nationkey) AS mx FROM nation GROUP BY 1 ORDER BY 1"""),
 
     "q92_series_decompose" -> Q(kqlQ(
       """print an = series_decompose_anomalies(pack_array(
            1.0, 2.0, 3.0, 4.0, 1.0, 2.0, 3.0, 4.0, 1.0, 2.0, 3.0, 4.0,
            1.0, 42.0, 3.0, 4.0, 1.0, 2.0, 3.0, 4.0, 1.0, 2.0, 3.0, 4.0), 4)"""),
-      Some("""SELECT [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0] AS an""")),
+      """SELECT [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0] AS an"""),
 
     // last-level `with others`: non-top values fold into one labeled row
     // (additive re-aggregation of the per-value aggregates)
@@ -3877,7 +3896,7 @@ object SparkEntry {
         | mv-combine ln
         | project l_orderkey, lns = dynamic_to_json(array_sort_asc(ln))
         | sort by l_orderkey asc"""),
-      Some("""SELECT l_orderkey, CAST(to_json(list_sort(list(CAST(l_linenumber AS BIGINT)))) AS VARCHAR) AS lns FROM lineitem WHERE l_orderkey <= 1000 GROUP BY 1 ORDER BY 1""")),
+      """SELECT l_orderkey, CAST(to_json(list_sort(list(CAST(l_linenumber AS BIGINT)))) AS VARCHAR) AS lns FROM lineitem WHERE l_orderkey <= 1000 GROUP BY 1 ORDER BY 1"""),
 
     // t-digest percentile sketch (r5): banded contract (the q55/q61
     // dcount/hll convention) — the sketch p50/p95 must land inside the
@@ -3900,7 +3919,7 @@ object SparkEntry {
             p50_ok = p50 >= lo50 and p50 <= hi50,
             p95_ok = p95 >= lo95 and p95 <= hi95
         | sort by l_returnflag asc"""),
-      Some("""SELECT l_returnflag, ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS ex50, true AS p50_ok, true AS p95_ok FROM lineitem GROUP BY 1 ORDER BY 1""")),
+      """SELECT l_returnflag, ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS ex50, true AS p50_ok, true AS p95_ok FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
     // t-digest MERGE path (r5): per-(flag, status) partial sketches
     // re-aggregated per flag — the persisted-sketch-cube rollup shape
@@ -3922,7 +3941,7 @@ object SparkEntry {
             p50_ok = p50 >= lo50 and p50 <= hi50,
             rank_ok = r50 >= 47.0 and r50 <= 53.0
         | sort by l_returnflag asc"""),
-      Some("""SELECT l_returnflag, ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS ex50, true AS p50_ok, true AS rank_ok FROM lineitem GROUP BY 1 ORDER BY 1""")),
+      """SELECT l_returnflag, ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS ex50, true AS p50_ok, true AS rank_ok FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
     // TPC-H Q6 (r5): pure scan + filter + one money sum — the pushdown
     // showcase (all three predicates land in PushedFilters)
@@ -3932,7 +3951,7 @@ object SparkEntry {
         | where l_discount >= 0.03 and l_discount <= 0.05 and l_quantity < 24.0
         | summarize rc = sum(tolong(round(l_extendedprice * l_discount * 10000)))
         | project revenue = todouble(rc) / 10000.0"""),
-      Some("""SELECT CAST(SUM(CAST(ROUND(l_extendedprice * l_discount * 10000) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01' AND l_discount >= 0.03 AND l_discount <= 0.05 AND l_quantity < 24.0""")),
+      """SELECT CAST(SUM(CAST(ROUND(l_extendedprice * l_discount * 10000) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01' AND l_discount >= 0.03 AND l_discount <= 0.05 AND l_quantity < 24.0"""),
 
     // TPC-H Q14 (r5): promo revenue share — broadcast dim join +
     // conditional money aggregate (fixture p_type is single-word)
@@ -3943,7 +3962,7 @@ object SparkEntry {
         | summarize promo = sum(tolong(round(iff(p_type == 'PROMO', l_extendedprice * (1 - l_discount), 0.0) * 10000))),
                     total = sum(tolong(round(l_extendedprice * (1 - l_discount) * 10000)))
         | project promo_revenue = round(100.0 * todouble(promo) / todouble(total), 4)"""),
-      Some("""SELECT ROUND(100.0 * CAST(SUM(CAST(ROUND(CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END * 10000) AS BIGINT)) AS DOUBLE) / CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS DOUBLE), 4) AS promo_revenue FROM lineitem JOIN part ON l_partkey = p_partkey WHERE l_shipdate >= TIMESTAMP '1997-09-01' AND l_shipdate < TIMESTAMP '1997-10-01'""")),
+      """SELECT ROUND(100.0 * CAST(SUM(CAST(ROUND(CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END * 10000) AS BIGINT)) AS DOUBLE) / CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS DOUBLE), 4) AS promo_revenue FROM lineitem JOIN part ON l_partkey = p_partkey WHERE l_shipdate >= TIMESTAMP '1997-09-01' AND l_shipdate < TIMESTAMP '1997-10-01'"""),
 
     // TPC-H Q10 (r5, reduced to fixture columns): returned-item revenue
     // per customer over a quarter — 3-way join + grouped money sum + top
@@ -3961,7 +3980,7 @@ object SparkEntry {
         | project-away rc
         | sort by revenue desc, c_custkey asc
         | take 20"""),
-      Some("""SELECT c_custkey, c_name, c_acctbal, n_name, CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue FROM customer JOIN orders ON c_custkey = o_custkey JOIN lineitem ON o_orderkey = l_orderkey JOIN nation ON c_nationkey = n_nationkey WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1997-04-01' AND l_returnflag = 'R' GROUP BY 1, 2, 3, 4 ORDER BY revenue DESC, c_custkey LIMIT 20""")),
+      """SELECT c_custkey, c_name, c_acctbal, n_name, CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue FROM customer JOIN orders ON c_custkey = o_custkey JOIN lineitem ON o_orderkey = l_orderkey JOIN nation ON c_nationkey = n_nationkey WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1997-04-01' AND l_returnflag = 'R' GROUP BY 1, 2, 3, 4 ORDER BY revenue DESC, c_custkey LIMIT 20"""),
 
     // TPC-H Q18 (r5): large-volume customers — the grouped-HAVING +
     // join-back shape (aggregate feeds the join's build side)
@@ -3974,7 +3993,7 @@ object SparkEntry {
         | project c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, qty
         | sort by o_totalprice desc, o_orderdate asc, o_orderkey asc
         | take 100"""),
-      Some("""WITH big AS (SELECT l_orderkey, CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS qty FROM lineitem GROUP BY 1 HAVING SUM(CAST(ROUND(l_quantity) AS BIGINT)) > 250) SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, qty FROM big JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey ORDER BY o_totalprice DESC, o_orderdate, o_orderkey LIMIT 100""")),
+      """WITH big AS (SELECT l_orderkey, CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS qty FROM lineitem GROUP BY 1 HAVING SUM(CAST(ROUND(l_quantity) AS BIGINT)) > 250) SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, qty FROM big JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey ORDER BY o_totalprice DESC, o_orderdate, o_orderkey LIMIT 100"""),
 
     // TPC-H Q4 (r6, reduced to fixture columns — no l_commitdate/
     // l_receiptdate, so the EXISTS predicate is l_returnflag == 'R'):
@@ -3987,7 +4006,7 @@ object SparkEntry {
           on $left.o_orderkey == $right.l_orderkey
         | summarize order_count = count() by o_orderpriority
         | sort by o_orderpriority asc"""),
-      Some("""SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count FROM orders WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1997-04-01' AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_returnflag = 'R') GROUP BY 1 ORDER BY 1""")),
+      """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count FROM orders WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1997-04-01' AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_returnflag = 'R') GROUP BY 1 ORDER BY 1"""),
 
     // TPC-H Q12 (r6, l_linestatus standing in for l_shipmode): fact-fact
     // join + dual conditional counts — the countif-over-join shape
@@ -4001,7 +4020,7 @@ object SparkEntry {
                     low_line_count = countif(o_orderpriority !in ('1-URGENT', '2-HIGH'))
           by l_linestatus
         | sort by l_linestatus asc"""),
-      Some("""SELECT l_linestatus, CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count, CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count FROM orders JOIN lineitem ON o_orderkey = l_orderkey WHERE l_returnflag IN ('A','R') AND l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01' GROUP BY 1 ORDER BY 1""")),
+      """SELECT l_linestatus, CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count, CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count FROM orders JOIN lineitem ON o_orderkey = l_orderkey WHERE l_returnflag IN ('A','R') AND l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01' GROUP BY 1 ORDER BY 1"""),
 
     // TPC-H Q16 (r6; lineitem's (l_partkey, l_suppkey) is the partsupp
     // surrogate — the fixture has no partsupp table; the NOT-IN
@@ -4017,7 +4036,7 @@ object SparkEntry {
         | summarize supplier_cnt = count_distinct(l_suppkey) by p_brand, p_size
         | sort by supplier_cnt desc, p_brand asc, p_size asc
         | take 20"""),
-      Some("""SELECT p_brand, p_size, CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt FROM lineitem JOIN part ON l_partkey = p_partkey WHERE p_brand <> 'Brand#3' AND p_size IN (1, 5, 9, 14, 20, 27, 33, 40) AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0) GROUP BY 1, 2 ORDER BY supplier_cnt DESC, p_brand, p_size LIMIT 20""")),
+      """SELECT p_brand, p_size, CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt FROM lineitem JOIN part ON l_partkey = p_partkey WHERE p_brand <> 'Brand#3' AND p_size IN (1, 5, 9, 14, 20, 27, 33, 40) AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0) GROUP BY 1, 2 ORDER BY supplier_cnt DESC, p_brand, p_size LIMIT 20"""),
 
     // TPC-H Q21 (r6, 'late' = l_returnflag == 'R'): the waiting-supplier
     // EXISTS/NOT-EXISTS chain. The correlated suppkey-inequality
@@ -4044,7 +4063,7 @@ object SparkEntry {
         | summarize numwait = count_distinct(l_orderkey) by s_name
         | sort by numwait desc, s_name asc
         | take 100"""),
-      Some("""WITH late AS (SELECT * FROM lineitem WHERE l_returnflag = 'R'), multi AS (SELECT l_orderkey FROM lineitem GROUP BY 1 HAVING COUNT(DISTINCT l_suppkey) > 1), onelate AS (SELECT l_orderkey FROM late GROUP BY 1 HAVING COUNT(DISTINCT l_suppkey) = 1) SELECT s_name, CAST(COUNT(DISTINCT l.l_orderkey) AS BIGINT) AS numwait FROM late l JOIN supplier ON l.l_suppkey = s_suppkey JOIN nation ON s_nationkey = n_nationkey WHERE n_name IN ('NATION_1','NATION_2','NATION_3') AND l.l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_orderstatus = 'F') AND l.l_orderkey IN (SELECT l_orderkey FROM multi) AND l.l_orderkey IN (SELECT l_orderkey FROM onelate) GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 100""")),
+      """WITH late AS (SELECT * FROM lineitem WHERE l_returnflag = 'R'), multi AS (SELECT l_orderkey FROM lineitem GROUP BY 1 HAVING COUNT(DISTINCT l_suppkey) > 1), onelate AS (SELECT l_orderkey FROM late GROUP BY 1 HAVING COUNT(DISTINCT l_suppkey) = 1) SELECT s_name, CAST(COUNT(DISTINCT l.l_orderkey) AS BIGINT) AS numwait FROM late l JOIN supplier ON l.l_suppkey = s_suppkey JOIN nation ON s_nationkey = n_nationkey WHERE n_name IN ('NATION_1','NATION_2','NATION_3') AND l.l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_orderstatus = 'F') AND l.l_orderkey IN (SELECT l_orderkey FROM multi) AND l.l_orderkey IN (SELECT l_orderkey FROM onelate) GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 100"""),
 
     // TPC-H Q2 (r6; lineitem (l_partkey, l_suppkey, min extendedprice)
     // is the partsupp surrogate): the correlated-min-subquery shape —
@@ -4065,7 +4084,7 @@ object SparkEntry {
         | project s_acctbal, s_name, n_name, p_partkey, cost = todouble(min_c) / 100.0
         | sort by s_acctbal desc, n_name asc, s_name asc, p_partkey asc
         | take 100"""),
-      Some("""WITH ps AS (SELECT l_partkey, l_suppkey, MIN(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS cost_c FROM lineitem GROUP BY 1, 2), mc AS (SELECT l_partkey, MIN(cost_c) AS min_c FROM ps GROUP BY 1) SELECT s_acctbal, s_name, n_name, p_partkey, CAST(min_c AS DOUBLE)/100.0 AS cost FROM ps JOIN mc ON ps.l_partkey = mc.l_partkey AND ps.cost_c = mc.min_c JOIN part ON ps.l_partkey = p_partkey JOIN supplier ON ps.l_suppkey = s_suppkey JOIN nation ON s_nationkey = n_nationkey WHERE p_size = 20 AND p_type = 'PROMO' ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100""")),
+      """WITH ps AS (SELECT l_partkey, l_suppkey, MIN(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS cost_c FROM lineitem GROUP BY 1, 2), mc AS (SELECT l_partkey, MIN(cost_c) AS min_c FROM ps GROUP BY 1) SELECT s_acctbal, s_name, n_name, p_partkey, CAST(min_c AS DOUBLE)/100.0 AS cost FROM ps JOIN mc ON ps.l_partkey = mc.l_partkey AND ps.cost_c = mc.min_c JOIN part ON ps.l_partkey = p_partkey JOIN supplier ON ps.l_suppkey = s_suppkey JOIN nation ON s_nationkey = n_nationkey WHERE p_size = 20 AND p_type = 'PROMO' ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100"""),
 
     // TPC-H Q7 (r6): volume shipping between two nations by year — the
     // dimension-joined-TWICE shape (nation as both supplier and
@@ -4088,7 +4107,7 @@ object SparkEntry {
             by supp_nation, cust_nation, l_year
         | project supp_nation, cust_nation, l_year, revenue = todouble(rc) / 10000.0
         | sort by supp_nation asc, cust_nation asc, l_year asc"""),
-      Some("""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation, CAST(year(l_shipdate) AS BIGINT) AS l_year, CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue FROM supplier JOIN lineitem ON s_suppkey = l_suppkey JOIN orders ON o_orderkey = l_orderkey JOIN customer ON c_custkey = o_custkey JOIN nation n1 ON s_nationkey = n1.n_nationkey JOIN nation n2 ON c_nationkey = n2.n_nationkey WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2') OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')) AND l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01' GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""")),
+      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation, CAST(year(l_shipdate) AS BIGINT) AS l_year, CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue FROM supplier JOIN lineitem ON s_suppkey = l_suppkey JOIN orders ON o_orderkey = l_orderkey JOIN customer ON c_custkey = o_custkey JOIN nation n1 ON s_nationkey = n1.n_nationkey JOIN nation n2 ON c_nationkey = n2.n_nationkey WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2') OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')) AND l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01' GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""),
 
     // TPC-H Q13 (r6, o_orderpriority filter standing in for the
     // o_comment NOT LIKE): order-count-per-customer histogram — LEFT
@@ -4100,7 +4119,7 @@ object SparkEntry {
         | summarize c_count = countif(isnotnull(o_orderkey)) by c_custkey
         | summarize custdist = count() by c_count
         | sort by custdist desc, c_count desc"""),
-      Some("""WITH co AS (SELECT c_custkey, COUNT(o_orderkey) AS c_count FROM customer LEFT JOIN orders ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT' GROUP BY 1) SELECT CAST(c_count AS BIGINT) AS c_count, CAST(COUNT(*) AS BIGINT) AS custdist FROM co GROUP BY 1 ORDER BY custdist DESC, c_count DESC""")),
+      """WITH co AS (SELECT c_custkey, COUNT(o_orderkey) AS c_count FROM customer LEFT JOIN orders ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT' GROUP BY 1) SELECT CAST(c_count AS BIGINT) AS c_count, CAST(COUNT(*) AS BIGINT) AS custdist FROM co GROUP BY 1 ORDER BY custdist DESC, c_count DESC"""),
 
     // TPC-H Q15 (r6): top supplier by quarterly revenue — the
     // max-over-aggregate join-back (the view + scalar-subquery shape;
@@ -4116,7 +4135,7 @@ object SparkEntry {
         | join kind=inner (supplier) on $left.l_suppkey == $right.s_suppkey
         | project s_suppkey, s_name, total_revenue = todouble(tr) / 10000.0
         | sort by s_suppkey asc"""),
-      Some("""WITH rev AS (SELECT l_suppkey, SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS tr FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-04-01' GROUP BY 1) SELECT s_suppkey, s_name, CAST(tr AS DOUBLE) / 10000.0 AS total_revenue FROM supplier JOIN rev ON s_suppkey = l_suppkey WHERE tr = (SELECT MAX(tr) FROM rev) ORDER BY s_suppkey""")),
+      """WITH rev AS (SELECT l_suppkey, SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS tr FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-04-01' GROUP BY 1) SELECT s_suppkey, s_name, CAST(tr AS DOUBLE) / 10000.0 AS total_revenue FROM supplier JOIN rev ON s_suppkey = l_suppkey WHERE tr = (SELECT MAX(tr) FROM rev) ORDER BY s_suppkey"""),
 
     // TPC-H Q17 (r6): small-quantity revenue — the correlated-AVG
     // subquery as a per-part aggregate joined back. l_quantity is
@@ -4131,7 +4150,7 @@ object SparkEntry {
         | where l_quantity < 0.2 * aq
         | summarize rc = sum(tolong(round(l_extendedprice * 100)))
         | project avg_yearly = round(todouble(rc) / 100.0 / 7.0, 4)"""),
-      Some("""WITH pa AS (SELECT l_partkey, AVG(l_quantity) AS aq FROM lineitem GROUP BY 1) SELECT ROUND(CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 / 7.0, 4) AS avg_yearly FROM lineitem JOIN part ON l_partkey = p_partkey JOIN pa USING (l_partkey) WHERE p_brand = 'Brand#23' AND l_quantity < 0.2 * aq""")),
+      """WITH pa AS (SELECT l_partkey, AVG(l_quantity) AS aq FROM lineitem GROUP BY 1) SELECT ROUND(CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 / 7.0, 4) AS avg_yearly FROM lineitem JOIN part ON l_partkey = p_partkey JOIN pa USING (l_partkey) WHERE p_brand = 'Brand#23' AND l_quantity < 0.2 * aq"""),
 
     // TPC-H Q19 (r6): the disjunction-of-conjunctions predicate — three
     // brand/size/quantity bands OR'd over the same fact-dim join
@@ -4143,7 +4162,7 @@ object SparkEntry {
              or (p_brand == 'Brand#34' and p_size between (1 .. 35) and l_quantity >= 20 and l_quantity <= 30)
         | summarize rc = sum(tolong(round(l_extendedprice * (1 - l_discount) * 10000)))
         | project revenue = todouble(rc) / 10000.0"""),
-      Some("""SELECT CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue FROM lineitem JOIN part ON p_partkey = l_partkey WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15 AND l_quantity >= 1 AND l_quantity <= 11) OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25 AND l_quantity >= 10 AND l_quantity <= 20) OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35 AND l_quantity >= 20 AND l_quantity <= 30)""")),
+      """SELECT CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue FROM lineitem JOIN part ON p_partkey = l_partkey WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15 AND l_quantity >= 1 AND l_quantity <= 11) OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25 AND l_quantity >= 10 AND l_quantity <= 20) OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35 AND l_quantity >= 20 AND l_quantity <= 30)"""),
 
     // TPC-H Q22 (r6; nationkey%5 standing in for the phone country
     // code, and the NOT EXISTS scoped to RECENT orders — the synthetic
@@ -4163,7 +4182,7 @@ object SparkEntry {
         | summarize numcust = count(), tb = sum(bal_c) by code
         | project cntrycode = tolong(code), numcust, totacctbal = todouble(tb) / 100.0
         | sort by cntrycode asc"""),
-      Some("""WITH cb AS (SELECT c_custkey, c_nationkey % 5 AS code, CAST(ROUND(c_acctbal * 100) AS BIGINT) AS bal_c FROM customer), av AS (SELECT AVG(bal_c) AS a FROM cb WHERE bal_c > 0) SELECT CAST(code AS BIGINT) AS cntrycode, CAST(COUNT(*) AS BIGINT) AS numcust, CAST(SUM(bal_c) AS DOUBLE) / 100.0 AS totacctbal FROM cb, av WHERE bal_c > a AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderdate >= TIMESTAMP '2000-01-01') GROUP BY 1 ORDER BY 1""")),
+      """WITH cb AS (SELECT c_custkey, c_nationkey % 5 AS code, CAST(ROUND(c_acctbal * 100) AS BIGINT) AS bal_c FROM customer), av AS (SELECT AVG(bal_c) AS a FROM cb WHERE bal_c > 0) SELECT CAST(code AS BIGINT) AS cntrycode, CAST(COUNT(*) AS BIGINT) AS numcust, CAST(SUM(bal_c) AS DOUBLE) / 100.0 AS totacctbal FROM cb, av WHERE bal_c > a AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderdate >= TIMESTAMP '2000-01-01') GROUP BY 1 ORDER BY 1"""),
 
     // TPC-H Q8 (r6): national market share — the deepest join tree in
     // the suite (7 tables, nation joined twice, region rollup) + a
@@ -4188,7 +4207,7 @@ object SparkEntry {
             by o_year
         | project o_year, mkt_share = round(todouble(num) / todouble(den), 6)
         | sort by o_year asc"""),
-      Some("""WITH vol AS (SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year, CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT) AS v, n2.n_name AS supp_nation FROM part JOIN lineitem ON p_partkey = l_partkey JOIN supplier ON s_suppkey = l_suppkey JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey JOIN nation n1 ON c_nationkey = n1.n_nationkey JOIN region ON n1.n_regionkey = r_regionkey JOIN nation n2 ON s_nationkey = n2.n_nationkey WHERE r_name = 'ASIA' AND p_type = 'PROMO' AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01') SELECT o_year, ROUND(CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN v ELSE 0 END) AS DOUBLE) / SUM(v), 6) AS mkt_share FROM vol GROUP BY 1 ORDER BY 1""")),
+      """WITH vol AS (SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year, CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT) AS v, n2.n_name AS supp_nation FROM part JOIN lineitem ON p_partkey = l_partkey JOIN supplier ON s_suppkey = l_suppkey JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey JOIN nation n1 ON c_nationkey = n1.n_nationkey JOIN region ON n1.n_regionkey = r_regionkey JOIN nation n2 ON s_nationkey = n2.n_nationkey WHERE r_name = 'ASIA' AND p_type = 'PROMO' AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01') SELECT o_year, ROUND(CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN v ELSE 0 END) AS DOUBLE) / SUM(v), 6) AS mkt_share FROM vol GROUP BY 1 ORDER BY 1"""),
 
     // TPC-H Q9 (r6; the fixture has no partsupp table, so the three
     // partsupp-dependent shapes run on a DOCUMENTED lineitem-derived
@@ -4214,7 +4233,7 @@ object SparkEntry {
         | summarize pt = sum(profit_tt) by nation = n_name, o_year = tolong(getyear(o_orderdate))
         | project nation, o_year, sum_profit = todouble(pt) / 10000.0
         | sort by nation asc, o_year desc"""),
-      Some("""WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey, MIN(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS ps_supplycost_c FROM lineitem GROUP BY 1, 2) SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year, CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT) - ps_supplycost_c * 100 * CAST(ROUND(l_quantity) AS BIGINT)) AS DOUBLE) / 10000.0 AS sum_profit FROM part JOIN lineitem ON p_partkey = l_partkey JOIN supplier ON s_suppkey = l_suppkey JOIN ps ON ps_partkey = l_partkey AND ps_suppkey = l_suppkey JOIN orders ON o_orderkey = l_orderkey JOIN nation ON s_nationkey = n_nationkey WHERE p_type = 'PROMO' GROUP BY 1, 2 ORDER BY 1, 2 DESC""")),
+      """WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey, MIN(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS ps_supplycost_c FROM lineitem GROUP BY 1, 2) SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year, CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT) - ps_supplycost_c * 100 * CAST(ROUND(l_quantity) AS BIGINT)) AS DOUBLE) / 10000.0 AS sum_profit FROM part JOIN lineitem ON p_partkey = l_partkey JOIN supplier ON s_suppkey = l_suppkey JOIN ps ON ps_partkey = l_partkey AND ps_suppkey = l_suppkey JOIN orders ON o_orderkey = l_orderkey JOIN nation ON s_nationkey = n_nationkey WHERE p_type = 'PROMO' GROUP BY 1, 2 ORDER BY 1, 2 DESC"""),
 
     // TPC-H Q11 (r6, same surrogate): important-stock — the
     // group-total-fraction HAVING over an exact integer value sum
@@ -4236,7 +4255,7 @@ object SparkEntry {
         | project ps_partkey, value = todouble(sv) / 100.0
         | sort by value desc, ps_partkey asc
         | take 25"""),
-      Some("""WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey, MIN(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS ps_supplycost_c, CAST(COUNT(*) * 10 AS BIGINT) AS ps_availqty FROM lineitem GROUP BY 1, 2), pn AS (SELECT ps_partkey, ps_supplycost_c * ps_availqty AS v FROM ps JOIN supplier ON ps_suppkey = s_suppkey JOIN nation ON s_nationkey = n_nationkey WHERE n_name IN ('NATION_3','NATION_8')), tot AS (SELECT SUM(v) AS t FROM pn) SELECT ps_partkey, CAST(SUM(v) AS DOUBLE) / 100.0 AS value FROM pn, tot GROUP BY 1, t HAVING CAST(SUM(v) AS DOUBLE) > CAST(t AS DOUBLE) * 0.0015 ORDER BY value DESC, ps_partkey LIMIT 25""")),
+      """WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey, MIN(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS ps_supplycost_c, CAST(COUNT(*) * 10 AS BIGINT) AS ps_availqty FROM lineitem GROUP BY 1, 2), pn AS (SELECT ps_partkey, ps_supplycost_c * ps_availqty AS v FROM ps JOIN supplier ON ps_suppkey = s_suppkey JOIN nation ON s_nationkey = n_nationkey WHERE n_name IN ('NATION_3','NATION_8')), tot AS (SELECT SUM(v) AS t FROM pn) SELECT ps_partkey, CAST(SUM(v) AS DOUBLE) / 100.0 AS value FROM pn, tot GROUP BY 1, t HAVING CAST(SUM(v) AS DOUBLE) > CAST(t AS DOUBLE) * 0.0015 ORDER BY value DESC, ps_partkey LIMIT 25"""),
 
     // TPC-H Q20 (r6, same surrogate): suppliers with surplus stock of a
     // part type shipped in a window — the nested IN-subquery chain as a
@@ -4262,7 +4281,7 @@ object SparkEntry {
         | join kind=leftsemi (good) on $left.s_suppkey == $right.ps_suppkey
         | project s_name, s_suppkey
         | sort by s_name asc"""),
-      Some("""WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey, CAST(COUNT(*) * 10 AS BIGINT) AS ps_availqty FROM lineitem GROUP BY 1, 2), shipped AS (SELECT l_partkey, l_suppkey, SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS q FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01' GROUP BY 1, 2), good AS (SELECT DISTINCT ps_suppkey FROM ps JOIN shipped ON ps_partkey = l_partkey AND ps_suppkey = l_suppkey JOIN part ON p_partkey = ps_partkey WHERE p_type = 'PROMO' AND ps_availqty * 2 > q) SELECT s_name, s_suppkey FROM supplier JOIN nation ON s_nationkey = n_nationkey WHERE n_name IN ('NATION_1','NATION_2','NATION_3') AND s_suppkey IN (SELECT ps_suppkey FROM good) ORDER BY s_name""")),
+      """WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey, CAST(COUNT(*) * 10 AS BIGINT) AS ps_availqty FROM lineitem GROUP BY 1, 2), shipped AS (SELECT l_partkey, l_suppkey, SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS q FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01' GROUP BY 1, 2), good AS (SELECT DISTINCT ps_suppkey FROM ps JOIN shipped ON ps_partkey = l_partkey AND ps_suppkey = l_suppkey JOIN part ON p_partkey = ps_partkey WHERE p_type = 'PROMO' AND ps_availqty * 2 > q) SELECT s_name, s_suppkey FROM supplier JOIN nation ON s_nationkey = n_nationkey WHERE n_name IN ('NATION_1','NATION_2','NATION_3') AND s_suppkey IN (SELECT ps_suppkey FROM good) ORDER BY s_name"""),
 
     // scalar batch 6 (r5): unit conversions, codepoints, treepath,
     // bin_auto via the canonical let, format/url/has_any_index extras
@@ -4282,7 +4301,7 @@ object SparkEntry {
               hi = has_any_index('north south', 'east', 'south', 'north'),
               ba = bin_auto(47),
               tp = dynamic_to_json(treepath(dynamic({"a":{"b":1},"c":[5,6]})))"""),
-      Some("""SELECT 1609.344 AS mi, 100.0 AS tf, 3.141593 AS an, 453.5924 AS ma, 1.852 AS sp, 3600.0 AS en, 3.785412 AS vo, '1,234,567.89' AS fn, 'a%20b%2Bc' AS ue, '[72,105,9731]' AS cp, 'Hi☃' AS cs, CAST(1 AS BIGINT) AS hi, CAST(40 AS BIGINT) AS ba, '["[''a'']","[''a''][''b'']","[''c'']","[''c''][0]","[''c''][1]"]' AS tp""")),
+      """SELECT 1609.344 AS mi, 100.0 AS tf, 3.141593 AS an, 453.5924 AS ma, 1.852 AS sp, 3600.0 AS en, 3.785412 AS vo, '1,234,567.89' AS fn, 'a%20b%2Bc' AS ue, '[72,105,9731]' AS cp, 'Hi☃' AS cs, CAST(1 AS BIGINT) AS hi, CAST(40 AS BIGINT) AS ba, '["[''a'']","[''a''][''b'']","[''c'']","[''c''][0]","[''c''][1]"]' AS tp"""),
 
     // geo point-to-line distance (r5): cross-track/along-track spherical
     // decomposition per segment, min over the LineString. Expected
@@ -4296,7 +4315,7 @@ object SparkEntry {
               dynamic({"type":"LineString","coordinates":[[0.0,0.0],[1.0,0.0]]})), 4),
             multiseg = round(geo_distance_point_to_line(0.5, 0.3,
               dynamic({"type":"LineString","coordinates":[[0.0,0.0],[1.0,0.0],[1.0,1.0]]})), 4)"""),
-      Some("""SELECT 1910.9925 AS interior, 111194.9266 AS endpoint, 33358.478 AS multiseg""")),
+      """SELECT 1910.9925 AS interior, 111194.9266 AS endpoint, 33358.478 AS multiseg"""),
 
     // scalar batch 7 (r5): pairwise replace_strings, windows
     // command-line parsing, geohash neighbor cells (NW..SE order,
@@ -4308,14 +4327,14 @@ object SparkEntry {
             nb = dynamic_to_json(geo_geohash_neighbors('u4pruy')),
             pd = punycode_domain_from_string('académie-française.fr'),
             pu = punycode_domain_to_string('xn--acadmie-franaise-npb1a.fr')"""),
-      Some("""SELECT 'A slow brown dog' AS rs, '["program.exe","a b","c"]' AS cl, '["u4prux","u4pruz","u4prvp","u4pruw","u4prvn","u4prut","u4pruv","u4prvj"]' AS nb, 'xn--acadmie-franaise-npb1a.fr' AS pd, 'académie-française.fr' AS pu""")),
+      """SELECT 'A slow brown dog' AS rs, '["program.exe","a b","c"]' AS cl, '["u4prux","u4pruz","u4prvp","u4pruw","u4prvn","u4prut","u4pruv","u4prvj"]' AS nb, 'xn--acadmie-franaise-npb1a.fr' AS pd, 'académie-française.fr' AS pu"""),
 
     // parallel-array sorting: companion arrays reordered by the first
     "q130_parallel_sort" -> Q(kqlQ(
       """print s = array_sort_asc(pack_array(3, 1, 2), pack_array(30, 10, 20)),
               d = array_sort_desc(pack_array(3, 1, 2), pack_array(30, 10, 20))
         | project k1 = tolong(s[0][0]), v1 = tolong(s[1][0]), dk1 = tolong(d[0][0]), dv1 = tolong(d[1][0])"""),
-      Some("""SELECT CAST(1 AS BIGINT) AS k1, CAST(10 AS BIGINT) AS v1, CAST(3 AS BIGINT) AS dk1, CAST(30 AS BIGINT) AS dv1""")),
+      """SELECT CAST(1 AS BIGINT) AS k1, CAST(10 AS BIGINT) AS v1, CAST(3 AS BIGINT) AS dk1, CAST(30 AS BIGINT) AS dv1"""),
 
     // polynomial least squares recovering an exact quadratic
     "q129_fit_poly" -> Q(kqlQ(
@@ -4324,7 +4343,7 @@ object SparkEntry {
                   c0 = round(todouble(f.coefficients[0]), 9),
                   c1 = round(todouble(f.coefficients[1]), 9),
                   c2 = round(todouble(f.coefficients[2]), 9)"""),
-      Some("""SELECT CAST(1.0 AS DOUBLE) AS r2, CAST(2.0 AS DOUBLE) AS c0, CAST(-3.0 AS DOUBLE) AS c1, CAST(1.0 AS DOUBLE) AS c2""")),
+      """SELECT CAST(1.0 AS DOUBLE) AS r2, CAST(2.0 AS DOUBLE) AS c0, CAST(-3.0 AS DOUBLE) AS c1, CAST(1.0 AS DOUBLE) AS c2"""),
 
     // DFT closed forms: impulse → flat spectrum; sin(2πn/4) → X₁ = −2i;
     // ifft∘fft = identity on a non-power-of-two length (direct-DFT path)
@@ -4336,7 +4355,7 @@ object SparkEntry {
         | project r1 = round(todouble(f1.re[3]), 9), i1 = round(abs(todouble(f1.im[3])), 9),
                   i2 = round(todouble(f2.im[1]), 9),
                   rt2 = round(todouble(rt.re[2]), 9), rti = round(abs(todouble(rt.im[2])), 9)"""),
-      Some("""SELECT CAST(1.0 AS DOUBLE) AS r1, CAST(0.0 AS DOUBLE) AS i1, CAST(-2.0 AS DOUBLE) AS i2, CAST(4.0 AS DOUBLE) AS rt2, CAST(0.0 AS DOUBLE) AS rti""")),
+      """SELECT CAST(1.0 AS DOUBLE) AS r1, CAST(0.0 AS DOUBLE) AS i1, CAST(-2.0 AS DOUBLE) AS i2, CAST(4.0 AS DOUBLE) AS rt2, CAST(0.0 AS DOUBLE) AS rti"""),
 
     // token-precedence UA classification (Edge before Chrome before
     // Safari) over three canonical UA strings
@@ -4344,14 +4363,14 @@ object SparkEntry {
       """print c = parse_user_agent('Mozilla/5.0 (Windows NT 10.0; Win64; x64) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/120.0.0.0 Safari/537.36'),
               e = parse_user_agent('Mozilla/5.0 (Windows NT 10.0) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/120.0.0.0 Safari/537.36 Edg/120.0.100.0'),
               s = parse_user_agent('Mozilla/5.0 (iPhone; CPU iPhone OS 17_0 like Mac OS X) AppleWebKit/605.1.15 (KHTML, like Gecko) Version/17.0 Mobile/15E148 Safari/604.1')"""),
-      Some("""SELECT '{"Browser":{"Family":"Chrome","MajorVersion":"120"},"OperatingSystem":{"Family":"Windows"}}' AS c, '{"Browser":{"Family":"Edge","MajorVersion":"120"},"OperatingSystem":{"Family":"Windows"}}' AS e, '{"Browser":{"Family":"Safari","MajorVersion":"17"},"OperatingSystem":{"Family":"iOS"}}' AS s""")),
+      """SELECT '{"Browser":{"Family":"Chrome","MajorVersion":"120"},"OperatingSystem":{"Family":"Windows"}}' AS c, '{"Browser":{"Family":"Edge","MajorVersion":"120"},"OperatingSystem":{"Family":"Windows"}}' AS e, '{"Browser":{"Family":"Safari","MajorVersion":"17"},"OperatingSystem":{"Family":"iOS"}}' AS s"""),
 
     // RFC 4180 CSV line parsing and XML-to-dynamic conversion
     "q126_parse_csv_xml" -> Q(kqlQ(
       """print c = parse_csv('a,"b,c",d,"e""f"'),
               x = parse_xml('<r a="1"><k>v</k><k>w</k><t>hi</t></r>')
         | project c1 = tostring(c[1]), c3 = tostring(c[3]), n = array_length(c), x"""),
-      Some("""SELECT 'b,c' AS c1, 'e"f' AS c3, CAST(4 AS BIGINT) AS n, '{"r":{"@a":"1","k":["v","w"],"t":"hi"}}' AS x""")),
+      """SELECT 'b,c' AS c1, 'e"f' AS c3, CAST(4 AS BIGINT) AS n, '{"r":{"@a":"1","k":["v","w"],"t":"hi"}}' AS x"""),
 
     // great-circle line length, spherical polygon area, and the windowed
     // array_index_of form — closed-form equatorial pins
@@ -4360,7 +4379,7 @@ object SparkEntry {
               pa = round(geo_polygon_area('{"type":"Polygon","coordinates":[[[0.0,0.0],[1.0,0.0],[1.0,1.0],[0.0,1.0],[0.0,0.0]]]}') / 10000000000.0, 2),
               a1 = array_index_of(pack_array(5, 7, 5, 7, 5), 7, 2),
               a2 = array_index_of(pack_array(5, 7, 5, 7, 5), 5, 0, -1, 3)"""),
-      Some("""SELECT CAST(222.4 AS DOUBLE) AS ll, CAST(1.24 AS DOUBLE) AS pa, CAST(3 AS BIGINT) AS a1, CAST(4 AS BIGINT) AS a2""")),
+      """SELECT CAST(222.4 AS DOUBLE) AS ll, CAST(1.24 AS DOUBLE) AS pa, CAST(3 AS BIGINT) AS a1, CAST(4 AS BIGINT) AS a2"""),
 
     // punycode via the JDK IDN codec (raw RFC 3492, no ACE prefix) and
     // the windowed/nth-occurrence indexof form
@@ -4371,7 +4390,7 @@ object SparkEntry {
               i1 = indexof('abcabcabc', 'bc', 0, -1, 2),
               i2 = indexof('abcabcabc', 'bc', 2, -1, 1),
               i3 = indexof('abcabcabc', 'bc', 0, 2, 1)"""),
-      Some("""SELECT 'acadmie-franaise-npb1a' AS enc, 'académie-française' AS dec, 'hello-' AS ascii, CAST(4 AS BIGINT) AS i1, CAST(4 AS BIGINT) AS i2, CAST(-1 AS BIGINT) AS i3""")),
+      """SELECT 'acadmie-franaise-npb1a' AS enc, 'académie-française' AS dec, 'hello-' AS ascii, CAST(4 AS BIGINT) AS i1, CAST(4 AS BIGINT) AS i2, CAST(-1 AS BIGINT) AS i3"""),
 
     // every signup→purchase sequence start per user with a 2d step gap
     // inside a 3d span; greedy-earliest completion per start
@@ -4380,7 +4399,7 @@ object SparkEntry {
         | evaluate sequence_detect(ts, 2d, 3d, event_type == 'signup', event_type == 'purchase', user_id)
         | summarize n = count(), u = count_distinct(user_id)
         | project n, u"""),
-      Some("""WITH s AS (SELECT DISTINCT user_id, ts AS t1 FROM events WHERE event_type = 'signup'), c AS (SELECT s.user_id, s.t1, MIN(e.ts) AS t2 FROM s JOIN events e ON e.user_id = s.user_id AND e.event_type = 'purchase' AND e.ts > s.t1 AND e.ts <= s.t1 + INTERVAL 2 DAY GROUP BY 1, 2) SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS u FROM c WHERE epoch_us(t2) - epoch_us(t1) <= 259200000000""")),
+      """WITH s AS (SELECT DISTINCT user_id, ts AS t1 FROM events WHERE event_type = 'signup'), c AS (SELECT s.user_id, s.t1, MIN(e.ts) AS t2 FROM s JOIN events e ON e.user_id = s.user_id AND e.event_type = 'purchase' AND e.ts > s.t1 AND e.ts <= s.t1 + INTERVAL 2 DAY GROUP BY 1, 2) SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS u FROM c WHERE epoch_us(t2) - epoch_us(t1) <= 259200000000"""),
 
     // context rows around matches via two-phase lag/lead (no
     // single-partition window): 1 before, 1 after each URGENT order of
@@ -4392,14 +4411,14 @@ object SparkEntry {
         | evaluate rows_near(o_orderpriority == '1-URGENT', 1, 1)
         | project o_orderkey
         | sort by o_orderkey asc"""),
-      Some("""WITH f AS (SELECT o_orderkey, o_orderpriority, ROW_NUMBER() OVER (ORDER BY o_orderkey) AS rn FROM orders WHERE o_custkey = (SELECT o_custkey FROM orders ORDER BY o_orderkey LIMIT 1)) SELECT f.o_orderkey FROM f WHERE EXISTS (SELECT 1 FROM f f2 WHERE f2.o_orderpriority = '1-URGENT' AND f.rn BETWEEN f2.rn - 1 AND f2.rn + 1) ORDER BY 1""")),
+      """WITH f AS (SELECT o_orderkey, o_orderpriority, ROW_NUMBER() OVER (ORDER BY o_orderkey) AS rn FROM orders WHERE o_custkey = (SELECT o_custkey FROM orders ORDER BY o_orderkey LIMIT 1)) SELECT f.o_orderkey FROM f WHERE EXISTS (SELECT 1 FROM f f2 WHERE f2.o_orderpriority = '1-URGENT' AND f.rn BETWEEN f2.rn - 1 AND f2.rn + 1) ORDER BY 1"""),
 
     // frequent attribute segments over the cube lattice, ratio threshold
     "q122_basket" -> Q(kqlQ(
       """orders
         | evaluate basket(0.15, o_orderpriority, o_orderstatus)
         | sort by percent desc, o_orderpriority asc nulls first, o_orderstatus asc nulls first"""),
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS count_, ROUND(COUNT(*) * 100.0 / (SELECT COUNT(*) FROM orders), 2) AS percent, o_orderpriority, o_orderstatus FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus) HAVING NOT (GROUPING(o_orderpriority) = 1 AND GROUPING(o_orderstatus) = 1) AND ROUND(COUNT(*) * 100.0 / (SELECT COUNT(*) FROM orders), 2) >= 15.0 ORDER BY percent DESC, o_orderpriority ASC NULLS FIRST, o_orderstatus ASC NULLS FIRST""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS count_, ROUND(COUNT(*) * 100.0 / (SELECT COUNT(*) FROM orders), 2) AS percent, o_orderpriority, o_orderstatus FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus) HAVING NOT (GROUPING(o_orderpriority) = 1 AND GROUPING(o_orderstatus) = 1) AND ROUND(COUNT(*) * 100.0 / (SELECT COUNT(*) FROM orders), 2) >= 15.0 ORDER BY percent DESC, o_orderpriority ASC NULLS FIRST, o_orderstatus ASC NULLS FIRST"""),
 
     // sketch-space set algebra: intersection by inclusion-exclusion over
     // mergeable HLL unions (exact at this cardinality — sketches stay in
@@ -4409,7 +4428,7 @@ object SparkEntry {
         | summarize h1 = hll(iff(c_mktsegment == 'BUILDING', c_nationkey, tolong(''))),
                     h2 = hll(iff(c_mktsegment == 'AUTOMOBILE', c_nationkey, tolong('')))
         | evaluate dcount_intersect(h1, h2)"""),
-      Some("""SELECT CAST((SELECT COUNT(DISTINCT c_nationkey) FROM customer WHERE c_mktsegment = 'BUILDING') AS BIGINT) AS s0, CAST((SELECT COUNT(DISTINCT c_nationkey) FROM customer WHERE c_mktsegment = 'BUILDING' AND c_nationkey IN (SELECT c_nationkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE')) AS BIGINT) AS s1""")),
+      """SELECT CAST((SELECT COUNT(DISTINCT c_nationkey) FROM customer WHERE c_mktsegment = 'BUILDING') AS BIGINT) AS s0, CAST((SELECT COUNT(DISTINCT c_nationkey) FROM customer WHERE c_mktsegment = 'BUILDING' AND c_nationkey IN (SELECT c_nationkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE')) AS BIGINT) AS s1"""),
 
     // trailing-window exact percentile per bin (fan-out to covered bins,
     // one percentile hash aggregate)
@@ -4417,7 +4436,7 @@ object SparkEntry {
       """events
         | evaluate rolling_percentile(value, 50, ts, 1d, 7)
         | sort by ts asc"""),
-      Some("""WITH b AS (SELECT epoch_us(ts) - epoch_us(ts) % 86400000000 AS d, value FROM events) SELECT make_timestamp(b.d + s.g * 86400000000) AS ts, quantile_cont(b.value, 0.5) AS rolling_50_percentile FROM b CROSS JOIN generate_series(0, 6) s(g) GROUP BY 1 ORDER BY 1""")),
+      """WITH b AS (SELECT epoch_us(ts) - epoch_us(ts) % 86400000000 AS d, value FROM events) SELECT make_timestamp(b.d + s.g * 86400000000) AS ts, quantile_cont(b.value, 0.5) AS rolling_50_percentile FROM b CROSS JOIN generate_series(0, 6) s(g) GROUP BY 1 ORDER BY 1"""),
 
     // CIDR-range enrichment join: broadcast dimension, long-range
     // containment arithmetic (no UDF)
@@ -4428,7 +4447,7 @@ object SparkEntry {
          | evaluate ipv4_lookup(ranges, ip, net)
          | project ip, label
          | sort by ip asc, label asc"""),
-      Some("""SELECT * FROM (VALUES ('10.1.2.3', 'net10'), ('10.255.0.1', 'net10'), ('192.168.5.5', 'net192'), ('8.8.8.8', 'dns')) AS t(ip, label) ORDER BY 1, 2""")),
+      """SELECT * FROM (VALUES ('10.1.2.3', 'net10'), ('10.255.0.1', 'net10'), ('192.168.5.5', 'net192'), ('8.8.8.8', 'dns')) AS t(ip, label) ORDER BY 1, 2"""),
 
     // even-odd ray casting over a GeoJSON square: inside, outside, and a
     // concave (L-shaped) polygon notch case
@@ -4439,7 +4458,7 @@ object SparkEntry {
                   o1 = geo_point_in_polygon(15.0, 5.0, sq),
                   i2 = geo_point_in_polygon(2.0, 8.0, el),
                   o2 = geo_point_in_polygon(8.0, 8.0, el)"""),
-      Some("""SELECT true AS i1, false AS o1, true AS i2, false AS o2""")),
+      """SELECT true AS i1, false AS o1, true AS i2, false AS o2"""),
 
     // Welch t-test p-values (closed-form pins: t=0 → p=1; 10σ apart → ~0)
     // and ACF-autodetected decomposition ≡ the explicit-period one
@@ -4453,7 +4472,7 @@ object SparkEntry {
                 1.0, 2.0, 3.0, 4.0, 1.0, 2.0, 3.0, 4.0, 1.0, 2.0, 3.0, 4.0,
                 1.0, 2.0, 3.0, 4.0, 1.0, 2.0, 3.0, 4.0, 1.0, 2.0, 3.0, 4.0), 4)
         | project p1, p0, same = tostring(auto.baseline) == tostring(expl.baseline)"""),
-      Some("""SELECT CAST(1.0 AS DOUBLE) AS p1, true AS p0, true AS same""")),
+      """SELECT CAST(1.0 AS DOUBLE) AS p1, true AS p0, true AS same"""),
 
     // sticky-activity distinct count: ids active in >= 3 distinct days of
     // the trailing week, per day — explode-to-covered-bins, two hash aggs
@@ -4461,7 +4480,7 @@ object SparkEntry {
       """events
         | evaluate active_users_count(user_id, ts, datetime(2024-01-01), datetime(2024-01-31), 7d, 1d, 3, 1d)
         | sort by ts asc"""),
-      Some("""WITH grid AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-31', INTERVAL 1 DAY)) AS b), pers AS (SELECT DISTINCT user_id, date_trunc('day', ts) AS p FROM events), hit AS (SELECT g.b, pers.user_id FROM grid g JOIN pers ON pers.p <= g.b AND pers.p > g.b - INTERVAL 7 DAY GROUP BY 1, 2 HAVING COUNT(DISTINCT pers.p) >= 3) SELECT g.b AS ts, CAST(COUNT(hit.user_id) AS BIGINT) AS dcount FROM grid g LEFT JOIN hit ON g.b = hit.b GROUP BY 1 ORDER BY 1""")),
+      """WITH grid AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-31', INTERVAL 1 DAY)) AS b), pers AS (SELECT DISTINCT user_id, date_trunc('day', ts) AS p FROM events), hit AS (SELECT g.b, pers.user_id FROM grid g JOIN pers ON pers.p <= g.b AND pers.p > g.b - INTERVAL 7 DAY GROUP BY 1, 2 HAVING COUNT(DISTINCT pers.p) >= 3) SELECT g.b AS ts, CAST(COUNT(hit.user_id) AS BIGINT) AS dcount FROM grid g LEFT JOIN hit ON g.b = hit.b GROUP BY 1 ORDER BY 1"""),
 
     // S2 cells: face tokens + the (0,0) leaf are reference S2 values;
     // the level-11 roundtrip pins the projection + Hilbert decode
@@ -4476,13 +4495,13 @@ object SparkEntry {
                     todouble(c.longitude), todouble(c.latitude)) < 10000.0,
                   stable = geo_point_to_s2cell(todouble(c.longitude),
                     todouble(c.latitude), 11) == t11"""),
-      Some("""SELECT '1000000000000001' AS leaf, '3' AS f1, '5' AS f2, '808f7e4' AS t11, true AS close, true AS stable""")),
+      """SELECT '1000000000000001' AS leaf, '3' AS f1, '5' AS f2, '808f7e4' AS t11, true AS close, true AS stable"""),
 
     "q111_topnested_others" -> Q(kqlQ(
       """orders
         | top-nested 2 of o_orderpriority with others = 'Other' by count()
         | sort by aggregated_o_orderpriority desc, o_orderpriority asc"""),
-      Some("""WITH l AS (SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS agg FROM orders GROUP BY 1), top2 AS (SELECT * FROM l QUALIFY ROW_NUMBER() OVER (ORDER BY agg DESC, o_orderpriority) <= 2) SELECT o_orderpriority, agg AS aggregated_o_orderpriority FROM top2 UNION ALL SELECT 'Other', CAST(SUM(agg) AS BIGINT) FROM l WHERE o_orderpriority NOT IN (SELECT o_orderpriority FROM top2) ORDER BY 2 DESC, 1""")),
+      """WITH l AS (SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS agg FROM orders GROUP BY 1), top2 AS (SELECT * FROM l QUALIFY ROW_NUMBER() OVER (ORDER BY agg DESC, o_orderpriority) <= 2) SELECT o_orderpriority, agg AS aggregated_o_orderpriority FROM top2 UNION ALL SELECT 'Other', CAST(SUM(agg) AS BIGINT) FROM l WHERE o_orderpriority NOT IN (SELECT o_orderpriority FROM top2) ORDER BY 2 DESC, 1"""),
 
     // per-bin activity metrics: the cumulative distinct is the running
     // sum of first-appearance counts — no set union, two hash aggregates
@@ -4490,7 +4509,7 @@ object SparkEntry {
       """events
         | evaluate activity_counts_metrics(user_id, ts, datetime(2024-01-01), datetime(2024-01-31), 1d)
         | sort by ts asc"""),
-      Some("""WITH b AS (SELECT user_id, epoch_us(ts) - (epoch_us(ts) - 1704067200000000) % 86400000000 AS d FROM events WHERE ts >= TIMESTAMP '2024-01-01' AND ts <= TIMESTAMP '2024-01-31'), per AS (SELECT d, CAST(COUNT(*) AS BIGINT) AS count_, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS dcount FROM b GROUP BY 1), fi AS (SELECT MIN(d) AS d FROM b GROUP BY user_id), nw AS (SELECT d, CAST(COUNT(*) AS BIGINT) AS new_dcount FROM fi GROUP BY 1) SELECT make_timestamp(per.d) AS ts, count_, dcount, COALESCE(new_dcount, 0) AS new_dcount, CAST(SUM(COALESCE(new_dcount, 0)) OVER (ORDER BY per.d ROWS UNBOUNDED PRECEDING) AS BIGINT) AS aggregated_dcount FROM per LEFT JOIN nw USING (d) ORDER BY 1""")),
+      """WITH b AS (SELECT user_id, epoch_us(ts) - (epoch_us(ts) - 1704067200000000) % 86400000000 AS d FROM events WHERE ts >= TIMESTAMP '2024-01-01' AND ts <= TIMESTAMP '2024-01-31'), per AS (SELECT d, CAST(COUNT(*) AS BIGINT) AS count_, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS dcount FROM b GROUP BY 1), fi AS (SELECT MIN(d) AS d FROM b GROUP BY user_id), nw AS (SELECT d, CAST(COUNT(*) AS BIGINT) AS new_dcount FROM fi GROUP BY 1) SELECT make_timestamp(per.d) AS ts, count_, dcount, COALESCE(new_dcount, 0) AS new_dcount, CAST(SUM(COALESCE(new_dcount, 0)) OVER (ORDER BY per.d ROWS UNBOUNDED PRECEDING) AS BIGINT) AS aggregated_dcount FROM per LEFT JOIN nw USING (d) ORDER BY 1"""),
 
     // dynamic-bag fit variants, path decomposition, percentile arrays
     "q113_scalar_batch4" -> Q(kqlQ(
@@ -4502,7 +4521,7 @@ object SparkEntry {
                   fl = series_fit_line_dynamic(pack_array(1.0, 2.0, 3.0, 4.0)),
                   pp = parse_path('/usr/local/data/file.tar.gz')
         | sort by l_returnflag asc"""),
-      Some("""SELECT l_returnflag, ROUND(quantile_cont(l_extendedprice, 0.25), 4) AS p25, ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS p50, ROUND(quantile_cont(l_extendedprice, 0.75), 4) AS p75, '{"slope":1.0,"interception":1.0,"rsquare":1.0}' AS fl, '{"RootPath":"","DirectoryPath":"/usr/local/data","DirectoryName":"data","Filename":"file.tar.gz","Extension":"gz"}' AS pp FROM lineitem GROUP BY 1 ORDER BY 1""")),
+      """SELECT l_returnflag, ROUND(quantile_cont(l_extendedprice, 0.25), 4) AS p25, ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS p50, ROUND(quantile_cont(l_extendedprice, 0.75), 4) AS p75, '{"slope":1.0,"interception":1.0,"rsquare":1.0}' AS fl, '{"RootPath":"","DirectoryPath":"/usr/local/data","DirectoryName":"data","Filename":"file.tar.gz","Extension":"gz"}' AS pp FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
     // graph pattern matching as relational algebra: each hop an
     // equi-join on node ids (AQE picks broadcast per hop); the oracle is
@@ -4517,7 +4536,7 @@ object SparkEntry {
            project nid = n.id, rid = r.id
          | summarize n_customers = count() by rid
          | sort by rid asc"""),
-      Some("""SELECT 'r' || n_regionkey AS rid, CAST(COUNT(*) AS BIGINT) AS n_customers FROM customer JOIN nation ON c_nationkey = n_nationkey GROUP BY 1 ORDER BY 1""")),
+      """SELECT 'r' || n_regionkey AS rid, CAST(COUNT(*) AS BIGINT) AS n_customers FROM customer JOIN nation ON c_nationkey = n_nationkey GROUP BY 1 ORDER BY 1"""),
 
     // bounded-BFS shortest paths: per-level frontier distinct, min(hops)
     // per (s, t); the source filter pushes through the aggregate into
@@ -4532,7 +4551,7 @@ object SparkEntry {
            where s.id == 'c1'
            project tid = t.id, hops = array_length(e)
          | sort by tid asc"""),
-      Some("""WITH c1 AS (SELECT c_nationkey FROM customer WHERE c_custkey = 1) SELECT 'n' || c_nationkey AS tid, CAST(1 AS BIGINT) AS hops FROM c1 UNION ALL SELECT 'r' || n_regionkey, CAST(2 AS BIGINT) FROM nation JOIN c1 ON n_nationkey = c1.c_nationkey ORDER BY 1""")),
+      """WITH c1 AS (SELECT c_nationkey FROM customer WHERE c_custkey = 1) SELECT 'n' || c_nationkey AS tid, CAST(1 AS BIGINT) AS hops FROM c1 UNION ALL SELECT 'r' || n_regionkey, CAST(2 AS BIGINT) FROM nation JOIN c1 ON n_nationkey = c1.c_nationkey ORDER BY 1"""),
 
     // PageRank (r6): damped power iteration over the customer→nation→
     // region edge union, 5 rounds. Every step is integer-micro
@@ -4551,7 +4570,7 @@ object SparkEntry {
          E
          | evaluate label_propagation(3, src, dst)
          | sort by id asc"""),
-      Some("""WITH e0 AS (SELECT DISTINCT src AS a, dst AS b FROM (SELECT 'c' || c_custkey AS src, 'n' || c_nationkey AS dst FROM customer UNION ALL SELECT 'n' || n_nationkey, 'r' || n_regionkey FROM nation) WHERE src <> dst), sym AS (SELECT a, b FROM e0 UNION SELECT b, a FROM e0), nodes AS (SELECT 'c' || c_custkey AS id FROM customer UNION SELECT 'n' || c_nationkey FROM customer UNION SELECT 'n' || n_nationkey FROM nation UNION SELECT 'r' || n_regionkey FROM nation), l0 AS (SELECT id, id AS lbl FROM nodes), w1 AS (SELECT id, lbl FROM (SELECT s.a AS id, p.lbl, COUNT(*) AS c, ROW_NUMBER() OVER (PARTITION BY s.a ORDER BY COUNT(*) DESC, p.lbl) AS rn FROM sym s JOIN l0 p ON s.b = p.id GROUP BY s.a, p.lbl) WHERE rn = 1), l1 AS (SELECT n.id, COALESCE(w.lbl, n.id) AS lbl FROM nodes n LEFT JOIN w1 w ON n.id = w.id), w2 AS (SELECT id, lbl FROM (SELECT s.a AS id, p.lbl, COUNT(*) AS c, ROW_NUMBER() OVER (PARTITION BY s.a ORDER BY COUNT(*) DESC, p.lbl) AS rn FROM sym s JOIN l1 p ON s.b = p.id GROUP BY s.a, p.lbl) WHERE rn = 1), l2 AS (SELECT n.id, COALESCE(w.lbl, n.id) AS lbl FROM nodes n LEFT JOIN w2 w ON n.id = w.id), w3 AS (SELECT id, lbl FROM (SELECT s.a AS id, p.lbl, COUNT(*) AS c, ROW_NUMBER() OVER (PARTITION BY s.a ORDER BY COUNT(*) DESC, p.lbl) AS rn FROM sym s JOIN l2 p ON s.b = p.id GROUP BY s.a, p.lbl) WHERE rn = 1), l3 AS (SELECT n.id, COALESCE(w.lbl, n.id) AS lbl FROM nodes n LEFT JOIN w3 w ON n.id = w.id), sz AS (SELECT lbl, CAST(COUNT(*) AS BIGINT) AS community_size FROM l3 GROUP BY 1) SELECT id, lbl AS community, community_size FROM l3 JOIN sz USING (lbl) ORDER BY id""")),
+      """WITH e0 AS (SELECT DISTINCT src AS a, dst AS b FROM (SELECT 'c' || c_custkey AS src, 'n' || c_nationkey AS dst FROM customer UNION ALL SELECT 'n' || n_nationkey, 'r' || n_regionkey FROM nation) WHERE src <> dst), sym AS (SELECT a, b FROM e0 UNION SELECT b, a FROM e0), nodes AS (SELECT 'c' || c_custkey AS id FROM customer UNION SELECT 'n' || c_nationkey FROM customer UNION SELECT 'n' || n_nationkey FROM nation UNION SELECT 'r' || n_regionkey FROM nation), l0 AS (SELECT id, id AS lbl FROM nodes), w1 AS (SELECT id, lbl FROM (SELECT s.a AS id, p.lbl, COUNT(*) AS c, ROW_NUMBER() OVER (PARTITION BY s.a ORDER BY COUNT(*) DESC, p.lbl) AS rn FROM sym s JOIN l0 p ON s.b = p.id GROUP BY s.a, p.lbl) WHERE rn = 1), l1 AS (SELECT n.id, COALESCE(w.lbl, n.id) AS lbl FROM nodes n LEFT JOIN w1 w ON n.id = w.id), w2 AS (SELECT id, lbl FROM (SELECT s.a AS id, p.lbl, COUNT(*) AS c, ROW_NUMBER() OVER (PARTITION BY s.a ORDER BY COUNT(*) DESC, p.lbl) AS rn FROM sym s JOIN l1 p ON s.b = p.id GROUP BY s.a, p.lbl) WHERE rn = 1), l2 AS (SELECT n.id, COALESCE(w.lbl, n.id) AS lbl FROM nodes n LEFT JOIN w2 w ON n.id = w.id), w3 AS (SELECT id, lbl FROM (SELECT s.a AS id, p.lbl, COUNT(*) AS c, ROW_NUMBER() OVER (PARTITION BY s.a ORDER BY COUNT(*) DESC, p.lbl) AS rn FROM sym s JOIN l2 p ON s.b = p.id GROUP BY s.a, p.lbl) WHERE rn = 1), l3 AS (SELECT n.id, COALESCE(w.lbl, n.id) AS lbl FROM nodes n LEFT JOIN w3 w ON n.id = w.id), sz AS (SELECT lbl, CAST(COUNT(*) AS BIGINT) AS community_size FROM l3 GROUP BY 1) SELECT id, lbl AS community, community_size FROM l3 JOIN sz USING (lbl) ORDER BY id"""),
 
     // Triangle counting (r8): per-node triangle counts via
     // degree-ordered orientation (each undirected edge points from its
@@ -4571,7 +4590,7 @@ object SparkEntry {
          E
          | evaluate triangle_count(src, dst)
          | sort by id asc"""),
-      Some("""WITH e AS (SELECT 'c' || c_custkey AS x, 'n' || c_nationkey AS y FROM customer UNION ALL SELECT 'n' || n_nationkey, 'r' || n_regionkey FROM nation UNION ALL SELECT 'c' || c_custkey, 'r' || n_regionkey FROM customer JOIN nation ON c_nationkey = n_nationkey), nodes AS (SELECT DISTINCT x AS id FROM e UNION SELECT DISTINCT y FROM e), und AS (SELECT DISTINCT LEAST(x, y) AS a, GREATEST(x, y) AS b FROM e WHERE x <> y), deg AS (SELECT id, COUNT(*) AS d FROM (SELECT a AS id FROM und UNION ALL SELECT b FROM und) GROUP BY 1), o AS (SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND und.a < und.b) THEN und.a ELSE und.b END AS u, CASE WHEN da.d < db.d OR (da.d = db.d AND und.a < und.b) THEN und.b ELSE und.a END AS v, CASE WHEN da.d < db.d OR (da.d = db.d AND und.a < und.b) THEN db.d ELSE da.d END AS dv FROM und JOIN deg da ON da.id = und.a JOIN deg db ON db.id = und.b), tri AS (SELECT l.u, l.v AS v1, r.v AS v2 FROM o l JOIN o r ON l.u = r.u AND (l.dv < r.dv OR (l.dv = r.dv AND l.v < r.v)) JOIN o c ON c.u = l.v AND c.v = r.v), pn AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS t FROM (SELECT u AS id FROM tri UNION ALL SELECT v1 FROM tri UNION ALL SELECT v2 FROM tri) GROUP BY 1) SELECT n.id, COALESCE(pn.t, CAST(0 AS BIGINT)) AS triangles FROM nodes n LEFT JOIN pn USING (id) ORDER BY n.id""")),
+      """WITH e AS (SELECT 'c' || c_custkey AS x, 'n' || c_nationkey AS y FROM customer UNION ALL SELECT 'n' || n_nationkey, 'r' || n_regionkey FROM nation UNION ALL SELECT 'c' || c_custkey, 'r' || n_regionkey FROM customer JOIN nation ON c_nationkey = n_nationkey), nodes AS (SELECT DISTINCT x AS id FROM e UNION SELECT DISTINCT y FROM e), und AS (SELECT DISTINCT LEAST(x, y) AS a, GREATEST(x, y) AS b FROM e WHERE x <> y), deg AS (SELECT id, COUNT(*) AS d FROM (SELECT a AS id FROM und UNION ALL SELECT b FROM und) GROUP BY 1), o AS (SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND und.a < und.b) THEN und.a ELSE und.b END AS u, CASE WHEN da.d < db.d OR (da.d = db.d AND und.a < und.b) THEN und.b ELSE und.a END AS v, CASE WHEN da.d < db.d OR (da.d = db.d AND und.a < und.b) THEN db.d ELSE da.d END AS dv FROM und JOIN deg da ON da.id = und.a JOIN deg db ON db.id = und.b), tri AS (SELECT l.u, l.v AS v1, r.v AS v2 FROM o l JOIN o r ON l.u = r.u AND (l.dv < r.dv OR (l.dv = r.dv AND l.v < r.v)) JOIN o c ON c.u = l.v AND c.v = r.v), pn AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS t FROM (SELECT u AS id FROM tri UNION ALL SELECT v1 FROM tri UNION ALL SELECT v2 FROM tri) GROUP BY 1) SELECT n.id, COALESCE(pn.t, CAST(0 AS BIGINT)) AS triangles FROM nodes n LEFT JOIN pn USING (id) ORDER BY n.id"""),
 
     // k-core peeling (r8): 3 synchronous rounds of "drop nodes with
     // fewer than 2 surviving neighbors". Suppliers (degree 1 — their
@@ -4590,7 +4609,7 @@ object SparkEntry {
          E
          | evaluate kcore(2, 3, src, dst)
          | sort by id asc"""),
-      Some("""WITH e AS (SELECT 'c' || c_custkey AS x, 'n' || c_nationkey AS y FROM customer UNION ALL SELECT 'n' || n_nationkey, 'r' || n_regionkey FROM nation UNION ALL SELECT 's' || s_suppkey, 'n' || s_nationkey FROM supplier UNION ALL SELECT 'c' || c_custkey, 'r' || n_regionkey FROM customer JOIN nation ON c_nationkey = n_nationkey), u0 AS (SELECT DISTINCT LEAST(x, y) AS a, GREATEST(x, y) AS b FROM e WHERE x <> y), d1 AS (SELECT id, COUNT(*) AS d FROM (SELECT a AS id FROM u0 UNION ALL SELECT b FROM u0) GROUP BY 1), k1 AS (SELECT id FROM d1 WHERE d >= 2), u1 AS (SELECT a, b FROM u0 JOIN k1 ka ON ka.id = u0.a JOIN k1 kb ON kb.id = u0.b), d2 AS (SELECT id, COUNT(*) AS d FROM (SELECT a AS id FROM u1 UNION ALL SELECT b FROM u1) GROUP BY 1), k2 AS (SELECT id FROM d2 WHERE d >= 2), u2 AS (SELECT a, b FROM u1 JOIN k2 ka ON ka.id = u1.a JOIN k2 kb ON kb.id = u1.b), d3 AS (SELECT id, COUNT(*) AS d FROM (SELECT a AS id FROM u2 UNION ALL SELECT b FROM u2) GROUP BY 1), k3 AS (SELECT id FROM d3 WHERE d >= 2), u3 AS (SELECT a, b FROM u2 JOIN k3 ka ON ka.id = u2.a JOIN k3 kb ON kb.id = u2.b) SELECT id, CAST(COUNT(*) AS BIGINT) AS degree FROM (SELECT a AS id FROM u3 UNION ALL SELECT b FROM u3) GROUP BY 1 ORDER BY 1""")),
+      """WITH e AS (SELECT 'c' || c_custkey AS x, 'n' || c_nationkey AS y FROM customer UNION ALL SELECT 'n' || n_nationkey, 'r' || n_regionkey FROM nation UNION ALL SELECT 's' || s_suppkey, 'n' || s_nationkey FROM supplier UNION ALL SELECT 'c' || c_custkey, 'r' || n_regionkey FROM customer JOIN nation ON c_nationkey = n_nationkey), u0 AS (SELECT DISTINCT LEAST(x, y) AS a, GREATEST(x, y) AS b FROM e WHERE x <> y), d1 AS (SELECT id, COUNT(*) AS d FROM (SELECT a AS id FROM u0 UNION ALL SELECT b FROM u0) GROUP BY 1), k1 AS (SELECT id FROM d1 WHERE d >= 2), u1 AS (SELECT a, b FROM u0 JOIN k1 ka ON ka.id = u0.a JOIN k1 kb ON kb.id = u0.b), d2 AS (SELECT id, COUNT(*) AS d FROM (SELECT a AS id FROM u1 UNION ALL SELECT b FROM u1) GROUP BY 1), k2 AS (SELECT id FROM d2 WHERE d >= 2), u2 AS (SELECT a, b FROM u1 JOIN k2 ka ON ka.id = u1.a JOIN k2 kb ON kb.id = u1.b), d3 AS (SELECT id, COUNT(*) AS d FROM (SELECT a AS id FROM u2 UNION ALL SELECT b FROM u2) GROUP BY 1), k3 AS (SELECT id FROM d3 WHERE d >= 2), u3 AS (SELECT a, b FROM u2 JOIN k3 ka ON ka.id = u2.a JOIN k3 kb ON kb.id = u2.b) SELECT id, CAST(COUNT(*) AS BIGINT) AS degree FROM (SELECT a AS id FROM u3 UNION ALL SELECT b FROM u3) GROUP BY 1 ORDER BY 1"""),
 
     // graph-mark-components (r8): the ADX operator — label every node
     // of the pending graph with its component id, then expose the node
@@ -4607,7 +4626,7 @@ object SparkEntry {
          | graph-mark-components with_component_id = comp
          | graph-to-table nodes
          | sort by id asc"""),
-      Some("""WITH cn AS (SELECT 'c' || c_custkey AS id, n_regionkey AS rk FROM customer JOIN nation ON c_nationkey = n_nationkey), nn AS (SELECT DISTINCT 'n' || n_nationkey AS id, n_regionkey AS rk FROM nation), rr AS (SELECT DISTINCT 'r' || n_regionkey AS id, n_regionkey AS rk FROM nation), allx AS (SELECT id, rk FROM cn UNION ALL SELECT id, rk FROM nn UNION ALL SELECT id, rk FROM rr), grp AS (SELECT rk, MIN(id) AS comp FROM allx GROUP BY 1) SELECT a.id, g.comp FROM allx a JOIN grp g USING (rk) ORDER BY a.id""")),
+      """WITH cn AS (SELECT 'c' || c_custkey AS id, n_regionkey AS rk FROM customer JOIN nation ON c_nationkey = n_nationkey), nn AS (SELECT DISTINCT 'n' || n_nationkey AS id, n_regionkey AS rk FROM nation), rr AS (SELECT DISTINCT 'r' || n_regionkey AS id, n_regionkey AS rk FROM nation), allx AS (SELECT id, rk FROM cn UNION ALL SELECT id, rk FROM nn UNION ALL SELECT id, rk FROM rr), grp AS (SELECT rk, MIN(id) AS comp FROM allx GROUP BY 1) SELECT a.id, g.comp FROM allx a JOIN grp g USING (rk) ORDER BY a.id"""),
 
     "q156_pagerank" -> Q(kqlQ(
       """let E = union
@@ -4616,7 +4635,7 @@ object SparkEntry {
          E
          | evaluate pagerank(5, src, dst)
          | sort by id asc"""),
-      Some("""WITH e AS (SELECT DISTINCT src, dst FROM (SELECT 'c' || c_custkey AS src, 'n' || c_nationkey AS dst FROM customer UNION ALL SELECT 'n' || n_nationkey, 'r' || n_regionkey FROM nation)), nodes AS (SELECT DISTINCT src AS id FROM e UNION SELECT DISTINCT dst FROM e), od AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM e GROUP BY 1), r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS r FROM nodes), r1 AS (SELECT n.id, CAST(150000 + (85 * COALESCE(x.s, 0)) // 100 AS BIGINT) AS r FROM nodes n LEFT JOIN (SELECT e.dst AS id, SUM(p.r // od.d) AS s FROM e JOIN r0 p ON e.src = p.id JOIN od ON od.src = e.src GROUP BY 1) x ON n.id = x.id), r2 AS (SELECT n.id, CAST(150000 + (85 * COALESCE(x.s, 0)) // 100 AS BIGINT) AS r FROM nodes n LEFT JOIN (SELECT e.dst AS id, SUM(p.r // od.d) AS s FROM e JOIN r1 p ON e.src = p.id JOIN od ON od.src = e.src GROUP BY 1) x ON n.id = x.id), r3 AS (SELECT n.id, CAST(150000 + (85 * COALESCE(x.s, 0)) // 100 AS BIGINT) AS r FROM nodes n LEFT JOIN (SELECT e.dst AS id, SUM(p.r // od.d) AS s FROM e JOIN r2 p ON e.src = p.id JOIN od ON od.src = e.src GROUP BY 1) x ON n.id = x.id), r4 AS (SELECT n.id, CAST(150000 + (85 * COALESCE(x.s, 0)) // 100 AS BIGINT) AS r FROM nodes n LEFT JOIN (SELECT e.dst AS id, SUM(p.r // od.d) AS s FROM e JOIN r3 p ON e.src = p.id JOIN od ON od.src = e.src GROUP BY 1) x ON n.id = x.id), r5 AS (SELECT n.id, CAST(150000 + (85 * COALESCE(x.s, 0)) // 100 AS BIGINT) AS r FROM nodes n LEFT JOIN (SELECT e.dst AS id, SUM(p.r // od.d) AS s FROM e JOIN r4 p ON e.src = p.id JOIN od ON od.src = e.src GROUP BY 1) x ON n.id = x.id) SELECT id, r AS rank_micros, CAST(r AS DOUBLE) / 1000000.0 AS rank FROM r5 ORDER BY id""")),
+      """WITH e AS (SELECT DISTINCT src, dst FROM (SELECT 'c' || c_custkey AS src, 'n' || c_nationkey AS dst FROM customer UNION ALL SELECT 'n' || n_nationkey, 'r' || n_regionkey FROM nation)), nodes AS (SELECT DISTINCT src AS id FROM e UNION SELECT DISTINCT dst FROM e), od AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM e GROUP BY 1), r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS r FROM nodes), r1 AS (SELECT n.id, CAST(150000 + (85 * COALESCE(x.s, 0)) // 100 AS BIGINT) AS r FROM nodes n LEFT JOIN (SELECT e.dst AS id, SUM(p.r // od.d) AS s FROM e JOIN r0 p ON e.src = p.id JOIN od ON od.src = e.src GROUP BY 1) x ON n.id = x.id), r2 AS (SELECT n.id, CAST(150000 + (85 * COALESCE(x.s, 0)) // 100 AS BIGINT) AS r FROM nodes n LEFT JOIN (SELECT e.dst AS id, SUM(p.r // od.d) AS s FROM e JOIN r1 p ON e.src = p.id JOIN od ON od.src = e.src GROUP BY 1) x ON n.id = x.id), r3 AS (SELECT n.id, CAST(150000 + (85 * COALESCE(x.s, 0)) // 100 AS BIGINT) AS r FROM nodes n LEFT JOIN (SELECT e.dst AS id, SUM(p.r // od.d) AS s FROM e JOIN r2 p ON e.src = p.id JOIN od ON od.src = e.src GROUP BY 1) x ON n.id = x.id), r4 AS (SELECT n.id, CAST(150000 + (85 * COALESCE(x.s, 0)) // 100 AS BIGINT) AS r FROM nodes n LEFT JOIN (SELECT e.dst AS id, SUM(p.r // od.d) AS s FROM e JOIN r3 p ON e.src = p.id JOIN od ON od.src = e.src GROUP BY 1) x ON n.id = x.id), r5 AS (SELECT n.id, CAST(150000 + (85 * COALESCE(x.s, 0)) // 100 AS BIGINT) AS r FROM nodes n LEFT JOIN (SELECT e.dst AS id, SUM(p.r // od.d) AS s FROM e JOIN r4 p ON e.src = p.id JOIN od ON od.src = e.src GROUP BY 1) x ON n.id = x.id) SELECT id, r AS rank_micros, CAST(r AS DOUBLE) / 1000000.0 AS rank FROM r5 ORDER BY id"""),
 
     // HITS hubs & authorities (r8): 2 rounds of Kleinberg's mutual
     // reinforcement on the customer→nation→region graph, max-normalized
@@ -4631,7 +4650,7 @@ object SparkEntry {
          E
          | evaluate hits(2, src, dst)
          | sort by id asc"""),
-      Some("""WITH e AS (SELECT DISTINCT src, dst FROM (SELECT 'c' || c_custkey AS src, 'n' || c_nationkey AS dst FROM customer UNION ALL SELECT 'n' || n_nationkey, 'r' || n_regionkey FROM nation)), nodes AS (SELECT DISTINCT src AS id FROM e UNION SELECT DISTINCT dst FROM e), h0 AS (SELECT id, CAST(1000000 AS BIGINT) AS h FROM nodes), ar1 AS (SELECT e.dst AS id, SUM(p.h) AS ar FROM e JOIN h0 p ON e.src = p.id GROUP BY 1), a1 AS (SELECT n.id, CAST((COALESCE(x.ar, 0) * 1000000) // (SELECT MAX(ar) FROM ar1) AS BIGINT) AS a FROM nodes n LEFT JOIN ar1 x ON n.id = x.id), hr1 AS (SELECT e.src AS id, SUM(q.a) AS hr FROM e JOIN a1 q ON e.dst = q.id GROUP BY 1), h1 AS (SELECT n.id, CAST((COALESCE(x.hr, 0) * 1000000) // (SELECT MAX(hr) FROM hr1) AS BIGINT) AS h FROM nodes n LEFT JOIN hr1 x ON n.id = x.id), ar2 AS (SELECT e.dst AS id, SUM(p.h) AS ar FROM e JOIN h1 p ON e.src = p.id GROUP BY 1), a2 AS (SELECT n.id, CAST((COALESCE(x.ar, 0) * 1000000) // (SELECT MAX(ar) FROM ar2) AS BIGINT) AS a FROM nodes n LEFT JOIN ar2 x ON n.id = x.id), hr2 AS (SELECT e.src AS id, SUM(q.a) AS hr FROM e JOIN a2 q ON e.dst = q.id GROUP BY 1), h2 AS (SELECT n.id, CAST((COALESCE(x.hr, 0) * 1000000) // (SELECT MAX(hr) FROM hr2) AS BIGINT) AS h FROM nodes n LEFT JOIN hr2 x ON n.id = x.id) SELECT n.id, h2.h AS hub_micros, a2.a AS auth_micros, CAST(h2.h AS DOUBLE) / 1000000.0 AS hub, CAST(a2.a AS DOUBLE) / 1000000.0 AS auth FROM nodes n JOIN h2 ON n.id = h2.id JOIN a2 ON n.id = a2.id ORDER BY n.id""")),
+      """WITH e AS (SELECT DISTINCT src, dst FROM (SELECT 'c' || c_custkey AS src, 'n' || c_nationkey AS dst FROM customer UNION ALL SELECT 'n' || n_nationkey, 'r' || n_regionkey FROM nation)), nodes AS (SELECT DISTINCT src AS id FROM e UNION SELECT DISTINCT dst FROM e), h0 AS (SELECT id, CAST(1000000 AS BIGINT) AS h FROM nodes), ar1 AS (SELECT e.dst AS id, SUM(p.h) AS ar FROM e JOIN h0 p ON e.src = p.id GROUP BY 1), a1 AS (SELECT n.id, CAST((COALESCE(x.ar, 0) * 1000000) // (SELECT MAX(ar) FROM ar1) AS BIGINT) AS a FROM nodes n LEFT JOIN ar1 x ON n.id = x.id), hr1 AS (SELECT e.src AS id, SUM(q.a) AS hr FROM e JOIN a1 q ON e.dst = q.id GROUP BY 1), h1 AS (SELECT n.id, CAST((COALESCE(x.hr, 0) * 1000000) // (SELECT MAX(hr) FROM hr1) AS BIGINT) AS h FROM nodes n LEFT JOIN hr1 x ON n.id = x.id), ar2 AS (SELECT e.dst AS id, SUM(p.h) AS ar FROM e JOIN h1 p ON e.src = p.id GROUP BY 1), a2 AS (SELECT n.id, CAST((COALESCE(x.ar, 0) * 1000000) // (SELECT MAX(ar) FROM ar2) AS BIGINT) AS a FROM nodes n LEFT JOIN ar2 x ON n.id = x.id), hr2 AS (SELECT e.src AS id, SUM(q.a) AS hr FROM e JOIN a2 q ON e.dst = q.id GROUP BY 1), h2 AS (SELECT n.id, CAST((COALESCE(x.hr, 0) * 1000000) // (SELECT MAX(hr) FROM hr2) AS BIGINT) AS h FROM nodes n LEFT JOIN hr2 x ON n.id = x.id) SELECT n.id, h2.h AS hub_micros, a2.a AS auth_micros, CAST(h2.h AS DOUBLE) / 1000000.0 AS hub, CAST(a2.a AS DOUBLE) / 1000000.0 AS auth FROM nodes n JOIN h2 ON n.id = h2.id JOIN a2 ON n.id = a2.id ORDER BY n.id"""),
 
     // Z-order layout round-trip (r8): documents written z-ordered on
     // (n_chars, knuth-hash dim) and re-read through a two-dimensional
@@ -4653,7 +4672,7 @@ object SparkEntry {
           .filter(col("n_chars") > 200 && col("h") < 500)
           .select("doc_id", "n_chars", "h").orderBy("doc_id")
       },
-      Some("""SELECT doc_id, n_chars, CAST((doc_id * 2654435761) % 4294967296 % 1000 AS BIGINT) AS h FROM documents WHERE n_chars > 200 AND (doc_id * 2654435761) % 4294967296 % 1000 < 500 ORDER BY doc_id""")),
+      """SELECT doc_id, n_chars, CAST((doc_id * 2654435761) % 4294967296 % 1000 AS BIGINT) AS h FROM documents WHERE n_chars > 200 AND (doc_id * 2654435761) % 4294967296 % 1000 < 500 ORDER BY doc_id""", IndexBuild),
 
     // Hilbert layout round-trip (r11): same contract as tmp_zorder_scan
     // for the locality-tighter curve — placement changes, content never
@@ -4673,7 +4692,7 @@ object SparkEntry {
           .filter(col("n_chars") > 200 && col("h") < 500)
           .select("doc_id", "n_chars", "h").orderBy("doc_id")
       },
-      Some("""SELECT doc_id, n_chars, CAST((doc_id * 2654435761) % 4294967296 % 1000 AS BIGINT) AS h FROM documents WHERE n_chars > 200 AND (doc_id * 2654435761) % 4294967296 % 1000 < 500 ORDER BY doc_id""")),
+      """SELECT doc_id, n_chars, CAST((doc_id * 2654435761) % 4294967296 % 1000 AS BIGINT) AS h FROM documents WHERE n_chars > 200 AND (doc_id * 2654435761) % 4294967296 % 1000 < 500 ORDER BY doc_id""", IndexBuild),
 
     // Weighted shortest paths (r8): 3 Bellman-Ford rounds from region
     // r0 over the region→nation→customer tree with integer weights —
@@ -4687,7 +4706,7 @@ object SparkEntry {
          E
          | evaluate shortest_paths_weighted('r0', 3, src, dst, w)
          | sort by id asc"""),
-      Some("""WITH e0 AS (SELECT 'r' || n_regionkey AS src, 'n' || n_nationkey AS dst, CAST(n_nationkey % 5 + 1 AS BIGINT) AS w FROM nation UNION ALL SELECT 'n' || c_nationkey, 'c' || c_custkey, CAST(c_custkey % 7 + 1 AS BIGINT) FROM customer), e AS (SELECT src, dst, MIN(w) AS w FROM e0 GROUP BY 1, 2), d0(id, d) AS (VALUES ('r0', CAST(0 AS BIGINT))), d1 AS (SELECT id, MIN(d) AS d FROM (SELECT id, d FROM d0 UNION ALL SELECT e.dst, d0.d + e.w FROM e JOIN d0 ON e.src = d0.id) GROUP BY 1), d2 AS (SELECT id, MIN(d) AS d FROM (SELECT id, d FROM d1 UNION ALL SELECT e.dst, d1.d + e.w FROM e JOIN d1 ON e.src = d1.id) GROUP BY 1), d3 AS (SELECT id, MIN(d) AS d FROM (SELECT id, d FROM d2 UNION ALL SELECT e.dst, d2.d + e.w FROM e JOIN d2 ON e.src = d2.id) GROUP BY 1) SELECT id, d AS dist FROM d3 ORDER BY id""")),
+      """WITH e0 AS (SELECT 'r' || n_regionkey AS src, 'n' || n_nationkey AS dst, CAST(n_nationkey % 5 + 1 AS BIGINT) AS w FROM nation UNION ALL SELECT 'n' || c_nationkey, 'c' || c_custkey, CAST(c_custkey % 7 + 1 AS BIGINT) FROM customer), e AS (SELECT src, dst, MIN(w) AS w FROM e0 GROUP BY 1, 2), d0(id, d) AS (VALUES ('r0', CAST(0 AS BIGINT))), d1 AS (SELECT id, MIN(d) AS d FROM (SELECT id, d FROM d0 UNION ALL SELECT e.dst, d0.d + e.w FROM e JOIN d0 ON e.src = d0.id) GROUP BY 1), d2 AS (SELECT id, MIN(d) AS d FROM (SELECT id, d FROM d1 UNION ALL SELECT e.dst, d1.d + e.w FROM e JOIN d1 ON e.src = d1.id) GROUP BY 1), d3 AS (SELECT id, MIN(d) AS d FROM (SELECT id, d FROM d2 UNION ALL SELECT e.dst, d2.d + e.w FROM e JOIN d2 ON e.src = d2.id) GROUP BY 1) SELECT id, d AS dist FROM d3 ORDER BY id"""),
 
     // bag_zip (r6): property bag from parallel key/value arrays —
     // result keyed by the KEYS length (missing values null, extras
@@ -4697,7 +4716,7 @@ object SparkEntry {
       """print z1 = bag_zip(pack_array('a', 'b', 'c'), pack_array(1, 2)),
               z2 = bag_zip(pack_array('x', 'y'), pack_array(10, 20, 30)),
               z3 = bag_zip(pack_array('k'), pack_array('v'))"""),
-      Some("""SELECT '{"a":1,"b":2,"c":null}' AS z1, '{"x":10,"y":20}' AS z2, '{"k":"v"}' AS z3""")),
+      """SELECT '{"a":1,"b":2,"c":null}' AS z1, '{"x":10,"y":20}' AS z2, '{"k":"v"}' AS z3"""),
 
     "q165_column_ifexists" -> Q(kqlQ(
       """documents
@@ -4705,7 +4724,7 @@ object SparkEntry {
             by l = tostring(column_ifexists('lang', 'xx')),
                m = tostring(column_ifexists('no_such_col', 'fb'))
         | sort by l asc"""),
-      Some("""SELECT lang AS l, 'fb' AS m, CAST(COUNT(*) AS BIGINT) AS n FROM documents GROUP BY 1, 2 ORDER BY 1""")),
+      """SELECT lang AS l, 'fb' AS m, CAST(COUNT(*) AS BIGINT) AS n FROM documents GROUP BY 1, 2 ORDER BY 1"""),
 
     // GUID ⇄ base64 (r6): Kusto's .NET mixed-endian Guid byte layout —
     // known-answer from the public docs example, zero-GUID, round-trip,
@@ -4716,7 +4735,7 @@ object SparkEntry {
               zero = base64_encode_fromguid(toguid('00000000-0000-0000-0000-000000000000')),
               rt = base64_decode_toguid(base64_encode_fromguid(toguid('12345678-9abc-def0-1234-56789abcdef0'))),
               bad = base64_decode_toguid('@@not-base64@@')"""),
-      Some("""SELECT '8jMxriJurkmwahbmqbIS6w==' AS enc, 'ae3133f2-6e22-49ae-b06a-16e6a9b212eb' AS dec, 'AAAAAAAAAAAAAAAAAAAAAA==' AS zero, '12345678-9abc-def0-1234-56789abcdef0' AS rt, CAST(NULL AS VARCHAR) AS bad""")),
+      """SELECT '8jMxriJurkmwahbmqbIS6w==' AS enc, 'ae3133f2-6e22-49ae-b06a-16e6a9b212eb' AS dec, 'AAAAAAAAAAAAAAAAAAAAAA==' AS zero, '12345678-9abc-def0-1234-56789abcdef0' AS rt, CAST(NULL AS VARCHAR) AS bad"""),
 
     // Funnel completion (r6): per (start-day, step) — users whose
     // earliest signup→click→purchase chain reached the step within 7
@@ -4727,7 +4746,7 @@ object SparkEntry {
         | evaluate funnel_sequence_completion(user_id, ts, event_type, 1d, 7d,
             'signup', 'click', 'purchase')
         | sort by period asc, step_idx asc"""),
-      Some("""WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events WHERE event_type = 'signup' GROUP BY 1), s2 AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM events e JOIN s1 USING (user_id) WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1), s3 AS (SELECT e.user_id, MIN(e.ts) AS t3 FROM events e JOIN s2 USING (user_id) WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1), f AS (SELECT s1.user_id, epoch_us(t1) AS u1, epoch_us(t2) AS u2, epoch_us(t3) AS u3 FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)), b AS (SELECT *, u1 - u1 % 86400000000 AS bin FROM f), grid AS (SELECT d.bin, s.i, s.st FROM (SELECT DISTINCT bin FROM b) d, (VALUES (CAST(0 AS BIGINT), 'signup'), (1, 'click'), (2, 'purchase')) s(i, st)), c1 AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n FROM b GROUP BY 1), c2 AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n FROM b WHERE u2 IS NOT NULL AND u2 - u1 <= 604800000000 GROUP BY 1), c3 AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n FROM b WHERE u3 IS NOT NULL AND u3 - u1 <= 604800000000 GROUP BY 1) SELECT make_timestamp(g.bin) AS period, g.i AS step_idx, g.st AS step, COALESCE(CASE g.i WHEN 0 THEN c1.n WHEN 1 THEN c2.n ELSE c3.n END, 0) AS dcount FROM grid g LEFT JOIN c1 ON g.bin = c1.bin LEFT JOIN c2 ON g.bin = c2.bin LEFT JOIN c3 ON g.bin = c3.bin ORDER BY 1, 2""")),
+      """WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events WHERE event_type = 'signup' GROUP BY 1), s2 AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM events e JOIN s1 USING (user_id) WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1), s3 AS (SELECT e.user_id, MIN(e.ts) AS t3 FROM events e JOIN s2 USING (user_id) WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1), f AS (SELECT s1.user_id, epoch_us(t1) AS u1, epoch_us(t2) AS u2, epoch_us(t3) AS u3 FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)), b AS (SELECT *, u1 - u1 % 86400000000 AS bin FROM f), grid AS (SELECT d.bin, s.i, s.st FROM (SELECT DISTINCT bin FROM b) d, (VALUES (CAST(0 AS BIGINT), 'signup'), (1, 'click'), (2, 'purchase')) s(i, st)), c1 AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n FROM b GROUP BY 1), c2 AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n FROM b WHERE u2 IS NOT NULL AND u2 - u1 <= 604800000000 GROUP BY 1), c3 AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n FROM b WHERE u3 IS NOT NULL AND u3 - u1 <= 604800000000 GROUP BY 1) SELECT make_timestamp(g.bin) AS period, g.i AS step_idx, g.st AS step, COALESCE(CASE g.i WHEN 0 THEN c1.n WHEN 1 THEN c2.n ELSE c3.n END, 0) AS dcount FROM grid g LEFT JOIN c1 ON g.bin = c1.bin LEFT JOIN c2 ON g.bin = c2.bin LEFT JOIN c3 ON g.bin = c3.bin ORDER BY 1, 2"""),
 
     // diffpatterns (r6): which sources are over-represented in English
     // vs Spanish documents — the incident-investigation "what changed"
@@ -4737,7 +4756,7 @@ object SparkEntry {
       """documents
         | evaluate diffpatterns(lang, 'en', 'es', 0.5, source)
         | sort by source asc"""),
-      Some("""WITH t AS (SELECT source, CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS ca, CAST(SUM(CASE WHEN lang = 'es' THEN 1 ELSE 0 END) AS BIGINT) AS cb FROM documents GROUP BY 1), tot AS (SELECT CAST(SUM(ca) AS DOUBLE) AS ta, CAST(SUM(cb) AS DOUBLE) AS tb FROM t) SELECT ca AS count_a, cb AS count_b, ROUND(ca * 100 / ta, 2) AS percent_a, ROUND(cb * 100 / tb, 2) AS percent_b, ROUND(ABS(ca * 100 / ta - cb * 100 / tb), 2) AS percent_diff, source FROM t, tot WHERE ROUND(ABS(ca * 100 / ta - cb * 100 / tb), 2) >= 0.5 ORDER BY source""")),
+      """WITH t AS (SELECT source, CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS ca, CAST(SUM(CASE WHEN lang = 'es' THEN 1 ELSE 0 END) AS BIGINT) AS cb FROM documents GROUP BY 1), tot AS (SELECT CAST(SUM(ca) AS DOUBLE) AS ta, CAST(SUM(cb) AS DOUBLE) AS tb FROM t) SELECT ca AS count_a, cb AS count_b, ROUND(ca * 100 / ta, 2) AS percent_a, ROUND(cb * 100 / tb, 2) AS percent_b, ROUND(ABS(ca * 100 / ta - cb * 100 / tb), 2) AS percent_diff, source FROM t, tot WHERE ROUND(ABS(ca * 100 / ta - cb * 100 / tb), 2) >= 0.5 ORDER BY source"""),
 
     // diffpatterns_text (r6): tokens over- or under-represented in
     // English vs Spanish documents by document-frequency share — the
@@ -4746,7 +4765,7 @@ object SparkEntry {
       """documents
         | evaluate diffpatterns_text(text, lang, 'en', 'es', 1.0)
         | sort by token asc"""),
-      Some("""WITH r AS (SELECT CASE WHEN lang = 'en' THEN 'a' WHEN lang = 'es' THEN 'b' END AS side, text FROM documents WHERE lang IN ('en', 'es')), tot AS (SELECT CAST(SUM(CASE WHEN side = 'a' THEN 1 ELSE 0 END) AS DOUBLE) AS ta, CAST(SUM(CASE WHEN side = 'b' THEN 1 ELSE 0 END) AS DOUBLE) AS tb FROM r), tk AS (SELECT side, unnest(list_distinct(string_split(lower(COALESCE(text, '')), ' '))) AS token FROM r), pt AS (SELECT token, CAST(SUM(CASE WHEN side = 'a' THEN 1 ELSE 0 END) AS BIGINT) AS count_a, CAST(SUM(CASE WHEN side = 'b' THEN 1 ELSE 0 END) AS BIGINT) AS count_b FROM tk WHERE token <> '' GROUP BY 1) SELECT token, count_a, count_b, ROUND(count_a * 100 / ta, 2) AS percent_a, ROUND(count_b * 100 / tb, 2) AS percent_b, ROUND(ABS(count_a * 100 / ta - count_b * 100 / tb), 2) AS percent_diff FROM pt, tot WHERE ROUND(ABS(count_a * 100 / ta - count_b * 100 / tb), 2) >= 1.0 ORDER BY token""")),
+      """WITH r AS (SELECT CASE WHEN lang = 'en' THEN 'a' WHEN lang = 'es' THEN 'b' END AS side, text FROM documents WHERE lang IN ('en', 'es')), tot AS (SELECT CAST(SUM(CASE WHEN side = 'a' THEN 1 ELSE 0 END) AS DOUBLE) AS ta, CAST(SUM(CASE WHEN side = 'b' THEN 1 ELSE 0 END) AS DOUBLE) AS tb FROM r), tk AS (SELECT side, unnest(list_distinct(string_split(lower(COALESCE(text, '')), ' '))) AS token FROM r), pt AS (SELECT token, CAST(SUM(CASE WHEN side = 'a' THEN 1 ELSE 0 END) AS BIGINT) AS count_a, CAST(SUM(CASE WHEN side = 'b' THEN 1 ELSE 0 END) AS BIGINT) AS count_b FROM tk WHERE token <> '' GROUP BY 1) SELECT token, count_a, count_b, ROUND(count_a * 100 / ta, 2) AS percent_a, ROUND(count_b * 100 / tb, 2) AS percent_b, ROUND(ABS(count_a * 100 / ta - count_b * 100 / tb), 2) AS percent_diff FROM pt, tot WHERE ROUND(ABS(count_a * 100 / ta - count_b * 100 / tb), 2) >= 1.0 ORDER BY token"""),
 
     // Window-over-window retention (r6): the documented
     // activity_metrics plugin — per bin: dcount, new, retained from
@@ -4758,7 +4777,7 @@ object SparkEntry {
       """events
         | evaluate activity_metrics(user_id, ts, 1d)
         | sort by ts asc"""),
-      Some("""WITH act AS (SELECT DISTINCT user_id AS id, epoch_us(ts) - epoch_us(ts) % 86400000000 AS b FROM events), per AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS dcount_values FROM act GROUP BY 1), fi AS (SELECT id, MIN(b) AS b FROM act GROUP BY 1), nw AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS dcount_new_values FROM fi GROUP BY 1), rt AS (SELECT c.b, CAST(COUNT(*) AS BIGINT) AS retained FROM act p JOIN act c ON p.id = c.id AND p.b + 86400000000 = c.b GROUP BY 1), pv AS (SELECT b + 86400000000 AS b, dcount_values AS prev FROM per) SELECT make_timestamp(per.b) AS ts, dcount_values, COALESCE(dcount_new_values, 0) AS dcount_new_values, CASE WHEN prev IS NOT NULL THEN COALESCE(retained, 0) ELSE NULL END AS dcount_retained_values, CAST((COALESCE(retained, 0) * 1000000) // prev AS BIGINT) AS retention_rate_micros, CAST(CAST((COALESCE(retained, 0) * 1000000) // prev AS BIGINT) AS DOUBLE) / 1000000.0 AS retention_rate FROM per LEFT JOIN nw USING (b) LEFT JOIN rt USING (b) LEFT JOIN pv USING (b) ORDER BY 1""")),
+      """WITH act AS (SELECT DISTINCT user_id AS id, epoch_us(ts) - epoch_us(ts) % 86400000000 AS b FROM events), per AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS dcount_values FROM act GROUP BY 1), fi AS (SELECT id, MIN(b) AS b FROM act GROUP BY 1), nw AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS dcount_new_values FROM fi GROUP BY 1), rt AS (SELECT c.b, CAST(COUNT(*) AS BIGINT) AS retained FROM act p JOIN act c ON p.id = c.id AND p.b + 86400000000 = c.b GROUP BY 1), pv AS (SELECT b + 86400000000 AS b, dcount_values AS prev FROM per) SELECT make_timestamp(per.b) AS ts, dcount_values, COALESCE(dcount_new_values, 0) AS dcount_new_values, CASE WHEN prev IS NOT NULL THEN COALESCE(retained, 0) ELSE NULL END AS dcount_retained_values, CAST((COALESCE(retained, 0) * 1000000) // prev AS BIGINT) AS retention_rate_micros, CAST(CAST((COALESCE(retained, 0) * 1000000) // prev AS BIGINT) AS DOUBLE) / 1000000.0 AS retention_rate FROM per LEFT JOIN nw USING (b) LEFT JOIN rt USING (b) LEFT JOIN pv USING (b) ORDER BY 1"""),
 
     // Cohort retention (r6): the documented new_activity_metrics
     // plugin — users cohorted by first-seen day; every (cohort,
@@ -4769,7 +4788,7 @@ object SparkEntry {
       """events
         | evaluate new_activity_metrics(user_id, ts, 1d)
         | sort by from_ts asc, to_ts asc"""),
-      Some("""WITH act AS (SELECT DISTINCT user_id AS id, epoch_us(ts) - epoch_us(ts) % 86400000000 AS b FROM events), co AS (SELECT id, MIN(b) AS f FROM act GROUP BY 1), cs AS (SELECT f, CAST(COUNT(*) AS BIGINT) AS dcount_new_values FROM co GROUP BY 1), rt AS (SELECT co.f, act.b, CAST(COUNT(*) AS BIGINT) AS dcount_retained_values FROM co JOIN act USING (id) GROUP BY 1, 2) SELECT make_timestamp(rt.f) AS from_ts, make_timestamp(rt.b) AS to_ts, dcount_new_values, dcount_retained_values, dcount_new_values - dcount_retained_values AS dcount_churn_values, CAST((dcount_retained_values * 1000000) // dcount_new_values AS BIGINT) AS retention_rate_micros, CAST((dcount_retained_values * 1000000) // dcount_new_values AS DOUBLE) / 1000000.0 AS retention_rate FROM rt JOIN cs USING (f) ORDER BY 1, 2""")),
+      """WITH act AS (SELECT DISTINCT user_id AS id, epoch_us(ts) - epoch_us(ts) % 86400000000 AS b FROM events), co AS (SELECT id, MIN(b) AS f FROM act GROUP BY 1), cs AS (SELECT f, CAST(COUNT(*) AS BIGINT) AS dcount_new_values FROM co GROUP BY 1), rt AS (SELECT co.f, act.b, CAST(COUNT(*) AS BIGINT) AS dcount_retained_values FROM co JOIN act USING (id) GROUP BY 1, 2) SELECT make_timestamp(rt.f) AS from_ts, make_timestamp(rt.b) AS to_ts, dcount_new_values, dcount_retained_values, dcount_new_values - dcount_retained_values AS dcount_churn_values, CAST((dcount_retained_values * 1000000) // dcount_new_values AS BIGINT) AS retention_rate_micros, CAST((dcount_retained_values * 1000000) // dcount_new_values AS DOUBLE) / 1000000.0 AS retention_rate FROM rt JOIN cs USING (f) ORDER BY 1, 2"""),
 
     // Generic connected components (r6): the CC engine exposed as a
     // KQL plugin over any edge frame. The customer→nation→region union
@@ -4784,7 +4803,7 @@ object SparkEntry {
          E
          | evaluate connected_components(src, dst)
          | sort by id asc"""),
-      Some("""WITH cn AS (SELECT 'c' || c_custkey AS id, n_regionkey AS rk FROM customer JOIN nation ON c_nationkey = n_nationkey), nn AS (SELECT DISTINCT 'n' || n_nationkey AS id, n_regionkey AS rk FROM nation), rr AS (SELECT DISTINCT 'r' || n_regionkey AS id, n_regionkey AS rk FROM nation), allx AS (SELECT id, rk FROM cn UNION ALL SELECT id, rk FROM nn UNION ALL SELECT id, rk FROM rr), grp AS (SELECT rk, MIN(id) AS group_id, CAST(COUNT(*) AS BIGINT) AS group_size FROM allx GROUP BY 1) SELECT a.id, g.group_id, g.group_size FROM allx a JOIN grp g USING (rk) ORDER BY a.id""")),
+      """WITH cn AS (SELECT 'c' || c_custkey AS id, n_regionkey AS rk FROM customer JOIN nation ON c_nationkey = n_nationkey), nn AS (SELECT DISTINCT 'n' || n_nationkey AS id, n_regionkey AS rk FROM nation), rr AS (SELECT DISTINCT 'r' || n_regionkey AS id, n_regionkey AS rk FROM nation), allx AS (SELECT id, rk FROM cn UNION ALL SELECT id, rk FROM nn UNION ALL SELECT id, rk FROM rr), grp AS (SELECT rk, MIN(id) AS group_id, CAST(COUNT(*) AS BIGINT) AS group_size FROM allx GROUP BY 1) SELECT a.id, g.group_id, g.group_size FROM allx a JOIN grp g USING (rk) ORDER BY a.id"""),
 
     // special-math family: Lanczos gamma/loggamma (pure Column
     // arithmetic) + incomplete-beta CDF/inverse; closed-form pins
@@ -4797,7 +4816,7 @@ object SparkEntry {
               bc3 = round(beta_cdf(0.5, 2.0, 2.0), 6),
               bi1 = round(beta_inv(0.25, 2.0, 1.0), 6),
               bi2 = round(beta_inv(0.51, 1.0, 2.0), 6)"""),
-      Some("""SELECT CAST(24.0 AS DOUBLE) AS g5, CAST(1.772454 AS DOUBLE) AS g05, CAST(12.801827 AS DOUBLE) AS lg10, CAST(-3.544908 AS DOUBLE) AS gneg, CAST(1.764 AS DOUBLE) AS bp, CAST(0.51 AS DOUBLE) AS bc1, CAST(0.0625 AS DOUBLE) AS bc2, CAST(0.5 AS DOUBLE) AS bc3, CAST(0.5 AS DOUBLE) AS bi1, CAST(0.3 AS DOUBLE) AS bi2""")),
+      """SELECT CAST(24.0 AS DOUBLE) AS g5, CAST(1.772454 AS DOUBLE) AS g05, CAST(12.801827 AS DOUBLE) AS lg10, CAST(-3.544908 AS DOUBLE) AS gneg, CAST(1.764 AS DOUBLE) AS bp, CAST(0.51 AS DOUBLE) AS bc1, CAST(0.0625 AS DOUBLE) AS bc2, CAST(0.5 AS DOUBLE) AS bc3, CAST(0.5 AS DOUBLE) AS bi1, CAST(0.3 AS DOUBLE) AS bi2"""),
 
     // weighted nearest-rank percentile: first x whose running weight
     // crosses p% of the total (the oracle states the same definition as
@@ -4806,7 +4825,7 @@ object SparkEntry {
       """lineitem
         | summarize p50w = percentilew(l_quantity, l_linenumber, 50) by l_returnflag
         | sort by l_returnflag asc"""),
-      Some("""WITH c AS (SELECT l_returnflag, CAST(l_quantity AS DOUBLE) AS x, SUM(l_linenumber) OVER (PARTITION BY l_returnflag ORDER BY l_quantity ROWS UNBOUNDED PRECEDING) AS cum, SUM(l_linenumber) OVER (PARTITION BY l_returnflag) AS tot FROM lineitem) SELECT l_returnflag, MIN(x) AS p50w FROM c WHERE cum >= CEIL(0.5 * tot) GROUP BY 1 ORDER BY 1""")),
+      """WITH c AS (SELECT l_returnflag, CAST(l_quantity AS DOUBLE) AS x, SUM(l_linenumber) OVER (PARTITION BY l_returnflag ORDER BY l_quantity ROWS UNBOUNDED PRECEDING) AS cum, SUM(l_linenumber) OVER (PARTITION BY l_returnflag) AS tot FROM lineitem) SELECT l_returnflag, MIN(x) AS p50w FROM c WHERE cum >= CEIL(0.5 * tot) GROUP BY 1 ORDER BY 1"""),
 
     // seasonal extraction (explicit + autodetected period), recursive IIR,
     // and decompose-forecast — element pins on closed-form series
@@ -4818,7 +4837,7 @@ object SparkEntry {
         | project s1 = todouble(s[1]), sa0 = todouble(sa[0]), sa1 = todouble(sa[1]),
                   i2 = todouble(i[2]), i3 = todouble(i[3]),
                   f0 = round(todouble(f[0]), 6), f5 = round(todouble(f[5]), 6)"""),
-      Some("""SELECT CAST(2.0 AS DOUBLE) AS s1, CAST(1.0 AS DOUBLE) AS sa0, CAST(5.0 AS DOUBLE) AS sa1, CAST(0.25 AS DOUBLE) AS i2, CAST(0.125 AS DOUBLE) AS i3, CAST(0.0 AS DOUBLE) AS f0, CAST(5.0 AS DOUBLE) AS f5""")),
+      """SELECT CAST(2.0 AS DOUBLE) AS s1, CAST(1.0 AS DOUBLE) AS sa0, CAST(5.0 AS DOUBLE) AS sa1, CAST(0.25 AS DOUBLE) AS i2, CAST(0.125 AS DOUBLE) AS i3, CAST(0.0 AS DOUBLE) AS f0, CAST(5.0 AS DOUBLE) AS f5"""),
 
     // URL query-string bags, IPv6 range membership, term-boundary IPv4
     // text search (the '110.0.0.1' row pins the boundary semantics)
@@ -4830,7 +4849,7 @@ object SparkEntry {
               ha = has_any_ipv4('log 10.0.0.1 end', '10.0.0.1', '1.2.3.4'),
               hb = has_any_ipv4('log 110.0.0.1 end', '10.0.0.1'),
               hp = has_ipv4_prefix('conn from 192.168.1.55 ok', '192.168.')"""),
-      Some("""SELECT '{"Query Parameters":{"k1":"v1","k2":"v 2"}}' AS pq, true AS r6, true AS r6b, false AS r6c, true AS ha, false AS hb, true AS hp""")),
+      """SELECT '{"Query Parameters":{"k1":"v1","k2":"v 2"}}' AS pq, true AS r6, true AS r6b, false AS r6c, true AS ha, false AS hb, true AS hp"""),
 
     // conditional dispersion, covariance, and null-keeping list collection
     // (nwith counts every row because make_list_with_nulls keeps the
@@ -4849,13 +4868,13 @@ object SparkEntry {
                   cv = round(cv, 2), cvp = round(cvp, 2),
                   nwith = array_length(lst), n
         | sort by l_returnflag asc"""),
-      Some("""SELECT l_returnflag, ROUND(STDDEV_SAMP(CASE WHEN l_discount > 0.05 THEN l_quantity END), 4) AS sdi, ROUND(VAR_SAMP(CASE WHEN l_discount > 0.05 THEN l_quantity END), 4) AS vri, ROUND(COVAR_SAMP(l_quantity, l_extendedprice), 2) AS cv, ROUND(COVAR_POP(l_quantity, l_extendedprice), 2) AS cvp, CAST(COUNT(*) AS BIGINT) AS nwith, CAST(COUNT(*) AS BIGINT) AS n FROM lineitem GROUP BY 1 ORDER BY 1""")),
+      """SELECT l_returnflag, ROUND(STDDEV_SAMP(CASE WHEN l_discount > 0.05 THEN l_quantity END), 4) AS sdi, ROUND(VAR_SAMP(CASE WHEN l_discount > 0.05 THEN l_quantity END), 4) AS vri, ROUND(COVAR_SAMP(l_quantity, l_extendedprice), 2) AS cv, ROUND(COVAR_POP(l_quantity, l_extendedprice), 2) AS cvp, CAST(COUNT(*) AS BIGINT) AS nwith, CAST(COUNT(*) AS BIGINT) AS n FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
     "q91_autocluster" -> Q(kqlQ(
       """orders
         | evaluate autocluster(10.0, o_orderpriority, o_orderstatus)
         | sort by percent desc, o_orderpriority asc nulls first, o_orderstatus asc nulls first"""),
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS count_, ROUND(COUNT(*) * 100.0 / (SELECT COUNT(*) FROM orders), 2) AS percent, o_orderpriority, o_orderstatus FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus) HAVING NOT (GROUPING(o_orderpriority) = 1 AND GROUPING(o_orderstatus) = 1) AND ROUND(COUNT(*) * 100.0 / (SELECT COUNT(*) FROM orders), 2) >= 10.0 ORDER BY percent DESC, o_orderpriority ASC NULLS FIRST, o_orderstatus ASC NULLS FIRST""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS count_, ROUND(COUNT(*) * 100.0 / (SELECT COUNT(*) FROM orders), 2) AS percent, o_orderpriority, o_orderstatus FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus) HAVING NOT (GROUPING(o_orderpriority) = 1 AND GROUPING(o_orderstatus) = 1) AND ROUND(COUNT(*) * 100.0 / (SELECT COUNT(*) FROM orders), 2) >= 10.0 ORDER BY percent DESC, o_orderpriority ASC NULLS FIRST, o_orderstatus ASC NULLS FIRST"""),
 
     // ------------------------------------------------------------- r9
 
@@ -4867,14 +4886,14 @@ object SparkEntry {
     // are property-proven in SketchSpec on synthetic skewed streams.
     "llm_heavy_hitters" -> Q(
       (s, dir) => LlmOps.heavyHitters(docs(s, dir), m = 1024, k = 20),
-      Some("""WITH t AS (SELECT unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM documents) SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM t GROUP BY 1 ORDER BY cnt DESC, tok LIMIT 20""")),
+      """WITH t AS (SELECT unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM documents) SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM t GROUP BY 1 ORDER BY cnt DESC, tok LIMIT 20"""),
 
     // Bigram collocation mining by integer lift (PMI-equivalent
     // ranking, corpus-constant factor dropped): value-exact — both
     // engines compute c_xy·10^12 div (c_x·c_y) in pure BIGINT
     "llm_collocations" -> Q(
       (s, dir) => LlmOps.collocations(docs(s, dir), minCount = 5, k = 20),
-      Some("""WITH tk AS (SELECT list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1) AS toks FROM documents), uni AS (SELECT tok AS w, CAST(COUNT(*) AS BIGINT) AS c_w FROM (SELECT unnest(toks) AS tok FROM tk) GROUP BY 1), bi AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c_xy FROM (SELECT toks[i] AS w1, toks[i+1] AS w2 FROM tk, unnest(generate_series(1, len(toks)-1)) s(i) WHERE len(toks) >= 2) GROUP BY 1,2 HAVING COUNT(*) >= 5) SELECT w1, w2, c_xy, u1.c_w AS c_x, u2.c_w AS c_y, CAST((c_xy * CAST(1000000000000 AS BIGINT)) // (u1.c_w * u2.c_w) AS BIGINT) AS lift_u FROM bi JOIN uni u1 ON u1.w = bi.w1 JOIN uni u2 ON u2.w = bi.w2 ORDER BY lift_u DESC, w1, w2 LIMIT 20""")),
+      """WITH tk AS (SELECT list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1) AS toks FROM documents), uni AS (SELECT tok AS w, CAST(COUNT(*) AS BIGINT) AS c_w FROM (SELECT unnest(toks) AS tok FROM tk) GROUP BY 1), bi AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c_xy FROM (SELECT toks[i] AS w1, toks[i+1] AS w2 FROM tk, unnest(generate_series(1, len(toks)-1)) s(i) WHERE len(toks) >= 2) GROUP BY 1,2 HAVING COUNT(*) >= 5) SELECT w1, w2, c_xy, u1.c_w AS c_x, u2.c_w AS c_y, CAST((c_xy * CAST(1000000000000 AS BIGINT)) // (u1.c_w * u2.c_w) AS BIGINT) AS lift_u FROM bi JOIN uni u1 ON u1.w = bi.w1 JOIN uni u2 ON u2.w = bi.w2 ORDER BY lift_u DESC, w1, w2 LIMIT 20"""),
 
     // Canonical-URL keep-best dedup: synthetic per-doc URLs carry the
     // noise url_normalize must collapse (odd docs get an uppercase
@@ -4893,7 +4912,7 @@ object SparkEntry {
         LlmOps.dedupByCanonicalUrl(d, "url", "n_chars")
           .orderBy("canonical_url")
       },
-      Some("""WITH u AS (SELECT doc_id, n_chars, 'https://' || source || '.example.com/page/' || CAST(doc_id % 10 AS VARCHAR) AS canonical_url FROM documents), r AS (SELECT canonical_url, doc_id, n_chars, CAST(COUNT(*) OVER (PARTITION BY canonical_url) AS BIGINT) AS n_dups, ROW_NUMBER() OVER (PARTITION BY canonical_url ORDER BY n_chars DESC, doc_id ASC) AS rn FROM u) SELECT canonical_url, doc_id, n_chars, n_dups FROM r WHERE rn = 1 ORDER BY canonical_url""")),
+      """WITH u AS (SELECT doc_id, n_chars, 'https://' || source || '.example.com/page/' || CAST(doc_id % 10 AS VARCHAR) AS canonical_url FROM documents), r AS (SELECT canonical_url, doc_id, n_chars, CAST(COUNT(*) OVER (PARTITION BY canonical_url) AS BIGINT) AS n_dups, ROW_NUMBER() OVER (PARTITION BY canonical_url ORDER BY n_chars DESC, doc_id ASC) AS rn FROM u) SELECT canonical_url, doc_id, n_chars, n_dups FROM r WHERE rn = 1 ORDER BY canonical_url"""),
 
     // Multinomial naive-Bayes language classifier (add-one smoothing,
     // 80/20 split by doc_id mod 5): every log term micro-rounded per
@@ -4902,7 +4921,7 @@ object SparkEntry {
     "llm_naive_bayes" -> Q(
       (s, dir) => LlmOps.naiveBayesLangId(docs(s, dir), holdMod = 5)
         .orderBy("doc_id"),
-      Some("""WITH train AS (SELECT * FROM documents WHERE doc_id % 5 <> 0), test AS (SELECT * FROM documents WHERE doc_id % 5 = 0), tt AS (SELECT doc_id, lang, unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM train), ct AS (SELECT lang AS cl, tok, CAST(COUNT(*) AS BIGINT) AS c FROM tt GROUP BY 1,2), tot AS (SELECT lang AS cl, CAST(COUNT(*) AS BIGINT) AS n_l FROM tt GROUP BY 1), v AS (SELECT CAST(COUNT(DISTINCT tok) AS BIGINT) AS vv FROM tt), nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM train), pri AS (SELECT lang AS cl, CAST(ROUND(LN(CAST(COUNT(*) AS DOUBLE) / n_docs) * 1000000) AS BIGINT) AS prior_u FROM train, nd GROUP BY lang, n_docs), st AS (SELECT doc_id, lang AS true_lang, unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM test), sc AS (SELECT s.doc_id, s.true_lang, l.cl, CAST(SUM(CAST(ROUND(LN((CAST(COALESCE(ct.c, 0) AS DOUBLE) + 1) / (tot.n_l + v.vv)) * 1000000) AS BIGINT)) AS BIGINT) AS ev_u FROM st s CROSS JOIN (SELECT cl FROM tot) l LEFT JOIN ct ON ct.cl = l.cl AND ct.tok = s.tok JOIN tot ON tot.cl = l.cl CROSS JOIN v GROUP BY 1, 2, 3), fin AS (SELECT doc_id, true_lang, cl, ev_u + prior_u AS score_u FROM sc JOIN pri USING (cl)), best AS (SELECT doc_id, true_lang, cl AS pred_lang, score_u, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score_u DESC, cl ASC) AS rn FROM fin) SELECT doc_id, true_lang, pred_lang, score_u FROM best WHERE rn = 1 ORDER BY doc_id""")),
+      """WITH train AS (SELECT * FROM documents WHERE doc_id % 5 <> 0), test AS (SELECT * FROM documents WHERE doc_id % 5 = 0), tt AS (SELECT doc_id, lang, unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM train), ct AS (SELECT lang AS cl, tok, CAST(COUNT(*) AS BIGINT) AS c FROM tt GROUP BY 1,2), tot AS (SELECT lang AS cl, CAST(COUNT(*) AS BIGINT) AS n_l FROM tt GROUP BY 1), v AS (SELECT CAST(COUNT(DISTINCT tok) AS BIGINT) AS vv FROM tt), nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM train), pri AS (SELECT lang AS cl, CAST(ROUND(LN(CAST(COUNT(*) AS DOUBLE) / n_docs) * 1000000) AS BIGINT) AS prior_u FROM train, nd GROUP BY lang, n_docs), st AS (SELECT doc_id, lang AS true_lang, unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM test), sc AS (SELECT s.doc_id, s.true_lang, l.cl, CAST(SUM(CAST(ROUND(LN((CAST(COALESCE(ct.c, 0) AS DOUBLE) + 1) / (tot.n_l + v.vv)) * 1000000) AS BIGINT)) AS BIGINT) AS ev_u FROM st s CROSS JOIN (SELECT cl FROM tot) l LEFT JOIN ct ON ct.cl = l.cl AND ct.tok = s.tok JOIN tot ON tot.cl = l.cl CROSS JOIN v GROUP BY 1, 2, 3), fin AS (SELECT doc_id, true_lang, cl, ev_u + prior_u AS score_u FROM sc JOIN pri USING (cl)), best AS (SELECT doc_id, true_lang, cl AS pred_lang, score_u, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score_u DESC, cl ASC) AS rn FROM fin) SELECT doc_id, true_lang, pred_lang, score_u FROM best WHERE rn = 1 ORDER BY doc_id"""),
 
     // One-pass per-column profiling plugin (dataset-card stats): min/max
     // on native types then stringified; columns chosen without doubles
@@ -4911,7 +4930,7 @@ object SparkEntry {
       """lineitem
         | evaluate profile(l_linenumber, l_returnflag, l_shipdate, l_orderkey)
         | sort by column asc"""),
-      Some("""WITH p AS (SELECT 'l_orderkey' AS "column", CAST(COUNT(*) AS BIGINT) AS n, CAST(COUNT(*) - COUNT(l_orderkey) AS BIGINT) AS n_null, CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS n_distinct, CAST(MIN(l_orderkey) AS VARCHAR) AS min_s, CAST(MAX(l_orderkey) AS VARCHAR) AS max_s FROM lineitem UNION ALL SELECT 'l_linenumber', CAST(COUNT(*) AS BIGINT), CAST(COUNT(*) - COUNT(l_linenumber) AS BIGINT), CAST(COUNT(DISTINCT l_linenumber) AS BIGINT), CAST(MIN(l_linenumber) AS VARCHAR), CAST(MAX(l_linenumber) AS VARCHAR) FROM lineitem UNION ALL SELECT 'l_returnflag', CAST(COUNT(*) AS BIGINT), CAST(COUNT(*) - COUNT(l_returnflag) AS BIGINT), CAST(COUNT(DISTINCT l_returnflag) AS BIGINT), CAST(MIN(l_returnflag) AS VARCHAR), CAST(MAX(l_returnflag) AS VARCHAR) FROM lineitem UNION ALL SELECT 'l_shipdate', CAST(COUNT(*) AS BIGINT), CAST(COUNT(*) - COUNT(l_shipdate) AS BIGINT), CAST(COUNT(DISTINCT l_shipdate) AS BIGINT), CAST(MIN(l_shipdate) AS VARCHAR), CAST(MAX(l_shipdate) AS VARCHAR) FROM lineitem) SELECT "column", n, n_null, n_distinct, min_s, max_s FROM p ORDER BY "column" """.trim)),
+      """WITH p AS (SELECT 'l_orderkey' AS "column", CAST(COUNT(*) AS BIGINT) AS n, CAST(COUNT(*) - COUNT(l_orderkey) AS BIGINT) AS n_null, CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS n_distinct, CAST(MIN(l_orderkey) AS VARCHAR) AS min_s, CAST(MAX(l_orderkey) AS VARCHAR) AS max_s FROM lineitem UNION ALL SELECT 'l_linenumber', CAST(COUNT(*) AS BIGINT), CAST(COUNT(*) - COUNT(l_linenumber) AS BIGINT), CAST(COUNT(DISTINCT l_linenumber) AS BIGINT), CAST(MIN(l_linenumber) AS VARCHAR), CAST(MAX(l_linenumber) AS VARCHAR) FROM lineitem UNION ALL SELECT 'l_returnflag', CAST(COUNT(*) AS BIGINT), CAST(COUNT(*) - COUNT(l_returnflag) AS BIGINT), CAST(COUNT(DISTINCT l_returnflag) AS BIGINT), CAST(MIN(l_returnflag) AS VARCHAR), CAST(MAX(l_returnflag) AS VARCHAR) FROM lineitem UNION ALL SELECT 'l_shipdate', CAST(COUNT(*) AS BIGINT), CAST(COUNT(*) - COUNT(l_shipdate) AS BIGINT), CAST(COUNT(DISTINCT l_shipdate) AS BIGINT), CAST(MIN(l_shipdate) AS VARCHAR), CAST(MAX(l_shipdate) AS VARCHAR) FROM lineitem) SELECT "column", n, n_null, n_distinct, min_s, max_s FROM p ORDER BY "column" """.trim),
 
     // Deterministic salted join (SkewOps.saltedJoin): the hot-key
     // mitigation AQE cannot do — spread each left key over 8 salt
@@ -4929,13 +4948,13 @@ object SparkEntry {
             sum(round(col("l_extendedprice") * 100).cast("long")).as("cents"))
           .orderBy("o_orderpriority")
       },
-      Some("""SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS cents FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY 1 ORDER BY 1""")),
+      """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS cents FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY 1 ORDER BY 1"""),
 
     // Per-doc token entropy + type-token ratio (information-density
     // quality signal); entropy in exact integer micro·count units
     "llm_entropy" -> Q(
       (s, dir) => LlmOps.docEntropy(docs(s, dir)).orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM documents), c AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c FROM t GROUP BY 1,2), n AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n, CAST(COUNT(*) AS BIGINT) AS types FROM c GROUP BY 1) SELECT c.doc_id, n.n AS n_tokens, n.types AS n_types, CAST(SUM(c.c * CAST(ROUND(-LN(CAST(c.c AS DOUBLE)/n.n)*1000000) AS BIGINT)) AS BIGINT) AS token_entropy_u, ROUND(CAST(n.types AS DOUBLE)/n.n, 4) AS ttr FROM c JOIN n ON c.doc_id = n.doc_id GROUP BY c.doc_id, n.n, n.types ORDER BY 1""")),
+      """WITH t AS (SELECT doc_id, unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM documents), c AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c FROM t GROUP BY 1,2), n AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n, CAST(COUNT(*) AS BIGINT) AS types FROM c GROUP BY 1) SELECT c.doc_id, n.n AS n_tokens, n.types AS n_types, CAST(SUM(c.c * CAST(ROUND(-LN(CAST(c.c AS DOUBLE)/n.n)*1000000) AS BIGINT)) AS BIGINT) AS token_entropy_u, ROUND(CAST(n.types AS DOUBLE)/n.n, 4) AS ttr FROM c JOIN n ON c.doc_id = n.doc_id GROUP BY c.doc_id, n.n, n.types ORDER BY 1"""),
 
     // MMR diverse top-k selection (r9): integer-quantized scoring
     // makes every greedy round exact; the oracle unrolls all 6 rounds
@@ -4943,7 +4962,7 @@ object SparkEntry {
     "llm_mmr_select" -> Q(
       (s, dir) => LlmOps.mmrSelect(embs(s, dir), queryId = 0, nCand = 16, k = 6)
         .orderBy("step"),
-      Some("""WITH q AS (SELECT list_transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS qv FROM embeddings WHERE vec_id = 0), ev AS (SELECT vec_id, list_transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS v FROM embeddings WHERE vec_id <> 0), rel AS (SELECT e.vec_id, CAST(SUM(e.v[s.i]*q.qv[s.i]) AS BIGINT) AS rel_u FROM ev e, q, unnest(generate_series(1,64)) s(i) GROUP BY e.vec_id), cand AS (SELECT vec_id, rel_u FROM rel ORDER BY rel_u DESC, vec_id LIMIT 16), cv AS (SELECT c.vec_id, c.rel_u, e.v FROM cand c JOIN ev e USING (vec_id)), sims AS (SELECT a.vec_id AS ia, b.vec_id AS ib, CAST(SUM(a.v[s.i]*b.v[s.i]) AS BIGINT) AS sim_u FROM cv a, cv b, unnest(generate_series(1,64)) s(i) WHERE a.vec_id <> b.vec_id GROUP BY 1,2), p1 AS (SELECT vec_id, rel_u, CAST(7*rel_u AS BIGINT) AS mmr_u, CAST(1 AS BIGINT) AS step FROM cand ORDER BY rel_u DESC, vec_id LIMIT 1), s1 AS (SELECT vec_id FROM p1), p2 AS (SELECT c.vec_id, c.rel_u, CAST(7*c.rel_u - 3*MAX(m.sim_u) AS BIGINT) AS mmr_u, CAST(2 AS BIGINT) AS step FROM cand c JOIN sims m ON m.ia = c.vec_id AND m.ib IN (SELECT vec_id FROM s1) WHERE c.vec_id NOT IN (SELECT vec_id FROM s1) GROUP BY c.vec_id, c.rel_u ORDER BY mmr_u DESC, c.vec_id LIMIT 1), s2 AS (SELECT vec_id FROM s1 UNION ALL SELECT vec_id FROM p2), p3 AS (SELECT c.vec_id, c.rel_u, CAST(7*c.rel_u - 3*MAX(m.sim_u) AS BIGINT) AS mmr_u, CAST(3 AS BIGINT) AS step FROM cand c JOIN sims m ON m.ia = c.vec_id AND m.ib IN (SELECT vec_id FROM s2) WHERE c.vec_id NOT IN (SELECT vec_id FROM s2) GROUP BY c.vec_id, c.rel_u ORDER BY mmr_u DESC, c.vec_id LIMIT 1), s3 AS (SELECT vec_id FROM s2 UNION ALL SELECT vec_id FROM p3), p4 AS (SELECT c.vec_id, c.rel_u, CAST(7*c.rel_u - 3*MAX(m.sim_u) AS BIGINT) AS mmr_u, CAST(4 AS BIGINT) AS step FROM cand c JOIN sims m ON m.ia = c.vec_id AND m.ib IN (SELECT vec_id FROM s3) WHERE c.vec_id NOT IN (SELECT vec_id FROM s3) GROUP BY c.vec_id, c.rel_u ORDER BY mmr_u DESC, c.vec_id LIMIT 1), s4 AS (SELECT vec_id FROM s3 UNION ALL SELECT vec_id FROM p4), p5 AS (SELECT c.vec_id, c.rel_u, CAST(7*c.rel_u - 3*MAX(m.sim_u) AS BIGINT) AS mmr_u, CAST(5 AS BIGINT) AS step FROM cand c JOIN sims m ON m.ia = c.vec_id AND m.ib IN (SELECT vec_id FROM s4) WHERE c.vec_id NOT IN (SELECT vec_id FROM s4) GROUP BY c.vec_id, c.rel_u ORDER BY mmr_u DESC, c.vec_id LIMIT 1), s5 AS (SELECT vec_id FROM s4 UNION ALL SELECT vec_id FROM p5), p6 AS (SELECT c.vec_id, c.rel_u, CAST(7*c.rel_u - 3*MAX(m.sim_u) AS BIGINT) AS mmr_u, CAST(6 AS BIGINT) AS step FROM cand c JOIN sims m ON m.ia = c.vec_id AND m.ib IN (SELECT vec_id FROM s5) WHERE c.vec_id NOT IN (SELECT vec_id FROM s5) GROUP BY c.vec_id, c.rel_u ORDER BY mmr_u DESC, c.vec_id LIMIT 1), s6 AS (SELECT vec_id FROM s5 UNION ALL SELECT vec_id FROM p6) SELECT step, vec_id, rel_u, mmr_u FROM (SELECT * FROM p1 UNION ALL SELECT * FROM p2 UNION ALL SELECT * FROM p3 UNION ALL SELECT * FROM p4 UNION ALL SELECT * FROM p5 UNION ALL SELECT * FROM p6) ORDER BY step""")),
+      """WITH q AS (SELECT list_transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS qv FROM embeddings WHERE vec_id = 0), ev AS (SELECT vec_id, list_transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS v FROM embeddings WHERE vec_id <> 0), rel AS (SELECT e.vec_id, CAST(SUM(e.v[s.i]*q.qv[s.i]) AS BIGINT) AS rel_u FROM ev e, q, unnest(generate_series(1,64)) s(i) GROUP BY e.vec_id), cand AS (SELECT vec_id, rel_u FROM rel ORDER BY rel_u DESC, vec_id LIMIT 16), cv AS (SELECT c.vec_id, c.rel_u, e.v FROM cand c JOIN ev e USING (vec_id)), sims AS (SELECT a.vec_id AS ia, b.vec_id AS ib, CAST(SUM(a.v[s.i]*b.v[s.i]) AS BIGINT) AS sim_u FROM cv a, cv b, unnest(generate_series(1,64)) s(i) WHERE a.vec_id <> b.vec_id GROUP BY 1,2), p1 AS (SELECT vec_id, rel_u, CAST(7*rel_u AS BIGINT) AS mmr_u, CAST(1 AS BIGINT) AS step FROM cand ORDER BY rel_u DESC, vec_id LIMIT 1), s1 AS (SELECT vec_id FROM p1), p2 AS (SELECT c.vec_id, c.rel_u, CAST(7*c.rel_u - 3*MAX(m.sim_u) AS BIGINT) AS mmr_u, CAST(2 AS BIGINT) AS step FROM cand c JOIN sims m ON m.ia = c.vec_id AND m.ib IN (SELECT vec_id FROM s1) WHERE c.vec_id NOT IN (SELECT vec_id FROM s1) GROUP BY c.vec_id, c.rel_u ORDER BY mmr_u DESC, c.vec_id LIMIT 1), s2 AS (SELECT vec_id FROM s1 UNION ALL SELECT vec_id FROM p2), p3 AS (SELECT c.vec_id, c.rel_u, CAST(7*c.rel_u - 3*MAX(m.sim_u) AS BIGINT) AS mmr_u, CAST(3 AS BIGINT) AS step FROM cand c JOIN sims m ON m.ia = c.vec_id AND m.ib IN (SELECT vec_id FROM s2) WHERE c.vec_id NOT IN (SELECT vec_id FROM s2) GROUP BY c.vec_id, c.rel_u ORDER BY mmr_u DESC, c.vec_id LIMIT 1), s3 AS (SELECT vec_id FROM s2 UNION ALL SELECT vec_id FROM p3), p4 AS (SELECT c.vec_id, c.rel_u, CAST(7*c.rel_u - 3*MAX(m.sim_u) AS BIGINT) AS mmr_u, CAST(4 AS BIGINT) AS step FROM cand c JOIN sims m ON m.ia = c.vec_id AND m.ib IN (SELECT vec_id FROM s3) WHERE c.vec_id NOT IN (SELECT vec_id FROM s3) GROUP BY c.vec_id, c.rel_u ORDER BY mmr_u DESC, c.vec_id LIMIT 1), s4 AS (SELECT vec_id FROM s3 UNION ALL SELECT vec_id FROM p4), p5 AS (SELECT c.vec_id, c.rel_u, CAST(7*c.rel_u - 3*MAX(m.sim_u) AS BIGINT) AS mmr_u, CAST(5 AS BIGINT) AS step FROM cand c JOIN sims m ON m.ia = c.vec_id AND m.ib IN (SELECT vec_id FROM s4) WHERE c.vec_id NOT IN (SELECT vec_id FROM s4) GROUP BY c.vec_id, c.rel_u ORDER BY mmr_u DESC, c.vec_id LIMIT 1), s5 AS (SELECT vec_id FROM s4 UNION ALL SELECT vec_id FROM p5), p6 AS (SELECT c.vec_id, c.rel_u, CAST(7*c.rel_u - 3*MAX(m.sim_u) AS BIGINT) AS mmr_u, CAST(6 AS BIGINT) AS step FROM cand c JOIN sims m ON m.ia = c.vec_id AND m.ib IN (SELECT vec_id FROM s5) WHERE c.vec_id NOT IN (SELECT vec_id FROM s5) GROUP BY c.vec_id, c.rel_u ORDER BY mmr_u DESC, c.vec_id LIMIT 1), s6 AS (SELECT vec_id FROM s5 UNION ALL SELECT vec_id FROM p6) SELECT step, vec_id, rel_u, mmr_u FROM (SELECT * FROM p1 UNION ALL SELECT * FROM p2 UNION ALL SELECT * FROM p3 UNION ALL SELECT * FROM p4 UNION ALL SELECT * FROM p5 UNION ALL SELECT * FROM p6) ORDER BY step"""),
 
     // series_iir IIR filter (r9): EWMA with dyadic alpha=1/2 (every
     // fold state exactly representable -> known-answer print oracle,
@@ -4951,7 +4970,7 @@ object SparkEntry {
     "q175_series_iir" -> Q(kqlQ(
       """print e = dynamic_to_json(series_iir(pack_array(1, 2, 3, 4, 5, 6, 7, 8), pack_array(0.5), pack_array(1.0, -0.5))),
               d = dynamic_to_json(series_iir(pack_array(5, 3, 8, 2), pack_array(1.0, -1.0), pack_array(1.0)))"""),
-      Some("""SELECT '[0.5,1.25,2.125,3.0625,4.03125,5.015625,6.0078125,7.00390625]' AS e, '[5.0,-2.0,5.0,-6.0]' AS d""")),
+      """SELECT '[0.5,1.25,2.125,3.0625,4.03125,5.015625,6.0078125,7.00390625]' AS e, '[5.0,-2.0,5.0,-6.0]' AS d"""),
 
     // Autocorrelation at lags 1..L in integer micro units (the
     // periodicity probe series_periods_detect maximises, exposed
@@ -4963,7 +4982,7 @@ object SparkEntry {
               b = dynamic_to_json(series_acf(pack_array(1, 2, 3, 4, 5), 2)),
               c = dynamic_to_json(series_acf(pack_array(5, 5, 5), 2)),
               d = dynamic_to_json(series_acf(pack_array(7), 2))"""),
-      Some("""SELECT '[-833333,666666,-500000]' AS a, '[400000,-100000]' AS b, CAST(NULL AS VARCHAR) AS c, CAST(NULL AS VARCHAR) AS d""")),
+      """SELECT '[-833333,666666,-500000]' AS a, '[400000,-100000]' AS b, CAST(NULL AS VARCHAR) AS c, CAST(NULL AS VARCHAR) AS d"""),
 
     // Scalar batch 8 (r12): hash_sha1 (JDK digest; DuckDB has no sha1,
     // so known-answer literals — the guid_base64 convention) and
@@ -4977,7 +4996,7 @@ object SparkEntry {
               e3 = tolong(round(erf(2.0) * 1000000000)),
               e4 = tolong(round(erf(-1.0) * 1000000000)),
               e5 = tolong(round(erfc(1.5) * 1000000000))"""),
-      Some("""SELECT 'a9993e364706816aba3e25717850c26c9cd0d89d' AS h1, 'da39a3ee5e6b4b0d3255bfef95601890afd80709' AS h2, CAST(520499878 AS BIGINT) AS e1, CAST(842700793 AS BIGINT) AS e2, CAST(995322265 AS BIGINT) AS e3, CAST(-842700793 AS BIGINT) AS e4, CAST(33894854 AS BIGINT) AS e5""")),
+      """SELECT 'a9993e364706816aba3e25717850c26c9cd0d89d' AS h1, 'da39a3ee5e6b4b0d3255bfef95601890afd80709' AS h2, CAST(520499878 AS BIGINT) AS e1, CAST(842700793 AS BIGINT) AS e2, CAST(995322265 AS BIGINT) AS e3, CAST(-842700793 AS BIGINT) AS e4, CAST(33894854 AS BIGINT) AS e5"""),
 
     // ingestion_time() resolves per record over file-backed sources
     // (parquet mtime as the single-writer analog of ADX extent
@@ -4987,7 +5006,7 @@ object SparkEntry {
       """orders | extend it = ingestion_time()
          | summarize n = count(), n_with = countif(isnotnull(it)),
                      n_files = count_distinct(it)"""),
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(COUNT(*) AS BIGINT) AS n_with, CAST(1 AS BIGINT) AS n_files FROM orders""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(COUNT(*) AS BIGINT) AS n_with, CAST(1 AS BIGINT) AS n_files FROM orders"""),
 
     // ADX materialized view as a first-class source function (r12):
     // build persists PARTIAL aggregation states (avg = (sum, count),
@@ -5020,7 +5039,7 @@ object SparkEntry {
           "materialized_view('graft_mv_orders') | sort by o_orderpriority asc",
           cat)
       },
-      Some("""SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c, MIN(o_orderdate) AS min_d, MAX(o_orderdate) AS max_d, CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / COUNT(*) AS avg_c, CAST(COUNT(DISTINCT o_orderstatus) AS BIGINT) AS d_status, ARG_MAX(o_orderstatus, o_orderkey) AS latest_status FROM orders GROUP BY 1 ORDER BY 1""")),
+      """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_c, MIN(o_orderdate) AS min_d, MAX(o_orderdate) AS max_d, CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / COUNT(*) AS avg_c, CAST(COUNT(DISTINCT o_orderstatus) AS BIGINT) AS d_status, ARG_MAX(o_orderstatus, o_orderkey) AS latest_status FROM orders GROUP BY 1 ORDER BY 1""", IndexBuild),
 
     // ADX buildschema aggregate: the minimal schema of a dynamic
     // column unioned across rows — single-typed keys render as the
@@ -5031,14 +5050,14 @@ object SparkEntry {
                            n_nationkey % 3 == 1, '{"x": 1.5, "z": [1, 2]}',
                            '{"x": true, "w": {"a": 1}}')
          | summarize s = buildschema(d)"""),
-      Some("""SELECT '{"w":"object","x":["bool","long","real"],"y":"string","z":"array"}' AS s""")),
+      """SELECT '{"w":"object","x":["bool","long","real"],"y":"string","z":"array"}' AS s"""),
 
     // `set` request-option statements parse and drop (ADX request
     // properties steer service behavior with no local counterpart)
     "q182_set_statements" -> Q(kqlQ(
       """set notruncation; set truncationmaxsize = 1048576;
          nation | summarize n = count()"""),
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nation""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nation"""),
 
     // Multi-column mv-expand (ADX lockstep/zip semantics): columns
     // expand by position, the shorter array null-pads to the longest
@@ -5047,7 +5066,7 @@ object SparkEntry {
          | extend xs = pack_array(1, 2, 3), ys = pack_array('a', 'b')
          | mv-expand xs, ys
          | project n_nationkey, xs, ys"""),
-      Some("""SELECT n_nationkey, CAST(v.xs AS BIGINT) AS xs, v.ys FROM (SELECT n_nationkey FROM nation WHERE n_nationkey < 3) n, (VALUES (1, 'a'), (2, 'b'), (3, NULL)) v(xs, ys) ORDER BY n_nationkey, xs""")),
+      """SELECT n_nationkey, CAST(v.xs AS BIGINT) AS xs, v.ys FROM (SELECT n_nationkey FROM nation WHERE n_nationkey < 3) n, (VALUES (1, 'a'), (2, 'b'), (3, NULL)) v(xs, ys) ORDER BY n_nationkey, xs"""),
 
     // union isfuzzy=true: the unresolvable leg is skipped (ADX
     // semantics), the resolvable one fully answers — driver-visible
@@ -5055,14 +5074,14 @@ object SparkEntry {
     "q180_union_isfuzzy" -> Q(kqlQ(
       """union isfuzzy=true no_such_table, nation
          | summarize n = count(), s = sum(n_nationkey)"""),
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(n_nationkey) AS BIGINT) AS s FROM nation""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(n_nationkey) AS BIGINT) AS s FROM nation"""),
 
     // Cross-covariance at lags -L..L (lead-lag detection): a shift-by-1
     // copy peaks at lag +1; length mismatch nulls; known-answer oracle
     "q179_series_xcorr" -> Q(kqlQ(
       """print a = dynamic_to_json(series_xcorr(pack_array(1, 5, 1, 1), pack_array(1, 1, 5, 1), 2)),
               b = dynamic_to_json(series_xcorr(pack_array(1, 2, 3), pack_array(1, 2), 2))"""),
-      Some("""SELECT '[2,-5,-4,11,-6]' AS a, CAST(NULL AS VARCHAR) AS b""")),
+      """SELECT '[2,-5,-4,11,-6]' AS a, CAST(NULL AS VARCHAR) AS b"""),
 
     // Dynamic-time-warping distance (alignment-tolerant series
     // similarity): stretch-aligned series score 0 where euclidean
@@ -5073,14 +5092,14 @@ object SparkEntry {
               d1 = series_dtw(pack_array(0, 0, 0), pack_array(1, 1, 1)),
               d2 = series_dtw(pack_array(1, 5, 1, 1), pack_array(1, 1, 5, 1)),
               d3 = series_dtw(pack_array(1, 2), pack_array(2, 4))"""),
-      Some("""SELECT CAST(0 AS DOUBLE) AS d0, CAST(3 AS DOUBLE) AS d1, CAST(0 AS DOUBLE) AS d2, CAST(3 AS DOUBLE) AS d3""")),
+      """SELECT CAST(0 AS DOUBLE) AS d0, CAST(3 AS DOUBLE) AS d1, CAST(0 AS DOUBLE) AS d2, CAST(3 AS DOUBLE) AS d3"""),
 
     // Streaming cumulative top-k (complete mode, 2 micro-batches):
     // the oracle recomputes over BOTH batches in one pass — equality
     // proves the aggregation state crossed the batch boundary
     "tmp_stream_topk" -> Q(
       (s, dir) => streamTopkQuery(s, dir),
-      Some("""WITH t AS (SELECT unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM documents WHERE doc_id < 40) SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM t GROUP BY 1 ORDER BY cnt DESC, tok LIMIT 10""")),
+      """WITH t AS (SELECT unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM documents WHERE doc_id < 40) SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM t GROUP BY 1 ORDER BY cnt DESC, tok LIMIT 10""", StreamingHarness),
 
     // SentencePiece unigram-LM Viterbi segmentation (Kudo 2018): the
     // data-derived piece vocabulary, integer-micro log probs, and the
@@ -5089,7 +5108,7 @@ object SparkEntry {
     "llm_unigram_segment" -> Q(
       (s, dir) => LlmOps.unigramSegment(docs(s, dir))
         .orderBy(col("freq").desc, col("word")),
-      Some("""WITH wrd AS MATERIALIZED (SELECT w, CAST(COUNT(*) AS BIGINT) AS freq FROM (SELECT unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS w FROM documents) GROUP BY 1 HAVING len(w) <= 12), pc AS MATERIALIZED (SELECT substr(w, j, l) AS piece, CAST(SUM(freq) AS BIGINT) AS cnt FROM wrd, unnest(generate_series(1, 4)) s(l), unnest(generate_series(1, len(w) - l + 1)) t(j) WHERE len(w) >= l GROUP BY 1), top AS (SELECT piece, cnt FROM pc ORDER BY cnt DESC, piece LIMIT 256), ch AS (SELECT piece, cnt FROM pc WHERE len(piece) = 1), v0 AS (SELECT piece, MAX(cnt) AS cnt FROM (SELECT * FROM top UNION ALL SELECT * FROM ch) GROUP BY 1), tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM v0), voc AS MATERIALIZED (SELECT piece, CAST(ROUND(LN(CAST(cnt AS DOUBLE) / t) * 1000000) AS BIGINT) AS lp FROM v0, tot), ed0 AS (SELECT w, freq, CAST(j - 1 AS BIGINT) AS j, CAST(j + l - 1 AS BIGINT) AS i, substr(w, j, l) AS piece FROM wrd, unnest(generate_series(1, 4)) s(l), unnest(generate_series(1, len(w) - l + 1)) t(j) WHERE len(w) >= l), ed AS MATERIALIZED (SELECT ed0.w, ed0.freq, ed0.j, ed0.i, ed0.piece, voc.lp FROM ed0 JOIN voc ON voc.piece = ed0.piece), b0 AS MATERIALIZED (SELECT w, freq, CAST(0 AS BIGINT) AS pos, CAST(0 AS BIGINT) AS s, '' AS pth FROM wrd), b1 AS MATERIALIZED (SELECT * FROM b0 UNION ALL SELECT w, freq, CAST(1 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b0 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 1) WHERE rn = 1), b2 AS MATERIALIZED (SELECT * FROM b1 UNION ALL SELECT w, freq, CAST(2 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b1 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 2) WHERE rn = 1), b3 AS MATERIALIZED (SELECT * FROM b2 UNION ALL SELECT w, freq, CAST(3 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b2 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 3) WHERE rn = 1), b4 AS MATERIALIZED (SELECT * FROM b3 UNION ALL SELECT w, freq, CAST(4 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b3 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 4) WHERE rn = 1), b5 AS MATERIALIZED (SELECT * FROM b4 UNION ALL SELECT w, freq, CAST(5 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b4 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 5) WHERE rn = 1), b6 AS MATERIALIZED (SELECT * FROM b5 UNION ALL SELECT w, freq, CAST(6 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b5 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 6) WHERE rn = 1), b7 AS MATERIALIZED (SELECT * FROM b6 UNION ALL SELECT w, freq, CAST(7 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b6 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 7) WHERE rn = 1), b8 AS MATERIALIZED (SELECT * FROM b7 UNION ALL SELECT w, freq, CAST(8 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b7 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 8) WHERE rn = 1), b9 AS MATERIALIZED (SELECT * FROM b8 UNION ALL SELECT w, freq, CAST(9 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b8 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 9) WHERE rn = 1), b10 AS MATERIALIZED (SELECT * FROM b9 UNION ALL SELECT w, freq, CAST(10 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b9 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 10) WHERE rn = 1), b11 AS MATERIALIZED (SELECT * FROM b10 UNION ALL SELECT w, freq, CAST(11 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b10 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 11) WHERE rn = 1), b12 AS MATERIALIZED (SELECT * FROM b11 UNION ALL SELECT w, freq, CAST(12 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b11 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 12) WHERE rn = 1) SELECT w AS word, freq, pth AS seg, CAST(len(string_split(pth, ' ')) AS BIGINT) AS n_pieces, s AS score_u FROM b12 WHERE pos = len(w) ORDER BY freq DESC, word LIMIT 200""")),
+      """WITH wrd AS MATERIALIZED (SELECT w, CAST(COUNT(*) AS BIGINT) AS freq FROM (SELECT unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS w FROM documents) GROUP BY 1 HAVING len(w) <= 12), pc AS MATERIALIZED (SELECT substr(w, j, l) AS piece, CAST(SUM(freq) AS BIGINT) AS cnt FROM wrd, unnest(generate_series(1, 4)) s(l), unnest(generate_series(1, len(w) - l + 1)) t(j) WHERE len(w) >= l GROUP BY 1), top AS (SELECT piece, cnt FROM pc ORDER BY cnt DESC, piece LIMIT 256), ch AS (SELECT piece, cnt FROM pc WHERE len(piece) = 1), v0 AS (SELECT piece, MAX(cnt) AS cnt FROM (SELECT * FROM top UNION ALL SELECT * FROM ch) GROUP BY 1), tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM v0), voc AS MATERIALIZED (SELECT piece, CAST(ROUND(LN(CAST(cnt AS DOUBLE) / t) * 1000000) AS BIGINT) AS lp FROM v0, tot), ed0 AS (SELECT w, freq, CAST(j - 1 AS BIGINT) AS j, CAST(j + l - 1 AS BIGINT) AS i, substr(w, j, l) AS piece FROM wrd, unnest(generate_series(1, 4)) s(l), unnest(generate_series(1, len(w) - l + 1)) t(j) WHERE len(w) >= l), ed AS MATERIALIZED (SELECT ed0.w, ed0.freq, ed0.j, ed0.i, ed0.piece, voc.lp FROM ed0 JOIN voc ON voc.piece = ed0.piece), b0 AS MATERIALIZED (SELECT w, freq, CAST(0 AS BIGINT) AS pos, CAST(0 AS BIGINT) AS s, '' AS pth FROM wrd), b1 AS MATERIALIZED (SELECT * FROM b0 UNION ALL SELECT w, freq, CAST(1 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b0 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 1) WHERE rn = 1), b2 AS MATERIALIZED (SELECT * FROM b1 UNION ALL SELECT w, freq, CAST(2 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b1 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 2) WHERE rn = 1), b3 AS MATERIALIZED (SELECT * FROM b2 UNION ALL SELECT w, freq, CAST(3 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b2 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 3) WHERE rn = 1), b4 AS MATERIALIZED (SELECT * FROM b3 UNION ALL SELECT w, freq, CAST(4 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b3 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 4) WHERE rn = 1), b5 AS MATERIALIZED (SELECT * FROM b4 UNION ALL SELECT w, freq, CAST(5 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b4 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 5) WHERE rn = 1), b6 AS MATERIALIZED (SELECT * FROM b5 UNION ALL SELECT w, freq, CAST(6 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b5 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 6) WHERE rn = 1), b7 AS MATERIALIZED (SELECT * FROM b6 UNION ALL SELECT w, freq, CAST(7 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b6 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 7) WHERE rn = 1), b8 AS MATERIALIZED (SELECT * FROM b7 UNION ALL SELECT w, freq, CAST(8 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b7 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 8) WHERE rn = 1), b9 AS MATERIALIZED (SELECT * FROM b8 UNION ALL SELECT w, freq, CAST(9 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b8 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 9) WHERE rn = 1), b10 AS MATERIALIZED (SELECT * FROM b9 UNION ALL SELECT w, freq, CAST(10 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b9 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 10) WHERE rn = 1), b11 AS MATERIALIZED (SELECT * FROM b10 UNION ALL SELECT w, freq, CAST(11 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b10 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 11) WHERE rn = 1), b12 AS MATERIALIZED (SELECT * FROM b11 UNION ALL SELECT w, freq, CAST(12 AS BIGINT) AS pos, s, pth FROM (SELECT e.w, e.freq, b.s + e.lp AS s, CASE WHEN e.j = 0 THEN e.piece ELSE b.pth || ' ' || e.piece END AS pth, ROW_NUMBER() OVER (PARTITION BY e.w ORDER BY b.s + e.lp DESC, e.j ASC) AS rn FROM ed e JOIN b11 b ON b.w = e.w AND b.pos = e.j WHERE e.i = 12) WHERE rn = 1) SELECT w AS word, freq, pth AS seg, CAST(len(string_split(pth, ' ')) AS BIGINT) AS n_pieces, s AS score_u FROM b12 WHERE pos = len(w) ORDER BY freq DESC, word LIMIT 200"""),
 
     // robots.txt permission check: one planted policy, agent and path
     // varied arithmetically per doc; the oracle states the expected
@@ -5119,7 +5138,7 @@ object SparkEntry {
               List(robots, agent, path)).as("allowed"))
           .orderBy("doc_id")
       },
-      Some("""SELECT doc_id, CASE doc_id % 3 WHEN 0 THEN 'Alpha' WHEN 1 THEN 'beta' ELSE 'gamma' END AS agent, CASE doc_id % 6 WHEN 0 THEN '/private/open/x' WHEN 1 THEN '/private/y' WHEN 2 THEN '/tmp/z' WHEN 3 THEN '/Docs/q' WHEN 4 THEN '/Admin/x' ELSE '/admin/x' END AS path, CASE WHEN doc_id % 3 <= 1 THEN (CASE doc_id % 6 WHEN 1 THEN FALSE WHEN 3 THEN FALSE ELSE TRUE END) ELSE (CASE doc_id % 6 WHEN 2 THEN FALSE WHEN 4 THEN FALSE ELSE TRUE END) END AS allowed FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CASE doc_id % 3 WHEN 0 THEN 'Alpha' WHEN 1 THEN 'beta' ELSE 'gamma' END AS agent, CASE doc_id % 6 WHEN 0 THEN '/private/open/x' WHEN 1 THEN '/private/y' WHEN 2 THEN '/tmp/z' WHEN 3 THEN '/Docs/q' WHEN 4 THEN '/Admin/x' ELSE '/admin/x' END AS path, CASE WHEN doc_id % 3 <= 1 THEN (CASE doc_id % 6 WHEN 1 THEN FALSE WHEN 3 THEN FALSE ELSE TRUE END) ELSE (CASE doc_id % 6 WHEN 2 THEN FALSE WHEN 4 THEN FALSE ELSE TRUE END) END AS allowed FROM documents ORDER BY doc_id"""),
 
     // Audio energy-envelope fingerprint: 64 gradient-sign bits over a
     // planted 65-byte envelope (md5-ascii bytes); the oracle derives
@@ -5139,7 +5158,7 @@ object SparkEntry {
             .otherwise(unhex(env)))
         LlmOps.audioDhash(d, "payload").orderBy("doc_id")
       },
-      Some("""WITH e AS (SELECT doc_id, i, (ascii(substr(md5(CAST(doc_id AS VARCHAR) || '_e' || i), 1, 1)) * 7 + ascii(substr(md5(CAST(doc_id AS VARCHAR) || '_e' || i), 2, 1)) * 13) % 256 AS v FROM documents, unnest(generate_series(0, 64)) s(i)), g AS (SELECT a.doc_id, a.i, CASE WHEN a.v < b.v THEN 1 ELSE 0 END AS bit FROM e a JOIN e b ON b.doc_id = a.doc_id AND b.i = a.i + 1 WHERE a.i <= 63) SELECT doc_id, CASE WHEN doc_id % 4 = 3 THEN NULL ELSE CAST(SUM(CASE WHEN i = 63 THEN bit * (-9223372036854775807 - 1) ELSE bit * (CAST(1 AS BIGINT) << i) END) AS BIGINT) END AS dhash FROM g GROUP BY 1 ORDER BY 1""")),
+      """WITH e AS (SELECT doc_id, i, (ascii(substr(md5(CAST(doc_id AS VARCHAR) || '_e' || i), 1, 1)) * 7 + ascii(substr(md5(CAST(doc_id AS VARCHAR) || '_e' || i), 2, 1)) * 13) % 256 AS v FROM documents, unnest(generate_series(0, 64)) s(i)), g AS (SELECT a.doc_id, a.i, CASE WHEN a.v < b.v THEN 1 ELSE 0 END AS bit FROM e a JOIN e b ON b.doc_id = a.doc_id AND b.i = a.i + 1 WHERE a.i <= 63) SELECT doc_id, CASE WHEN doc_id % 4 = 3 THEN NULL ELSE CAST(SUM(CASE WHEN i = 63 THEN bit * (-9223372036854775807 - 1) ELSE bit * (CAST(1 AS BIGINT) << i) END) AS BIGINT) END AS dhash FROM g GROUP BY 1 ORDER BY 1"""),
 
     // Perceptual image dHash over planted 9x8 grayscale bitmaps:
     // px(r,c) = (d*7 + r*13 + c*31) % 256, except doc_id%5==4 docs copy
@@ -5151,7 +5170,7 @@ object SparkEntry {
     "llm_image_dhash" -> Q(
       (s, dir) => LlmOps.imageDhash(plantedImages(s, dir), "payload")
         .orderBy("doc_id"),
-      Some("""WITH px AS (SELECT doc_id, r, c, CASE WHEN doc_id % 5 = 4 AND r = 0 AND c = 0 THEN ((ascii(substr(md5(CAST(doc_id - 1 AS VARCHAR) || '_' || r || '_' || c), 1, 1)) * 7 + ascii(substr(md5(CAST(doc_id - 1 AS VARCHAR) || '_' || r || '_' || c), 2, 1)) * 13) % 256 + 1) % 256 WHEN doc_id % 5 = 4 THEN (ascii(substr(md5(CAST(doc_id - 1 AS VARCHAR) || '_' || r || '_' || c), 1, 1)) * 7 + ascii(substr(md5(CAST(doc_id - 1 AS VARCHAR) || '_' || r || '_' || c), 2, 1)) * 13) % 256 ELSE (ascii(substr(md5(CAST(doc_id AS VARCHAR) || '_' || r || '_' || c), 1, 1)) * 7 + ascii(substr(md5(CAST(doc_id AS VARCHAR) || '_' || r || '_' || c), 2, 1)) * 13) % 256 END AS v FROM documents, unnest(generate_series(0, 7)) s(r), unnest(generate_series(0, 8)) t(c)), g AS (SELECT a.doc_id, a.r, a.c, CASE WHEN a.v < b.v THEN 1 ELSE 0 END AS bit FROM px a JOIN px b ON b.doc_id = a.doc_id AND b.r = a.r AND b.c = a.c + 1 WHERE a.c <= 7) SELECT doc_id, CAST(SUM(CASE WHEN r = 7 AND c = 7 THEN bit * (-9223372036854775807 - 1) ELSE bit * (CAST(1 AS BIGINT) << (r * 8 + c)) END) AS BIGINT) AS dhash FROM g GROUP BY 1 ORDER BY 1""")),
+      """WITH px AS (SELECT doc_id, r, c, CASE WHEN doc_id % 5 = 4 AND r = 0 AND c = 0 THEN ((ascii(substr(md5(CAST(doc_id - 1 AS VARCHAR) || '_' || r || '_' || c), 1, 1)) * 7 + ascii(substr(md5(CAST(doc_id - 1 AS VARCHAR) || '_' || r || '_' || c), 2, 1)) * 13) % 256 + 1) % 256 WHEN doc_id % 5 = 4 THEN (ascii(substr(md5(CAST(doc_id - 1 AS VARCHAR) || '_' || r || '_' || c), 1, 1)) * 7 + ascii(substr(md5(CAST(doc_id - 1 AS VARCHAR) || '_' || r || '_' || c), 2, 1)) * 13) % 256 ELSE (ascii(substr(md5(CAST(doc_id AS VARCHAR) || '_' || r || '_' || c), 1, 1)) * 7 + ascii(substr(md5(CAST(doc_id AS VARCHAR) || '_' || r || '_' || c), 2, 1)) * 13) % 256 END AS v FROM documents, unnest(generate_series(0, 7)) s(r), unnest(generate_series(0, 8)) t(c)), g AS (SELECT a.doc_id, a.r, a.c, CASE WHEN a.v < b.v THEN 1 ELSE 0 END AS bit FROM px a JOIN px b ON b.doc_id = a.doc_id AND b.r = a.r AND b.c = a.c + 1 WHERE a.c <= 7) SELECT doc_id, CAST(SUM(CASE WHEN r = 7 AND c = 7 THEN bit * (-9223372036854775807 - 1) ELSE bit * (CAST(1 AS BIGINT) << (r * 8 + c)) END) AS BIGINT) AS dhash FROM g GROUP BY 1 ORDER BY 1"""),
 
     // Near-dup image pairs by dHash hamming <= 3 via the 4x16-bit
     // pigeonhole (lossless to hamming 3); the oracle recomputes hashes
@@ -5161,7 +5180,7 @@ object SparkEntry {
       (s, dir) => LlmOps.imageNearDupPairs(
           LlmOps.imageDhash(plantedImages(s, dir), "payload"))
         .orderBy("id_a", "id_b"),
-      Some("""WITH px AS (SELECT doc_id, r, c, CASE WHEN doc_id % 5 = 4 AND r = 0 AND c = 0 THEN ((ascii(substr(md5(CAST(doc_id - 1 AS VARCHAR) || '_' || r || '_' || c), 1, 1)) * 7 + ascii(substr(md5(CAST(doc_id - 1 AS VARCHAR) || '_' || r || '_' || c), 2, 1)) * 13) % 256 + 1) % 256 WHEN doc_id % 5 = 4 THEN (ascii(substr(md5(CAST(doc_id - 1 AS VARCHAR) || '_' || r || '_' || c), 1, 1)) * 7 + ascii(substr(md5(CAST(doc_id - 1 AS VARCHAR) || '_' || r || '_' || c), 2, 1)) * 13) % 256 ELSE (ascii(substr(md5(CAST(doc_id AS VARCHAR) || '_' || r || '_' || c), 1, 1)) * 7 + ascii(substr(md5(CAST(doc_id AS VARCHAR) || '_' || r || '_' || c), 2, 1)) * 13) % 256 END AS v FROM documents, unnest(generate_series(0, 7)) s(r), unnest(generate_series(0, 8)) t(c)), g AS (SELECT a.doc_id, a.r, a.c, CASE WHEN a.v < b.v THEN 1 ELSE 0 END AS bit FROM px a JOIN px b ON b.doc_id = a.doc_id AND b.r = a.r AND b.c = a.c + 1 WHERE a.c <= 7), h AS (SELECT doc_id, CAST(SUM(CASE WHEN r = 7 AND c = 7 THEN bit * (-9223372036854775807 - 1) ELSE bit * (CAST(1 AS BIGINT) << (r * 8 + c)) END) AS BIGINT) AS dh FROM g GROUP BY 1) SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(bit_count(xor(a.dh, b.dh)) AS BIGINT) AS hamming FROM h a JOIN h b ON a.doc_id < b.doc_id WHERE bit_count(xor(a.dh, b.dh)) <= 3 ORDER BY 1, 2""")),
+      """WITH px AS (SELECT doc_id, r, c, CASE WHEN doc_id % 5 = 4 AND r = 0 AND c = 0 THEN ((ascii(substr(md5(CAST(doc_id - 1 AS VARCHAR) || '_' || r || '_' || c), 1, 1)) * 7 + ascii(substr(md5(CAST(doc_id - 1 AS VARCHAR) || '_' || r || '_' || c), 2, 1)) * 13) % 256 + 1) % 256 WHEN doc_id % 5 = 4 THEN (ascii(substr(md5(CAST(doc_id - 1 AS VARCHAR) || '_' || r || '_' || c), 1, 1)) * 7 + ascii(substr(md5(CAST(doc_id - 1 AS VARCHAR) || '_' || r || '_' || c), 2, 1)) * 13) % 256 ELSE (ascii(substr(md5(CAST(doc_id AS VARCHAR) || '_' || r || '_' || c), 1, 1)) * 7 + ascii(substr(md5(CAST(doc_id AS VARCHAR) || '_' || r || '_' || c), 2, 1)) * 13) % 256 END AS v FROM documents, unnest(generate_series(0, 7)) s(r), unnest(generate_series(0, 8)) t(c)), g AS (SELECT a.doc_id, a.r, a.c, CASE WHEN a.v < b.v THEN 1 ELSE 0 END AS bit FROM px a JOIN px b ON b.doc_id = a.doc_id AND b.r = a.r AND b.c = a.c + 1 WHERE a.c <= 7), h AS (SELECT doc_id, CAST(SUM(CASE WHEN r = 7 AND c = 7 THEN bit * (-9223372036854775807 - 1) ELSE bit * (CAST(1 AS BIGINT) << (r * 8 + c)) END) AS BIGINT) AS dh FROM g GROUP BY 1) SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(bit_count(xor(a.dh, b.dh)) AS BIGINT) AS hamming FROM h a JOIN h b ON a.doc_id < b.doc_id WHERE bit_count(xor(a.dh, b.dh)) <= 3 ORDER BY 1, 2"""),
 
     // n-gram novelty of the eval fold vs the train fold: fraction of
     // distinct trigrams absent from train, integer micros; the oracle
@@ -5170,7 +5189,7 @@ object SparkEntry {
     "llm_ngram_novelty" -> Q(
       (s, dir) => LlmOps.ngramNovelty(docs(s, dir), n = 3, holdMod = 7)
         .orderBy("doc_id"),
-      Some("""WITH tk AS (SELECT doc_id, list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1) AS toks FROM documents), eg AS (SELECT DISTINCT doc_id AS eid, array_to_string(toks[i:i+2], ' ') AS gram FROM tk, unnest(generate_series(1, len(toks) - 2)) s(i) WHERE doc_id % 7 = 0 AND len(toks) >= 3), tg AS (SELECT DISTINCT array_to_string(toks[i:i+2], ' ') AS gram FROM tk, unnest(generate_series(1, len(toks) - 2)) s(i) WHERE doc_id % 7 <> 0 AND len(toks) >= 3), tot AS (SELECT eid, CAST(COUNT(*) AS BIGINT) AS n_grams FROM eg GROUP BY 1), kn AS (SELECT eid, CAST(COUNT(*) AS BIGINT) AS n_known FROM eg JOIN tg USING (gram) GROUP BY 1) SELECT tot.eid AS doc_id, tot.n_grams, CAST(tot.n_grams - COALESCE(kn.n_known, 0) AS BIGINT) AS n_novel, CAST(((tot.n_grams - COALESCE(kn.n_known, 0)) * 1000000) // tot.n_grams AS BIGINT) AS novelty_u FROM tot LEFT JOIN kn USING (eid) ORDER BY 1""")),
+      """WITH tk AS (SELECT doc_id, list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1) AS toks FROM documents), eg AS (SELECT DISTINCT doc_id AS eid, array_to_string(toks[i:i+2], ' ') AS gram FROM tk, unnest(generate_series(1, len(toks) - 2)) s(i) WHERE doc_id % 7 = 0 AND len(toks) >= 3), tg AS (SELECT DISTINCT array_to_string(toks[i:i+2], ' ') AS gram FROM tk, unnest(generate_series(1, len(toks) - 2)) s(i) WHERE doc_id % 7 <> 0 AND len(toks) >= 3), tot AS (SELECT eid, CAST(COUNT(*) AS BIGINT) AS n_grams FROM eg GROUP BY 1), kn AS (SELECT eid, CAST(COUNT(*) AS BIGINT) AS n_known FROM eg JOIN tg USING (gram) GROUP BY 1) SELECT tot.eid AS doc_id, tot.n_grams, CAST(tot.n_grams - COALESCE(kn.n_known, 0) AS BIGINT) AS n_novel, CAST(((tot.n_grams - COALESCE(kn.n_known, 0)) * 1000000) // tot.n_grams AS BIGINT) AS novelty_u FROM tot LEFT JOIN kn USING (eid) ORDER BY 1"""),
 
     // Log2 token-length histogram per source (dataset-card profile):
     // buckets by integer bit length, never floating log -> boundary-
@@ -5178,7 +5197,7 @@ object SparkEntry {
     "llm_length_histogram" -> Q(
       (s, dir) => LlmOps.lengthHistogram(docs(s, dir))
         .orderBy("source", "len_bucket"),
-      Some("""WITH t AS (SELECT source, CAST(len(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS BIGINT) AS n FROM documents), b AS (SELECT source, n, CASE WHEN n <= 0 THEN CAST(-1 AS BIGINT) ELSE CAST(len(bin(n)) - 1 AS BIGINT) END AS len_bucket FROM t) SELECT source, len_bucket, CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(n) AS BIGINT) AS n_tokens, CAST(MIN(n) AS BIGINT) AS min_len, CAST(MAX(n) AS BIGINT) AS max_len FROM b GROUP BY 1, 2 ORDER BY 1, 2""")),
+      """WITH t AS (SELECT source, CAST(len(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS BIGINT) AS n FROM documents), b AS (SELECT source, n, CASE WHEN n <= 0 THEN CAST(-1 AS BIGINT) ELSE CAST(len(bin(n)) - 1 AS BIGINT) END AS len_bucket FROM t) SELECT source, len_bucket, CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(n) AS BIGINT) AS n_tokens, CAST(MIN(n) AS BIGINT) AS min_len, CAST(MAX(n) AS BIGINT) AS max_len FROM b GROUP BY 1, 2 ORDER BY 1, 2"""),
 
     // Embedding-centroid drift per source: integer micro means (div
     // remainder dropped identically), squared distance to the corpus
@@ -5215,7 +5234,7 @@ object SparkEntry {
             sum(col("doc_id")).as("id_sum"))
           .orderBy("host")
       },
-      Some("""WITH b AS (SELECT doc_id, n_chars, (doc_id // 2) % 50 AS hostn, doc_id // 2 AS pid FROM documents WHERE doc_id % 7 <> 0), dd AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY hostn, pid ORDER BY n_chars DESC, doc_id ASC) AS rn FROM b), fs AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY hostn ORDER BY n_chars DESC, doc_id ASC) AS rk FROM dd WHERE rn = 1) SELECT 'h' || CAST(hostn AS VARCHAR) AS host, CAST(COUNT(*) AS BIGINT) AS n_urls, CAST(MAX((rk - 1) // 2) AS BIGINT) AS max_slot, CAST(SUM(doc_id) AS BIGINT) AS id_sum FROM fs GROUP BY 1 ORDER BY 1""")),
+      """WITH b AS (SELECT doc_id, n_chars, (doc_id // 2) % 50 AS hostn, doc_id // 2 AS pid FROM documents WHERE doc_id % 7 <> 0), dd AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY hostn, pid ORDER BY n_chars DESC, doc_id ASC) AS rn FROM b), fs AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY hostn ORDER BY n_chars DESC, doc_id ASC) AS rk FROM dd WHERE rn = 1) SELECT 'h' || CAST(hostn AS VARCHAR) AS host, CAST(COUNT(*) AS BIGINT) AS n_urls, CAST(MAX((rk - 1) // 2) AS BIGINT) AS max_slot, CAST(SUM(doc_id) AS BIGINT) AS id_sum FROM fs GROUP BY 1 ORDER BY 1"""),
 
     // Bucket-PRUNED point lookup: a key-equality read on a bucketed
     // table touches 2 of 8 buckets (SelectedBucketsCount asserted in
@@ -5239,7 +5258,7 @@ object SparkEntry {
         finally s.conf.set(
           "spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
       },
-      Some("""SELECT doc_id, source, n_chars FROM documents WHERE doc_id IN (7, 123) ORDER BY doc_id""")),
+      """SELECT doc_id, source, n_chars FROM documents WHERE doc_id IN (7, 123) ORDER BY doc_id""", IndexBuild),
 
     // Unicode-script mix: planted per-script phrases; the oracle
     // recomputes every count with RE2's spelling of the SAME Unicode
@@ -5250,7 +5269,7 @@ object SparkEntry {
     "llm_tokenizer_oov" -> Q(
       (s, dir) => LlmOps.tokenizerOov(docs(s, dir), 500)
         .orderBy("doc_id"),
-      Some("""WITH tk AS (SELECT doc_id, unnest(list_filter(string_split(lower(COALESCE(text, '')), ' '), z -> len(z) >= 1)) AS tok FROM documents), v AS (SELECT tok FROM (SELECT tok, ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, tok) AS rn FROM tk GROUP BY tok) WHERE rn <= 500) SELECT t.doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens, CAST(SUM(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov, CAST(SUM(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) * 1000000 // COUNT(*) AS BIGINT) AS oov_u FROM tk t LEFT JOIN v ON v.tok = t.tok GROUP BY 1 ORDER BY 1""")),
+      """WITH tk AS (SELECT doc_id, unnest(list_filter(string_split(lower(COALESCE(text, '')), ' '), z -> len(z) >= 1)) AS tok FROM documents), v AS (SELECT tok FROM (SELECT tok, ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, tok) AS rn FROM tk GROUP BY tok) WHERE rn <= 500) SELECT t.doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens, CAST(SUM(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov, CAST(SUM(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) * 1000000 // COUNT(*) AS BIGINT) AS oov_u FROM tk t LEFT JOIN v ON v.tok = t.tok GROUP BY 1 ORDER BY 1"""),
 
     // Deterministic global training shuffle (r13): md5(seed:id) order
     // key (exact in every engine), two-phase global rank, round-robin
@@ -5259,14 +5278,14 @@ object SparkEntry {
     "llm_global_shuffle" -> Q(
       (s, dir) => LlmOps.globalShuffle(docs(s, dir), shards = 8)
         .orderBy("shard", "pos_in_shard"),
-      Some("""WITH r AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY md5('42:' || CAST(doc_id AS VARCHAR)), doc_id) - 1 AS pos FROM documents) SELECT doc_id, CAST(pos % 8 AS BIGINT) AS shard, CAST(pos // 8 AS BIGINT) AS pos_in_shard FROM r ORDER BY shard, pos_in_shard""")),
+      """WITH r AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY md5('42:' || CAST(doc_id AS VARCHAR)), doc_id) - 1 AS pos FROM documents) SELECT doc_id, CAST(pos % 8 AS BIGINT) AS shard, CAST(pos // 8 AS BIGINT) AS pos_in_shard FROM r ORDER BY shard, pos_in_shard"""),
 
     // Classifier calibration audit (r13): fixed-width reliability bins
     // of (TTR score, length outcome) — per-bin support, positives,
     // mean predicted and observed rate, all integer micros
     "llm_calibration" -> Q(
       (s, dir) => LlmOps.calibrationBins(docs(s, dir)).orderBy("bin"),
-      Some("""WITH t AS (SELECT doc_id, len(toks) AS n, len(list_distinct(toks)) AS d, len(coalesce(text, '')) AS c FROM (SELECT doc_id, text, list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'), x -> len(x) >= 1) AS toks FROM documents) WHERE len(toks) >= 1), s AS (SELECT (d * 1000000) // n AS score_u, CASE WHEN c >= 200 THEN 1 ELSE 0 END AS label FROM t), b AS (SELECT least((score_u * 10) // 1000000, 9) AS bin, score_u, label FROM s) SELECT CAST(bin AS BIGINT) AS bin, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(label) AS BIGINT) AS positives, CAST(SUM(score_u) // COUNT(*) AS BIGINT) AS mean_score_u, CAST((SUM(label) * 1000000) // COUNT(*) AS BIGINT) AS observed_u FROM b GROUP BY 1 ORDER BY 1""")),
+      """WITH t AS (SELECT doc_id, len(toks) AS n, len(list_distinct(toks)) AS d, len(coalesce(text, '')) AS c FROM (SELECT doc_id, text, list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'), x -> len(x) >= 1) AS toks FROM documents) WHERE len(toks) >= 1), s AS (SELECT (d * 1000000) // n AS score_u, CASE WHEN c >= 200 THEN 1 ELSE 0 END AS label FROM t), b AS (SELECT least((score_u * 10) // 1000000, 9) AS bin, score_u, label FROM s) SELECT CAST(bin AS BIGINT) AS bin, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(label) AS BIGINT) AS positives, CAST(SUM(score_u) // COUNT(*) AS BIGINT) AS mean_score_u, CAST((SUM(label) * 1000000) // COUNT(*) AS BIGINT) AS observed_u FROM b GROUP BY 1 ORDER BY 1"""),
 
     // ROUGE-1/2 recall (r13): same subsequence cand plant as llm_bleu;
     // the oracle recomputes the multiset gram intersection from its own
@@ -5281,7 +5300,7 @@ object SparkEntry {
             filter(tk, (z, i) => pmod(i + 1, lit(7)) =!= 0), " "))
         LlmOps.rougeN(d2, "ref", "cand").orderBy("doc_id")
       },
-      Some("""WITH base AS (SELECT doc_id, list_filter(string_split(coalesce(text, ''), ' '), x -> len(x) >= 1) AS r FROM documents), t AS (SELECT doc_id, r, list_filter(r, (x, i) -> i % 7 != 0) AS c FROM base), r1c AS (SELECT doc_id, g, COUNT(*) AS n FROM (SELECT doc_id, unnest(r) AS g FROM t) GROUP BY 1, 2), c1c AS (SELECT doc_id, g, COUNT(*) AS n FROM (SELECT doc_id, unnest(c) AS g FROM t) GROUP BY 1, 2), m1 AS (SELECT r1c.doc_id, SUM(LEAST(r1c.n, c1c.n)) AS m FROM r1c JOIN c1c ON r1c.doc_id = c1c.doc_id AND r1c.g = c1c.g GROUP BY 1), r2c AS (SELECT doc_id, g, COUNT(*) AS n FROM (SELECT doc_id, unnest(list_transform(generate_series(1, len(r) - 1), i -> concat(r[i], chr(31), r[i+1]))) AS g FROM t WHERE len(r) >= 2) GROUP BY 1, 2), c2c AS (SELECT doc_id, g, COUNT(*) AS n FROM (SELECT doc_id, unnest(list_transform(generate_series(1, len(c) - 1), i -> concat(c[i], chr(31), c[i+1]))) AS g FROM t WHERE len(c) >= 2) GROUP BY 1, 2), m2 AS (SELECT r2c.doc_id, SUM(LEAST(r2c.n, c2c.n)) AS m FROM r2c JOIN c2c ON r2c.doc_id = c2c.doc_id AND r2c.g = c2c.g GROUP BY 1), ln AS (SELECT doc_id, len(r) AS rl FROM t) SELECT ln.doc_id, CAST(COALESCE(m1.m, 0) AS BIGINT) AS match_1, CAST(rl AS BIGINT) AS ref_1, CAST(CASE WHEN rl > 0 THEN (COALESCE(m1.m, 0) * 1000000) // rl ELSE 0 END AS BIGINT) AS recall_1_u, CAST(COALESCE(m2.m, 0) AS BIGINT) AS match_2, CAST(greatest(rl - 1, 0) AS BIGINT) AS ref_2, CAST(CASE WHEN rl - 1 > 0 THEN (COALESCE(m2.m, 0) * 1000000) // (rl - 1) ELSE 0 END AS BIGINT) AS recall_2_u FROM ln LEFT JOIN m1 ON ln.doc_id = m1.doc_id LEFT JOIN m2 ON ln.doc_id = m2.doc_id ORDER BY ln.doc_id""")),
+      """WITH base AS (SELECT doc_id, list_filter(string_split(coalesce(text, ''), ' '), x -> len(x) >= 1) AS r FROM documents), t AS (SELECT doc_id, r, list_filter(r, (x, i) -> i % 7 != 0) AS c FROM base), r1c AS (SELECT doc_id, g, COUNT(*) AS n FROM (SELECT doc_id, unnest(r) AS g FROM t) GROUP BY 1, 2), c1c AS (SELECT doc_id, g, COUNT(*) AS n FROM (SELECT doc_id, unnest(c) AS g FROM t) GROUP BY 1, 2), m1 AS (SELECT r1c.doc_id, SUM(LEAST(r1c.n, c1c.n)) AS m FROM r1c JOIN c1c ON r1c.doc_id = c1c.doc_id AND r1c.g = c1c.g GROUP BY 1), r2c AS (SELECT doc_id, g, COUNT(*) AS n FROM (SELECT doc_id, unnest(list_transform(generate_series(1, len(r) - 1), i -> concat(r[i], chr(31), r[i+1]))) AS g FROM t WHERE len(r) >= 2) GROUP BY 1, 2), c2c AS (SELECT doc_id, g, COUNT(*) AS n FROM (SELECT doc_id, unnest(list_transform(generate_series(1, len(c) - 1), i -> concat(c[i], chr(31), c[i+1]))) AS g FROM t WHERE len(c) >= 2) GROUP BY 1, 2), m2 AS (SELECT r2c.doc_id, SUM(LEAST(r2c.n, c2c.n)) AS m FROM r2c JOIN c2c ON r2c.doc_id = c2c.doc_id AND r2c.g = c2c.g GROUP BY 1), ln AS (SELECT doc_id, len(r) AS rl FROM t) SELECT ln.doc_id, CAST(COALESCE(m1.m, 0) AS BIGINT) AS match_1, CAST(rl AS BIGINT) AS ref_1, CAST(CASE WHEN rl > 0 THEN (COALESCE(m1.m, 0) * 1000000) // rl ELSE 0 END AS BIGINT) AS recall_1_u, CAST(COALESCE(m2.m, 0) AS BIGINT) AS match_2, CAST(greatest(rl - 1, 0) AS BIGINT) AS ref_2, CAST(CASE WHEN rl - 1 > 0 THEN (COALESCE(m2.m, 0) * 1000000) // (rl - 1) ELSE 0 END AS BIGINT) AS recall_2_u FROM ln LEFT JOIN m1 ON ln.doc_id = m1.doc_id LEFT JOIN m2 ON ln.doc_id = m2.doc_id ORDER BY ln.doc_id"""),
 
     // Composed training-run prep pipeline v6 (r13): CCNet per-language
     // quality gate (drop the tail tercile) -> SFT loss-mask geometry
@@ -5312,13 +5331,13 @@ object SparkEntry {
             col("pos_in_shard"))
           .orderBy("doc_id")
       },
-      Some("""WITH terms AS (SELECT doc_id, lang, unnest(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'), x -> len(x) >= 1)) AS term FROM documents), tfx AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS tf FROM terms GROUP BY 1), nx AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM terms), sc AS (SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS n_tokens, CAST(SUM(CAST(ROUND(-LN(tf / n) * 1000000) AS BIGINT)) // COUNT(*) AS BIGINT) AS score_u FROM terms JOIN tfx USING (term), nx GROUP BY 1, 2), rk AS (SELECT doc_id, lang, n_tokens, CASE ((ROW_NUMBER() OVER (PARTITION BY lang ORDER BY score_u, doc_id) - 1) * 3) // (COUNT(*) OVER (PARTITION BY lang)) WHEN 0 THEN 'head' WHEN 1 THEN 'middle' ELSE 'tail' END AS bucket FROM sc), keep AS (SELECT doc_id, lang, bucket, n_tokens FROM rk WHERE bucket != 'tail'), b AS (SELECT doc_id, lang, bucket, CAST(greatest(1, (n_tokens * 330000) // 1000000) + 2 AS BIGINT) AS loss_start, CAST(n_tokens - greatest(1, (n_tokens * 330000) // 1000000) + 1 AS BIGINT) AS loss_len FROM keep WHERE n_tokens >= 2), sh AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY md5('42:' || CAST(doc_id AS VARCHAR)), doc_id) - 1 AS pos FROM b) SELECT b.doc_id, lang, bucket, loss_start, loss_len, CAST(pos % 8 AS BIGINT) AS shard, CAST(pos // 8 AS BIGINT) AS pos_in_shard FROM b JOIN sh ON b.doc_id = sh.doc_id ORDER BY b.doc_id""")),
+      """WITH terms AS (SELECT doc_id, lang, unnest(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'), x -> len(x) >= 1)) AS term FROM documents), tfx AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS tf FROM terms GROUP BY 1), nx AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM terms), sc AS (SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS n_tokens, CAST(SUM(CAST(ROUND(-LN(tf / n) * 1000000) AS BIGINT)) // COUNT(*) AS BIGINT) AS score_u FROM terms JOIN tfx USING (term), nx GROUP BY 1, 2), rk AS (SELECT doc_id, lang, n_tokens, CASE ((ROW_NUMBER() OVER (PARTITION BY lang ORDER BY score_u, doc_id) - 1) * 3) // (COUNT(*) OVER (PARTITION BY lang)) WHEN 0 THEN 'head' WHEN 1 THEN 'middle' ELSE 'tail' END AS bucket FROM sc), keep AS (SELECT doc_id, lang, bucket, n_tokens FROM rk WHERE bucket != 'tail'), b AS (SELECT doc_id, lang, bucket, CAST(greatest(1, (n_tokens * 330000) // 1000000) + 2 AS BIGINT) AS loss_start, CAST(n_tokens - greatest(1, (n_tokens * 330000) // 1000000) + 1 AS BIGINT) AS loss_len FROM keep WHERE n_tokens >= 2), sh AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY md5('42:' || CAST(doc_id AS VARCHAR)), doc_id) - 1 AS pos FROM b) SELECT b.doc_id, lang, bucket, loss_start, loss_len, CAST(pos % 8 AS BIGINT) AS shard, CAST(pos // 8 AS BIGINT) AS pos_in_shard FROM b JOIN sh ON b.doc_id = sh.doc_id ORDER BY b.doc_id"""),
 
     // SFT pair assembly (r13): loss-mask geometry in pure integer
     // arithmetic over token counts — per-row projection, zero shuffle
     "llm_sft_pack" -> Q(
       (s, dir) => LlmOps.sftPack(docs(s, dir)).orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, len(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'), x -> len(x) >= 1)) AS n FROM documents) SELECT doc_id, CAST(n AS BIGINT) AS n_tokens, CAST(greatest(1, (n * 330000) // 1000000) AS BIGINT) AS n_prompt, CAST(n - greatest(1, (n * 330000) // 1000000) AS BIGINT) AS n_response, CAST(n + 2 AS BIGINT) AS total_len, CAST(greatest(1, (n * 330000) // 1000000) + 2 AS BIGINT) AS loss_start, CAST(n - greatest(1, (n * 330000) // 1000000) + 1 AS BIGINT) AS loss_len FROM t WHERE n >= 2 ORDER BY doc_id""")),
+      """WITH t AS (SELECT doc_id, len(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'), x -> len(x) >= 1)) AS n FROM documents) SELECT doc_id, CAST(n AS BIGINT) AS n_tokens, CAST(greatest(1, (n * 330000) // 1000000) AS BIGINT) AS n_prompt, CAST(n - greatest(1, (n * 330000) // 1000000) AS BIGINT) AS n_response, CAST(n + 2 AS BIGINT) AS total_len, CAST(greatest(1, (n * 330000) // 1000000) + 2 AS BIGINT) AS loss_start, CAST(n - greatest(1, (n * 330000) // 1000000) + 1 AS BIGINT) AS loss_len FROM t WHERE n >= 2 ORDER BY doc_id"""),
 
     // DPO preference pairs (r13): per-prompt (argmax, argmin) of the
     // deterministic type-token-ratio score with id tie-breaks — ONE
@@ -5326,26 +5345,26 @@ object SparkEntry {
     "llm_dpo_pairs" -> Q(
       (s, dir) => LlmOps.dpoPairs(docs(s, dir), groups = 50)
         .orderBy("prompt_id"),
-      Some("""WITH t AS (SELECT doc_id, doc_id % 50 AS prompt_id, len(toks) AS n, len(list_distinct(toks)) AS d FROM (SELECT doc_id, list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'), x -> len(x) >= 1) AS toks FROM documents) WHERE len(toks) >= 1), s AS (SELECT doc_id, prompt_id, (d * 1000000) // n AS score FROM t), g AS (SELECT prompt_id, doc_id, score, ROW_NUMBER() OVER (PARTITION BY prompt_id ORDER BY score DESC, doc_id ASC) AS rb, ROW_NUMBER() OVER (PARTITION BY prompt_id ORDER BY score ASC, doc_id ASC) AS rw, COUNT(*) OVER (PARTITION BY prompt_id) AS nc FROM s) SELECT b.prompt_id, b.doc_id AS chosen_id, w.doc_id AS rejected_id, CAST(b.score - w.score AS BIGINT) AS margin_u, CAST(b.nc AS BIGINT) AS n_candidates FROM g b JOIN g w ON b.prompt_id = w.prompt_id AND b.rb = 1 AND w.rw = 1 WHERE b.nc >= 2 AND b.score - w.score > 0 ORDER BY b.prompt_id""")),
+      """WITH t AS (SELECT doc_id, doc_id % 50 AS prompt_id, len(toks) AS n, len(list_distinct(toks)) AS d FROM (SELECT doc_id, list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'), x -> len(x) >= 1) AS toks FROM documents) WHERE len(toks) >= 1), s AS (SELECT doc_id, prompt_id, (d * 1000000) // n AS score FROM t), g AS (SELECT prompt_id, doc_id, score, ROW_NUMBER() OVER (PARTITION BY prompt_id ORDER BY score DESC, doc_id ASC) AS rb, ROW_NUMBER() OVER (PARTITION BY prompt_id ORDER BY score ASC, doc_id ASC) AS rw, COUNT(*) OVER (PARTITION BY prompt_id) AS nc FROM s) SELECT b.prompt_id, b.doc_id AS chosen_id, w.doc_id AS rejected_id, CAST(b.score - w.score AS BIGINT) AS margin_u, CAST(b.nc AS BIGINT) AS n_candidates FROM g b JOIN g w ON b.prompt_id = w.prompt_id AND b.rb = 1 AND w.rw = 1 WHERE b.nc >= 2 AND b.score - w.score > 0 ORDER BY b.prompt_id"""),
 
     // Matryoshka truncation-fidelity audit (r13): per-width prefix
     // energy ‖v[:d]‖/‖v‖ in per-row micros, dims-sized aggregate
     "llm_matryoshka" -> Q(
       (s, dir) => LlmOps.matryoshkaEval(embs(s, dir)).orderBy("dim"),
-      Some("""WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM embeddings), f AS (SELECT vec_id, vv, list_sum(list_transform(vv, x -> x * x)) AS fe FROM v), e AS (SELECT vec_id, d.dim AS dim, CAST(ROUND(sqrt(list_sum(list_transform(vv[1:d.dim], x -> x * x)) / fe) * 1000000) AS BIGINT) AS fid FROM f, (VALUES (8), (16), (32), (64)) d(dim) WHERE fe > 0) SELECT CAST(dim AS BIGINT) AS dim, CAST(COUNT(*) AS BIGINT) AS n_vecs, CAST(SUM(fid) // COUNT(*) AS BIGINT) AS avg_fid_u, CAST(MIN(fid) AS BIGINT) AS min_fid_u FROM e GROUP BY dim ORDER BY dim""")),
+      """WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv FROM embeddings), f AS (SELECT vec_id, vv, list_sum(list_transform(vv, x -> x * x)) AS fe FROM v), e AS (SELECT vec_id, d.dim AS dim, CAST(ROUND(sqrt(list_sum(list_transform(vv[1:d.dim], x -> x * x)) / fe) * 1000000) AS BIGINT) AS fid FROM f, (VALUES (8), (16), (32), (64)) d(dim) WHERE fe > 0) SELECT CAST(dim AS BIGINT) AS dim, CAST(COUNT(*) AS BIGINT) AS n_vecs, CAST(SUM(fid) // COUNT(*) AS BIGINT) AS avg_fid_u, CAST(MIN(fid) AS BIGINT) AS min_fid_u FROM e GROUP BY dim ORDER BY dim"""),
 
     // Curriculum shards (r13): global two-phase rank by difficulty
     // score, contiguous shard cut by rank arithmetic
     "llm_curriculum" -> Q(
       (s, dir) => LlmOps.curriculumShards(docs(s, dir), shards = 8)
         .orderBy("rank"),
-      Some("""WITH t AS (SELECT doc_id, len(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'), x -> len(x) >= 1)) AS n, len(coalesce(text, '')) AS c FROM documents), s AS (SELECT doc_id, (c * 1000000) // n AS score_u FROM t WHERE n >= 1), r AS (SELECT doc_id, score_u, ROW_NUMBER() OVER (ORDER BY score_u, doc_id) AS rk, COUNT(*) OVER () AS nn FROM s) SELECT doc_id, CAST(score_u AS BIGINT) AS score_u, CAST(rk AS BIGINT) AS rank, CAST(((rk - 1) * 8) // nn AS BIGINT) AS shard FROM r ORDER BY rk""")),
+      """WITH t AS (SELECT doc_id, len(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'), x -> len(x) >= 1)) AS n, len(coalesce(text, '')) AS c FROM documents), s AS (SELECT doc_id, (c * 1000000) // n AS score_u FROM t WHERE n >= 1), r AS (SELECT doc_id, score_u, ROW_NUMBER() OVER (ORDER BY score_u, doc_id) AS rk, COUNT(*) OVER () AS nn FROM s) SELECT doc_id, CAST(score_u AS BIGINT) AS score_u, CAST(rk AS BIGINT) AS rank, CAST(((rk - 1) * 8) // nn AS BIGINT) AS shard FROM r ORDER BY rk"""),
 
     // CCNet-style per-language LM terciles (r13): unigram neg-logprob
     // micros + two-phase per-language rank -> head/middle/tail
     "llm_ccnet_buckets" -> Q(
       (s, dir) => LlmOps.ccnetBuckets(docs(s, dir)).orderBy("doc_id"),
-      Some("""WITH terms AS (SELECT doc_id, lang, unnest(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'), x -> len(x) >= 1)) AS term FROM documents), tfx AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS tf FROM terms GROUP BY 1), nx AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM terms), sc AS (SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS n_tokens, CAST(SUM(CAST(ROUND(-LN(tf / n) * 1000000) AS BIGINT)) // COUNT(*) AS BIGINT) AS score_u FROM terms JOIN tfx USING (term), nx GROUP BY 1, 2), r AS (SELECT doc_id, lang, n_tokens, score_u, ROW_NUMBER() OVER (PARTITION BY lang ORDER BY score_u, doc_id) AS rk, COUNT(*) OVER (PARTITION BY lang) AS nl FROM sc) SELECT doc_id, lang, n_tokens, score_u, CASE ((rk - 1) * 3) // nl WHEN 0 THEN 'head' WHEN 1 THEN 'middle' ELSE 'tail' END AS bucket FROM r ORDER BY doc_id""")),
+      """WITH terms AS (SELECT doc_id, lang, unnest(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'), x -> len(x) >= 1)) AS term FROM documents), tfx AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS tf FROM terms GROUP BY 1), nx AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM terms), sc AS (SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS n_tokens, CAST(SUM(CAST(ROUND(-LN(tf / n) * 1000000) AS BIGINT)) // COUNT(*) AS BIGINT) AS score_u FROM terms JOIN tfx USING (term), nx GROUP BY 1, 2), r AS (SELECT doc_id, lang, n_tokens, score_u, ROW_NUMBER() OVER (PARTITION BY lang ORDER BY score_u, doc_id) AS rk, COUNT(*) OVER (PARTITION BY lang) AS nl FROM sc) SELECT doc_id, lang, n_tokens, score_u, CASE ((rk - 1) * 3) // nl WHEN 0 THEN 'head' WHEN 1 THEN 'middle' ELSE 'tail' END AS bucket FROM r ORDER BY doc_id"""),
 
     // Training-pair ASSEMBLY pipeline (r12) — the new ops composed
     // end-to-end: mojibake gate (planted U+FFFD damage on id%5==2 —
@@ -5375,7 +5394,7 @@ object SparkEntry {
             col("input_text"), col("target_text"))
           .orderBy("doc_id")
       },
-      Some("""WITH dmg AS (SELECT doc_id, CASE WHEN doc_id % 5 = 2 THEN replace(COALESCE(text, ''), 'o', chr(65533)) WHEN doc_id % 7 = 3 THEN 'shared duplicate corpus block ' || CAST(doc_id // 100 AS BIGINT) ELSE COALESCE(text, '') END AS t FROM documents), sc AS (SELECT doc_id, t, CASE WHEN len(t) > 0 THEN (3 * (len(t) - len(replace(t, chr(65533), '')))) * 1000000 // len(t) ELSE 0 END AS mu FROM dmg), keep AS (SELECT doc_id, t FROM sc WHERE mu < 5000), w AS (SELECT doc_id, t, CAST(1000000 // (COUNT(*) OVER (PARTITION BY lower(trim(t)))) AS BIGINT) AS weight_u FROM keep), tw AS (SELECT doc_id, weight_u, list_filter(string_split(t, ' '), z -> len(z) >= 1) AS tk FROM w), b AS (SELECT doc_id, tk, CAST(ceil(len(tk) / 8.0) AS INT) AS nb FROM tw), blk AS (SELECT doc_id, i, tk[i*8+1 : i*8+8] AS bt, ((doc_id * 31 + i) * 2654435761) % 4294967296 AS h FROM (SELECT doc_id, tk, unnest(generate_series(0, nb - 1)) AS i FROM b WHERE nb > 0)), blk2 AS (SELECT doc_id, i, bt, 1 + (h // 4) % 3 AS sl, (h % 4 = 0) AND (len(bt) >= (1 + (h // 4) % 3) + 2) AS m FROM blk), mk AS (SELECT doc_id, i, sl, bt, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY i) - 1 AS k FROM blk2 WHERE m), pieces AS (SELECT b2.doc_id, b2.i, CASE WHEN mk.k IS NOT NULL THEN array_to_string(b2.bt[1:1], ' ') || ' <extra_id_' || mk.k || '>' || CASE WHEN len(b2.bt) > mk.sl + 1 THEN ' ' || array_to_string(b2.bt[mk.sl+2 : len(b2.bt)], ' ') ELSE '' END ELSE array_to_string(b2.bt, ' ') END AS piece FROM blk2 b2 LEFT JOIN mk ON mk.doc_id = b2.doc_id AND mk.i = b2.i), inp AS (SELECT doc_id, string_agg(piece, ' ' ORDER BY i) AS input_text FROM pieces GROUP BY 1), tgt AS (SELECT doc_id, string_agg('<extra_id_' || k || '> ' || array_to_string(bt[2 : sl+1], ' '), ' ' ORDER BY i) AS tgt_body, COUNT(*) AS n_spans FROM mk GROUP BY 1) SELECT tw.doc_id, tw.weight_u, CAST(tgt.n_spans AS BIGINT) AS n_spans, inp.input_text, tgt.tgt_body || ' <extra_id_' || CAST(tgt.n_spans AS BIGINT) || '>' AS target_text FROM tw JOIN inp USING (doc_id) JOIN tgt USING (doc_id) WHERE tgt.n_spans > 0 ORDER BY doc_id""")),
+      """WITH dmg AS (SELECT doc_id, CASE WHEN doc_id % 5 = 2 THEN replace(COALESCE(text, ''), 'o', chr(65533)) WHEN doc_id % 7 = 3 THEN 'shared duplicate corpus block ' || CAST(doc_id // 100 AS BIGINT) ELSE COALESCE(text, '') END AS t FROM documents), sc AS (SELECT doc_id, t, CASE WHEN len(t) > 0 THEN (3 * (len(t) - len(replace(t, chr(65533), '')))) * 1000000 // len(t) ELSE 0 END AS mu FROM dmg), keep AS (SELECT doc_id, t FROM sc WHERE mu < 5000), w AS (SELECT doc_id, t, CAST(1000000 // (COUNT(*) OVER (PARTITION BY lower(trim(t)))) AS BIGINT) AS weight_u FROM keep), tw AS (SELECT doc_id, weight_u, list_filter(string_split(t, ' '), z -> len(z) >= 1) AS tk FROM w), b AS (SELECT doc_id, tk, CAST(ceil(len(tk) / 8.0) AS INT) AS nb FROM tw), blk AS (SELECT doc_id, i, tk[i*8+1 : i*8+8] AS bt, ((doc_id * 31 + i) * 2654435761) % 4294967296 AS h FROM (SELECT doc_id, tk, unnest(generate_series(0, nb - 1)) AS i FROM b WHERE nb > 0)), blk2 AS (SELECT doc_id, i, bt, 1 + (h // 4) % 3 AS sl, (h % 4 = 0) AND (len(bt) >= (1 + (h // 4) % 3) + 2) AS m FROM blk), mk AS (SELECT doc_id, i, sl, bt, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY i) - 1 AS k FROM blk2 WHERE m), pieces AS (SELECT b2.doc_id, b2.i, CASE WHEN mk.k IS NOT NULL THEN array_to_string(b2.bt[1:1], ' ') || ' <extra_id_' || mk.k || '>' || CASE WHEN len(b2.bt) > mk.sl + 1 THEN ' ' || array_to_string(b2.bt[mk.sl+2 : len(b2.bt)], ' ') ELSE '' END ELSE array_to_string(b2.bt, ' ') END AS piece FROM blk2 b2 LEFT JOIN mk ON mk.doc_id = b2.doc_id AND mk.i = b2.i), inp AS (SELECT doc_id, string_agg(piece, ' ' ORDER BY i) AS input_text FROM pieces GROUP BY 1), tgt AS (SELECT doc_id, string_agg('<extra_id_' || k || '> ' || array_to_string(bt[2 : sl+1], ' '), ' ' ORDER BY i) AS tgt_body, COUNT(*) AS n_spans FROM mk GROUP BY 1) SELECT tw.doc_id, tw.weight_u, CAST(tgt.n_spans AS BIGINT) AS n_spans, inp.input_text, tgt.tgt_body || ' <extra_id_' || CAST(tgt.n_spans AS BIGINT) || '>' AS target_text FROM tw JOIN inp USING (doc_id) JOIN tgt USING (doc_id) WHERE tgt.n_spans > 0 ORDER BY doc_id"""),
 
     // Mojibake / encoding-damage detection: three planted damage
     // classes (double-encoded UTF-8 digraphs on id%5==1, replacement
@@ -5397,7 +5416,7 @@ object SparkEntry {
             col("mojibake_flag"))
           .orderBy("doc_id")
       },
-      Some("""WITH d AS (SELECT doc_id, CASE doc_id % 5 WHEN 1 THEN replace(replace(COALESCE(text, ''), 'a', 'Ã¡'), 'e', 'Ã©') WHEN 2 THEN replace(COALESCE(text, ''), 'o', chr(65533)) WHEN 3 THEN replace(COALESCE(text, ''), 't', chr(146)) ELSE COALESCE(text, '') END AS t FROM documents), c AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_chars, CAST(len(t) - len(replace(t, chr(65533), '')) AS BIGINT) AS n_repl, CAST(len(t) - len(regexp_replace(t, '[\x{0080}-\x{009F}]', '', 'g')) AS BIGINT) AS n_c1, CAST((len(t) - len(regexp_replace(t, '[ÃÂâÊ][\x{0080}-\x{00FF}\x{20AC}\x{2018}\x{2019}\x{201C}\x{201D}\x{2122}]', '', 'g'))) // 2 AS BIGINT) AS n_digraph FROM d) SELECT doc_id, n_chars, n_repl, n_c1, n_digraph, CAST(CASE WHEN n_chars > 0 THEN (3 * n_repl + 2 * n_c1 + 2 * n_digraph) * 1000000 // n_chars ELSE 0 END AS BIGINT) AS mojibake_u, (CASE WHEN n_chars > 0 THEN (3 * n_repl + 2 * n_c1 + 2 * n_digraph) * 1000000 // n_chars ELSE 0 END) >= 5000 AS mojibake_flag FROM c ORDER BY doc_id""")),
+      """WITH d AS (SELECT doc_id, CASE doc_id % 5 WHEN 1 THEN replace(replace(COALESCE(text, ''), 'a', 'Ã¡'), 'e', 'Ã©') WHEN 2 THEN replace(COALESCE(text, ''), 'o', chr(65533)) WHEN 3 THEN replace(COALESCE(text, ''), 't', chr(146)) ELSE COALESCE(text, '') END AS t FROM documents), c AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_chars, CAST(len(t) - len(replace(t, chr(65533), '')) AS BIGINT) AS n_repl, CAST(len(t) - len(regexp_replace(t, '[\x{0080}-\x{009F}]', '', 'g')) AS BIGINT) AS n_c1, CAST((len(t) - len(regexp_replace(t, '[ÃÂâÊ][\x{0080}-\x{00FF}\x{20AC}\x{2018}\x{2019}\x{201C}\x{201D}\x{2122}]', '', 'g'))) // 2 AS BIGINT) AS n_digraph FROM d) SELECT doc_id, n_chars, n_repl, n_c1, n_digraph, CAST(CASE WHEN n_chars > 0 THEN (3 * n_repl + 2 * n_c1 + 2 * n_digraph) * 1000000 // n_chars ELSE 0 END AS BIGINT) AS mojibake_u, (CASE WHEN n_chars > 0 THEN (3 * n_repl + 2 * n_c1 + 2 * n_digraph) * 1000000 // n_chars ELSE 0 END) >= 5000 AS mojibake_flag FROM c ORDER BY doc_id"""),
 
     // T5 span corruption: every mask decision is block-local hash
     // arithmetic the oracle replays verbatim (block b of doc id masks
@@ -5409,7 +5428,7 @@ object SparkEntry {
       (s, dir) => LlmOps.spanCorrupt(docs(s, dir), 8)
         .select("doc_id", "n_spans", "input_text", "target_text")
         .orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, list_filter(string_split(COALESCE(text, ''), ' '), z -> len(z) >= 1) AS tk FROM documents), b AS (SELECT doc_id, tk, CAST(ceil(len(tk) / 8.0) AS INT) AS nb FROM t), blk AS (SELECT doc_id, i, tk[i*8+1 : i*8+8] AS bt, ((doc_id * 31 + i) * 2654435761) % 4294967296 AS h FROM (SELECT doc_id, tk, unnest(generate_series(0, nb - 1)) AS i FROM b WHERE nb > 0)), blk2 AS (SELECT doc_id, i, bt, 1 + (h // 4) % 3 AS sl, (h % 4 = 0) AND (len(bt) >= (1 + (h // 4) % 3) + 2) AS m FROM blk), mk AS (SELECT doc_id, i, sl, bt, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY i) - 1 AS k FROM blk2 WHERE m), pieces AS (SELECT b2.doc_id, b2.i, CASE WHEN mk.k IS NOT NULL THEN array_to_string(b2.bt[1:1], ' ') || ' <extra_id_' || mk.k || '>' || CASE WHEN len(b2.bt) > mk.sl + 1 THEN ' ' || array_to_string(b2.bt[mk.sl+2 : len(b2.bt)], ' ') ELSE '' END ELSE array_to_string(b2.bt, ' ') END AS piece FROM blk2 b2 LEFT JOIN mk ON mk.doc_id = b2.doc_id AND mk.i = b2.i), inp AS (SELECT doc_id, string_agg(piece, ' ' ORDER BY i) AS input_text FROM pieces GROUP BY 1), tgt AS (SELECT doc_id, string_agg('<extra_id_' || k || '> ' || array_to_string(bt[2 : sl+1], ' '), ' ' ORDER BY i) AS tgt_body, COUNT(*) AS n_spans FROM mk GROUP BY 1) SELECT t.doc_id, CAST(COALESCE(tgt.n_spans, 0) AS BIGINT) AS n_spans, COALESCE(inp.input_text, '') AS input_text, COALESCE(tgt.tgt_body || ' ', '') || '<extra_id_' || CAST(COALESCE(tgt.n_spans, 0) AS BIGINT) || '>' AS target_text FROM t LEFT JOIN inp USING (doc_id) LEFT JOIN tgt USING (doc_id) ORDER BY doc_id""")),
+      """WITH t AS (SELECT doc_id, list_filter(string_split(COALESCE(text, ''), ' '), z -> len(z) >= 1) AS tk FROM documents), b AS (SELECT doc_id, tk, CAST(ceil(len(tk) / 8.0) AS INT) AS nb FROM t), blk AS (SELECT doc_id, i, tk[i*8+1 : i*8+8] AS bt, ((doc_id * 31 + i) * 2654435761) % 4294967296 AS h FROM (SELECT doc_id, tk, unnest(generate_series(0, nb - 1)) AS i FROM b WHERE nb > 0)), blk2 AS (SELECT doc_id, i, bt, 1 + (h // 4) % 3 AS sl, (h % 4 = 0) AND (len(bt) >= (1 + (h // 4) % 3) + 2) AS m FROM blk), mk AS (SELECT doc_id, i, sl, bt, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY i) - 1 AS k FROM blk2 WHERE m), pieces AS (SELECT b2.doc_id, b2.i, CASE WHEN mk.k IS NOT NULL THEN array_to_string(b2.bt[1:1], ' ') || ' <extra_id_' || mk.k || '>' || CASE WHEN len(b2.bt) > mk.sl + 1 THEN ' ' || array_to_string(b2.bt[mk.sl+2 : len(b2.bt)], ' ') ELSE '' END ELSE array_to_string(b2.bt, ' ') END AS piece FROM blk2 b2 LEFT JOIN mk ON mk.doc_id = b2.doc_id AND mk.i = b2.i), inp AS (SELECT doc_id, string_agg(piece, ' ' ORDER BY i) AS input_text FROM pieces GROUP BY 1), tgt AS (SELECT doc_id, string_agg('<extra_id_' || k || '> ' || array_to_string(bt[2 : sl+1], ' '), ' ' ORDER BY i) AS tgt_body, COUNT(*) AS n_spans FROM mk GROUP BY 1) SELECT t.doc_id, CAST(COALESCE(tgt.n_spans, 0) AS BIGINT) AS n_spans, COALESCE(inp.input_text, '') AS input_text, COALESCE(tgt.tgt_body || ' ', '') || '<extra_id_' || CAST(COALESCE(tgt.n_spans, 0) AS BIGINT) || '>' AS target_text FROM t LEFT JOIN inp USING (doc_id) LEFT JOIN tgt USING (doc_id) ORDER BY doc_id"""),
 
     // BLEU: candidate = the doc with every 7th token dropped; clipped
     // n-gram matches are exact integers the oracle recomputes from its
@@ -5430,7 +5449,7 @@ object SparkEntry {
             col("bleu_u"))
           .orderBy("doc_id")
       },
-      Some("""WITH t AS (SELECT doc_id, list_filter(string_split(COALESCE(text, ''), ' '), z -> len(z) >= 1) AS r FROM documents), c AS (SELECT doc_id, r, list_filter(r, (z, i) -> i % 7 != 0) AS cd FROM t), ns AS (SELECT doc_id, r, cd, unnest(generate_series(1, 4)) AS n FROM c), cgr AS (SELECT doc_id, n, array_to_string(cd[i : i+n-1], ' ') AS g FROM (SELECT doc_id, n, cd, unnest(generate_series(1, len(cd) - n + 1)) AS i FROM ns WHERE len(cd) >= n)), rgr AS (SELECT doc_id, n, array_to_string(r[i : i+n-1], ' ') AS g FROM (SELECT doc_id, n, r, unnest(generate_series(1, len(r) - n + 1)) AS i FROM ns WHERE len(r) >= n)), ccnt AS (SELECT doc_id, n, g, COUNT(*) AS cc FROM cgr GROUP BY 1, 2, 3), rcnt AS (SELECT doc_id, n, g, COUNT(*) AS rc FROM rgr GROUP BY 1, 2, 3), mt AS (SELECT cc.doc_id, cc.n, SUM(LEAST(cc.cc, COALESCE(rc.rc, 0))) AS m FROM ccnt cc LEFT JOIN rcnt rc USING (doc_id, n, g) GROUP BY 1, 2), bs AS (SELECT doc_id, CAST(len(r) AS BIGINT) AS r_len, CAST(len(cd) AS BIGINT) AS c_len FROM c), pv AS (SELECT bs.doc_id, bs.r_len, bs.c_len, CAST(COALESCE(MAX(CASE WHEN n = 1 THEN m END), 0) AS BIGINT) AS match_1, CAST(COALESCE(MAX(CASE WHEN n = 2 THEN m END), 0) AS BIGINT) AS match_2, CAST(COALESCE(MAX(CASE WHEN n = 3 THEN m END), 0) AS BIGINT) AS match_3, CAST(COALESCE(MAX(CASE WHEN n = 4 THEN m END), 0) AS BIGINT) AS match_4 FROM bs LEFT JOIN mt ON mt.doc_id = bs.doc_id GROUP BY 1, 2, 3) SELECT doc_id, r_len, c_len, match_1, CAST(GREATEST(c_len - 0, 0) AS BIGINT) AS total_1, match_2, CAST(GREATEST(c_len - 1, 0) AS BIGINT) AS total_2, match_3, CAST(GREATEST(c_len - 2, 0) AS BIGINT) AS total_3, match_4, CAST(GREATEST(c_len - 3, 0) AS BIGINT) AS total_4, CASE WHEN match_1 > 0 AND match_2 > 0 AND match_3 > 0 AND match_4 > 0 THEN CAST(ROUND(LEAST(CAST(1 AS DOUBLE), EXP(CAST(1 AS DOUBLE) - CAST(r_len AS DOUBLE) / c_len)) * EXP((LN(CAST(match_1 AS DOUBLE) / GREATEST(c_len - 0, 0)) + LN(CAST(match_2 AS DOUBLE) / GREATEST(c_len - 1, 0)) + LN(CAST(match_3 AS DOUBLE) / GREATEST(c_len - 2, 0)) + LN(CAST(match_4 AS DOUBLE) / GREATEST(c_len - 3, 0))) / CAST(4 AS DOUBLE)) * CAST(1000000 AS DOUBLE)) AS BIGINT) ELSE CAST(0 AS BIGINT) END AS bleu_u FROM pv ORDER BY doc_id""")),
+      """WITH t AS (SELECT doc_id, list_filter(string_split(COALESCE(text, ''), ' '), z -> len(z) >= 1) AS r FROM documents), c AS (SELECT doc_id, r, list_filter(r, (z, i) -> i % 7 != 0) AS cd FROM t), ns AS (SELECT doc_id, r, cd, unnest(generate_series(1, 4)) AS n FROM c), cgr AS (SELECT doc_id, n, array_to_string(cd[i : i+n-1], ' ') AS g FROM (SELECT doc_id, n, cd, unnest(generate_series(1, len(cd) - n + 1)) AS i FROM ns WHERE len(cd) >= n)), rgr AS (SELECT doc_id, n, array_to_string(r[i : i+n-1], ' ') AS g FROM (SELECT doc_id, n, r, unnest(generate_series(1, len(r) - n + 1)) AS i FROM ns WHERE len(r) >= n)), ccnt AS (SELECT doc_id, n, g, COUNT(*) AS cc FROM cgr GROUP BY 1, 2, 3), rcnt AS (SELECT doc_id, n, g, COUNT(*) AS rc FROM rgr GROUP BY 1, 2, 3), mt AS (SELECT cc.doc_id, cc.n, SUM(LEAST(cc.cc, COALESCE(rc.rc, 0))) AS m FROM ccnt cc LEFT JOIN rcnt rc USING (doc_id, n, g) GROUP BY 1, 2), bs AS (SELECT doc_id, CAST(len(r) AS BIGINT) AS r_len, CAST(len(cd) AS BIGINT) AS c_len FROM c), pv AS (SELECT bs.doc_id, bs.r_len, bs.c_len, CAST(COALESCE(MAX(CASE WHEN n = 1 THEN m END), 0) AS BIGINT) AS match_1, CAST(COALESCE(MAX(CASE WHEN n = 2 THEN m END), 0) AS BIGINT) AS match_2, CAST(COALESCE(MAX(CASE WHEN n = 3 THEN m END), 0) AS BIGINT) AS match_3, CAST(COALESCE(MAX(CASE WHEN n = 4 THEN m END), 0) AS BIGINT) AS match_4 FROM bs LEFT JOIN mt ON mt.doc_id = bs.doc_id GROUP BY 1, 2, 3) SELECT doc_id, r_len, c_len, match_1, CAST(GREATEST(c_len - 0, 0) AS BIGINT) AS total_1, match_2, CAST(GREATEST(c_len - 1, 0) AS BIGINT) AS total_2, match_3, CAST(GREATEST(c_len - 2, 0) AS BIGINT) AS total_3, match_4, CAST(GREATEST(c_len - 3, 0) AS BIGINT) AS total_4, CASE WHEN match_1 > 0 AND match_2 > 0 AND match_3 > 0 AND match_4 > 0 THEN CAST(ROUND(LEAST(CAST(1 AS DOUBLE), EXP(CAST(1 AS DOUBLE) - CAST(r_len AS DOUBLE) / c_len)) * EXP((LN(CAST(match_1 AS DOUBLE) / GREATEST(c_len - 0, 0)) + LN(CAST(match_2 AS DOUBLE) / GREATEST(c_len - 1, 0)) + LN(CAST(match_3 AS DOUBLE) / GREATEST(c_len - 2, 0)) + LN(CAST(match_4 AS DOUBLE) / GREATEST(c_len - 3, 0))) / CAST(4 AS DOUBLE)) * CAST(1000000 AS DOUBLE)) AS BIGINT) ELSE CAST(0 AS BIGINT) END AS bleu_u FROM pv ORDER BY doc_id"""),
 
     "llm_script_detect" -> Q(
       (s, dir) => {
@@ -5447,7 +5466,7 @@ object SparkEntry {
             col("n_latin"), col("n_letters"), col("dominant_script"))
           .orderBy("doc_id")
       },
-      Some("""WITH d AS (SELECT doc_id, CASE doc_id % 6 WHEN 0 THEN 'hello world latin only' WHEN 1 THEN 'привет мир and latin' WHEN 2 THEN '你好 世界 漢字' WHEN 3 THEN 'مرحبا بالعالم' WHEN 4 THEN '한국어 텍스트 안녕' ELSE 'नमस्ते दुनिया' END AS t FROM documents), c AS (SELECT doc_id, CAST(len(t) - len(regexp_replace(t, '\p{Arabic}', '', 'g')) AS BIGINT) AS n_arabic, CAST(len(t) - len(regexp_replace(t, '[\p{Han}\p{Hiragana}\p{Katakana}]', '', 'g')) AS BIGINT) AS n_cjk, CAST(len(t) - len(regexp_replace(t, '\p{Cyrillic}', '', 'g')) AS BIGINT) AS n_cyrillic, CAST(len(t) - len(regexp_replace(t, '\p{Devanagari}', '', 'g')) AS BIGINT) AS n_devanagari, CAST(len(t) - len(regexp_replace(t, '\p{Hangul}', '', 'g')) AS BIGINT) AS n_hangul, CAST(len(t) - len(regexp_replace(t, '\p{Latin}', '', 'g')) AS BIGINT) AS n_latin FROM d) SELECT doc_id, n_arabic, n_cjk, n_cyrillic, n_devanagari, n_hangul, n_latin, n_arabic + n_cjk + n_cyrillic + n_devanagari + n_hangul + n_latin AS n_letters, CASE WHEN n_arabic + n_cjk + n_cyrillic + n_devanagari + n_hangul + n_latin = 0 THEN NULL ELSE (SELECT s FROM (VALUES (n_arabic, 'arabic'), (n_cjk, 'cjk'), (n_cyrillic, 'cyrillic'), (n_devanagari, 'devanagari'), (n_hangul, 'hangul'), (n_latin, 'latin')) v(n, s) ORDER BY n DESC, s ASC LIMIT 1) END AS dominant_script FROM c ORDER BY doc_id""")),
+      """WITH d AS (SELECT doc_id, CASE doc_id % 6 WHEN 0 THEN 'hello world latin only' WHEN 1 THEN 'привет мир and latin' WHEN 2 THEN '你好 世界 漢字' WHEN 3 THEN 'مرحبا بالعالم' WHEN 4 THEN '한국어 텍스트 안녕' ELSE 'नमस्ते दुनिया' END AS t FROM documents), c AS (SELECT doc_id, CAST(len(t) - len(regexp_replace(t, '\p{Arabic}', '', 'g')) AS BIGINT) AS n_arabic, CAST(len(t) - len(regexp_replace(t, '[\p{Han}\p{Hiragana}\p{Katakana}]', '', 'g')) AS BIGINT) AS n_cjk, CAST(len(t) - len(regexp_replace(t, '\p{Cyrillic}', '', 'g')) AS BIGINT) AS n_cyrillic, CAST(len(t) - len(regexp_replace(t, '\p{Devanagari}', '', 'g')) AS BIGINT) AS n_devanagari, CAST(len(t) - len(regexp_replace(t, '\p{Hangul}', '', 'g')) AS BIGINT) AS n_hangul, CAST(len(t) - len(regexp_replace(t, '\p{Latin}', '', 'g')) AS BIGINT) AS n_latin FROM d) SELECT doc_id, n_arabic, n_cjk, n_cyrillic, n_devanagari, n_hangul, n_latin, n_arabic + n_cjk + n_cyrillic + n_devanagari + n_hangul + n_latin AS n_letters, CASE WHEN n_arabic + n_cjk + n_cyrillic + n_devanagari + n_hangul + n_latin = 0 THEN NULL ELSE (SELECT s FROM (VALUES (n_arabic, 'arabic'), (n_cjk, 'cjk'), (n_cyrillic, 'cyrillic'), (n_devanagari, 'devanagari'), (n_hangul, 'hangul'), (n_latin, 'latin')) v(n, s) ORDER BY n DESC, s ASC LIMIT 1) END AS dominant_script FROM c ORDER BY doc_id"""),
 
     // License detection: SPDX tags win over phrase matches; planted
     // headers per id class, decision = a pure CASE in the oracle
@@ -5469,13 +5488,13 @@ object SparkEntry {
           .select(col("doc_id"), col("license"))
           .orderBy("doc_id")
       },
-      Some("""SELECT doc_id, CASE doc_id % 6 WHEN 0 THEN 'mit' WHEN 1 THEN 'mit' WHEN 2 THEN 'apache-2.0' WHEN 3 THEN 'gpl' WHEN 4 THEN 'bsd' ELSE NULL END AS license FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CASE doc_id % 6 WHEN 0 THEN 'mit' WHEN 1 THEN 'mit' WHEN 2 THEN 'apache-2.0' WHEN 3 THEN 'gpl' WHEN 4 THEN 'bsd' ELSE NULL END AS license FROM documents ORDER BY doc_id"""),
 
     // Per-source dataset card: doc/token counts, mean tokens, vocab,
     // exact-dup docs, language-mix entropy — all integer/micro exact
     "llm_dataset_card" -> Q(
       (s, dir) => LlmOps.datasetCard(docs(s, dir)).orderBy("source"),
-      Some("""WITH b AS (SELECT source AS src, lang AS lng, doc_id AS id, lower(trim(COALESCE(text, ''))) AS norm, list_filter(string_split(lower(COALESCE(text, '')), ' '), z -> len(z) >= 1) AS toks FROM documents), tk AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS n_tokens, CAST(COUNT(DISTINCT tok) AS BIGINT) AS vocab FROM (SELECT src, unnest(toks) AS tok FROM b) GROUP BY 1), ds AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(COUNT(*) - COUNT(DISTINCT norm) AS BIGINT) AS dup_docs FROM b GROUP BY 1), lm AS (SELECT src, lng, CAST(COUNT(*) AS BIGINT) AS cl FROM b GROUP BY 1, 2), en AS (SELECT lm.src, CAST(SUM(lm.cl * CAST(ROUND(LN(CAST(ds.n_docs AS DOUBLE) / lm.cl) * 1000000) AS BIGINT)) AS BIGINT) AS ent_sum FROM lm JOIN ds ON ds.src = lm.src GROUP BY 1) SELECT ds.src AS source, ds.n_docs, tk.n_tokens, CAST((tk.n_tokens * 1000000) // ds.n_docs AS BIGINT) AS mean_tokens_u, tk.vocab, ds.dup_docs, CAST(en.ent_sum // ds.n_docs AS BIGINT) AS lang_entropy_u FROM ds JOIN tk ON tk.src = ds.src JOIN en ON en.src = ds.src ORDER BY source""")),
+      """WITH b AS (SELECT source AS src, lang AS lng, doc_id AS id, lower(trim(COALESCE(text, ''))) AS norm, list_filter(string_split(lower(COALESCE(text, '')), ' '), z -> len(z) >= 1) AS toks FROM documents), tk AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS n_tokens, CAST(COUNT(DISTINCT tok) AS BIGINT) AS vocab FROM (SELECT src, unnest(toks) AS tok FROM b) GROUP BY 1), ds AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(COUNT(*) - COUNT(DISTINCT norm) AS BIGINT) AS dup_docs FROM b GROUP BY 1), lm AS (SELECT src, lng, CAST(COUNT(*) AS BIGINT) AS cl FROM b GROUP BY 1, 2), en AS (SELECT lm.src, CAST(SUM(lm.cl * CAST(ROUND(LN(CAST(ds.n_docs AS DOUBLE) / lm.cl) * 1000000) AS BIGINT)) AS BIGINT) AS ent_sum FROM lm JOIN ds ON ds.src = lm.src GROUP BY 1) SELECT ds.src AS source, ds.n_docs, tk.n_tokens, CAST((tk.n_tokens * 1000000) // ds.n_docs AS BIGINT) AS mean_tokens_u, tk.vocab, ds.dup_docs, CAST(en.ent_sum // ds.n_docs AS BIGINT) AS lang_entropy_u FROM ds JOIN tk ON tk.src = ds.src JOIN en ON en.src = ds.src ORDER BY source"""),
 
     // Crawl-frontier politeness scheduling: per-host (priority desc,
     // id) ranks -> fetch slots of 3; ROW_NUMBER replay is value-exact
@@ -5489,7 +5508,7 @@ object SparkEntry {
             col("fetch_slot"))
           .orderBy("doc_id")
       },
-      Some("""WITH r AS (SELECT doc_id, 'h' || CAST(doc_id % 50 AS VARCHAR) AS host, ROW_NUMBER() OVER (PARTITION BY doc_id % 50 ORDER BY n_chars DESC, doc_id) AS rk FROM documents) SELECT doc_id, host, CAST(rk AS BIGINT) AS rank_in_host, CAST((rk - 1) // 3 AS BIGINT) AS fetch_slot FROM r ORDER BY doc_id""")),
+      """WITH r AS (SELECT doc_id, 'h' || CAST(doc_id % 50 AS VARCHAR) AS host, ROW_NUMBER() OVER (PARTITION BY doc_id % 50 ORDER BY n_chars DESC, doc_id) AS rk FROM documents) SELECT doc_id, host, CAST(rk AS BIGINT) AS rank_in_host, CAST((rk - 1) // 3 AS BIGINT) AS fetch_slot FROM r ORDER BY doc_id"""),
 
     // Windowed co-occurrence PMI: top-5 association contexts per word
     // over +/-2 windows; symmetric pair space, marginals from the pair
@@ -5498,14 +5517,14 @@ object SparkEntry {
       (s, dir) => LlmOps.pmiContexts(docs(s, dir), window = 2,
           minCount = 2, k = 5)
         .orderBy("target", "rank"),
-      Some("""WITH t AS (SELECT list_filter(string_split(lower(COALESCE(text, '')), ' '), z -> len(z) >= 1) AS ts FROM documents), pr AS (SELECT ts[i] AS a, ts[i + o] AS b FROM t, unnest(generate_series(1, 2)) s(o), unnest(generate_series(1, len(ts))) u(i) WHERE len(ts) >= 2 AND i + o <= len(ts)), sym AS (SELECT a, b FROM pr UNION ALL SELECT b, a FROM pr), fl AS (SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c FROM sym GROUP BY 1, 2), marg AS (SELECT a, CAST(SUM(c) AS BIGINT) AS m FROM fl GROUP BY 1), tot AS (SELECT CAST(SUM(c) AS BIGINT) AS mm FROM fl), sc AS (SELECT f.a, f.b, f.c AS c_ab, CAST(ROUND(LN((CAST(f.c AS DOUBLE) * tot.mm) / (CAST(ma.m AS DOUBLE) * mb.m)) * 1000000) AS BIGINT) AS pmi_u FROM fl f JOIN marg ma ON ma.a = f.a JOIN marg mb ON mb.a = f.b, tot WHERE f.c >= 2), r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY a ORDER BY pmi_u DESC, b ASC) AS rk FROM sc) SELECT a AS target, CAST(rk AS BIGINT) AS "rank", b AS context, c_ab, pmi_u FROM r WHERE rk <= 5 ORDER BY target, rk""")),
+      """WITH t AS (SELECT list_filter(string_split(lower(COALESCE(text, '')), ' '), z -> len(z) >= 1) AS ts FROM documents), pr AS (SELECT ts[i] AS a, ts[i + o] AS b FROM t, unnest(generate_series(1, 2)) s(o), unnest(generate_series(1, len(ts))) u(i) WHERE len(ts) >= 2 AND i + o <= len(ts)), sym AS (SELECT a, b FROM pr UNION ALL SELECT b, a FROM pr), fl AS (SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c FROM sym GROUP BY 1, 2), marg AS (SELECT a, CAST(SUM(c) AS BIGINT) AS m FROM fl GROUP BY 1), tot AS (SELECT CAST(SUM(c) AS BIGINT) AS mm FROM fl), sc AS (SELECT f.a, f.b, f.c AS c_ab, CAST(ROUND(LN((CAST(f.c AS DOUBLE) * tot.mm) / (CAST(ma.m AS DOUBLE) * mb.m)) * 1000000) AS BIGINT) AS pmi_u FROM fl f JOIN marg ma ON ma.a = f.a JOIN marg mb ON mb.a = f.b, tot WHERE f.c >= 2), r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY a ORDER BY pmi_u DESC, b ASC) AS rk FROM sc) SELECT a AS target, CAST(rk AS BIGINT) AS "rank", b AS context, c_ab, pmi_u FROM r WHERE rk <= 5 ORDER BY target, rk"""),
 
     // Per-doc top-k tf-idf keywords: integer tf x micro-idf scores make
     // the order, ties and the k-cut replay exactly
     "llm_keyword_extract" -> Q(
       (s, dir) => LlmOps.keywordExtract(docs(s, dir), k = 5)
         .orderBy("doc_id", "rank"),
-      Some("""WITH t AS (SELECT doc_id AS id, unnest(list_filter(string_split(lower(COALESCE(text, '')), ' '), z -> len(z) >= 1)) AS term FROM documents), tf AS (SELECT id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM t GROUP BY 1, 2), dft AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1), nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS nd FROM documents), sc AS (SELECT id, term, tf, CAST(tf * CAST(ROUND(LN(CAST(nd.nd AS DOUBLE) / df) * 1000000) AS BIGINT) AS BIGINT) AS score_u FROM tf JOIN dft USING (term), nd), r AS (SELECT id, term, tf, score_u, ROW_NUMBER() OVER (PARTITION BY id ORDER BY score_u DESC, term ASC) AS rk FROM sc) SELECT id AS doc_id, CAST(rk AS BIGINT) AS "rank", term, tf, score_u FROM r WHERE rk <= 5 ORDER BY doc_id, rk""")),
+      """WITH t AS (SELECT doc_id AS id, unnest(list_filter(string_split(lower(COALESCE(text, '')), ' '), z -> len(z) >= 1)) AS term FROM documents), tf AS (SELECT id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM t GROUP BY 1, 2), dft AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1), nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS nd FROM documents), sc AS (SELECT id, term, tf, CAST(tf * CAST(ROUND(LN(CAST(nd.nd AS DOUBLE) / df) * 1000000) AS BIGINT) AS BIGINT) AS score_u FROM tf JOIN dft USING (term), nd), r AS (SELECT id, term, tf, score_u, ROW_NUMBER() OVER (PARTITION BY id ORDER BY score_u DESC, term ASC) AS rk FROM sc) SELECT id AS doc_id, CAST(rk AS BIGINT) AS "rank", term, tf, score_u FROM r WHERE rk <= 5 ORDER BY doc_id, rk"""),
 
     // Stupid Backoff held-out bigram scoring (Brants 2007): the test
     // fold scores against the train fold's counts; planted zzz<id>
@@ -5521,7 +5540,7 @@ object SparkEntry {
         LlmOps.stupidBackoff(d, holdMod = 5, textCol = "t2")
           .orderBy("doc_id")
       },
-      Some("""WITH d AS (SELECT doc_id, CASE WHEN doc_id % 10 = 0 THEN COALESCE(text, '') || ' zzz' || CAST(doc_id AS VARCHAR) ELSE COALESCE(text, '') END AS t FROM documents), tr AS (SELECT doc_id, string_split(lower(t), ' ') AS toks FROM d WHERE doc_id % 5 <> 0), te AS (SELECT doc_id, string_split(lower(t), ' ') AS toks FROM d WHERE doc_id % 5 = 0), trt AS (SELECT unnest(list_filter(toks, z -> len(z) >= 1)) AS tok FROM tr), uni AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS cu FROM trt GROUP BY 1), tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS nn, CAST(COUNT(DISTINCT tok) AS BIGINT) AS vv FROM trt), tg AS (SELECT toks[i-1] AS prev, toks[i] AS cur FROM (SELECT toks, unnest(generate_series(2, len(toks))) AS i FROM tr WHERE len(toks) >= 2)), c2 AS (SELECT prev, cur, CAST(COUNT(*) AS BIGINT) AS c2 FROM tg GROUP BY 1, 2), c1 AS (SELECT prev, CAST(COUNT(*) AS BIGINT) AS c1 FROM tg GROUP BY 1), eg AS (SELECT doc_id AS id, toks[i-1] AS prev, toks[i] AS cur FROM (SELECT doc_id, toks, unnest(generate_series(2, len(toks))) AS i FROM te WHERE len(toks) >= 2)), sc AS (SELECT eg.id, CASE WHEN c2.c2 IS NOT NULL THEN CAST(ROUND(-LN(CAST(c2.c2 AS DOUBLE) / c1.c1) * 1000000) AS BIGINT) ELSE CAST(ROUND(-LN((CAST(0.4 AS DOUBLE) * (COALESCE(uni.cu, 0) + 1)) / (tot.nn + tot.vv)) * 1000000) AS BIGINT) END AS nlp_u, CASE WHEN c2.c2 IS NULL THEN 1 ELSE 0 END AS bo FROM eg LEFT JOIN c2 ON c2.prev = eg.prev AND c2.cur = eg.cur LEFT JOIN c1 ON c1.prev = eg.prev LEFT JOIN uni ON uni.tok = eg.cur, tot) SELECT id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams, CAST(SUM(bo) AS BIGINT) AS n_backoff, ROUND(CAST(SUM(nlp_u) AS DOUBLE) / COUNT(*) / 1000000.0, 4) AS mean_neg_logp_sb FROM sc GROUP BY 1 ORDER BY 1""")),
+      """WITH d AS (SELECT doc_id, CASE WHEN doc_id % 10 = 0 THEN COALESCE(text, '') || ' zzz' || CAST(doc_id AS VARCHAR) ELSE COALESCE(text, '') END AS t FROM documents), tr AS (SELECT doc_id, string_split(lower(t), ' ') AS toks FROM d WHERE doc_id % 5 <> 0), te AS (SELECT doc_id, string_split(lower(t), ' ') AS toks FROM d WHERE doc_id % 5 = 0), trt AS (SELECT unnest(list_filter(toks, z -> len(z) >= 1)) AS tok FROM tr), uni AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS cu FROM trt GROUP BY 1), tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS nn, CAST(COUNT(DISTINCT tok) AS BIGINT) AS vv FROM trt), tg AS (SELECT toks[i-1] AS prev, toks[i] AS cur FROM (SELECT toks, unnest(generate_series(2, len(toks))) AS i FROM tr WHERE len(toks) >= 2)), c2 AS (SELECT prev, cur, CAST(COUNT(*) AS BIGINT) AS c2 FROM tg GROUP BY 1, 2), c1 AS (SELECT prev, CAST(COUNT(*) AS BIGINT) AS c1 FROM tg GROUP BY 1), eg AS (SELECT doc_id AS id, toks[i-1] AS prev, toks[i] AS cur FROM (SELECT doc_id, toks, unnest(generate_series(2, len(toks))) AS i FROM te WHERE len(toks) >= 2)), sc AS (SELECT eg.id, CASE WHEN c2.c2 IS NOT NULL THEN CAST(ROUND(-LN(CAST(c2.c2 AS DOUBLE) / c1.c1) * 1000000) AS BIGINT) ELSE CAST(ROUND(-LN((CAST(0.4 AS DOUBLE) * (COALESCE(uni.cu, 0) + 1)) / (tot.nn + tot.vv)) * 1000000) AS BIGINT) END AS nlp_u, CASE WHEN c2.c2 IS NULL THEN 1 ELSE 0 END AS bo FROM eg LEFT JOIN c2 ON c2.prev = eg.prev AND c2.cur = eg.cur LEFT JOIN c1 ON c1.prev = eg.prev LEFT JOIN uni ON uni.tok = eg.cur, tot) SELECT id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams, CAST(SUM(bo) AS BIGINT) AS n_backoff, ROUND(CAST(SUM(nlp_u) AS DOUBLE) / COUNT(*) / 1000000.0, 4) AS mean_neg_logp_sb FROM sc GROUP BY 1 ORDER BY 1"""),
 
     // At-rest Stupid-Backoff LM index (r13): the trained count model
     // persisted once (c2/c1 bucketed on the scorer's join key), the
@@ -5540,7 +5559,7 @@ object SparkEntry {
           d.filter(pmod(col("doc_id"), lit(5)) === 0), textCol = "t2")
           .orderBy("doc_id")
       },
-      Some("""WITH d AS (SELECT doc_id, CASE WHEN doc_id % 10 = 0 THEN COALESCE(text, '') || ' zzz' || CAST(doc_id AS VARCHAR) ELSE COALESCE(text, '') END AS t FROM documents), tr AS (SELECT doc_id, string_split(lower(t), ' ') AS toks FROM d WHERE doc_id % 5 <> 0), te AS (SELECT doc_id, string_split(lower(t), ' ') AS toks FROM d WHERE doc_id % 5 = 0), trt AS (SELECT unnest(list_filter(toks, z -> len(z) >= 1)) AS tok FROM tr), uni AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS cu FROM trt GROUP BY 1), tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS nn, CAST(COUNT(DISTINCT tok) AS BIGINT) AS vv FROM trt), tg AS (SELECT toks[i-1] AS prev, toks[i] AS cur FROM (SELECT toks, unnest(generate_series(2, len(toks))) AS i FROM tr WHERE len(toks) >= 2)), c2 AS (SELECT prev, cur, CAST(COUNT(*) AS BIGINT) AS c2 FROM tg GROUP BY 1, 2), c1 AS (SELECT prev, CAST(COUNT(*) AS BIGINT) AS c1 FROM tg GROUP BY 1), eg AS (SELECT doc_id AS id, toks[i-1] AS prev, toks[i] AS cur FROM (SELECT doc_id, toks, unnest(generate_series(2, len(toks))) AS i FROM te WHERE len(toks) >= 2)), sc AS (SELECT eg.id, CASE WHEN c2.c2 IS NOT NULL THEN CAST(ROUND(-LN(CAST(c2.c2 AS DOUBLE) / c1.c1) * 1000000) AS BIGINT) ELSE CAST(ROUND(-LN((CAST(0.4 AS DOUBLE) * (COALESCE(uni.cu, 0) + 1)) / (tot.nn + tot.vv)) * 1000000) AS BIGINT) END AS nlp_u, CASE WHEN c2.c2 IS NULL THEN 1 ELSE 0 END AS bo FROM eg LEFT JOIN c2 ON c2.prev = eg.prev AND c2.cur = eg.cur LEFT JOIN c1 ON c1.prev = eg.prev LEFT JOIN uni ON uni.tok = eg.cur, tot) SELECT id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams, CAST(SUM(bo) AS BIGINT) AS n_backoff, ROUND(CAST(SUM(nlp_u) AS DOUBLE) / COUNT(*) / 1000000.0, 4) AS mean_neg_logp_sb FROM sc GROUP BY 1 ORDER BY 1""")),
+      """WITH d AS (SELECT doc_id, CASE WHEN doc_id % 10 = 0 THEN COALESCE(text, '') || ' zzz' || CAST(doc_id AS VARCHAR) ELSE COALESCE(text, '') END AS t FROM documents), tr AS (SELECT doc_id, string_split(lower(t), ' ') AS toks FROM d WHERE doc_id % 5 <> 0), te AS (SELECT doc_id, string_split(lower(t), ' ') AS toks FROM d WHERE doc_id % 5 = 0), trt AS (SELECT unnest(list_filter(toks, z -> len(z) >= 1)) AS tok FROM tr), uni AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS cu FROM trt GROUP BY 1), tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS nn, CAST(COUNT(DISTINCT tok) AS BIGINT) AS vv FROM trt), tg AS (SELECT toks[i-1] AS prev, toks[i] AS cur FROM (SELECT toks, unnest(generate_series(2, len(toks))) AS i FROM tr WHERE len(toks) >= 2)), c2 AS (SELECT prev, cur, CAST(COUNT(*) AS BIGINT) AS c2 FROM tg GROUP BY 1, 2), c1 AS (SELECT prev, CAST(COUNT(*) AS BIGINT) AS c1 FROM tg GROUP BY 1), eg AS (SELECT doc_id AS id, toks[i-1] AS prev, toks[i] AS cur FROM (SELECT doc_id, toks, unnest(generate_series(2, len(toks))) AS i FROM te WHERE len(toks) >= 2)), sc AS (SELECT eg.id, CASE WHEN c2.c2 IS NOT NULL THEN CAST(ROUND(-LN(CAST(c2.c2 AS DOUBLE) / c1.c1) * 1000000) AS BIGINT) ELSE CAST(ROUND(-LN((CAST(0.4 AS DOUBLE) * (COALESCE(uni.cu, 0) + 1)) / (tot.nn + tot.vv)) * 1000000) AS BIGINT) END AS nlp_u, CASE WHEN c2.c2 IS NULL THEN 1 ELSE 0 END AS bo FROM eg LEFT JOIN c2 ON c2.prev = eg.prev AND c2.cur = eg.cur LEFT JOIN c1 ON c1.prev = eg.prev LEFT JOIN uni ON uni.tok = eg.cur, tot) SELECT id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams, CAST(SUM(bo) AS BIGINT) AS n_backoff, ROUND(CAST(SUM(nlp_u) AS DOUBLE) / COUNT(*) / 1000000.0, 4) AS mean_neg_logp_sb FROM sc GROUP BY 1 ORDER BY 1""", IndexBuild),
 
     // Code-vs-prose routing gate: planted code docs (id%6==0) score
     // ~10x the natural-text docs; the oracle REBUILDS the same planted
@@ -5561,7 +5580,7 @@ object SparkEntry {
             col("code_score_u"), col("is_code"))
           .orderBy("doc_id")
       },
-      Some("""WITH d AS (SELECT doc_id, CASE WHEN doc_id % 6 = 0 THEN 'import mod' || chr(10) || 'def f_' || CAST(doc_id AS VARCHAR) || '(x):' || chr(10) || '  y = (x + ' || CAST(doc_id AS VARCHAR) || ');' || chr(10) || '  return {x: y};' || chr(10) || 'class c_' || CAST(doc_id AS VARCHAR) || ':' || chr(10) || '  void = 1;' ELSE COALESCE(text, '') END AS t FROM documents), m AS (SELECT doc_id, CAST(len(regexp_replace(t, '\s', '', 'g')) AS BIGINT) AS ns, CAST(len(t) - len(regexp_replace(t, '[{};()=\[\]<>]', '', 'g')) AS BIGINT) AS sym, string_split(t, chr(10)) AS lines, list_filter(regexp_split_to_array(lower(t), '\s+'), z -> len(z) >= 1) AS toks FROM d), c AS (SELECT doc_id, ns, sym, CAST(len(lines) AS BIGINT) AS nl, CAST(len(list_filter(lines, l -> l LIKE '  %' OR l LIKE chr(9) || '%')) AS BIGINT) AS ind, CAST(len(list_filter(lines, l -> l LIKE '%;' OR l LIKE '%{' OR l LIKE '%}')) AS BIGINT) AS nsemi, CAST(len(list_filter(toks, z -> z IN ('def', 'return', 'import', 'class', 'const', 'function', 'void', 'public', 'lambda', 'elif'))) AS BIGINT) AS kw FROM m) SELECT doc_id, sym AS n_sym, kw AS n_kw, CAST(2 * ((sym * 1000000) // GREATEST(ns, 1)) + ((ind + nsemi) * 1000000) // GREATEST(nl, 1) + LEAST(kw, 10) * 50000 AS BIGINT) AS code_score_u, (2 * ((sym * 1000000) // GREATEST(ns, 1)) + ((ind + nsemi) * 1000000) // GREATEST(nl, 1) + LEAST(kw, 10) * 50000) >= 300000 AS is_code FROM c ORDER BY doc_id""")),
+      """WITH d AS (SELECT doc_id, CASE WHEN doc_id % 6 = 0 THEN 'import mod' || chr(10) || 'def f_' || CAST(doc_id AS VARCHAR) || '(x):' || chr(10) || '  y = (x + ' || CAST(doc_id AS VARCHAR) || ');' || chr(10) || '  return {x: y};' || chr(10) || 'class c_' || CAST(doc_id AS VARCHAR) || ':' || chr(10) || '  void = 1;' ELSE COALESCE(text, '') END AS t FROM documents), m AS (SELECT doc_id, CAST(len(regexp_replace(t, '\s', '', 'g')) AS BIGINT) AS ns, CAST(len(t) - len(regexp_replace(t, '[{};()=\[\]<>]', '', 'g')) AS BIGINT) AS sym, string_split(t, chr(10)) AS lines, list_filter(regexp_split_to_array(lower(t), '\s+'), z -> len(z) >= 1) AS toks FROM d), c AS (SELECT doc_id, ns, sym, CAST(len(lines) AS BIGINT) AS nl, CAST(len(list_filter(lines, l -> l LIKE '  %' OR l LIKE chr(9) || '%')) AS BIGINT) AS ind, CAST(len(list_filter(lines, l -> l LIKE '%;' OR l LIKE '%{' OR l LIKE '%}')) AS BIGINT) AS nsemi, CAST(len(list_filter(toks, z -> z IN ('def', 'return', 'import', 'class', 'const', 'function', 'void', 'public', 'lambda', 'elif'))) AS BIGINT) AS kw FROM m) SELECT doc_id, sym AS n_sym, kw AS n_kw, CAST(2 * ((sym * 1000000) // GREATEST(ns, 1)) + ((ind + nsemi) * 1000000) // GREATEST(nl, 1) + LEAST(kw, 10) * 50000 AS BIGINT) AS code_score_u, (2 * ((sym * 1000000) // GREATEST(ns, 1)) + ((ind + nsemi) * 1000000) // GREATEST(nl, 1) + LEAST(kw, 10) * 50000) >= 300000 AS is_code FROM c ORDER BY doc_id"""),
 
     // WARC + embedded-HTTP header fields from planted crawl records:
     // every field an arithmetic function of doc_id (status/mime/charset
@@ -5608,7 +5627,7 @@ object SparkEntry {
             col("http_status"), col("mime"), col("charset"))
           .orderBy("doc_id")
       },
-      Some("""SELECT doc_id, CASE WHEN doc_id % 5 = 4 THEN NULL ELSE '1.0' END AS warc_version, CASE WHEN doc_id % 5 = 4 THEN NULL WHEN doc_id % 7 = 0 THEN 'request' ELSE 'response' END AS warc_type, CASE WHEN doc_id % 5 = 4 THEN NULL ELSE 'http://h' || CAST(doc_id % 50 AS VARCHAR) || '.example/p' || CAST(doc_id AS VARCHAR) END AS target_uri, CASE WHEN doc_id % 5 = 4 THEN NULL ELSE '2024-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') || 'T00:00:00Z' END AS warc_date, CASE WHEN doc_id % 5 = 4 THEN NULL ELSE CAST(n_chars AS BIGINT) END AS content_length, CASE WHEN doc_id % 5 = 4 OR doc_id % 7 = 0 THEN NULL ELSE CAST(CASE doc_id % 3 WHEN 0 THEN 200 WHEN 1 THEN 404 ELSE 301 END AS INT) END AS http_status, CASE WHEN doc_id % 5 = 4 OR doc_id % 7 = 0 THEN NULL WHEN doc_id % 2 = 0 THEN 'text/html' ELSE 'text/plain' END AS mime, CASE WHEN doc_id % 5 = 4 OR doc_id % 7 = 0 THEN NULL WHEN doc_id % 4 = 0 THEN 'UTF-8' WHEN doc_id % 4 = 1 THEN 'ISO-8859-1' ELSE NULL END AS charset FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CASE WHEN doc_id % 5 = 4 THEN NULL ELSE '1.0' END AS warc_version, CASE WHEN doc_id % 5 = 4 THEN NULL WHEN doc_id % 7 = 0 THEN 'request' ELSE 'response' END AS warc_type, CASE WHEN doc_id % 5 = 4 THEN NULL ELSE 'http://h' || CAST(doc_id % 50 AS VARCHAR) || '.example/p' || CAST(doc_id AS VARCHAR) END AS target_uri, CASE WHEN doc_id % 5 = 4 THEN NULL ELSE '2024-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') || 'T00:00:00Z' END AS warc_date, CASE WHEN doc_id % 5 = 4 THEN NULL ELSE CAST(n_chars AS BIGINT) END AS content_length, CASE WHEN doc_id % 5 = 4 OR doc_id % 7 = 0 THEN NULL ELSE CAST(CASE doc_id % 3 WHEN 0 THEN 200 WHEN 1 THEN 404 ELSE 301 END AS INT) END AS http_status, CASE WHEN doc_id % 5 = 4 OR doc_id % 7 = 0 THEN NULL WHEN doc_id % 2 = 0 THEN 'text/html' ELSE 'text/plain' END AS mime, CASE WHEN doc_id % 5 = 4 OR doc_id % 7 = 0 THEN NULL WHEN doc_id % 4 = 0 THEN 'UTF-8' WHEN doc_id % 4 = 1 THEN 'ISO-8859-1' ELSE NULL END AS charset FROM documents ORDER BY doc_id"""),
 
     // AVIF/HEIC dims from the ISO-BMFF ispe box: planted meta->iprp->
     // ipco walks with optional filler boxes at two levels; the oracle
@@ -5647,14 +5666,14 @@ object SparkEntry {
           .select(col("doc_id"), col("brand"), col("width"), col("height"))
           .orderBy("doc_id")
       },
-      Some("""SELECT doc_id, CASE WHEN doc_id % 5 = 4 THEN NULL ELSE CASE doc_id % 3 WHEN 0 THEN 'avif' WHEN 1 THEN 'heic' ELSE 'mif1' END END AS brand, CASE WHEN doc_id % 5 = 4 THEN NULL ELSE CAST(16 + doc_id % 1200 AS INT) END AS width, CASE WHEN doc_id % 5 = 4 THEN NULL ELSE CAST(16 + (doc_id * 7) % 900 AS INT) END AS height FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CASE WHEN doc_id % 5 = 4 THEN NULL ELSE CASE doc_id % 3 WHEN 0 THEN 'avif' WHEN 1 THEN 'heic' ELSE 'mif1' END END AS brand, CASE WHEN doc_id % 5 = 4 THEN NULL ELSE CAST(16 + doc_id % 1200 AS INT) END AS width, CASE WHEN doc_id % 5 = 4 THEN NULL ELSE CAST(16 + (doc_id * 7) % 900 AS INT) END AS height FROM documents ORDER BY doc_id"""),
 
     // Heaps-law vocabulary growth: distinct vocab at power-of-2
     // checkpoints along the deterministic hash shuffle + fitted beta;
     // bit-length buckets and integer-milli ln/slope replay in DuckDB
     "llm_heaps_law" -> Q(
       (s, dir) => LlmOps.heapsLaw(docs(s, dir)),
-      Some("""WITH d AS (SELECT doc_id, lower(COALESCE(text, '')) AS t, (doc_id * 2654435761) % 4294967296 AS h FROM documents), rk AS (SELECT doc_id, t, ROW_NUMBER() OVER (ORDER BY h, doc_id) AS rk FROM d), n AS (SELECT CAST(COUNT(*) AS BIGINT) AS nd FROM rk), tk AS (SELECT rk, unnest(list_distinct(list_filter(string_split(t, ' '), z -> len(z) >= 1))) AS tok FROM rk), fr AS (SELECT tok, CAST(MIN(rk) AS BIGINT) AS r FROM tk GROUP BY 1), bu AS (SELECT CASE WHEN r = 1 THEN 0 ELSE len(bin(r - 1)) END AS j, CAST(COUNT(*) AS BIGINT) AS c FROM fr GROUP BY 1), js AS (SELECT CAST(x.j AS INT) AS j, n.nd FROM n, unnest(generate_series(0, CAST(len(bin(n.nd - 1)) AS BIGINT))) x(j)), cum AS (SELECT js.j, js.nd, CAST(SUM(COALESCE(bu.c, 0)) OVER (ORDER BY js.j) AS BIGINT) AS v FROM js LEFT JOIN bu ON bu.j = js.j), pts AS (SELECT LEAST(CAST(1 AS BIGINT) << j, nd) AS checkpoint, v, CAST(ROUND(LN(CAST(LEAST(CAST(1 AS BIGINT) << j, nd) AS DOUBLE)) * 1000) AS BIGINT) AS x_m, CAST(ROUND(LN(CAST(v AS DOUBLE)) * 1000) AS BIGINT) AS y_m FROM cum WHERE v > 0), st AS (SELECT CAST(COUNT(*) AS BIGINT) AS np, CAST(SUM(x_m) AS BIGINT) AS sx, CAST(SUM(y_m) AS BIGINT) AS sy FROM pts), ctr AS (SELECT x_m - (sx // np) AS dx, y_m - (sy // np) AS dy FROM pts, st), beta AS (SELECT CAST((CAST(SUM(dx * dy) AS BIGINT) * 1000000) // CAST(SUM(dx * dx) AS BIGINT) AS BIGINT) AS beta_u FROM ctr) SELECT checkpoint, v AS vocab, x_m AS ln_n_m, y_m AS ln_v_m, beta.beta_u FROM pts, beta ORDER BY checkpoint""")),
+      """WITH d AS (SELECT doc_id, lower(COALESCE(text, '')) AS t, (doc_id * 2654435761) % 4294967296 AS h FROM documents), rk AS (SELECT doc_id, t, ROW_NUMBER() OVER (ORDER BY h, doc_id) AS rk FROM d), n AS (SELECT CAST(COUNT(*) AS BIGINT) AS nd FROM rk), tk AS (SELECT rk, unnest(list_distinct(list_filter(string_split(t, ' '), z -> len(z) >= 1))) AS tok FROM rk), fr AS (SELECT tok, CAST(MIN(rk) AS BIGINT) AS r FROM tk GROUP BY 1), bu AS (SELECT CASE WHEN r = 1 THEN 0 ELSE len(bin(r - 1)) END AS j, CAST(COUNT(*) AS BIGINT) AS c FROM fr GROUP BY 1), js AS (SELECT CAST(x.j AS INT) AS j, n.nd FROM n, unnest(generate_series(0, CAST(len(bin(n.nd - 1)) AS BIGINT))) x(j)), cum AS (SELECT js.j, js.nd, CAST(SUM(COALESCE(bu.c, 0)) OVER (ORDER BY js.j) AS BIGINT) AS v FROM js LEFT JOIN bu ON bu.j = js.j), pts AS (SELECT LEAST(CAST(1 AS BIGINT) << j, nd) AS checkpoint, v, CAST(ROUND(LN(CAST(LEAST(CAST(1 AS BIGINT) << j, nd) AS DOUBLE)) * 1000) AS BIGINT) AS x_m, CAST(ROUND(LN(CAST(v AS DOUBLE)) * 1000) AS BIGINT) AS y_m FROM cum WHERE v > 0), st AS (SELECT CAST(COUNT(*) AS BIGINT) AS np, CAST(SUM(x_m) AS BIGINT) AS sx, CAST(SUM(y_m) AS BIGINT) AS sy FROM pts), ctr AS (SELECT x_m - (sx // np) AS dx, y_m - (sy // np) AS dy FROM pts, st), beta AS (SELECT CAST((CAST(SUM(dx * dy) AS BIGINT) * 1000000) // CAST(SUM(dx * dx) AS BIGINT) AS BIGINT) AS beta_u FROM ctr) SELECT checkpoint, v AS vocab, x_m AS ln_n_m, y_m AS ln_v_m, beta.beta_u FROM pts, beta ORDER BY checkpoint"""),
 
     // EXACT stratified split: per-stratum floor-threshold counts honored
     // exactly (the property global hash thresholds only approximate);
@@ -5663,14 +5682,14 @@ object SparkEntry {
       (s, dir) => LlmOps.stratifiedSplit(docs(s, dir), 0.8, 0.1, "lang")
         .select(col("doc_id"), col("lang"), col("split"))
         .orderBy("doc_id"),
-      Some("""WITH b AS (SELECT doc_id, lang, (doc_id * 2654435761) % 4294967296 AS h FROM documents), r AS (SELECT doc_id, lang, ROW_NUMBER() OVER (PARTITION BY lang ORDER BY h, doc_id) AS rk, COUNT(*) OVER (PARTITION BY lang) AS ns FROM b) SELECT doc_id, lang, CASE WHEN rk <= (ns * 800000) // 1000000 THEN 'train' WHEN rk <= (ns * 900000) // 1000000 THEN 'val' ELSE 'test' END AS split FROM r ORDER BY doc_id""")),
+      """WITH b AS (SELECT doc_id, lang, (doc_id * 2654435761) % 4294967296 AS h FROM documents), r AS (SELECT doc_id, lang, ROW_NUMBER() OVER (PARTITION BY lang ORDER BY h, doc_id) AS rk, COUNT(*) OVER (PARTITION BY lang) AS ns FROM b) SELECT doc_id, lang, CASE WHEN rk <= (ns * 800000) // 1000000 THEN 'train' WHEN rk <= (ns * 900000) // 1000000 THEN 'val' ELSE 'test' END AS split FROM r ORDER BY doc_id"""),
 
     // Per-vector embedding outlier quarantine: distance-to-own-centroid
     // past the per-label nearest-rank Tukey fence, all integer milli
     "llm_embedding_outliers" -> Q(
       (s, dir) => LlmOps.embeddingOutliers(embs(s, dir))
         .orderBy("vec_id"),
-      Some("""WITH ex AS (SELECT label AS lbl, vec_id AS vid, i - 1 AS d, CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS v FROM embeddings, unnest(generate_series(1, 64)) s(i)), cent AS (SELECT lbl, d, CAST(CAST(SUM(v) AS BIGINT) // COUNT(*) AS BIGINT) AS mean_m FROM ex GROUP BY 1, 2), dist AS (SELECT ex.lbl, ex.vid, CAST(SUM((ex.v - cent.mean_m) * (ex.v - cent.mean_m)) AS BIGINT) AS dist_m2 FROM ex JOIN cent USING (lbl, d) GROUP BY 1, 2), rk AS (SELECT lbl, vid, dist_m2, ROW_NUMBER() OVER (PARTITION BY lbl ORDER BY dist_m2, vid) AS r, COUNT(*) OVER (PARTITION BY lbl) AS n FROM dist), qs AS (SELECT lbl, CAST(MIN(CASE WHEN r = CAST(ceil(0.25 * n) AS BIGINT) THEN dist_m2 END) AS BIGINT) AS p25, CAST(MIN(CASE WHEN r = CAST(ceil(0.75 * n) AS BIGINT) THEN dist_m2 END) AS BIGINT) AS p75 FROM rk GROUP BY 1), f AS (SELECT lbl, CAST(p75 + (3 * (p75 - p25)) // 2 AS BIGINT) AS hi_fence FROM qs) SELECT dist.vid AS vec_id, dist.lbl AS label, dist.dist_m2, f.hi_fence, dist.dist_m2 > f.hi_fence AS is_outlier FROM dist JOIN f USING (lbl) ORDER BY vec_id""")),
+      """WITH ex AS (SELECT label AS lbl, vec_id AS vid, i - 1 AS d, CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS v FROM embeddings, unnest(generate_series(1, 64)) s(i)), cent AS (SELECT lbl, d, CAST(CAST(SUM(v) AS BIGINT) // COUNT(*) AS BIGINT) AS mean_m FROM ex GROUP BY 1, 2), dist AS (SELECT ex.lbl, ex.vid, CAST(SUM((ex.v - cent.mean_m) * (ex.v - cent.mean_m)) AS BIGINT) AS dist_m2 FROM ex JOIN cent USING (lbl, d) GROUP BY 1, 2), rk AS (SELECT lbl, vid, dist_m2, ROW_NUMBER() OVER (PARTITION BY lbl ORDER BY dist_m2, vid) AS r, COUNT(*) OVER (PARTITION BY lbl) AS n FROM dist), qs AS (SELECT lbl, CAST(MIN(CASE WHEN r = CAST(ceil(0.25 * n) AS BIGINT) THEN dist_m2 END) AS BIGINT) AS p25, CAST(MIN(CASE WHEN r = CAST(ceil(0.75 * n) AS BIGINT) THEN dist_m2 END) AS BIGINT) AS p75 FROM rk GROUP BY 1), f AS (SELECT lbl, CAST(p75 + (3 * (p75 - p25)) // 2 AS BIGINT) AS hi_fence FROM qs) SELECT dist.vid AS vec_id, dist.lbl AS label, dist.dist_m2, f.hi_fence, dist.dist_m2 > f.hi_fence AS is_outlier FROM dist JOIN f USING (lbl) ORDER BY vec_id"""),
 
     // Per-label embedding cluster-quality audit: cohesion (mean squared
     // member->centroid distance), nearest-other-centroid separation and
@@ -5678,12 +5697,12 @@ object SparkEntry {
     // the whole audit replays value-exactly in DuckDB
     "llm_cluster_metrics" -> Q(
       (s, dir) => LlmOps.clusterMetrics(embs(s, dir)).orderBy("label"),
-      Some("""WITH ex AS (SELECT label AS lbl, i - 1 AS d, CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS v FROM embeddings, unnest(generate_series(1, 64)) s(i)), cent AS (SELECT lbl, d, CAST(CAST(SUM(v) AS BIGINT) // COUNT(*) AS BIGINT) AS mean_m, CAST(COUNT(*) AS BIGINT) AS n FROM ex GROUP BY 1, 2), i2 AS (SELECT lbl, CAST(SUM((ex.v - cent.mean_m) * (ex.v - cent.mean_m)) AS BIGINT) AS inertia_m2, CAST(MAX(cent.n) AS BIGINT) AS n_vecs FROM ex JOIN cent USING (lbl, d) GROUP BY 1), i3 AS (SELECT lbl, inertia_m2, n_vecs, CAST(inertia_m2 // n_vecs AS BIGINT) AS mean_sq_m2 FROM i2), sep AS (SELECT a.lbl AS la, b.lbl AS lb, CAST(SUM((a.mean_m - b.mean_m) * (a.mean_m - b.mean_m)) AS BIGINT) AS sep_m2 FROM cent a JOIN cent b ON a.d = b.d AND a.lbl <> b.lbl GROUP BY 1, 2), r AS (SELECT sep.la, sep.lb, sep.sep_m2, CAST(((sa.mean_sq_m2 + sb.mean_sq_m2) * 1000000) // sep.sep_m2 AS BIGINT) AS r_u, ROW_NUMBER() OVER (PARTITION BY sep.la ORDER BY sep.sep_m2 ASC, sep.lb ASC) AS rn FROM sep JOIN i3 sa ON sa.lbl = sep.la JOIN i3 sb ON sb.lbl = sep.lb) SELECT i3.lbl AS label, i3.n_vecs, i3.inertia_m2, i3.mean_sq_m2, near.nearest_lbl, near.nearest_sep_m2, agg.db_sq_u FROM i3 JOIN (SELECT la, lb AS nearest_lbl, sep_m2 AS nearest_sep_m2 FROM r WHERE rn = 1) near ON near.la = i3.lbl JOIN (SELECT la, CAST(MAX(r_u) AS BIGINT) AS db_sq_u FROM r GROUP BY 1) agg ON agg.la = i3.lbl ORDER BY label""")),
+      """WITH ex AS (SELECT label AS lbl, i - 1 AS d, CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS v FROM embeddings, unnest(generate_series(1, 64)) s(i)), cent AS (SELECT lbl, d, CAST(CAST(SUM(v) AS BIGINT) // COUNT(*) AS BIGINT) AS mean_m, CAST(COUNT(*) AS BIGINT) AS n FROM ex GROUP BY 1, 2), i2 AS (SELECT lbl, CAST(SUM((ex.v - cent.mean_m) * (ex.v - cent.mean_m)) AS BIGINT) AS inertia_m2, CAST(MAX(cent.n) AS BIGINT) AS n_vecs FROM ex JOIN cent USING (lbl, d) GROUP BY 1), i3 AS (SELECT lbl, inertia_m2, n_vecs, CAST(inertia_m2 // n_vecs AS BIGINT) AS mean_sq_m2 FROM i2), sep AS (SELECT a.lbl AS la, b.lbl AS lb, CAST(SUM((a.mean_m - b.mean_m) * (a.mean_m - b.mean_m)) AS BIGINT) AS sep_m2 FROM cent a JOIN cent b ON a.d = b.d AND a.lbl <> b.lbl GROUP BY 1, 2), r AS (SELECT sep.la, sep.lb, sep.sep_m2, CAST(((sa.mean_sq_m2 + sb.mean_sq_m2) * 1000000) // sep.sep_m2 AS BIGINT) AS r_u, ROW_NUMBER() OVER (PARTITION BY sep.la ORDER BY sep.sep_m2 ASC, sep.lb ASC) AS rn FROM sep JOIN i3 sa ON sa.lbl = sep.la JOIN i3 sb ON sb.lbl = sep.lb) SELECT i3.lbl AS label, i3.n_vecs, i3.inertia_m2, i3.mean_sq_m2, near.nearest_lbl, near.nearest_sep_m2, agg.db_sq_u FROM i3 JOIN (SELECT la, lb AS nearest_lbl, sep_m2 AS nearest_sep_m2 FROM r WHERE rn = 1) near ON near.la = i3.lbl JOIN (SELECT la, CAST(MAX(r_u) AS BIGINT) AS db_sq_u FROM r GROUP BY 1) agg ON agg.la = i3.lbl ORDER BY label"""),
 
     "llm_embedding_drift" -> Q(
       (s, dir) => LlmOps.embeddingDrift(embs(s, dir), docs(s, dir))
         .orderBy("source"),
-      Some("""WITH j AS (SELECT d.source AS src, e.embedding FROM embeddings e JOIN documents d ON d.doc_id = e.vec_id), ex AS (SELECT src, i - 1 AS d, CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS v FROM j, unnest(generate_series(1, 64)) s(i)), per AS (SELECT src, d, CAST(SUM(v) AS BIGINT) AS sv, CAST(COUNT(*) AS BIGINT) AS n FROM ex GROUP BY 1, 2), pm AS (SELECT src, d, n, CAST((sv * 1000) // n AS BIGINT) AS mean_u FROM per), g AS (SELECT d, CAST((CAST(SUM(v) AS BIGINT) * 1000) // COUNT(*) AS BIGINT) AS gmean_u FROM ex GROUP BY 1) SELECT pm.src AS source, CAST(MAX(pm.n) AS BIGINT) AS n_vecs, CAST(SUM((pm.mean_u - g.gmean_u) * (pm.mean_u - g.gmean_u)) AS BIGINT) AS drift_sq_u FROM pm JOIN g USING (d) GROUP BY 1 ORDER BY 1""")),
+      """WITH j AS (SELECT d.source AS src, e.embedding FROM embeddings e JOIN documents d ON d.doc_id = e.vec_id), ex AS (SELECT src, i - 1 AS d, CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS v FROM j, unnest(generate_series(1, 64)) s(i)), per AS (SELECT src, d, CAST(SUM(v) AS BIGINT) AS sv, CAST(COUNT(*) AS BIGINT) AS n FROM ex GROUP BY 1, 2), pm AS (SELECT src, d, n, CAST((sv * 1000) // n AS BIGINT) AS mean_u FROM per), g AS (SELECT d, CAST((CAST(SUM(v) AS BIGINT) * 1000) // COUNT(*) AS BIGINT) AS gmean_u FROM ex GROUP BY 1) SELECT pm.src AS source, CAST(MAX(pm.n) AS BIGINT) AS n_vecs, CAST(SUM((pm.mean_u - g.gmean_u) * (pm.mean_u - g.gmean_u)) AS BIGINT) AS drift_sq_u FROM pm JOIN g USING (d) GROUP BY 1 ORDER BY 1"""),
 
     // CDC MERGE apply: updates win, inserts append, tombstones delete
     // (the write-side complement of tmp_table_diff); the oracle states
@@ -5711,20 +5730,20 @@ object SparkEntry {
             Seq("doc_id"), deleteCol = Some("__del"))
           .orderBy("doc_id")
       },
-      Some("""SELECT doc_id, source, n_chars FROM (SELECT doc_id, source, CASE WHEN doc_id % 4 = 0 THEN n_chars + 1000 ELSE n_chars END AS n_chars FROM documents WHERE doc_id % 7 <> 3 OR doc_id % 4 = 0 UNION ALL SELECT doc_id + 10000, source, n_chars FROM documents WHERE doc_id % 5 = 0) ORDER BY doc_id""")),
+      """SELECT doc_id, source, n_chars FROM (SELECT doc_id, source, CASE WHEN doc_id % 4 = 0 THEN n_chars + 1000 ELSE n_chars END AS n_chars FROM documents WHERE doc_id % 7 <> 3 OR doc_id % 4 = 0 UNION ALL SELECT doc_id + 10000, source, n_chars FROM documents WHERE doc_id % 5 = 0) ORDER BY doc_id""", StreamingHarness),
 
     // Multi-source streaming union: two streams feed ONE aggregation
     // across two rounds each; oracle = the single-pass batch recompute
     "tmp_stream_union" -> Q(
       (s, dir) => streamUnionQuery(s, dir),
-      Some("""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS cents FROM events WHERE event_id <= 2000 GROUP BY 1 ORDER BY 1""")),
+      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS cents FROM events WHERE event_id <= 2000 GROUP BY 1 ORDER BY 1""", StreamingHarness),
 
     // Stream-static enrichment join (broadcast dim into every micro-
     // batch, left-outer so dimension misses stay visible): final table
     // equals the batch left join
     "tmp_stream_enrich" -> Q(
       (s, dir) => streamEnrichQuery(s, dir),
-      Some("""SELECT e.event_id, e.user_id, CAST(ROUND(e.value * 100) AS BIGINT) AS cents, CASE WHEN e.user_id % 3 <> 1 AND e.user_id < 10000 THEN 't' || CAST(e.user_id % 4 AS VARCHAR) END AS tier FROM events e WHERE e.event_id <= 2000 ORDER BY e.event_id""")),
+      """SELECT e.event_id, e.user_id, CAST(ROUND(e.value * 100) AS BIGINT) AS cents, CASE WHEN e.user_id % 3 <> 1 AND e.user_id < 10000 THEN 't' || CAST(e.user_id % 4 AS VARCHAR) END AS tier FROM events e WHERE e.event_id <= 2000 ORDER BY e.event_id""", StreamingHarness),
 
     // Native watermarked streaming dedup (dropDuplicatesWithinWatermark):
     // batch-2 duplicates drop on batch-1 state (cross-batch proof) AND
@@ -5732,14 +5751,14 @@ object SparkEntry {
     // (bounded-state proof); oracle = the arithmetic expected table
     "tmp_stream_dedup_wm" -> Q(
       (s, dir) => streamDedupWmQuery(s, dir),
-      Some("""WITH e AS (SELECT event_id AS key, epoch_us(ts) AS ts_us FROM events WHERE event_id <= 2000), h AS (SELECT MAX(key) // 2 AS half FROM e), b1 AS (SELECT key, ts_us, 'b1' AS src FROM e, h WHERE key < h.half), m1 AS (SELECT MAX(ts_us) AS mt FROM b1), b2n AS (SELECT key, ts_us, 'b2n' AS src FROM e, h WHERE key >= h.half), b3 AS (SELECT key, m1.mt + CAST(401 AS BIGINT) * 86400 * 1000000 AS ts_us, 'b3' AS src FROM b1, m1 WHERE key % 5 = 1) SELECT key, src, CAST(ts_us AS BIGINT) AS ts_us FROM (SELECT * FROM b1 UNION ALL SELECT * FROM b2n UNION ALL SELECT * FROM b3) ORDER BY key, src""")),
+      """WITH e AS (SELECT event_id AS key, epoch_us(ts) AS ts_us FROM events WHERE event_id <= 2000), h AS (SELECT MAX(key) // 2 AS half FROM e), b1 AS (SELECT key, ts_us, 'b1' AS src FROM e, h WHERE key < h.half), m1 AS (SELECT MAX(ts_us) AS mt FROM b1), b2n AS (SELECT key, ts_us, 'b2n' AS src FROM e, h WHERE key >= h.half), b3 AS (SELECT key, m1.mt + CAST(401 AS BIGINT) * 86400 * 1000000 AS ts_us, 'b3' AS src FROM b1, m1 WHERE key % 5 = 1) SELECT key, src, CAST(ts_us AS BIGINT) AS ts_us FROM (SELECT * FROM b1 UNION ALL SELECT * FROM b2n UNION ALL SELECT * FROM b3) ORDER BY key, src""", StreamingHarness),
 
     // Streaming KQL scan (arbitrary per-key state): running cents sums
     // continue across the micro-batch boundary; oracle = the batch
     // window recompute over both batches
     "tmp_stream_scan" -> Q(
       (s, dir) => streamScanQuery(s, dir),
-      Some("""SELECT user_id, event_id, CAST(SUM(cents) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS rs FROM (SELECT event_id, user_id, ts, CAST(ROUND(value * 100) AS BIGINT) AS cents FROM events WHERE event_id <= 2000) ORDER BY user_id, event_id""")),
+      """SELECT user_id, event_id, CAST(SUM(cents) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS rs FROM (SELECT event_id, user_id, ts, CAST(ROUND(value * 100) AS BIGINT) AS cents FROM events WHERE event_id <= 2000) ORDER BY user_id, event_id""", StreamingHarness),
 
     // Composed curation pipeline v3 over the r9/r10 ops: token-entropy
     // quality gate (integer rule 2*types >= n) -> exact substring dedup
@@ -5777,7 +5796,7 @@ object SparkEntry {
             coalesce(col("n_final"), lit(0L)).as("n_final"))
           .orderBy("source")
       },
-      Some("""WITH tk AS (SELECT doc_id, unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM documents), tq AS (SELECT doc_id FROM (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n, CAST(COUNT(DISTINCT tok) AS BIGINT) AS types FROM tk GROUP BY 1) WHERE types * 2 >= n), b2 AS (SELECT d.doc_id, list_filter(string_split(COALESCE(d.text,''),' '), x->len(x)>=1) AS toks, CAST(len(list_filter(string_split(COALESCE(d.text,''),' '), x->len(x)>=1)) AS BIGINT) AS n FROM documents d JOIN tq USING (doc_id)), w AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, md5(array_to_string(toks[i:i+7], ' ')) AS h FROM b2, unnest(generate_series(1, CAST(n AS INTEGER) - 7)) s(i) WHERE n >= 8), own AS (SELECT h, MIN(doc_id * 1000000 + pos) AS o, COUNT(*) AS cnt FROM w GROUP BY 1), dup AS (SELECT w.doc_id, w.pos FROM w JOIN own ON w.h = own.h WHERE own.cnt > 1 AND w.doc_id * 1000000 + w.pos <> own.o), cov AS (SELECT DISTINCT doc_id, t FROM dup, unnest(generate_series(pos, pos + 7)) s(t)), tokpos AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS t FROM b2, unnest(generate_series(1, CAST(n AS INTEGER))) s(i) WHERE n >= 1), keptt AS (SELECT tp.doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept FROM tokpos tp LEFT JOIN cov ON cov.doc_id = tp.doc_id AND cov.t = tp.t WHERE cov.doc_id IS NULL GROUP BY 1), ws AS (SELECT b2.doc_id, d.source, b2.n - COALESCE(k.n_kept, 0) AS n_removed FROM b2 LEFT JOIN keptt k USING (doc_id) JOIN documents d ON d.doc_id = b2.doc_id), c AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_s FROM ws GROUP BY 1), wgt AS (SELECT source, n_s, CAST(ROUND(EXP(CAST(0.3 AS DOUBLE) * LN(CAST(n_s AS DOUBLE))) * 1000000) AS BIGINT) AS w_u FROM c), tt AS (SELECT CAST(SUM(n_s) AS BIGINT) AS n_total, CAST(SUM(w_u) AS BIGINT) AS w_total FROM wgt), r AS (SELECT source, CAST(LEAST(1000000, ((w_u * 1000000) // w_total) * CAST(ROUND(n_total * CAST(0.5 AS DOUBLE)) AS BIGINT) // n_s) AS BIGINT) AS rate_u FROM wgt, tt), mix AS (SELECT ws.doc_id, ws.source FROM ws JOIN r USING (source) WHERE (ws.doc_id * 2654435761) % 4294967296 < (r.rate_u * 4294967296) // 1000000), a1 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_in FROM documents GROUP BY 1), a2 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_quality, CAST(SUM(n_removed) AS BIGINT) AS removed_q FROM ws GROUP BY 1), a3 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_final FROM mix GROUP BY 1) SELECT a1.source, a1.n_in, COALESCE(a2.n_quality, 0) AS n_quality, COALESCE(a2.removed_q, 0) AS removed_q, COALESCE(a3.n_final, 0) AS n_final FROM a1 LEFT JOIN a2 USING (source) LEFT JOIN a3 USING (source) ORDER BY a1.source""")),
+      """WITH tk AS (SELECT doc_id, unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM documents), tq AS (SELECT doc_id FROM (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n, CAST(COUNT(DISTINCT tok) AS BIGINT) AS types FROM tk GROUP BY 1) WHERE types * 2 >= n), b2 AS (SELECT d.doc_id, list_filter(string_split(COALESCE(d.text,''),' '), x->len(x)>=1) AS toks, CAST(len(list_filter(string_split(COALESCE(d.text,''),' '), x->len(x)>=1)) AS BIGINT) AS n FROM documents d JOIN tq USING (doc_id)), w AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, md5(array_to_string(toks[i:i+7], ' ')) AS h FROM b2, unnest(generate_series(1, CAST(n AS INTEGER) - 7)) s(i) WHERE n >= 8), own AS (SELECT h, MIN(doc_id * 1000000 + pos) AS o, COUNT(*) AS cnt FROM w GROUP BY 1), dup AS (SELECT w.doc_id, w.pos FROM w JOIN own ON w.h = own.h WHERE own.cnt > 1 AND w.doc_id * 1000000 + w.pos <> own.o), cov AS (SELECT DISTINCT doc_id, t FROM dup, unnest(generate_series(pos, pos + 7)) s(t)), tokpos AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS t FROM b2, unnest(generate_series(1, CAST(n AS INTEGER))) s(i) WHERE n >= 1), keptt AS (SELECT tp.doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept FROM tokpos tp LEFT JOIN cov ON cov.doc_id = tp.doc_id AND cov.t = tp.t WHERE cov.doc_id IS NULL GROUP BY 1), ws AS (SELECT b2.doc_id, d.source, b2.n - COALESCE(k.n_kept, 0) AS n_removed FROM b2 LEFT JOIN keptt k USING (doc_id) JOIN documents d ON d.doc_id = b2.doc_id), c AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_s FROM ws GROUP BY 1), wgt AS (SELECT source, n_s, CAST(ROUND(EXP(CAST(0.3 AS DOUBLE) * LN(CAST(n_s AS DOUBLE))) * 1000000) AS BIGINT) AS w_u FROM c), tt AS (SELECT CAST(SUM(n_s) AS BIGINT) AS n_total, CAST(SUM(w_u) AS BIGINT) AS w_total FROM wgt), r AS (SELECT source, CAST(LEAST(1000000, ((w_u * 1000000) // w_total) * CAST(ROUND(n_total * CAST(0.5 AS DOUBLE)) AS BIGINT) // n_s) AS BIGINT) AS rate_u FROM wgt, tt), mix AS (SELECT ws.doc_id, ws.source FROM ws JOIN r USING (source) WHERE (ws.doc_id * 2654435761) % 4294967296 < (r.rate_u * 4294967296) // 1000000), a1 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_in FROM documents GROUP BY 1), a2 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_quality, CAST(SUM(n_removed) AS BIGINT) AS removed_q FROM ws GROUP BY 1), a3 AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_final FROM mix GROUP BY 1) SELECT a1.source, a1.n_in, COALESCE(a2.n_quality, 0) AS n_quality, COALESCE(a2.removed_q, 0) AS removed_q, COALESCE(a3.n_final, 0) AS n_final FROM a1 LEFT JOIN a2 USING (source) LEFT JOIN a3 USING (source) ORDER BY a1.source"""),
 
     // Content-defined chunking: boundaries from a rolling window-sum
     // hash (mod 32) -> chunk ids are cumulative boundary counts; the
@@ -5785,7 +5804,7 @@ object SparkEntry {
     "llm_cdc_chunks" -> Q(
       (s, dir) => LlmOps.cdcChunks(docs(s, dir), w = 4, maskBits = 5)
         .orderBy("doc_id", "chunk_id"),
-      Some("""WITH tp AS (SELECT doc_id, i - 1 AS pos, toks[i] AS tok FROM (SELECT doc_id, list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1) AS toks FROM documents), unnest(generate_series(1, len(toks))) s(i)), k AS (SELECT doc_id, pos, tok, (CAST(ascii(substr(md5(tok), 1, 1)) AS BIGINT) + CAST(ascii(substr(md5(tok), 2, 1)) AS BIGINT) * 100 + CAST(ascii(substr(md5(tok), 3, 1)) AS BIGINT) * 10000 + CAST(ascii(substr(md5(tok), 4, 1)) AS BIGINT) * 1000000 + CAST(ascii(substr(md5(tok), 5, 1)) AS BIGINT) * 100000000 + CAST(ascii(substr(md5(tok), 6, 1)) AS BIGINT) * 10000000000) AS key FROM tp), m AS (SELECT doc_id, pos, tok, CASE WHEN pos >= 3 AND SUM(key) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) % 32 = 0 THEN 1 ELSE 0 END AS bnd FROM k), c AS (SELECT doc_id, pos, tok, COALESCE(SUM(bnd) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cid FROM m) SELECT doc_id, CAST(cid AS BIGINT) AS chunk_id, CAST(COUNT(*) AS BIGINT) AS n_tokens, md5(string_agg(tok, ' ' ORDER BY pos)) AS chunk_md5 FROM c GROUP BY 1, 2 ORDER BY 1, 2""")),
+      """WITH tp AS (SELECT doc_id, i - 1 AS pos, toks[i] AS tok FROM (SELECT doc_id, list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1) AS toks FROM documents), unnest(generate_series(1, len(toks))) s(i)), k AS (SELECT doc_id, pos, tok, (CAST(ascii(substr(md5(tok), 1, 1)) AS BIGINT) + CAST(ascii(substr(md5(tok), 2, 1)) AS BIGINT) * 100 + CAST(ascii(substr(md5(tok), 3, 1)) AS BIGINT) * 10000 + CAST(ascii(substr(md5(tok), 4, 1)) AS BIGINT) * 1000000 + CAST(ascii(substr(md5(tok), 5, 1)) AS BIGINT) * 100000000 + CAST(ascii(substr(md5(tok), 6, 1)) AS BIGINT) * 10000000000) AS key FROM tp), m AS (SELECT doc_id, pos, tok, CASE WHEN pos >= 3 AND SUM(key) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) % 32 = 0 THEN 1 ELSE 0 END AS bnd FROM k), c AS (SELECT doc_id, pos, tok, COALESCE(SUM(bnd) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cid FROM m) SELECT doc_id, CAST(cid AS BIGINT) AS chunk_id, CAST(COUNT(*) AS BIGINT) AS n_tokens, md5(string_agg(tok, ' ' ORDER BY pos)) AS chunk_md5 FROM c GROUP BY 1, 2 ORDER BY 1, 2"""),
 
     // KMV distinct sketch: per-source k-minimum md5 fingerprints +
     // the merged global sketch; integer-exact estimator (conv in
@@ -5793,14 +5812,14 @@ object SparkEntry {
     "llm_kmv_distinct" -> Q(
       (s, dir) => LlmOps.kmvDistinct(docs(s, dir), k = 256)
         .orderBy("scope"),
-      Some("""WITH st AS (SELECT DISTINCT source AS scope, md5(tok) AS fp FROM (SELECT source, unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM documents)), per AS (SELECT scope, fp FROM (SELECT scope, fp, ROW_NUMBER() OVER (PARTITION BY scope ORDER BY fp) AS r FROM st) WHERE r <= 256), mrg AS (SELECT '__all__' AS scope, fp FROM (SELECT fp, ROW_NUMBER() OVER (ORDER BY fp) AS r FROM (SELECT DISTINCT fp FROM per)) WHERE r <= 256), u AS (SELECT * FROM per UNION ALL SELECT * FROM mrg), e AS (SELECT scope, CAST(COUNT(*) AS BIGINT) AS n_fp, MAX(fp) AS kth FROM u GROUP BY 1), v AS (SELECT scope, n_fp, CAST(SUM((strpos('0123456789abcdef', substr(kth, i, 1)) - 1) * POWER(16, 12 - i)) AS BIGINT) AS kth48 FROM e, unnest(generate_series(1, 12)) s(i) GROUP BY scope, n_fp) SELECT scope, n_fp, kth48, CAST(CASE WHEN n_fp < 256 THEN n_fp ELSE (255 * 281474976710656) // kth48 END AS BIGINT) AS est FROM v ORDER BY scope""")),
+      """WITH st AS (SELECT DISTINCT source AS scope, md5(tok) AS fp FROM (SELECT source, unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM documents)), per AS (SELECT scope, fp FROM (SELECT scope, fp, ROW_NUMBER() OVER (PARTITION BY scope ORDER BY fp) AS r FROM st) WHERE r <= 256), mrg AS (SELECT '__all__' AS scope, fp FROM (SELECT fp, ROW_NUMBER() OVER (ORDER BY fp) AS r FROM (SELECT DISTINCT fp FROM per)) WHERE r <= 256), u AS (SELECT * FROM per UNION ALL SELECT * FROM mrg), e AS (SELECT scope, CAST(COUNT(*) AS BIGINT) AS n_fp, MAX(fp) AS kth FROM u GROUP BY 1), v AS (SELECT scope, n_fp, CAST(SUM((strpos('0123456789abcdef', substr(kth, i, 1)) - 1) * POWER(16, 12 - i)) AS BIGINT) AS kth48 FROM e, unnest(generate_series(1, 12)) s(i) GROUP BY scope, n_fp) SELECT scope, n_fp, kth48, CAST(CASE WHEN n_fp < 256 THEN n_fp ELSE (255 * 281474976710656) // kth48 END AS BIGINT) AS est FROM v ORDER BY scope"""),
 
     // Stream-stream LEFT OUTER join: unmatched clicks emit null rows
     // via state-timeout after the watermark passes their window; final
     // table ≡ DuckDB's batch left join
     "tmp_stream_join_left" -> Q(
       (s, dir) => streamStreamLeftJoinQuery(s, dir),
-      Some("""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS t, event_type FROM events WHERE event_id <= 2000 AND event_type IN ('click', 'purchase')), c AS (SELECT event_id AS click_id, user_id, t AS ct FROM e WHERE event_type = 'click'), p AS (SELECT event_id AS purchase_id, user_id, t AS pt FROM e WHERE event_type = 'purchase') SELECT c.click_id, p.purchase_id, c.user_id, CAST(p.pt - c.ct AS BIGINT) AS dt_us FROM c LEFT JOIN p ON p.user_id = c.user_id AND p.pt >= c.ct AND p.pt <= c.ct + 3600000000 ORDER BY click_id, purchase_id NULLS FIRST""")),
+      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS t, event_type FROM events WHERE event_id <= 2000 AND event_type IN ('click', 'purchase')), c AS (SELECT event_id AS click_id, user_id, t AS ct FROM e WHERE event_type = 'click'), p AS (SELECT event_id AS purchase_id, user_id, t AS pt FROM e WHERE event_type = 'purchase') SELECT c.click_id, p.purchase_id, c.user_id, CAST(p.pt - c.ct AS BIGINT) AS dt_us FROM c LEFT JOIN p ON p.user_id = c.user_id AND p.pt >= c.ct AND p.pt <= c.ct + 3600000000 ORDER BY click_id, purchase_id NULLS FIRST""", StreamingHarness),
 
     // ADX cross-database qualifiers: cluster('c').database('d').T
     // parses and resolves (the db name is the fixture dir's basename —
@@ -5813,7 +5832,7 @@ object SparkEntry {
              | summarize n = count(), cents = sum(tolong(round(o_totalprice * 100)))""",
           dir)
       },
-      Some("""SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents FROM orders""")),
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents FROM orders"""),
 
     // OGG audio metadata: planted first pages with VARIABLE segment
     // tables (the packet offset must be read, not assumed) carrying
@@ -5853,7 +5872,7 @@ object SparkEntry {
             .otherwise(concat(unhex(lit("00")), encode(col("text"), "UTF-8"))))
         LlmOps.oggMeta(d, "payload").orderBy("doc_id")
       },
-      Some("""SELECT doc_id, CASE WHEN doc_id % 3 = 0 THEN 'opus' WHEN doc_id % 3 = 1 THEN 'vorbis' END AS codec, CASE WHEN doc_id % 3 <= 1 THEN CAST(1 + doc_id % 7 AS BIGINT) END AS n_channels, CASE WHEN doc_id % 3 = 0 THEN CAST(doc_id % 1000 AS BIGINT) END AS pre_skip, CASE WHEN doc_id % 3 <= 1 THEN CAST(8000 + (doc_id % 5) * 8000 AS BIGINT) END AS sample_rate FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CASE WHEN doc_id % 3 = 0 THEN 'opus' WHEN doc_id % 3 = 1 THEN 'vorbis' END AS codec, CASE WHEN doc_id % 3 <= 1 THEN CAST(1 + doc_id % 7 AS BIGINT) END AS n_channels, CASE WHEN doc_id % 3 = 0 THEN CAST(doc_id % 1000 AS BIGINT) END AS pre_skip, CASE WHEN doc_id % 3 <= 1 THEN CAST(8000 + (doc_id % 5) * 8000 AS BIGINT) END AS sample_rate FROM documents ORDER BY doc_id"""),
 
     // EXIF/TIFF metadata: planted IFDs in BOTH byte orders (II
     // standalone TIFF on doc_id%3==0, MM inside a JPEG APP1-Exif wrap
@@ -5897,7 +5916,7 @@ object SparkEntry {
             .otherwise(concat(unhex(lit("00")), encode(col("text"), "UTF-8"))))
         LlmOps.exifMeta(d, "payload").orderBy("doc_id")
       },
-      Some("""SELECT doc_id, CASE WHEN doc_id % 3 = 0 THEN 'II' WHEN doc_id % 3 = 1 THEN 'MM' END AS byte_order, CASE WHEN doc_id % 3 <= 1 THEN CAST(100 + doc_id % 900 AS BIGINT) END AS width, CASE WHEN doc_id % 3 <= 1 THEN CAST(80 + doc_id % 700 AS BIGINT) END AS height, CASE WHEN doc_id % 3 <= 1 THEN CAST(1 + doc_id % 8 AS BIGINT) END AS orientation FROM documents ORDER BY doc_id""")),
+      """SELECT doc_id, CASE WHEN doc_id % 3 = 0 THEN 'II' WHEN doc_id % 3 = 1 THEN 'MM' END AS byte_order, CASE WHEN doc_id % 3 <= 1 THEN CAST(100 + doc_id % 900 AS BIGINT) END AS width, CASE WHEN doc_id % 3 <= 1 THEN CAST(80 + doc_id % 700 AS BIGINT) END AS height, CASE WHEN doc_id % 3 <= 1 THEN CAST(1 + doc_id % 8 AS BIGINT) END AS orientation FROM documents ORDER BY doc_id"""),
 
     // α-temperature source mixing (mT5 rule): per-source keep rates
     // p_s ∝ n_s^0.3 for a 50% target; weights micro-round before the
@@ -5907,7 +5926,7 @@ object SparkEntry {
         .groupBy("source", "n_s", "w_u", "rate_u")
         .agg(count(lit(1)).as("n_kept"))
         .orderBy("source"),
-      Some("""WITH c AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_s FROM documents GROUP BY 1), w AS (SELECT source, n_s, CAST(ROUND(EXP(CAST(0.3 AS DOUBLE) * LN(CAST(n_s AS DOUBLE))) * 1000000) AS BIGINT) AS w_u FROM c), t AS (SELECT CAST(SUM(n_s) AS BIGINT) AS n_total, CAST(SUM(w_u) AS BIGINT) AS w_total FROM w), r AS (SELECT source, n_s, w_u, CAST(LEAST(1000000, ((w_u * 1000000) // w_total) * CAST(ROUND(n_total * CAST(0.5 AS DOUBLE)) AS BIGINT) // n_s) AS BIGINT) AS rate_u FROM w, t), k AS (SELECT d.source FROM documents d JOIN r USING (source) WHERE (d.doc_id * 2654435761) % 4294967296 < (r.rate_u * 4294967296) // 1000000) SELECT r.source, r.n_s, r.w_u, r.rate_u, CAST(COUNT(*) AS BIGINT) AS n_kept FROM r JOIN k ON k.source = r.source GROUP BY 1, 2, 3, 4 ORDER BY 1""")),
+      """WITH c AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_s FROM documents GROUP BY 1), w AS (SELECT source, n_s, CAST(ROUND(EXP(CAST(0.3 AS DOUBLE) * LN(CAST(n_s AS DOUBLE))) * 1000000) AS BIGINT) AS w_u FROM c), t AS (SELECT CAST(SUM(n_s) AS BIGINT) AS n_total, CAST(SUM(w_u) AS BIGINT) AS w_total FROM w), r AS (SELECT source, n_s, w_u, CAST(LEAST(1000000, ((w_u * 1000000) // w_total) * CAST(ROUND(n_total * CAST(0.5 AS DOUBLE)) AS BIGINT) // n_s) AS BIGINT) AS rate_u FROM w, t), k AS (SELECT d.source FROM documents d JOIN r USING (source) WHERE (d.doc_id * 2654435761) % 4294967296 < (r.rate_u * 4294967296) // 1000000) SELECT r.source, r.n_s, r.w_u, r.rate_u, CAST(COUNT(*) AS BIGINT) AS n_kept FROM r JOIN k ON k.source = r.source GROUP BY 1, 2, 3, 4 ORDER BY 1"""),
 
     // Vocabulary drift between two snapshot halves (even/odd docs):
     // smoothed log frequency ratios in integer micros, top movers
@@ -5918,14 +5937,14 @@ object SparkEntry {
           d.filter(pmod(col("doc_id"), lit(2)) === 1), k = 20)
           .orderBy(abs(col("drift_u")).desc, col("tok"))
       },
-      Some("""WITH o AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS c FROM (SELECT unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM documents WHERE doc_id % 2 = 0) GROUP BY 1), n AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS c FROM (SELECT unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM documents WHERE doc_id % 2 = 1) GROUP BY 1), so AS (SELECT CAST(SUM(c) AS BIGINT) AS t FROM o), sn AS (SELECT CAST(SUM(c) AS BIGINT) AS t FROM n), j AS (SELECT COALESCE(o.tok, n.tok) AS tok, COALESCE(o.c, 0) AS c_old, COALESCE(n.c, 0) AS c_new FROM o FULL OUTER JOIN n ON o.tok = n.tok) SELECT tok, c_old, c_new, CAST(ROUND(LN((CAST(c_new + 1 AS DOUBLE) / CAST(sn.t + 1 AS DOUBLE)) / (CAST(c_old + 1 AS DOUBLE) / CAST(so.t + 1 AS DOUBLE))) * 1000000) AS BIGINT) AS drift_u FROM j, so, sn ORDER BY ABS(drift_u) DESC, tok LIMIT 20""")),
+      """WITH o AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS c FROM (SELECT unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM documents WHERE doc_id % 2 = 0) GROUP BY 1), n AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS c FROM (SELECT unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM documents WHERE doc_id % 2 = 1) GROUP BY 1), so AS (SELECT CAST(SUM(c) AS BIGINT) AS t FROM o), sn AS (SELECT CAST(SUM(c) AS BIGINT) AS t FROM n), j AS (SELECT COALESCE(o.tok, n.tok) AS tok, COALESCE(o.c, 0) AS c_old, COALESCE(n.c, 0) AS c_new FROM o FULL OUTER JOIN n ON o.tok = n.tok) SELECT tok, c_old, c_new, CAST(ROUND(LN((CAST(c_new + 1 AS DOUBLE) / CAST(sn.t + 1 AS DOUBLE)) / (CAST(c_old + 1 AS DOUBLE) / CAST(so.t + 1 AS DOUBLE))) * 1000000) AS BIGINT) AS drift_u FROM j, so, sn ORDER BY ABS(drift_u) DESC, tok LIMIT 20"""),
 
     // Overlapping sliding windows on a stream (complete mode, 2
     // micro-batches): each event lands in EXACTLY two window starts —
     // the oracle derives both memberships arithmetically
     "tmp_stream_sliding" -> Q(
       (s, dir) => streamSlidingQuery(s, dir),
-      Some("""WITH e AS (SELECT epoch_us(ts) AS t, CAST(ROUND(value * 100) AS BIGINT) AS cents FROM events WHERE event_id <= 2000), m AS (SELECT (t // 1800000000) * 1800000000 - off AS start_us, cents FROM e, unnest([CAST(0 AS BIGINT), CAST(1800000000 AS BIGINT)]) s(off)) SELECT CAST(start_us AS BIGINT) AS start_us, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(cents) AS BIGINT) AS cents FROM m GROUP BY 1 ORDER BY 1""")),
+      """WITH e AS (SELECT epoch_us(ts) AS t, CAST(ROUND(value * 100) AS BIGINT) AS cents FROM events WHERE event_id <= 2000), m AS (SELECT (t // 1800000000) * 1800000000 - off AS start_us, cents FROM e, unnest([CAST(0 AS BIGINT), CAST(1800000000 AS BIGINT)]) s(off)) SELECT CAST(start_us AS BIGINT) AS start_us, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(cents) AS BIGINT) AS cents FROM m GROUP BY 1 ORDER BY 1""", StreamingHarness),
 
     // Pairwise source token-set Jaccard (corpus-composition audit):
     // inverted-index self-join over distinct (source, token), integer
@@ -5933,7 +5952,7 @@ object SparkEntry {
     "llm_source_similarity" -> Q(
       (s, dir) => LlmOps.sourceSimilarity(docs(s, dir))
         .orderBy("src_a", "src_b"),
-      Some("""WITH st AS (SELECT DISTINCT src, tok FROM (SELECT source AS src, unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM documents)), sz AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS n FROM st GROUP BY 1), it AS (SELECT a.src AS src_a, b.src AS src_b, CAST(COUNT(*) AS BIGINT) AS inter FROM st a JOIN st b ON a.tok = b.tok AND a.src < b.src GROUP BY 1, 2) SELECT src_a, src_b, za.n AS n_a, zb.n AS n_b, inter, CAST((inter * 1000000) // (za.n + zb.n - inter) AS BIGINT) AS jaccard_u FROM it JOIN sz za ON za.src = it.src_a JOIN sz zb ON zb.src = it.src_b ORDER BY src_a, src_b""")),
+      """WITH st AS (SELECT DISTINCT src, tok FROM (SELECT source AS src, unnest(list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1)) AS tok FROM documents)), sz AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS n FROM st GROUP BY 1), it AS (SELECT a.src AS src_a, b.src AS src_b, CAST(COUNT(*) AS BIGINT) AS inter FROM st a JOIN st b ON a.tok = b.tok AND a.src < b.src GROUP BY 1, 2) SELECT src_a, src_b, za.n AS n_a, zb.n AS n_b, inter, CAST((inter * 1000000) // (za.n + zb.n - inter) AS BIGINT) AS jaccard_u FROM it JOIN sz za ON za.src = it.src_a JOIN sz zb ON zb.src = it.src_b ORDER BY src_a, src_b"""),
 
     // Tukey-fence outliers per returnflag over integer cents:
     // nearest-rank quartiles, all-integer fences -> value-exact
@@ -5943,7 +5962,7 @@ object SparkEntry {
           .withColumn("cents",
             expr("CAST(ROUND(l_extendedprice * 100) AS BIGINT)")),
         "cents", "l_returnflag").orderBy("l_returnflag"),
-      Some("""WITH t AS (SELECT l_returnflag AS g, CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS v FROM lineitem), r AS (SELECT g, v, CAST(ROW_NUMBER() OVER (PARTITION BY g ORDER BY v) AS BIGINT) AS r, CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS n FROM t), q AS (SELECT g, MIN(CASE WHEN r = CAST(CEIL(0.25 * n) AS BIGINT) THEN v END) AS p25, MIN(CASE WHEN r = CAST(CEIL(0.75 * n) AS BIGINT) THEN v END) AS p75 FROM r GROUP BY 1), f AS (SELECT g, p25, p75, p25 - (3 * (p75 - p25)) // 2 AS lo_fence, p75 + (3 * (p75 - p25)) // 2 AS hi_fence FROM q) SELECT t.g AS l_returnflag, CAST(COUNT(*) AS BIGINT) AS n, CAST(f.p25 AS BIGINT) AS p25, CAST(f.p75 AS BIGINT) AS p75, CAST(f.lo_fence AS BIGINT) AS lo_fence, CAST(f.hi_fence AS BIGINT) AS hi_fence, CAST(SUM(CASE WHEN t.v < f.lo_fence OR t.v > f.hi_fence THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers FROM t JOIN f ON t.g = f.g GROUP BY t.g, f.p25, f.p75, f.lo_fence, f.hi_fence ORDER BY 1""")),
+      """WITH t AS (SELECT l_returnflag AS g, CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS v FROM lineitem), r AS (SELECT g, v, CAST(ROW_NUMBER() OVER (PARTITION BY g ORDER BY v) AS BIGINT) AS r, CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS n FROM t), q AS (SELECT g, MIN(CASE WHEN r = CAST(CEIL(0.25 * n) AS BIGINT) THEN v END) AS p25, MIN(CASE WHEN r = CAST(CEIL(0.75 * n) AS BIGINT) THEN v END) AS p75 FROM r GROUP BY 1), f AS (SELECT g, p25, p75, p25 - (3 * (p75 - p25)) // 2 AS lo_fence, p75 + (3 * (p75 - p25)) // 2 AS hi_fence FROM q) SELECT t.g AS l_returnflag, CAST(COUNT(*) AS BIGINT) AS n, CAST(f.p25 AS BIGINT) AS p25, CAST(f.p75 AS BIGINT) AS p75, CAST(f.lo_fence AS BIGINT) AS lo_fence, CAST(f.hi_fence AS BIGINT) AS hi_fence, CAST(SUM(CASE WHEN t.v < f.lo_fence OR t.v > f.hi_fence THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers FROM t JOIN f ON t.g = f.g GROUP BY t.g, f.p25, f.p75, f.lo_fence, f.hi_fence ORDER BY 1"""),
 
     // Streaming session windows (append mode, 2 data batches + 2
     // sentinel flushes): final emitted sessions must equal the batch
@@ -5951,14 +5970,14 @@ object SparkEntry {
     // the batch boundary would mismatch
     "tmp_stream_session" -> Q(
       (s, dir) => streamSessionQuery(s, dir),
-      Some("""WITH e AS (SELECT user_id, epoch_us(ts) AS t FROM events WHERE event_id <= 2000), o AS (SELECT user_id, t, CASE WHEN LAG(t) OVER (PARTITION BY user_id ORDER BY t) IS NULL OR t - LAG(t) OVER (PARTITION BY user_id ORDER BY t) >= 1800000000 THEN 1 ELSE 0 END AS brk FROM e), g AS (SELECT user_id, t, SUM(brk) OVER (PARTITION BY user_id ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM o) SELECT user_id, CAST(MIN(t) AS BIGINT) AS start_us, CAST(MAX(t) + 1800000000 AS BIGINT) AS end_us, CAST(COUNT(*) AS BIGINT) AS n_events FROM g GROUP BY user_id, sid ORDER BY user_id, start_us""")),
+      """WITH e AS (SELECT user_id, epoch_us(ts) AS t FROM events WHERE event_id <= 2000), o AS (SELECT user_id, t, CASE WHEN LAG(t) OVER (PARTITION BY user_id ORDER BY t) IS NULL OR t - LAG(t) OVER (PARTITION BY user_id ORDER BY t) >= 1800000000 THEN 1 ELSE 0 END AS brk FROM e), g AS (SELECT user_id, t, SUM(brk) OVER (PARTITION BY user_id ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM o) SELECT user_id, CAST(MIN(t) AS BIGINT) AS start_us, CAST(MAX(t) + 1800000000 AS BIGINT) AS end_us, CAST(COUNT(*) AS BIGINT) AS n_events FROM g GROUP BY user_id, sid ORDER BY user_id, start_us""", StreamingHarness),
 
     // The session-window query on the RocksDB state store (disk-backed
     // state for 100 TB streaming deployments) — same oracle as
     // tmp_stream_session: the backend must not change a single value
     "tmp_rocksdb_session" -> Q(
       (s, dir) => streamSessionRocksQuery(s, dir),
-      Some("""WITH e AS (SELECT user_id, epoch_us(ts) AS t FROM events WHERE event_id <= 2000), o AS (SELECT user_id, t, CASE WHEN LAG(t) OVER (PARTITION BY user_id ORDER BY t) IS NULL OR t - LAG(t) OVER (PARTITION BY user_id ORDER BY t) >= 1800000000 THEN 1 ELSE 0 END AS brk FROM e), g AS (SELECT user_id, t, SUM(brk) OVER (PARTITION BY user_id ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM o) SELECT user_id, CAST(MIN(t) AS BIGINT) AS start_us, CAST(MAX(t) + 1800000000 AS BIGINT) AS end_us, CAST(COUNT(*) AS BIGINT) AS n_events FROM g GROUP BY user_id, sid ORDER BY user_id, start_us""")),
+      """WITH e AS (SELECT user_id, epoch_us(ts) AS t FROM events WHERE event_id <= 2000), o AS (SELECT user_id, t, CASE WHEN LAG(t) OVER (PARTITION BY user_id ORDER BY t) IS NULL OR t - LAG(t) OVER (PARTITION BY user_id ORDER BY t) >= 1800000000 THEN 1 ELSE 0 END AS brk FROM e), g AS (SELECT user_id, t, SUM(brk) OVER (PARTITION BY user_id ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM o) SELECT user_id, CAST(MIN(t) AS BIGINT) AS start_us, CAST(MAX(t) + 1800000000 AS BIGINT) AS end_us, CAST(COUNT(*) AS BIGINT) AS n_events FROM g GROUP BY user_id, sid ORDER BY user_id, start_us""", StreamingHarness),
 
     // The spark.sql.extensions hook end-to-end: graft_* codegen kernels
     // as plain SQL functions in an extensions-configured session,
@@ -5966,7 +5985,7 @@ object SparkEntry {
     // self dot product, arithmetic ADC plant)
     "tmp_extensions_sql" -> Q(
       (s, dir) => extensionsSqlQuery(s, dir),
-      Some("""WITH base AS (SELECT doc_id, list_sort(list_distinct(list_transform(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'), t -> len(t) >= 1), t -> CAST(len(t) AS BIGINT)))) AS lens FROM documents WHERE doc_id <= 500) SELECT doc_id, CAST(len(list_intersect(lens, CAST([1,2,3,4,5,6,7,8,9,10] AS BIGINT[]))) AS BIGINT) AS n_common, CAST(coalesce(list_sum(list_transform(lens, x -> x * x)), 0) AS BIGINT) AS dot_ll, CAST((doc_id % 7) * 10 + (doc_id % 4) AS BIGINT) AS adc_u FROM base ORDER BY doc_id""")),
+      """WITH base AS (SELECT doc_id, list_sort(list_distinct(list_transform(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'), t -> len(t) >= 1), t -> CAST(len(t) AS BIGINT)))) AS lens FROM documents WHERE doc_id <= 500) SELECT doc_id, CAST(len(list_intersect(lens, CAST([1,2,3,4,5,6,7,8,9,10] AS BIGINT[]))) AS BIGINT) AS n_common, CAST(coalesce(list_sum(list_transform(lens, x -> x * x)), 0) AS BIGINT) AS dot_ll, CAST((doc_id % 7) * 10 + (doc_id % 4) AS BIGINT) AS adc_u FROM base ORDER BY doc_id"""),
 
     // Exact duplicated-substring removal (Lee et al. 2021, token
     // granular): DuckDB replays the whole rewrite — windows, md5
@@ -5975,7 +5994,7 @@ object SparkEntry {
     "llm_dedup_substring" -> Q(
       (s, dir) => LlmOps.dedupSubstringRemove(docs(s, dir), spanLen = 8)
         .orderBy("doc_id"),
-      Some("""WITH b2 AS (SELECT doc_id, list_filter(string_split(COALESCE(text,''),' '), x->len(x)>=1) AS toks, CAST(len(list_filter(string_split(COALESCE(text,''),' '), x->len(x)>=1)) AS BIGINT) AS n FROM documents), w AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, md5(array_to_string(toks[i:i+7], ' ')) AS h FROM b2, unnest(generate_series(1, CAST(n AS INTEGER) - 7)) s(i) WHERE n >= 8), own AS (SELECT h, MIN(doc_id * 1000000 + pos) AS o, COUNT(*) AS cnt FROM w GROUP BY 1), dup AS (SELECT w.doc_id, w.pos FROM w JOIN own ON w.h = own.h WHERE own.cnt > 1 AND w.doc_id * 1000000 + w.pos <> own.o), cov AS (SELECT DISTINCT doc_id, t FROM dup, unnest(generate_series(pos, pos + 7)) s(t)), tokpos AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS t, toks[i] AS tok FROM b2, unnest(generate_series(1, CAST(n AS INTEGER))) s(i) WHERE n >= 1), kept AS (SELECT tp.doc_id, tp.t, tp.tok FROM tokpos tp LEFT JOIN cov ON cov.doc_id = tp.doc_id AND cov.t = tp.t WHERE cov.doc_id IS NULL), agg AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY t) AS text_kept, CAST(COUNT(*) AS BIGINT) AS n_kept FROM kept GROUP BY 1) SELECT b2.doc_id, COALESCE(agg.text_kept, '') AS text_kept, b2.n AS n_tokens, b2.n - COALESCE(agg.n_kept, 0) AS n_removed FROM b2 LEFT JOIN agg USING (doc_id) ORDER BY b2.doc_id""")),
+      """WITH b2 AS (SELECT doc_id, list_filter(string_split(COALESCE(text,''),' '), x->len(x)>=1) AS toks, CAST(len(list_filter(string_split(COALESCE(text,''),' '), x->len(x)>=1)) AS BIGINT) AS n FROM documents), w AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, md5(array_to_string(toks[i:i+7], ' ')) AS h FROM b2, unnest(generate_series(1, CAST(n AS INTEGER) - 7)) s(i) WHERE n >= 8), own AS (SELECT h, MIN(doc_id * 1000000 + pos) AS o, COUNT(*) AS cnt FROM w GROUP BY 1), dup AS (SELECT w.doc_id, w.pos FROM w JOIN own ON w.h = own.h WHERE own.cnt > 1 AND w.doc_id * 1000000 + w.pos <> own.o), cov AS (SELECT DISTINCT doc_id, t FROM dup, unnest(generate_series(pos, pos + 7)) s(t)), tokpos AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS t, toks[i] AS tok FROM b2, unnest(generate_series(1, CAST(n AS INTEGER))) s(i) WHERE n >= 1), kept AS (SELECT tp.doc_id, tp.t, tp.tok FROM tokpos tp LEFT JOIN cov ON cov.doc_id = tp.doc_id AND cov.t = tp.t WHERE cov.doc_id IS NULL), agg AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY t) AS text_kept, CAST(COUNT(*) AS BIGINT) AS n_kept FROM kept GROUP BY 1) SELECT b2.doc_id, COALESCE(agg.text_kept, '') AS text_kept, b2.n AS n_tokens, b2.n - COALESCE(agg.n_kept, 0) AS n_removed FROM b2 LEFT JOIN agg USING (doc_id) ORDER BY b2.doc_id"""),
 
     // HTML text extraction round trip: each doc is wrapped in a planted
     // page (title/style/script/comment/entity noise, text entity-escaped
@@ -6001,13 +6020,13 @@ object SparkEntry {
               .as("extracted"))
           .orderBy("doc_id")
       },
-      Some("""WITH t AS (SELECT doc_id, trim(regexp_replace(COALESCE(text,''), '\s+', ' ', 'g')) AS tx FROM documents) SELECT doc_id, 'T' || CAST(doc_id AS VARCHAR) || ' Doc ' || CAST(doc_id AS VARCHAR) || CASE WHEN tx = '' THEN '' ELSE ' ' || tx END || ' & "end"' AS extracted FROM t ORDER BY doc_id""")),
+      """WITH t AS (SELECT doc_id, trim(regexp_replace(COALESCE(text,''), '\s+', ' ', 'g')) AS tx FROM documents) SELECT doc_id, 'T' || CAST(doc_id AS VARCHAR) || ' Doc ' || CAST(doc_id AS VARCHAR) || CASE WHEN tx = '' THEN '' ELSE ' ' || tx END || ' & "end"' AS extracted FROM t ORDER BY doc_id"""),
 
     // Flesch / FK-grade readability: all-integer micro scores (floor
     // div per term) -> value-exact
     "llm_readability" -> Q(
       (s, dir) => LlmOps.readability(docs(s, dir)).orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1) AS toks, COALESCE(text,'') AS tx FROM documents), b AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_words, CAST(GREATEST(1, len(regexp_extract_all(tx, '[.!?]+'))) AS BIGINT) AS n_sentences, CAST(list_sum(list_transform(toks, w -> GREATEST(1, len(regexp_extract_all(w, '[aeiouy]+'))))) AS BIGINT) AS n_syllables FROM t WHERE len(toks) > 0) SELECT doc_id, n_words, n_sentences, n_syllables, CAST(206835000 - (1015000 * n_words) // n_sentences - (84600000 * n_syllables) // n_words AS BIGINT) AS flesch_u, CAST((390000 * n_words) // n_sentences + (11800000 * n_syllables) // n_words - 15590000 AS BIGINT) AS fk_grade_u FROM b ORDER BY doc_id""")),
+      """WITH t AS (SELECT doc_id, list_filter(string_split(lower(COALESCE(text,'')),' '), x->len(x)>=1) AS toks, COALESCE(text,'') AS tx FROM documents), b AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_words, CAST(GREATEST(1, len(regexp_extract_all(tx, '[.!?]+'))) AS BIGINT) AS n_sentences, CAST(list_sum(list_transform(toks, w -> GREATEST(1, len(regexp_extract_all(w, '[aeiouy]+'))))) AS BIGINT) AS n_syllables FROM t WHERE len(toks) > 0) SELECT doc_id, n_words, n_sentences, n_syllables, CAST(206835000 - (1015000 * n_words) // n_sentences - (84600000 * n_syllables) // n_words AS BIGINT) AS flesch_u, CAST((390000 * n_words) // n_sentences + (11800000 * n_syllables) // n_words - 15590000 AS BIGINT) AS fk_grade_u FROM b ORDER BY doc_id"""),
 
     // Snapshot diff: old = orders minus key%97, new = orders minus
     // key%89 with totalprice perturbed on key%7 — added/removed/
@@ -6027,7 +6046,7 @@ object SparkEntry {
             min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"))
           .orderBy("status")
       },
-      Some("""WITH old AS (SELECT * FROM orders WHERE o_orderkey % 97 <> 0), nw AS (SELECT o_orderkey, CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 1 ELSE o_totalprice END AS tp FROM orders WHERE o_orderkey % 89 <> 0), d AS (SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS k, CASE WHEN o.o_orderkey IS NULL THEN 'added' WHEN n.o_orderkey IS NULL THEN 'removed' WHEN o.o_totalprice = n.tp THEN 'unchanged' ELSE 'changed' END AS status FROM old o FULL OUTER JOIN nw n ON o.o_orderkey = n.o_orderkey) SELECT status, CAST(COUNT(*) AS BIGINT) AS n, CAST(MIN(k) AS BIGINT) AS min_key, CAST(MAX(k) AS BIGINT) AS max_key FROM d GROUP BY 1 ORDER BY 1""")),
+      """WITH old AS (SELECT * FROM orders WHERE o_orderkey % 97 <> 0), nw AS (SELECT o_orderkey, CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 1 ELSE o_totalprice END AS tp FROM orders WHERE o_orderkey % 89 <> 0), d AS (SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS k, CASE WHEN o.o_orderkey IS NULL THEN 'added' WHEN n.o_orderkey IS NULL THEN 'removed' WHEN o.o_totalprice = n.tp THEN 'unchanged' ELSE 'changed' END AS status FROM old o FULL OUTER JOIN nw n ON o.o_orderkey = n.o_orderkey) SELECT status, CAST(COUNT(*) AS BIGINT) AS n, CAST(MIN(k) AS BIGINT) AS min_key, CAST(MAX(k) AS BIGINT) AS max_key FROM d GROUP BY 1 ORDER BY 1"""),
 
     // Compaction planner: 503 synthetic "files" (cents-sized) packed to
     // 2 GB bins by sorted next-fit; the whole assignment replays as one
@@ -6042,7 +6061,7 @@ object SparkEntry {
             2000000000L)
           .orderBy("bin", "file_id")
       },
-      Some("""WITH f AS (SELECT CAST(l_orderkey % 503 AS BIGINT) AS file_id, CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS size_bytes FROM lineitem GROUP BY 1), c AS (SELECT file_id, size_bytes, SUM(size_bytes) OVER (ORDER BY size_bytes DESC, file_id ASC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM f) SELECT file_id, size_bytes, CAST((cum - size_bytes) // 2000000000 AS BIGINT) AS bin FROM c ORDER BY bin, file_id""")),
+      """WITH f AS (SELECT CAST(l_orderkey % 503 AS BIGINT) AS file_id, CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS size_bytes FROM lineitem GROUP BY 1), c AS (SELECT file_id, size_bytes, SUM(size_bytes) OVER (ORDER BY size_bytes DESC, file_id ASC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM f) SELECT file_id, size_bytes, CAST((cum - size_bytes) // 2000000000 AS BIGINT) AS bin FROM c ORDER BY bin, file_id"""),
 
     // The streaming cosine-dedup harness's one-time SEED INDEX build as
     // its own row (r10 verdict task 1): a deployed pipeline builds the
@@ -6059,7 +6078,7 @@ object SparkEntry {
         val nb = s.table("graft_stream_cos_idx_bands").count()
         Seq((nv, nb == nv * 16)).toDF("n_vecs", "banded_16x")
       },
-      Some("SELECT CAST(COUNT(*) AS BIGINT) AS n_vecs, true AS banded_16x FROM embeddings WHERE label <= 3 AND vec_id % 2 = 0")),
+      "SELECT CAST(COUNT(*) AS BIGINT) AS n_vecs, true AS banded_16x FROM embeddings WHERE label <= 3 AND vec_id % 2 = 0", IndexBuild),
 
     // The two declared refusal families as a DRIVER artifact (r10
     // verdict task 9): the spec-pinned loud errors become a correctness
@@ -6086,7 +6105,7 @@ object SparkEntry {
           .toDF("h3_names_gap", "h3_offers_geohash", "h3_offers_s2",
             "principal_names_auth", "both_refused")
       },
-      Some("SELECT true AS h3_names_gap, true AS h3_offers_geohash, true AS h3_offers_s2, true AS principal_names_auth, true AS both_refused")),
+      "SELECT true AS h3_names_gap, true AS h3_offers_geohash, true AS h3_offers_s2, true AS principal_names_auth, true AS both_refused"),
 
     // fork as a DRIVER row (r10 verdict task 8): Kql.runMulti
     // materializes each named branch of the fork; the single-DataFrame
@@ -6109,7 +6128,7 @@ object SparkEntry {
           lit("").as("k"), col("n").cast("long").as("v"))
         flags.unionByName(heavy).orderBy("branch", "k")
       },
-      Some("""SELECT 'flags' AS branch, l_returnflag AS k, CAST(COUNT(*) AS BIGINT) AS v FROM lineitem WHERE l_quantity > 45 GROUP BY 2 UNION ALL SELECT 'heavy' AS branch, '' AS k, CAST(COUNT(*) AS BIGINT) AS v FROM lineitem WHERE l_quantity > 45 AND l_discount >= 0.05 ORDER BY branch, k""")),
+      """SELECT 'flags' AS branch, l_returnflag AS k, CAST(COUNT(*) AS BIGINT) AS v FROM lineitem WHERE l_quantity > 45 GROUP BY 2 UNION ALL SELECT 'heavy' AS branch, '' AS k, CAST(COUNT(*) AS BIGINT) AS v FROM lineitem WHERE l_quantity > 45 AND l_discount >= 0.05 ORDER BY branch, k"""),
   )
 
   /** One entry per implemented operator from SURVEY.md §2. */
@@ -6117,7 +6136,7 @@ object SparkEntry {
     inventory.map { case (n, q) => n -> q.fn }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    inventory.collect { case (n, Q(_, Some(sql))) => n -> sql }.toMap
+    inventory.map { case (n, q) => n -> q.oracle }.toMap
 }

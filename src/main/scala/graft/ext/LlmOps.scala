@@ -2093,11 +2093,8 @@ object LlmOps {
     var iter = 0
     var converged = false
     while (!converged && iter < maxIters) {
-      val t0 = System.nanoTime()
       val next = ckptRdd(smallStar(largeStar(edges)))
       val sumNow = checksum(next) // materializes next's checkpoint
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] round $iter action ${(System.nanoTime() - t0) / 1e9}%.3f s")
       rmCkpt(edges)
       edges.unpersist(false)
       edges = next

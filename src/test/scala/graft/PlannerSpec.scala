@@ -1120,18 +1120,6 @@ class PlannerSpec extends AnyFunSuite {
       Seq((0L, "a", 13L), (0L, "rest", 5L), (10L, "a", 7L), (10L, "rest", 3L)))
   }
 
-  test("driver contract: every declared query ships oracle SQL") {
-    // the CORRECTNESS gate hash-compares only oracled rows; a query
-    // declared without SQL silently downgrades to a rows-only check —
-    // this guard turns that into a loud failure (add the oracle, or an
-    // explicit exception here with the reason)
-    val noOracle = graft.SparkEntry.queries.keySet -- graft.SparkEntry.oracleSql.keySet
-    assert(noOracle.isEmpty, s"queries without oracle SQL: $noOracle")
-    // and no orphaned oracles for undeclared queries
-    val orphans = graft.SparkEntry.oracleSql.keySet -- graft.SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles without queries: $orphans")
-  }
-
   test("Suggest.plugins stays in sync with the planner's evaluate cases") {
     // the suggestion list is hand-maintained next to the suggester; this
     // guard reads the Planner source so a new EvaluateOp case (or a
