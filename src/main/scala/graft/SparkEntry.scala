@@ -119,8 +119,8 @@ object SparkEntry {
   /** The join/agg over the already-written bucketed tables — split out so
     * the spec can assert its plan shape without re-writing the layout. */
   def bucketedJoinOver(s: SparkSession): DataFrame = {
-    val o = graft.sources.BucketedLayout.readTable(s, "graft_b_orders")
-    val c = graft.sources.BucketedLayout.readTable(s, "graft_b_customer")
+    val o = s.table("graft_b_orders")
+    val c = s.table("graft_b_customer")
     c.join(o, c("c_custkey") === o("o_custkey"))
       .groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("n_orders"),
@@ -177,10 +177,7 @@ object SparkEntry {
     graft.ext.LlmOps.buildLineIndex(
       Seq.empty[(Long, String)].toDF("doc_id", "text"), "graft_stream_line_idx",
       buckets = 4)
-    s.sql("DROP TABLE IF EXISTS graft_stream_line_kept")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), "graft_stream_line_kept")
-    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+    graft.sources.BucketedLayout.dropTable(s, "graft_stream_line_kept")
     val rows = relined10(docs(s, dir)).filter(col("doc_id") < 40)
       .select(col("doc_id"), col("text")).as[(Long, String)].collect().toSeq
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
@@ -227,9 +224,9 @@ object SparkEntry {
     * open/commit overhead every micro-batch (the tmp_stream_join
     * lesson: 32→4 partitions = 21.4→4.0 s); a real deployment sizes
     * the state partition count to the cluster. */
-  private def withLowShuffle[A](s: SparkSession)(body: => A): A = {
+  private def withLowShuffle[A](s: SparkSession, partitions: Int = 4)(body: => A): A = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
@@ -654,10 +651,7 @@ object SparkEntry {
   private def streamMatViewQueryBody(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    s.sql("DROP TABLE IF EXISTS graft_stream_matview")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), "graft_stream_matview")
-    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+    graft.sources.BucketedLayout.dropTable(s, "graft_stream_matview")
     // epoch-µs ints into the stream (session TZ is UTC, so the NTZ
     // cast is identity) — matches the oracle's epoch_us convention
     val rows = s.read.parquet(s"$dir/events.parquet")
@@ -704,10 +698,7 @@ object SparkEntry {
   private def streamMatViewLateQueryBody(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    s.sql("DROP TABLE IF EXISTS graft_stream_matview_late")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), "graft_stream_matview_late")
-    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+    graft.sources.BucketedLayout.dropTable(s, "graft_stream_matview_late")
     val evs = s.read.parquet(s"$dir/events.parquet")
       .filter(col("event_id") <= 2000)
       .select(col("event_id"),
@@ -761,9 +752,7 @@ object SparkEntry {
     * verify SFs (sf0.001: click 515 ⋈ purchase 517 across the first
     * boundary; sf0.01: click 834 ⋈ purchase 839 across the second) —
     * join state provably crossed micro-batches; the spec pins it. */
-  def streamStreamJoinQuery(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+  def streamStreamJoinQuery(s: SparkSession, dir: String): DataFrame =
     // A two-sided streaming join instantiates FOUR state stores per
     // shuffle partition per micro-batch; at the session's 32 partitions
     // × 3 batches that is ~400 store open/commit cycles on a ~600-row
@@ -775,11 +764,7 @@ object SparkEntry {
     // PER micro-batch — at sub-kilobyte harness batches the commit
     // overhead is the whole cost (32->4 measured 21.4->4.0 s in r8;
     // 4->2 shaves the remaining floor).
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    try streamStreamJoinBody(s, dir)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-  }
+    withLowShuffle(s, 2) { streamStreamJoinBody(s, dir) }
 
   private def streamStreamJoinBody(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -833,13 +818,11 @@ object SparkEntry {
     * equal DuckDB's plain batch LEFT JOIN — extra null rows for
     * actually-matched clicks, or missing null rows for unmatched ones,
     * both mismatch. */
-  def streamStreamLeftJoinQuery(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
+  def streamStreamLeftJoinQuery(s: SparkSession, dir: String): DataFrame =
     // 2 partitions: same state-store-commit reasoning as the inner join
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    try {
+    withLowShuffle(s, 2) {
+      import s.implicits._
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val evs = s.read.parquet(s"$dir/events.parquet")
         .filter(col("event_id") <= 2000 &&
           col("event_type").isin("click", "purchase"))
@@ -888,8 +871,7 @@ object SparkEntry {
       } finally q.stop()
       s.table("graft_stream_join_left_sink").filter(col("user_id") >= 0)
         .orderBy("click_id", "purchase_id")
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-  }
+    }
 
   /** tmp_stream_hard_negatives body (r14): ONLINE hard-negative mining —
     * two micro-batches of anchor vectors probe the at-rest IVF index
@@ -916,10 +898,7 @@ object SparkEntry {
     // (and staleness-unsafe for a regenerated fixture at the same dir).
     // The build is this streaming row's seed setup and is priced in it.
     val cents = LlmOps.buildIvfIndex(e, path, nLists = 8)
-    s.sql("DROP TABLE IF EXISTS graft_stream_hn")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), "graft_stream_hn")
-    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+    graft.sources.BucketedLayout.dropTable(s, "graft_stream_hn")
     val anchors = e.filter(pmod(col("vec_id"), lit(100)) === 0)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>"))
@@ -1143,10 +1122,7 @@ object SparkEntry {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val e = embs(s, dir).filter(col("label") <= 3)
     ensurePristineCosIndex(s, dir)
-    s.sql("DROP TABLE IF EXISTS graft_stream_cos_kept")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), "graft_stream_cos_kept")
-    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+    graft.sources.BucketedLayout.dropTable(s, "graft_stream_cos_kept")
     val odds = e.filter(pmod(col("vec_id"), lit(2)) === 1)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().toSeq

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -396,11 +396,32 @@ object LlmOps {
     * only in its earliest shared band (vs re-shuffling distinct over the
     * candidate fan-out); the signature-estimate prune is the 4-sigma
     * binomial cutoff documented at the [[nearDupPairsMinhash]] use. */
-  private def firstCollisionFilter(bands: Int): Column =
+  private def firstCollision(bands: Int, band: Column, aKeys: Column,
+                             bKeys: Column): Column =
     (0 until bands).map { bb =>
-      col("a.band") <= bb ||
-        element_at(col("a.bks"), bb + 1) =!= element_at(col("b.bks"), bb + 1)
+      band <= bb || element_at(aKeys, bb + 1) =!= element_at(bKeys, bb + 1)
     }.reduce(_ && _)
+
+  /** Partition count of an incremental dedup's probe exchange, PINNED
+    * against AQE coalescing: the kilobyte-sized probe shuffle otherwise
+    * folds to one partition and serializes the candidate fan-out (the
+    * measured dominant effect on the self-join operator). Pinned to the
+    * SESSION's shuffle width, not defaultParallelism: the streaming
+    * harness runs its micro-batches under a low-shuffle conf (4), and
+    * forcing 32-way fan-out on a hundreds-of-rows batch just multiplies
+    * task-launch overhead through every downstream stage. */
+  private def probeWidth(spark: SparkSession): Int =
+    math.max(2, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+
+  /** The params row an at-rest index's build wrote to `<table>_meta`;
+    * every build path writes one. Reading an index under other
+    * parameters silently collapses recall, so each caller checks its own
+    * against this row — and an index without one fails loudly, by name. */
+  private def indexMeta(spark: SparkSession, table: String, build: String): Row = {
+    require(spark.catalog.tableExists(s"${table}_meta"),
+      s"index '$table' has no ${table}_meta table — run $build first")
+    spark.table(s"${table}_meta").head
+  }
 
   private def sigEstimateFilter(numHashes: Int, threshold: Double): Column =
     (0 until numHashes).map { i =>
@@ -456,7 +477,7 @@ object LlmOps {
             greatest(col("a.n"), col("b.n")) * threshold)
       // first-collision: earlier bands must NOT collide (flat positional
       // compares, auto-true once bb ≥ band, no per-row array allocation)
-      .filter(firstCollisionFilter(bands))
+      .filter(firstCollision(bands, col("a.band"), col("a.bks"), col("b.bks")))
       // signature-estimated Jaccard pre-filter: on a near-dup-dense
       // corpus the banded join emits millions of colliding pairs whose
       // true similarity sits far below the threshold, and the exact
@@ -532,12 +553,9 @@ object LlmOps {
   }
 
   /** Fail loudly when the caller's banding parameters disagree with the
-    * ones the persisted index was built with (pre-meta indexes pass). */
-  private def requireIndexParams(spark: org.apache.spark.sql.SparkSession,
-                                 table: String, numHashes: Int, bands: Int,
-                                 buckets: Int): Unit = {
-    if (!spark.catalog.tableExists(s"${table}_meta")) return
-    val m = spark.table(s"${table}_meta").head
+    * ones a minhash index's meta row `m` was built with. */
+  private def requireBanding(m: Row, table: String, numHashes: Int, bands: Int,
+                             buckets: Int): Unit = {
     val (nh, bd, bk) = (m.getAs[Int]("num_hashes"), m.getAs[Int]("bands"),
       m.getAs[Int]("buckets"))
     // buckets < 0 ⇒ read-only caller (any bucket count reads fine); the
@@ -556,7 +574,8 @@ object LlmOps {
                            numHashes: Int = 16, bands: Int = 4,
                            textCol: String = "text", idCol: String = "doc_id",
                            buckets: Int = 16): Unit = {
-    requireIndexParams(docs.sparkSession, table, numHashes, bands, buckets)
+    requireBanding(indexMeta(docs.sparkSession, table, "buildMinhashIndex"),
+      table, numHashes, bands, buckets)
     val (withToks, withSig, banded) = minhashFrames(docs, numHashes, bands, textCol, idCol)
     // independent tables given the persisted frames — overlapped (§2.6)
     graft.sources.BucketedLayout.concurrently(
@@ -584,16 +603,12 @@ object LlmOps {
                        numHashes: Int = 16, bands: Int = 4,
                        textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val spark = newDocs.sparkSession
-    requireIndexParams(spark, table, numHashes, bands, buckets = -1)
+    requireBanding(indexMeta(spark, table, "buildMinhashIndex"),
+      table, numHashes, bands, buckets = -1)
     val (nToks, _, nBanded) = minhashFrames(newDocs, numHashes, bands, textCol, idCol)
-    val cBanded = graft.sources.BucketedLayout.readTable(spark, s"${table}_bands")
-    val cToks = graft.sources.BucketedLayout.readTable(spark, s"${table}_toks")
-    // probe-side partition count PINNED against AQE coalescing, same as
-    // nearDupPairsMinhash: the kilobyte-sized probe shuffle otherwise
-    // folds to one partition and serializes the candidate fan-out (the
-    // measured dominant effect on the self-join operator)
-    val par = spark.sparkContext.defaultParallelism
-    val nProbe = nBanded.repartition(par, col("id"))
+    val cBanded = spark.table(s"${table}_bands")
+    val cToks = spark.table(s"${table}_toks")
+    val nProbe = nBanded.repartition(probeWidth(spark), col("id"))
     // new × corpus candidates: a (band, bucket) collision, size-ratio +
     // first-collision + signature prunes inside/right after the join.
     // The corpus side reads its buckets in place; only nBanded moves.
@@ -602,7 +617,7 @@ object LlmOps {
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           least(col("a.n"), col("b.n")).cast("double") >=
             greatest(col("a.n"), col("b.n")) * threshold)
-      .filter(firstCollisionFilter(bands))
+      .filter(firstCollision(bands, col("a.band"), col("a.bks"), col("b.bks")))
       .filter(sigEstimateFilter(numHashes, threshold))
       .select(col("a.id").as("i"), col("b.id").as("j")) // i = new, j = corpus
     def verified(cand: DataFrame, rightToks: DataFrame): DataFrame = cand
@@ -622,7 +637,7 @@ object LlmOps {
           col("a.id") < col("b.id") &&
           least(col("a.n"), col("b.n")).cast("double") >=
             greatest(col("a.n"), col("b.n")) * threshold)
-      .filter(firstCollisionFilter(bands))
+      .filter(firstCollision(bands, col("a.band"), col("a.bks"), col("b.bks")))
       .filter(sigEstimateFilter(numHashes, threshold))
       .select(col("a.id").as("i"), col("b.id").as("j"))
     val selfDrops = verified(selfCand, nToks).select(col("j").as("drop_id"))
@@ -1559,10 +1574,7 @@ object LlmOps {
     // full candidate fan-out — same rewrite as nearDupPairsMinhash
     val candIds = aSide.join(bSide, Seq("blk", "band", "bucket"))
       .filter(col("i") < col("j"))
-      .filter((0 until nBands).map { bb =>
-        col("band") <= bb ||
-          element_at(col("__siga"), bb + 1) =!= element_at(col("__sigb"), bb + 1)
-      }.reduce(_ && _))
+      .filter(firstCollision(nBands, col("band"), col("__siga"), col("__sigb")))
       .select("blk", "i", "j")
     candIds
       .join(withNorm.select(col("id").as("i"), col("v").as("va"), col("nrm").as("na")), "i")
@@ -1612,9 +1624,9 @@ object LlmOps {
   def appendToCosineIndex(emb: DataFrame, table: String,
                           idCol: String = "vec_id",
                           vecCol: String = "embedding"): Unit = {
-    val spark = emb.sparkSession
-    val (_, nBands, b, dim, seed, buckets) = cosineIndexMeta(spark, table)
-    val (vecs, banded) = cosineIndexFrames(emb, nBands, b, dim, seed, idCol, vecCol)
+    val m = indexMeta(emb.sparkSession, table, "buildCosineIndex")
+    val buckets = m.getAs[Int]("buckets")
+    val (vecs, banded) = cosineIndexFrames(emb, m, idCol, vecCol)
     vecs.persist()
     // independent tables given the persisted vecs — overlapped (§2.6)
     graft.sources.BucketedLayout.concurrently(
@@ -1625,15 +1637,12 @@ object LlmOps {
     vecs.unpersist(false)
   }
 
-  private def cosineIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                              table: String): (Double, Int, Int, Int, Long, Int) = {
-    require(spark.catalog.tableExists(s"${table}_meta"),
-      s"cosine index '$table' not found — run buildCosineIndex first")
-    val m = spark.table(s"${table}_meta").head
-    (m.getAs[Double]("threshold"), m.getAs[Int]("n_bands"),
-      m.getAs[Int]("planes_per_band"), m.getAs[Int]("dim"),
-      m.getAs[Long]("seed"), m.getAs[Int]("buckets"))
-  }
+  /** [[cosineIndexFrames]] under the hyperplanes a cosine index's meta
+    * row pins. */
+  private def cosineIndexFrames(emb: DataFrame, m: Row, idCol: String,
+                                vecCol: String): (DataFrame, DataFrame) =
+    cosineIndexFrames(emb, m.getAs[Int]("n_bands"), m.getAs[Int]("planes_per_band"),
+      m.getAs[Int]("dim"), m.getAs[Long]("seed"), idCol, vecCol)
 
   private def cosineIndexFrames(emb: DataFrame, nBands: Int, b: Int, dim: Int,
                                 seed: Long, idCol: String,
@@ -1660,34 +1669,19 @@ object LlmOps {
                              idCol: String = "vec_id",
                              vecCol: String = "embedding"): DataFrame = {
     val spark = newEmb.sparkSession
-    val (threshold, nBands, b, dim, seed, _) = cosineIndexMeta(spark, table)
-    val hyper = hyperplanes(nBands, b, dim, seed)
-    val vecs = persistTracked(spread(newEmb).select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v"), normD(col(vecCol)).as("nrm")))
-    val keyed = vecs.withColumn("sig", lshSignatures(hyper, nBands, b)(col("v")))
-      .select(col("id"), col("sig"), posexplode(col("sig")).as(Seq("band", "bucket")))
-    // probe-side partition count pinned against AQE coalescing (the
-    // kilobyte probe shuffle otherwise folds to one partition and
-    // serializes the fan-out — same measured effect as dedupIncremental).
-    // Pinned to the SESSION's shuffle width, not defaultParallelism: the
-    // streaming harness runs its micro-batches under a low-shuffle conf
-    // (4), and forcing 32-way fan-out on a hundreds-of-rows batch just
-    // multiplies task-launch overhead through every downstream stage
-    val probeParts = math.max(2,
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val probe = keyed.repartition(probeParts, col("id"))
-    val idxBands = graft.sources.BucketedLayout.readTable(spark, s"${table}_bands")
-    val idxVecs = graft.sources.BucketedLayout.readTable(spark, s"${table}_vecs")
-    // keep a pair only at its FIRST colliding band — a filter in the
-    // join stage instead of a re-shuffling distinct over the fan-out
-    def firstCollision(aSig: Column, bSig: Column, band: Column): Column =
-      (0 until nBands).map { bb =>
-        band <= bb || element_at(aSig, bb + 1) =!= element_at(bSig, bb + 1)
-      }.reduce(_ && _)
+    val m = indexMeta(spark, table, "buildCosineIndex")
+    val (threshold, nBands) = (m.getAs[Double]("threshold"), m.getAs[Int]("n_bands"))
+    // vecs is read by the banding and both verify joins — persisted;
+    // keyed's plan contains vecs', so it reads the cached rows too
+    val (vecs, keyed) = cosineIndexFrames(newEmb, m, idCol, vecCol)
+    persistTracked(vecs)
+    val probe = keyed.repartition(probeWidth(spark), col("id"))
+    val idxBands = spark.table(s"${table}_bands")
+    val idxVecs = spark.table(s"${table}_vecs")
     val corpusCand = probe.as("a")
       .join(idxBands.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .filter(firstCollision(col("a.sig"), col("b.sig"), col("a.band")))
+      .filter(firstCollision(nBands, col("a.band"), col("a.sig"), col("b.sig")))
       .select(col("a.id").as("i"), col("b.id").as("j"))
     def verified(cand: DataFrame, right: DataFrame): DataFrame = cand
       .join(vecs.select(col("id").as("i"), col("v").as("va"), col("nrm").as("na")), "i")
@@ -1699,7 +1693,7 @@ object LlmOps {
       .join(keyed.repartition(col("band"), col("bucket")).as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.id") < col("b.id"))
-      .filter(firstCollision(col("a.sig"), col("b.sig"), col("a.band")))
+      .filter(firstCollision(nBands, col("a.band"), col("a.sig"), col("b.sig")))
       .select(col("a.id").as("i"), col("b.id").as("j"))
     val selfDrops = verified(selfCand, vecs).select(col("j").as("drop_id"))
     newEmb.join(corpusDrops.union(selfDrops).distinct(),
@@ -3629,14 +3623,14 @@ object LlmOps {
     * must NOT recompute once its output partition is committed — after
     * the append, this batch's own hashes are in the index and a
     * recompute would anti-join them all away (see
-    * `StreamingOps.processLineBatch` for the committed-partition
+    * `StreamingOps.processIndexedBatch` for the committed-partition
     * guard). */
   def lineDedupIncremental(newDocs: DataFrame, table: String,
                            delim: String = "\n", textCol: String = "text",
                            idCol: String = "doc_id"): DataFrame = {
     val spark = newDocs.sparkSession
     val lines = lineRows(newDocs, delim, textCol, idCol)
-    val idx = graft.sources.BucketedLayout.readTable(spark, s"${table}_lines")
+    val idx = spark.table(s"${table}_lines")
     val fresh = lines.join(idx, Seq("lh"), "left_anti")
     val owner = fresh.groupBy("lh")
       .agg(min(struct(col("id"), col("pos"))).as("own"))

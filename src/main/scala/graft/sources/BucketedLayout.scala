@@ -18,7 +18,7 @@ object BucketedLayout {
     * can inherit a warehouse dir from a prior run: the managed-table
     * LOCATION outlives the in-memory catalog, and saveAsTable refuses it
     * (LOCATION_ALREADY_EXISTS). */
-  private def clearStale(spark: SparkSession, table: String): Unit = {
+  def dropTable(spark: SparkSession, table: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     val loc = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
@@ -29,14 +29,14 @@ object BucketedLayout {
   /** Write a small unbucketed catalog table (index metadata and the
     * like), clearing any stale managed location first. */
   def writePlain(df: DataFrame, table: String): Unit = {
-    clearStale(df.sparkSession, table)
+    dropTable(df.sparkSession, table)
     df.write.mode("overwrite").format("parquet").saveAsTable(table)
   }
 
   /** Write `df` bucketed and sorted on `keys` as catalog table `table`. */
   def writeBucketed(df: DataFrame, table: String, keys: Seq[String],
                     buckets: Int): Unit = {
-    clearStale(df.sparkSession, table)
+    dropTable(df.sparkSession, table)
     align(df, keys, buckets).write.mode("overwrite").format("parquet")
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
@@ -76,9 +76,6 @@ object BucketedLayout {
       .sortBy(keys.head, keys.tail: _*)
       .saveAsTable(table)
   }
-
-  def readTable(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
 
   /** Run independent Spark actions concurrently from the driver (guide
     * §2.6 overlap-independent-jobs): an index build's table writes are

@@ -20,8 +20,8 @@ class BucketedLayoutSpec extends AnyFunSuite {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      val joined = BucketedLayout.readTable(spark, "b_lineitem")
-        .join(BucketedLayout.readTable(spark, "b_orders"),
+      val joined = spark.table("b_lineitem")
+        .join(spark.table("b_orders"),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy("l_orderkey").agg(sum("o_totalprice"))
       val plan = joined.queryExecution.executedPlan.toString
@@ -35,8 +35,8 @@ class BucketedLayoutSpec extends AnyFunSuite {
       // correctness unchanged vs the unbucketed join
       val expected = li.join(ord, col("l_orderkey") === col("o_orderkey")).count()
       assert(joined.count() > 0)
-      assert(BucketedLayout.readTable(spark, "b_lineitem")
-        .join(BucketedLayout.readTable(spark, "b_orders"),
+      assert(spark.table("b_lineitem")
+        .join(spark.table("b_orders"),
           col("l_orderkey") === col("o_orderkey")).count() == expected)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)

@@ -892,6 +892,21 @@ class LlmOpsSpec extends AnyFunSuite {
       numHashes = 32, bands = 8).count() >= 0)
   }
 
+  test("incremental dedup index: a minhash index without its _meta table fails loudly") {
+    // no build path writes an index without meta, so a missing one means
+    // the index is damaged — guessing its banding would collapse recall
+    LlmOps.buildMinhashIndex(docs.limit(20), "graft_nometa_idx")
+    graft.sources.BucketedLayout.dropTable(spark, "graft_nometa_idx_meta")
+    val append = intercept[IllegalArgumentException] {
+      LlmOps.appendToMinhashIndex(docs.limit(5), "graft_nometa_idx")
+    }
+    assert(append.getMessage.contains("'graft_nometa_idx'"), append.getMessage)
+    val probe = intercept[IllegalArgumentException] {
+      LlmOps.dedupIncremental(docs.limit(5), "graft_nometa_idx")
+    }
+    assert(probe.getMessage.contains("'graft_nometa_idx'"), probe.getMessage)
+  }
+
   test("KQL curation pipeline: quality_filter | source_cap | token_budget chain end-to-end") {
     val out = graft.kql.Kql.run(spark,
       """documents

@@ -90,10 +90,7 @@ class R14OpsSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val path = sys.props("java.io.tmpdir") + "/graft_hn_stream_spec"
     val cents = LlmOps.buildIvfIndex(embs, path, nLists = 8)
-    spark.sql("DROP TABLE IF EXISTS graft_hn_stream_spec_out")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), "graft_hn_stream_spec_out")
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+    graft.sources.BucketedLayout.dropTable(spark, "graft_hn_stream_spec_out")
     val anchors = embs.filter(pmod(col("vec_id"), lit(100)) === 0)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>"))

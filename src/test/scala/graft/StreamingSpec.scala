@@ -1,8 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.sources.BucketedLayout
 import graft.streaming.StreamingOps
 
 case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
@@ -266,11 +268,7 @@ class StreamingSpec extends AnyFunSuite {
     val src = ms.toDF().toDF("doc_id", "text")
     graft.ext.LlmOps.buildLineIndex(
       Seq.empty[(Long, String)].toDF("doc_id", "text"), "graft_line_idx", delim = " ")
-    spark.sql("DROP TABLE IF EXISTS graft_line_kept")
-    val staleLoc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), "graft_line_kept")
-    staleLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(staleLoc, true)
+    BucketedLayout.dropTable(spark, "graft_line_kept")
     // ' ' delimiter: every token is a "line" on this fixture-style text
     val q = graft.streaming.StreamingOps.lineDedupIncrementalStream(
       src, "graft_line_idx", "graft_line_kept", delim = " ")
@@ -310,13 +308,7 @@ class StreamingSpec extends AnyFunSuite {
     // seed: an EMPTY corpus index — the stream builds it up as it keeps
     graft.ext.LlmOps.buildMinhashIndex(
       Seq.empty[(Long, String)].toDF("doc_id", "text"), "graft_stream_idx")
-    spark.sql("DROP TABLE IF EXISTS graft_stream_kept")
-    // a stale managed-table LOCATION from a prior JVM outlives the
-    // in-memory catalog (same trap BucketedLayout.writeBucketed clears)
-    val staleLoc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), "graft_stream_kept")
-    staleLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(staleLoc, true)
+    BucketedLayout.dropTable(spark, "graft_stream_kept")
     val q = graft.streaming.StreamingOps.dedupIncrementalStream(
       src, "graft_stream_idx", "graft_stream_kept")
     try {
@@ -346,16 +338,10 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming incremental EMBEDDING dedup: index-backed cross-batch drops + replay") {
+  test("streaming incremental EMBEDDING dedup: index-backed cross-batch drops") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    def cleanTable(t: String): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), t)
-      loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
-    }
-    cleanTable("graft_cosstream_kept")
+    BucketedLayout.dropTable(spark, "graft_cosstream_kept")
     graft.ext.LlmOps.buildCosineIndex(
       Seq.empty[(Long, Seq[Double])].toDF("vec_id", "embedding"),
       "graft_cosstream_idx", threshold = 0.8)
@@ -381,85 +367,92 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(keptIds == Set(1L, 3L, 5L))
     } finally q.stop()
-    // replay after the index append: recompute would self-match id 5 —
-    // the committed-partition guard must preserve the output instead
-    val replay = Seq((4L, v1), (5L, v3)).toDF("vec_id", "embedding")
-    graft.streaming.StreamingOps.processCosineBatch(replay, 1L,
-      "graft_cosstream_idx", "graft_cosstream_kept", "vec_id", "embedding")
-    spark.catalog.refreshTable("graft_cosstream_kept")
-    assert(spark.table("graft_cosstream_kept")
-      .select("vec_id").collect().map(_.getLong(0)).toSet == Set(1L, 3L, 5L))
   }
 
   // Crash-replay contract (r5 advice): a batch that died AFTER the index
   // append but BEFORE the streaming checkpoint commit is re-run by the
   // engine with the same batchId. The index then already contains the
-  // batch's own line hashes / signatures, so a recompute would anti-join
-  // (or self-match) the whole batch away and the dynamic partition
-  // overwrite would replace the committed kept rows with nothing. The
-  // committed-partition guard must skip recompute and only re-derive the
-  // index append from the durable rows.
-  test("line-dedup batch replay after index append preserves committed output") {
+  // batch's own line hashes / signatures / vectors, so a recompute would
+  // anti-join (or self-match) the whole batch away and the dynamic
+  // partition overwrite would replace the committed kept rows with
+  // nothing. The committed-partition guard must skip recompute and only
+  // re-derive the index append from the durable rows. A batchId
+  // collision that is NOT a replay (different ids — the
+  // deleted-checkpoint-with-retained-kept-table case) must fail loudly
+  // instead of silently discarding the new batch. One table row per
+  // index kind, each run through the one batch processor the three
+  // dedup streams share.
+  test("index-backed batch replay after index append preserves committed output (line, minhash, cosine)") {
     import spark.implicits._
-    def cleanTable(t: String): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), t)
-      loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+    import graft.ext.LlmOps
+    case class Kind(index: String, idCol: String, valueCol: String,
+                    indexTable: String, build: () => Unit,
+                    dedup: DataFrame => DataFrame, append: DataFrame => Unit,
+                    batches: Seq[DataFrame], foreign: DataFrame,
+                    kept: Map[Long, Any], indexed: Long)
+    def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    def vecs(rows: (Long, Seq[Double])*) = rows.toDF("vec_id", "embedding")
+    val (v1, v2, v3) =
+      (Seq(1.0, 0.0, 0.0, 0.1), Seq(0.0, 1.0, 0.0, 0.0), Seq(0.0, 0.0, 1.0, 0.0))
+    val (dupText, otherText, freshText) = ("alpha beta gamma delta",
+      "totally different words here", "fresh new unique content")
+    val kinds = Seq(
+      // ' ' delimiter: every token is a "line"; batch 0 repeats 'beta'
+      // in-batch, batch 1 repeats everything but 'delta' cross-batch
+      Kind("graft_replay_line_idx", "doc_id", "clean_text",
+        "graft_replay_line_idx_lines",
+        () => LlmOps.buildLineIndex(docs(), "graft_replay_line_idx", delim = " "),
+        LlmOps.lineDedupIncremental(_, "graft_replay_line_idx", " "),
+        LlmOps.appendToLineIndex(_, "graft_replay_line_idx", " "),
+        Seq(docs((1L, "alpha beta"), (2L, "beta gamma")),
+          docs((3L, "alpha gamma delta"))),
+        docs((9L, "totally new")),
+        Map(1L -> "alpha beta", 2L -> "gamma", 3L -> "delta"), 4L),
+      // id 3 near-dups id 1 in-batch, id 4 near-dups it cross-batch
+      Kind("graft_replay_mh_idx", "doc_id", "text", "graft_replay_mh_idx_toks",
+        () => LlmOps.buildMinhashIndex(docs(), "graft_replay_mh_idx"),
+        LlmOps.dedupIncremental(_, "graft_replay_mh_idx"),
+        LlmOps.appendToMinhashIndex(_, "graft_replay_mh_idx"),
+        Seq(docs((1L, dupText), (2L, otherText), (3L, dupText)),
+          docs((4L, dupText), (5L, freshText))),
+        docs((9L, otherText)),
+        Map(1L -> dupText, 2L -> otherText, 5L -> freshText), 3L),
+      // id 2 duplicates v1 in-batch, id 4 cross-batch
+      Kind("graft_replay_cos_idx", "vec_id", "embedding", "graft_replay_cos_idx_vecs",
+        () => LlmOps.buildCosineIndex(vecs(), "graft_replay_cos_idx", threshold = 0.8),
+        LlmOps.dedupCosineIncremental(_, "graft_replay_cos_idx"),
+        LlmOps.appendToCosineIndex(_, "graft_replay_cos_idx"),
+        Seq(vecs((1L, v1), (2L, v1), (3L, v2)), vecs((4L, v1), (5L, v3))),
+        vecs((9L, v2)),
+        Map(1L -> v1, 3L -> v2, 5L -> v3), 3L))
+    for (k <- kinds) {
+      val keptTable = s"${k.index}_kept"
+      BucketedLayout.dropTable(spark, keptTable)
+      k.build()
+      def run(batch: DataFrame, id: Long): Unit = StreamingOps.processIndexedBatch(
+        batch, id, keptTable, k.idCol, k.dedup, k.append)
+      def runAll(): Unit = k.batches.zipWithIndex.foreach { case (b, id) => run(b, id) }
+      def kept() = {
+        spark.catalog.refreshTable(keptTable)
+        spark.table(keptTable).collect().toSet
+      }
+      def indexRows() = {
+        spark.catalog.refreshTable(k.indexTable)
+        spark.table(k.indexTable).distinct().collect().toSet
+      }
+      runAll() // first attempts: each commits its kept partition AND appends the index
+      val first = kept()
+      assert(first.map(r => r.getAs[Long](k.idCol) -> r.getAs[Any](k.valueCol)).toMap ==
+        k.kept, k.index)
+      val grown = indexRows()
+      assert(grown.size == k.indexed, k.index)
+      runAll() // replays, with the index already holding every batch's entries
+      assert(kept() == first, s"${k.index}: replay must not wipe the committed partition")
+      assert(indexRows() == grown, s"${k.index}: replay must not add index entries")
+      val e = intercept[IllegalStateException](run(k.foreign, 0L))
+      assert(e.getMessage.contains("not a checkpoint replay"), k.index)
+      assert(kept() == first, s"${k.index}: the refused batch must leave the partition intact")
     }
-    cleanTable("graft_replay_kept")
-    graft.ext.LlmOps.buildLineIndex(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "graft_replay_idx",
-      delim = " ")
-    val batch = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
-    def run() = graft.streaming.StreamingOps.processLineBatch(
-      batch, 0L, "graft_replay_idx", "graft_replay_kept", " ", "text", "doc_id")
-    run() // first attempt: commits kept partition 0 AND appends the index
-    def kept = {
-      spark.catalog.refreshTable("graft_replay_kept")
-      spark.table("graft_replay_kept").select("doc_id", "clean_text")
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    }
-    val first = kept
-    assert(first == Map(1L -> "alpha beta", 2L -> "gamma"))
-    run() // replay with the index already poisoned by batch 0's hashes
-    assert(kept == first, "replay must not wipe the committed partition")
-    spark.catalog.refreshTable("graft_replay_idx_lines")
-    assert(spark.table("graft_replay_idx_lines").distinct().count() == 3L)
-    // a batchId collision that is NOT a replay (different ids — the
-    // deleted-checkpoint-with-retained-kept-table case) must fail
-    // loudly instead of silently discarding the new batch
-    val foreign = Seq((9L, "totally new")).toDF("doc_id", "text")
-    val e = intercept[IllegalStateException] {
-      graft.streaming.StreamingOps.processLineBatch(
-        foreign, 0L, "graft_replay_idx", "graft_replay_kept", " ", "text", "doc_id")
-    }
-    assert(e.getMessage.contains("not a checkpoint replay"))
-    assert(kept == first, "the refused batch must leave the partition intact")
-  }
-
-  test("near-dup batch replay after index append preserves committed output") {
-    import spark.implicits._
-    spark.sql("DROP TABLE IF EXISTS graft_replay2_kept")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), "graft_replay2_kept")
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
-    graft.ext.LlmOps.buildMinhashIndex(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "graft_replay2_idx")
-    val batch = Seq((1L, "alpha beta gamma delta"),
-      (2L, "totally different words here")).toDF("doc_id", "text")
-    def run() = graft.streaming.StreamingOps.processDedupBatch(
-      batch, 0L, "graft_replay2_idx", "graft_replay2_kept", 0.8, "text", "doc_id")
-    run()
-    def keptIds = {
-      spark.catalog.refreshTable("graft_replay2_kept")
-      spark.table("graft_replay2_kept").select("doc_id")
-        .collect().map(_.getLong(0)).toSet
-    }
-    assert(keptIds == Set(1L, 2L))
-    run() // replay: both docs' signatures are already in the index
-    assert(keptIds == Set(1L, 2L),
-      "replay must not self-match the batch against its own index entries")
   }
 
   test("matview maintainer: an all-late batch is refused loudly, state untouched") {
@@ -577,11 +570,7 @@ class StreamingSpec extends AnyFunSuite {
   test("matview: update-mode changelog holds only touched keys; read = latest per key") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    spark.sql("DROP TABLE IF EXISTS graft_test_matview")
-    val staleLoc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), "graft_test_matview")
-    staleLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(staleLoc, true)
+    BucketedLayout.dropTable(spark, "graft_test_matview")
     val ms = MemoryStream[(String, Long)]
     val src = ms.toDF().toDF("k", "v")
     val agg = src.groupBy("k")
